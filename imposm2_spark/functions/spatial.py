@@ -55,7 +55,14 @@ def cell_from_xy_col(x: Column, y: Column, level: int) -> Column:
 
 
 def cell_encode_col(lon: Column, lat: Column, level: int) -> Column:
-    """lon/lat -> Morton cell id at `level`; NULL/non-finite -> -1 (INVALID_CELL)."""
+    """lon/lat -> Morton cell id at `level`; NULL/non-finite -> -1 (INVALID_CELL).
+
+    The cell is computed unconditionally on sanitized inputs (non-finite ->
+    0.0, as kernels.cells.cell_encode does) and the sentinel is OR-ed in
+    without a branch. _spread_bits references its argument twice per step;
+    outside a conditional branch, subexpression elimination evaluates each
+    step once, while under `when(ok, cell)` the tree was expanded to 32
+    copies of the tile math (32 Math.tan calls, ~350 KB of generated code)."""
     if not 0 <= level <= MAX_LEVEL:
         raise ValueError(f"level must be in [0, {MAX_LEVEL}], got {level}")
     ok = (
@@ -66,8 +73,11 @@ def cell_encode_col(lon: Column, lat: Column, level: int) -> Column:
         & (F.abs(lon) != F.lit(float("inf")))
         & (F.abs(lat) != F.lit(float("inf")))
     )
-    cell = cell_from_xy_col(tile_x(lon, level), tile_y(lat, level), level)
-    return F.when(ok, cell).otherwise(F.lit(-1).cast("long"))
+    safe_lon = F.when(ok, lon).otherwise(F.lit(0.0))
+    safe_lat = F.when(ok, lat).otherwise(F.lit(0.0))
+    cell = cell_from_xy_col(tile_x(safe_lon, level), tile_y(safe_lat, level), level)
+    sentinel = F.when(ok, F.lit(0)).otherwise(F.lit(-1)).cast("long")
+    return cell.bitwiseOR(sentinel)
 
 
 def cell_parent_col(cell: Column, cell_level: int, parent_level: int) -> Column:

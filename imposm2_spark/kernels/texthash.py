@@ -57,9 +57,10 @@ def char_hash_py(s: str) -> int:
 def token_hashes_doc(text: str | None) -> np.ndarray:
     """int64 token-hash array for ONE document (twin of token_hashes).
 
-    None -> empty array (the Catalyst chain yields NULL, and every consumer
-    filters/guards those rows; callers mask None docs separately)."""
-    if text is None:
+    None (or any non-str, e.g. a pandas NaN) -> empty array (the Catalyst
+    chain yields NULL, and every consumer filters/guards those rows;
+    callers mask None docs separately)."""
+    if not isinstance(text, str):
         return np.empty(0, dtype=np.int64)
     if not text:
         return np.zeros(1, dtype=np.int64)  # split('') -> [''] -> hash 0

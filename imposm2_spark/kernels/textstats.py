@@ -14,10 +14,15 @@ no float crosses the Arrow boundary, so bit parity is by construction).
 Pinned semantics (differential-tested in tests/test_textstats.py against
 the Catalyst chain on adversarial inputs):
 
-  * ws_tokens: Java trim() strips codepoints <= U+0020 at both ends; the
+  * ws_tokens: Spark's F.trim strips ASCII space (0x20) only, at both
+    ends (not Java trim(), which strips every codepoint <= U+0020); the
     `\\s+` split separates on exactly {space, \\t, \\n, \\x0B, \\f, \\r}
-    (Java \\s is ASCII-only). Control chars inside the trimmed span that
-    are not one of those six stay INSIDE tokens.
+    (Java \\s is ASCII-only) and keeps a leading/trailing empty token when
+    the trimmed text starts/ends with one of the other five (see doc_stats).
+    Control chars inside the trimmed span that are not one of those six
+    stay INSIDE tokens.
+  * NULL text: any non-str value (None, or NaN where pandas surfaces a
+    missing string that way) is a NULL row.
   * stopword membership compares lower(token) against pure-ASCII stopword
     sets. ASCII-only lowering (A-Z -> a-z) is exact for that comparison:
     the only non-ASCII codepoint Java/Python lowercase into ASCII is the
@@ -98,7 +103,7 @@ def batch_stats(texts) -> tuple[np.ndarray, dict]:
     segment reductions per BATCH). Returns (null_mask, {col: int64 array})
     where rows with null_mask keep garbage values (callers mask to NULL).
     Semantics identical to doc_stats (differential-tested)."""
-    nulls = np.fromiter((t is None for t in texts), dtype=bool,
+    nulls = np.fromiter((not isinstance(t, str) for t in texts), dtype=bool,
                         count=len(texts))
     idx_nn = np.flatnonzero(~nulls)
     nd = len(texts)

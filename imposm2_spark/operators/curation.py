@@ -91,7 +91,7 @@ def _ngram_rows_kernel(
         for pdf in batches:
             ids, grams = [], []
             for i, t in zip(pdf[id_col], pdf[text_col]):
-                if t is None:
+                if not isinstance(t, str):
                     continue
                 g = np.unique(
                     tx.ngram_hashes_from_tokens(tx.token_hashes_doc(t), n)

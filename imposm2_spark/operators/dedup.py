@@ -168,7 +168,7 @@ def _minhash_signatures_kernel(
         for pdf in batches:
             ids, shs_out, sigs, bands = [], [], [], []
             for i, t in zip(pdf[id_col], pdf[text_col]):
-                if t is None:
+                if not isinstance(t, str):
                     continue  # NULL text: the HOF chain's size(NULL) filter
                 th = tx.token_hashes_doc(t)
                 if len(th) < SHINGLE_N:
@@ -222,7 +222,7 @@ def shingle_frame(
         for pdf in batches:
             ids, out = [], []
             for i, t in zip(pdf[id_col], pdf[text_col]):
-                if t is None:
+                if not isinstance(t, str):
                     continue
                 th = tx.token_hashes_doc(t)
                 if len(th) < SHINGLE_N:

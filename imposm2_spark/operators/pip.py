@@ -4,28 +4,34 @@ Graft addition (SURVEY.md J4); the reference's nearest analog is the prepared-
 geometry containment testing in imposm/multipolygon.py::ContainsRelationBuilder,
 which this reuses at the kernel level (kernels.geom ray cast, half-open rule).
 
-Two-phase plan (scales to 10^12 points):
-  1. PREFILTER — equi-join `point.cell == polygon.covering_cell` at `cell_level`.
-     Polygon side is exploded to one row per covering cell and broadcast when
-     small (the common case: polygon count << point count). Candidate pairs are
-     a tiny superset of the true result.
-  2. REFINE — exact even-odd ray cast per Arrow batch (pandas UDF); inside the
-     batch, points are grouped per polygon so each polygon's rings are decoded
-     once and tested vectorized across all its candidate points.
+Two phases, both paths:
+  1. PREFILTER — a point is a candidate for a polygon when its level-
+     `cell_level` cell is one of the polygon's covering cells. Candidate
+     pairs are a small superset of the true result.
+  2. REFINE — exact even-odd ray cast, vectorized per polygon over all of
+     its candidate points in a batch, so each polygon's rings are decoded
+     once.
 
-Geometry travels ONCE per executor, not once per candidate row: in the
-broadcast path the prefilter join carries only (polygon_id, cell) and the
-refine UDF reads ring arrays from a Spark broadcast dict — attaching `rings`
-to every candidate row would Arrow-serialize each polygon's coordinates per
-matched point (measured ~2x the whole stage cost at 10^6 points; fatal at
-10^12). The shuffle path (broadcast_polygons=False, polygon side too big for
-the driver) still carries rings in-row, where the shuffle co-locates them.
+Broadcast path (the common case: polygon count << point count). The polygon
+side is pulled to the driver once, capped at `max_broadcast_polygons`, and
+built into a PolygonIndex: the sorted covering cells with their polygons,
+and the rings by polygon. It ships once per executor as a Spark broadcast.
+The physical plan is scan -> ONE ArrowEvalPython over (lon, lat) -> explode:
+the UDF runs PolygonIndex.locate over the whole Arrow batch (cell encode,
+searchsorted candidate lookup, per-polygon refine) and returns each point's
+containing polygon ids. There is no join, no exchange and no second Python
+crossing; plans.pipeline.spine calls the same locate inside its enrich UDF.
 
-Skew (O10a): one dense cell can dominate the shuffle when the polygon side is
-too big to broadcast. `salt_factor=k` replicates each polygon cell-row k ways
-and buckets points by a hash — spreading the hot cell over k shuffle partitions.
-With a broadcast polygon side there is no shuffle at all, so salting is off by
-default and AQE skew-join covers the moderate cases.
+Shuffle path (polygon side over the cap, or broadcast_polygons=False): the
+polygon side is exploded to one row per covering cell and equi-joined with
+the points on the cell key (`functions.spatial.cell_encode_col`); rings
+travel in-row, where the shuffle co-locates them, and a pandas UDF refines
+each candidate batch.
+
+Skew (O10a): one dense cell can dominate the shuffle path. `salt_factor=k`
+replicates each polygon cell-row k ways and buckets points by a hash —
+spreading the hot cell over k shuffle partitions. The broadcast path has no
+shuffle, so salting does not apply to it.
 """
 
 from __future__ import annotations
@@ -38,9 +44,13 @@ from pyspark.sql import types as T
 
 from ..functions.spatial import cell_encode_col
 from ..kernels import geom
+from ..kernels.cells import cell_encode
 from ..kernels.wkb import nested_to_rings
 
 DEFAULT_CELL_LEVEL = 12
+# driver-side cap on the polygon pull of the broadcast path; over it, the
+# join (and the spine) degrade to the shuffle path
+MAX_BROADCAST_POLYGONS = 100_000
 
 # auto-salt gate: below this many rows in the hottest cell, salting is a
 # no-op-to-harmful (fixed overhead, nothing to spread) and stays off
@@ -86,6 +96,100 @@ def auto_salt_factor(
     return k
 
 
+class PolygonIndex:
+    """Cell-keyed index over a broadcast-sized polygon side.
+
+    Holds every polygon's level-`cell_level` covering cells sorted, the
+    polygon (by position) each sorted cell belongs to, the polygon ids and
+    the rings by position. A cell listed twice for one polygon yields two
+    candidates, exactly as the equi-join of the shuffle path does.
+    """
+
+    def __init__(self, polygon_ids, cells, rings, cell_level: int):
+        self.cell_level = cell_level
+        self.polygon_ids = np.asarray(polygon_ids)
+        self.rings = list(rings)
+        per_poly = [np.asarray(c if c is not None else [], dtype=np.int64) for c in cells]
+        counts = np.fromiter((len(c) for c in per_poly), dtype=np.int64, count=len(per_poly))
+        flat = np.concatenate(per_poly) if per_poly else np.empty(0, dtype=np.int64)
+        order = np.argsort(flat, kind="stable")
+        self.cells = flat[order]
+        self.owner = np.repeat(np.arange(len(per_poly)), counts)[order]
+
+    @classmethod
+    def from_rows(cls, rows, cell_level: int) -> "PolygonIndex":
+        """From collected (polygon_id, rings, cells) rows."""
+        return cls(
+            [r["polygon_id"] for r in rows],
+            [r["cells"] for r in rows],
+            [nested_to_rings(r["rings"]) for r in rows],
+            cell_level,
+        )
+
+    def locate(self, lon, lat) -> tuple[np.ndarray, np.ndarray]:
+        """(row, polygon_id) for every point of the batch inside a polygon.
+
+        One pair per (point, containing polygon), ordered by row. A point is
+        tested only against the polygons that list its cell; NULL/NaN/inf
+        coordinates encode to INVALID_CELL and match no polygon."""
+        lon = np.asarray(lon, dtype=np.float64)
+        lat = np.asarray(lat, dtype=np.float64)
+        pc = cell_encode(lon, lat, self.cell_level)
+        lo = np.searchsorted(self.cells, pc, side="left")
+        n = np.searchsorted(self.cells, pc, side="right") - lo
+        row = np.repeat(np.arange(len(pc)), n)
+        # candidate k of row i sits at sorted position lo[i] + k
+        first = np.cumsum(n) - n
+        pos = np.repeat(lo - first, n) + np.arange(len(row))
+        poly = self.owner[pos]
+        keep = np.zeros(len(row), dtype=bool)
+        order = np.argsort(poly, kind="stable")
+        for grp in np.split(order, np.flatnonzero(np.diff(poly[order])) + 1):
+            if len(grp):
+                r = row[grp]
+                keep[grp] = geom.points_in_rings(lon[r], lat[r], self.rings[poly[grp[0]]])
+        return row[keep], self.polygon_ids[poly[keep]]
+
+    def ids_per_row(self, lon, lat) -> list[list]:
+        """locate() regrouped per row: the containing polygon ids of each
+        point, [] for none — the shape of an ARRAY column of a pandas UDF."""
+        row, pid = self.locate(lon, lat)
+        bounds = np.searchsorted(row, np.arange(len(lon) + 1)).tolist()
+        ids = pid.tolist()
+        return [ids[a:b] for a, b in zip(bounds[:-1], bounds[1:])]
+
+
+def polygon_index(
+    polygons: DataFrame, cell_level: int, max_broadcast_polygons: int
+) -> PolygonIndex | None:
+    """PolygonIndex of `polygons`, or None when it has more than
+    `max_broadcast_polygons` rows.
+
+    EAGER: collects limit(cap+1) rows in ONE action, so driver memory is
+    bounded by the cap; the extra row signals the polygon side is too big.
+    (A toLocalIterator stream was measured 2.3x slower end-to-end from its
+    sequential per-partition jobs; a separate count-probe action costs a
+    full extra scan.)"""
+    rows = (
+        polygons.select("polygon_id", "rings", "cells")
+        .limit(max_broadcast_polygons + 1)
+        .collect()
+    )
+    if len(rows) > max_broadcast_polygons:
+        return None
+    return PolygonIndex.from_rows(rows, cell_level)
+
+
+def _locate_udf(index_bc, id_type: T.DataType):
+    """(lon, lat) -> ARRAY of the containing polygon ids, per Arrow batch."""
+
+    @F.pandas_udf(T.ArrayType(id_type))
+    def _locate(lon: pd.Series, lat: pd.Series) -> pd.Series:
+        return pd.Series(index_bc.value.ids_per_row(lon, lat))
+
+    return _locate
+
+
 @F.pandas_udf(T.BooleanType())
 def _contains_udf(polygon_id: pd.Series, rings: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
     """Exact PIP refine: vectorized per polygon within each Arrow batch."""
@@ -101,35 +205,14 @@ def _contains_udf(polygon_id: pd.Series, rings: pd.Series, lon: pd.Series, lat: 
     return pd.Series(out)
 
 
-def explode_polygon_cells(
-    polygons: DataFrame, salt_factor: int | None = None, with_rings: bool = True
-) -> DataFrame:
+def explode_polygon_cells(polygons: DataFrame, salt_factor: int | None = None) -> DataFrame:
     """(polygon_id, rings, cells) -> one row per covering cell [x salt replica]."""
-    cols = ["polygon_id"] + (["rings"] if with_rings else [])
-    exploded = polygons.select(*cols, F.explode("cells").alias("cell"))
+    exploded = polygons.select("polygon_id", "rings", F.explode("cells").alias("cell"))
     if salt_factor and salt_factor > 1:
         exploded = exploded.select(
             "*", F.explode(F.sequence(F.lit(0), F.lit(salt_factor - 1))).alias("salt")
         )
     return exploded
-
-
-def _contains_udf_broadcast(rings_bc):
-    """Refine UDF reading ring arrays from a per-executor broadcast dict."""
-
-    @F.pandas_udf(T.BooleanType())
-    def _contains(polygon_id: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
-        rings_by_pid = rings_bc.value
-        out = np.zeros(len(polygon_id), dtype=bool)
-        lon_v = lon.to_numpy(dtype=np.float64)
-        lat_v = lat.to_numpy(dtype=np.float64)
-        pid = polygon_id.to_numpy()
-        for p in pd.unique(pid):
-            idx = np.flatnonzero(pid == p)
-            out[idx] = geom.points_in_rings(lon_v[idx], lat_v[idx], rings_by_pid[p])
-        return pd.Series(out)
-
-    return _contains
 
 
 def pip_join(
@@ -141,7 +224,7 @@ def pip_join(
     broadcast_polygons: bool = True,
     salt_factor: int | str | None = None,
     keep_point_cols: list[str] | None = None,
-    max_broadcast_polygons: int = 100_000,
+    max_broadcast_polygons: int = MAX_BROADCAST_POLYGONS,
 ) -> DataFrame:
     """Inner spatial join: one output row per (point, containing polygon).
 
@@ -149,84 +232,72 @@ def pip_join(
     polygons: (polygon_id, rings ARRAY<ARRAY<ARRAY<DOUBLE>>>, cells ARRAY<LONG>)
               where `cells` are level-`cell_level` covering cells (see
               sources.fixtures.make_polygons_admin / operators.tiles.covering_cells).
+    Output: the point columns (or `keep_point_cols`) plus polygon_id.
 
-    broadcast_polygons=True EAGERLY pulls every polygon's rings to the driver
-    at plan-construction time (then re-ships them once per executor as a Spark
-    broadcast). The pull itself is capped: it collects limit(cap+1) rows — ONE
-    action, driver memory bounded by `max_broadcast_polygons` ring sets — and
-    if the extra row comes back the polygon side is too big, so the join
-    degrades to the co-locating shuffle path instead of OOMing the driver.
-    (A toLocalIterator stream was measured 2.3x slower end-to-end from its
-    sequential per-partition jobs; a separate count-probe action costs a full
-    extra scan.)
+    broadcast_polygons=True EAGERLY pulls the polygon side to the driver at
+    plan-construction time (polygon_index: one capped action) and locates
+    points in one Arrow crossing. If the pull exceeds `max_broadcast_polygons`
+    the join degrades to the co-locating shuffle path instead of OOMing the
+    driver. `salt_factor` (int, or 'auto' for a measured factor) applies to
+    the shuffle path only.
     """
     lon_c = F.col(lon) if isinstance(lon, str) else lon
     lat_c = F.col(lat) if isinstance(lat, str) else lat
-    pts = points.withColumn("_cell", cell_encode_col(lon_c, lat_c, cell_level))
 
     if isinstance(salt_factor, str) and salt_factor != "auto":
         raise ValueError(
             f"salt_factor must be an int, None, or 'auto', got {salt_factor!r}"
         )
 
-    rings_by_pid: dict | None = None
-    if broadcast_polygons:
-        capped = (
-            polygons.select("polygon_id", "rings")
-            .limit(max_broadcast_polygons + 1)
-            .collect()
-        )
-        if len(capped) > max_broadcast_polygons:
-            broadcast_polygons = False  # auto-fallback: shuffle path
-        else:
-            rings_by_pid = {r["polygon_id"]: nested_to_rings(r["rings"]) for r in capped}
+    index = (
+        polygon_index(polygons, cell_level, max_broadcast_polygons)
+        if broadcast_polygons
+        else None
+    )
+    if index is not None:
+        # the broadcast lives as long as a frame whose UDF closure holds it
+        # can be evaluated; Python GC + Spark's ContextCleaner reclaim it
+        # after the caller drops the frame (an explicit destroy() here would
+        # poison a still-lazy result)
+        bc = points.sparkSession.sparkContext.broadcast(index)
+        locate = _locate_udf(bc, polygons.schema["polygon_id"].dataType)
+        out = points.select("*", F.explode(locate(lon_c, lat_c)).alias("polygon_id"))
+    else:
+        out = _pip_join_shuffle(points, polygons, lon_c, lat_c, cell_level, salt_factor)
+    if keep_point_cols is not None:
+        out = out.select(*keep_point_cols, "polygon_id")
+    return out
 
+
+def _pip_join_shuffle(
+    points: DataFrame,
+    polygons: DataFrame,
+    lon_c: Column,
+    lat_c: Column,
+    cell_level: int,
+    salt_factor: int | str | None,
+) -> DataFrame:
+    """Cell-key equi-join with rings in-row, then the refine UDF."""
+    pts = points.withColumn("_cell", cell_encode_col(lon_c, lat_c, cell_level))
     if salt_factor == "auto":
-        # measured fan-out (SURVEY O10a promise; auto_salt_factor above),
-        # resolved AFTER the broadcast decision: salting only spreads a
-        # SHUFFLE's hot keys, so it is always off on the broadcast path.
+        # measured fan-out (SURVEY O10a promise; auto_salt_factor above).
         # The histogram aggregate makes this branch EAGER (one bounded
         # cells-only job at call time).
-        salt_factor = (
-            None if broadcast_polygons else auto_salt_factor(pts, ["_cell"])
-        )
-
-    poly_cells = explode_polygon_cells(
-        polygons, salt_factor, with_rings=not broadcast_polygons
-    )
-    if broadcast_polygons:
-        # rings once per executor (broadcast variable), candidate rows slim.
-        # Lifecycle: the broadcast lives as long as the returned frame can
-        # be evaluated (the UDF closure holds it), then Python GC +
-        # Spark's ContextCleaner reclaim it when the caller drops the frame
-        # — standard Spark broadcast semantics; an explicit destroy() here
-        # would poison a still-lazy result
-        rings_bc = points.sparkSession.sparkContext.broadcast(rings_by_pid)
-        contains = _contains_udf_broadcast(rings_bc)
-        refine_cols = lambda: contains(F.col("polygon_id"), lon_c, lat_c)
-        poly_cells = F.broadcast(poly_cells)
-    else:
-        refine_cols = lambda: _contains_udf(
-            F.col("polygon_id"), F.col("rings"), lon_c, lat_c
-        )
-
-    if salt_factor and salt_factor > 1:
+        salt_factor = auto_salt_factor(pts, ["_cell"])
+    salted = bool(salt_factor and salt_factor > 1)
+    poly_cells = explode_polygon_cells(polygons, salt_factor)
+    if salted:
         pts = pts.withColumn(
             "_salt", F.pmod(F.xxhash64(lon_c, lat_c), F.lit(salt_factor)).cast("int")
         )
         cond = (pts["_cell"] == poly_cells["cell"]) & (pts["_salt"] == poly_cells["salt"])
     else:
         cond = pts["_cell"] == poly_cells["cell"]
-
     candidates = pts.join(poly_cells, cond, "inner")
-    refined = candidates.where(refine_cols())
-    drop = ["_cell", "cell"] + ([] if broadcast_polygons else ["rings"]) + (
-        ["_salt", "salt"] if salt_factor and salt_factor > 1 else []
+    refined = candidates.where(
+        _contains_udf(F.col("polygon_id"), F.col("rings"), lon_c, lat_c)
     )
-    out = refined.drop(*drop)
-    if keep_point_cols is not None:
-        out = out.select(*keep_point_cols, "polygon_id")
-    return out
+    return refined.drop("_cell", "cell", "rings", *(["_salt", "salt"] if salted else []))
 
 
 def pip_join_brute(

@@ -160,7 +160,7 @@ def _doc_stats_kernel(
         for pdf in batches:
             dls, tfss = [], []
             for t in pdf[text_col]:
-                if t is None:
+                if not isinstance(t, str):
                     dls.append(None)
                     tfss.append(None)
                     continue

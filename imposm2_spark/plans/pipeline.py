@@ -1,4 +1,4 @@
-"""The M1 spine: documents -> extract -> geotag -> cell -> PIP join -> tiles.
+"""The M1 spine: documents -> extract -> geotag -> point-in-polygon -> tiles.
 
 This is the flagship end-to-end flow (SURVEY.md §7 M1): the graft equivalent of
 imposm2's `--read` + `--write` run (imposm/app.py::main -> writer.py pipeline),
@@ -6,11 +6,13 @@ with web documents playing the node-stream role (SURVEY.md §1.3).
 
 Shape of the physical plan (verified by tests/test_plans.py explain checks):
   parquet/createDataFrame scan
-  -> Arrow-batched extract+geotag (the only Python stages)
-  -> codegen'd cell/tile arithmetic
-  -> broadcast-hash PIP prefilter join (no shuffle on the big side)
-  -> exact refine filter
+  -> ONE ArrowEvalPython: extract + geotag + PolygonIndex.locate per batch
+     (html crosses once; lon, lat, n_chars and the polygon ids return)
+  -> explode of the polygon ids (no join)
+  -> codegen'd tile arithmetic
   -> single shuffle for the final tile aggregation
+A polygon side over pip.MAX_BROADCAST_POLYGONS instead runs the enrich
+crossing, then pip_join's cell-key shuffle join and refine.
 """
 
 from __future__ import annotations
@@ -20,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..functions.geotag import geotag
 from ..functions.textx import extract_text
+from ..operators import pip
 from ..operators.pip import pip_join
 from ..operators.tiles import assign_point_tiles
 
@@ -39,43 +42,50 @@ def geotag_stage(docs: DataFrame) -> DataFrame:
     ).drop("_geo")
 
 
-def _enrich_fused_udf():
-    """ONE Arrow-batched struct UDF for the spine's Python stage (r6, guide
-    §4.1/§2.3): extraction + geotag run in a single crossing over (url,
-    html), and only (lon, lat, n_chars) return — the extracted text used to
-    ship back through Arrow in full just so the JVM could take length() of
-    it for sum_chars. n_chars = len(extracted) in Python == the codepoint
-    count Spark's length() computed (same string, byte-identical extractor —
-    parity pytest in tests/test_textx_geotag.py). Extraction still executes
-    per row inside the opaque UDF, so the flagship stage stays measured."""
+def _enrich_fused_udf(index_bc=None, id_type=None):
+    """ONE Arrow-batched struct UDF for the spine's Python stage: html
+    crosses once, and only (lon, lat, n_chars[, polygon_ids]) return.
+
+    * extraction + geotag run per row over (url, html); n_chars =
+      len(extracted) in Python == the codepoint count Spark's length()
+      computes (same string, byte-identical extractor — parity pytest in
+      tests/test_textx_geotag.py), so the text never ships back;
+    * with `index_bc` (a broadcast operators.pip.PolygonIndex) the batch's
+      points are located in the same crossing: polygon_ids holds each
+      point's containing polygons (ids of type `id_type`), replacing a
+      cell-key join plus a second Arrow crossing for the refine."""
+    import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
     from ..functions.geotag import geotag_pair
     from ..functions.textx import extract_text_bytes
 
-    schema = T.StructType(
-        [
-            T.StructField("lon", T.DoubleType()),
-            T.StructField("lat", T.DoubleType()),
-            T.StructField("n_chars", T.LongType()),
-        ]
-    )
+    fields = [
+        T.StructField("lon", T.DoubleType()),
+        T.StructField("lat", T.DoubleType()),
+        T.StructField("n_chars", T.LongType()),
+    ]
+    if index_bc is not None:
+        fields.append(T.StructField("polygon_ids", T.ArrayType(id_type)))
 
     def _f(url, html):  # pd.Series x2 -> pd.DataFrame (struct)
-        lons, lats, ncs = [], [], []
-        for u, h in zip(url, html):
-            lon, lat = geotag_pair(u, h)
+        n = len(url)
+        lons = np.empty(n, dtype=np.float64)
+        lats = np.empty(n, dtype=np.float64)
+        ncs = []
+        for i, (u, h) in enumerate(zip(url, html)):
+            lons[i], lats[i] = geotag_pair(u, h)
             t = extract_text_bytes(h)
-            lons.append(lon)
-            lats.append(lat)
             ncs.append(None if t is None else len(t))
-        return pd.DataFrame(
-            {"lon": lons, "lat": lats,
-             "n_chars": pd.array(ncs, dtype="Int64")}
+        out = pd.DataFrame(
+            {"lon": lons, "lat": lats, "n_chars": pd.array(ncs, dtype="Int64")}
         )
+        if index_bc is not None:
+            out["polygon_ids"] = index_bc.value.ids_per_row(lons, lats)
+        return out
 
-    return F.pandas_udf(_f, schema)
+    return F.pandas_udf(_f, T.StructType(fields))
 
 
 def spine(
@@ -90,26 +100,35 @@ def spine(
     sum_chars aggregates the extracted-text length so the extraction stage
     is a CONSUMED part of the plan — without a consumer Catalyst's column
     pruning (correctly) deletes the extract work and the flagship query
-    silently stops measuring it. r6: extract+geotag+length fuse into one
-    Arrow crossing (_enrich_fused_udf) — html crosses once, three scalars
-    return, tile rows unchanged (pytest-pinned vs the staged path).
+    silently stops measuring it.
+
+    Polygon side within pip's MAX_BROADCAST_POLYGONS (pulled eagerly, one
+    capped action): extract + geotag + point-in-polygon run in one Arrow
+    crossing and the ids explode JVM-side. Over the cap: the same enrich
+    without the locate, then pip_join's shuffle path (`salt_factor` applies
+    there only). Tile rows are identical either way (pytest-pinned).
     """
-    fused = _enrich_fused_udf()
-    enriched = docs.withColumn(
-        "_g", fused(F.col("url"), F.col("html"))
-    ).select(
-        "*",
-        F.col("_g.lon").alias("lon"),
-        F.col("_g.lat").alias("lat"),
-        F.col("_g.n_chars").alias("n_chars"),
-    ).drop("_g")
-    joined = pip_join(
-        enriched,
-        polygons,
-        cell_level=cell_level,
-        salt_factor=salt_factor,
-        keep_point_cols=["url", "lon", "lat", "n_chars"],
-    )
+    index = pip.polygon_index(polygons, cell_level, pip.MAX_BROADCAST_POLYGONS)
+    if index is None:
+        enriched = docs.select(
+            _enrich_fused_udf()(F.col("url"), F.col("html")).alias("_g")
+        ).select("_g.lon", "_g.lat", "_g.n_chars")
+        joined = pip_join(
+            enriched,
+            polygons,
+            cell_level=cell_level,
+            broadcast_polygons=False,
+            salt_factor=salt_factor,
+        )
+    else:
+        fused = _enrich_fused_udf(
+            docs.sparkSession.sparkContext.broadcast(index),
+            polygons.schema["polygon_id"].dataType,
+        )
+        joined = docs.select(fused(F.col("url"), F.col("html")).alias("_g")).select(
+            "_g.lon", "_g.lat", "_g.n_chars",
+            F.explode("_g.polygon_ids").alias("polygon_id"),
+        )
     tiled = assign_point_tiles(joined, list(zooms))
     return tiled.groupBy("z", "x", "y").agg(
         F.count("*").alias("n_docs"),

@@ -21,6 +21,23 @@ def plan_of(df, mode="formatted"):
     return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), mode)
 
 
+def plan_nodes(plan):
+    """Operator names of a formatted plan, one per node (detail headers)."""
+    import re
+
+    return re.findall(r"\n\(\d+\) (\w+)", plan)
+
+
+def python_nodes(plan):
+    """Nodes that evaluate Python (Arrow/batch UDFs, pandas/arrow maps)."""
+    return [n for n in plan_nodes(plan) if "Python" in n or "InPandas" in n
+            or "InArrow" in n]
+
+
+def join_nodes(plan):
+    return [n for n in plan_nodes(plan) if "Join" in n or "Cartesian" in n]
+
+
 def n_exchanges(plan):
     """Count shuffle operators once (formatted mode lists each node twice:
     tree line '+- Exchange (n)' and detail header '(n) Exchange')."""
@@ -72,11 +89,11 @@ def test_pip_join_broadcasts_polygons_no_point_shuffle(spark):
     pts = testdata.derived_points_dense(spark, SF)
     polys = fixtures.polygons_admin_df(spark)
     p = plan_of(pip_join(pts, polys, keep_point_cols=["doc_id"]))
-    assert "BroadcastHashJoin" in p  # cell-equi prefilter join, polygons small
-    # the (big) point side reaches the join without any exchange
-    assert p.count("Exchange") == p.count("Exchange hashpartitioning") == 0 or (
-        "Exchange" not in p.split("BroadcastHashJoin")[0]
-    )
+    # the polygon side rides a broadcast PolygonIndex: the (big) point side
+    # crosses into Python once, with no join and no exchange at all
+    assert python_nodes(p) == ["ArrowEvalPython"]
+    assert join_nodes(p) == []
+    assert n_exchanges(p) == 0
 
 
 def test_raster_patch_join_single_scan(spark):
@@ -220,9 +237,10 @@ def test_spine_python_stages_are_arrow_batched(spark):
     from imposm2_spark.plans.pipeline import spine
 
     p = plan_of(spine(docs, polys, zooms=(2,), cell_level=4))
-    assert "ArrowEvalPython" in p  # extract/geotag vectorized, Arrow transfer
-    assert "BatchEvalPython" not in p  # never row-at-a-time Python
-    assert "BroadcastHashJoin" in p  # PIP prefilter broadcast
+    # extract + geotag + point-in-polygon in ONE Arrow crossing (html
+    # crosses once), the polygon ids exploded JVM-side: no join
+    assert python_nodes(p) == ["ArrowEvalPython"]
+    assert join_nodes(p) == []
 
 
 def test_dedup_exact_single_shuffle(spark):

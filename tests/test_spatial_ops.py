@@ -1,7 +1,8 @@
 """Spark-side spatial ops: JVM column math == NumPy kernels; PIP join; tiles.
 
-Also asserts the physical-plan properties SURVEY.md §4 demands: broadcast
-prefilter join, no Python in the cell/tile arithmetic (codegen check).
+Also asserts the physical-plan properties SURVEY.md §4 demands: a broadcast
+PIP path with one Python crossing and no join, no Python in the cell/tile
+arithmetic, and a cell key whose generated code stays linear in size.
 """
 
 import numpy as np
@@ -59,6 +60,49 @@ def test_cell_encode_col_null_and_nan(spark):
     by_id = {r.pid: r.c for r in rows}
     assert by_id[1] == -1 and by_id[2] == -1 and by_id[3] == -1
     assert by_id[4] == int(kcells.cell_encode(np.r_[13.4], np.r_[52.5], 12)[0])
+
+
+def test_cell_encode_col_sentinel_rows_bit_identical(spark):
+    """NULL, NaN, +-inf and beyond-mercator latitudes: the branch-free JVM
+    key equals kernels.cells.cell_encode bit for bit (-1 on non-finite
+    rows, the clamped top/bottom row for |lat| > 85.0511)."""
+    inf, nan = float("inf"), float("nan")
+    pairs = [
+        (None, 10.0), (10.0, None), (None, None), (nan, 10.0), (10.0, nan),
+        (inf, 10.0), (-inf, 10.0), (10.0, inf), (10.0, -inf), (inf, nan),
+        (13.4, 85.06), (13.4, -85.06), (13.4, 89.99), (-179.9, -90.0),
+        (180.0, 85.0511), (0.0, 0.0), (-180.0, 0.0),
+    ]
+    df = spark.createDataFrame(
+        [(i, lo, la) for i, (lo, la) in enumerate(pairs)],
+        "pid long, lon double, lat double",
+    )
+    lon = np.array([nan if lo is None else lo for lo, _ in pairs])
+    lat = np.array([nan if la is None else la for _, la in pairs])
+    for level in (0, 4, 12, 26):
+        got = [
+            r.c
+            for r in df.select(
+                "pid", spatial.cell_encode_col(F.col("lon"), F.col("lat"), level).alias("c")
+            ).orderBy("pid").collect()
+        ]
+        assert got == kcells.cell_encode(lon, lat, level).tolist(), f"level {level}"
+
+
+def test_cell_encode_col_generated_code_is_linear(spark):
+    """The key's generated code evaluates the tile math once: the Morton
+    spread references its input twice per step, which under a conditional
+    branch (no subexpression elimination) expanded to 32 tan() calls."""
+    df = spark.range(16).select(
+        (F.col("id") * 7.5 - 60.0).alias("lon"), (F.col("id") * 5.0 - 40.0).alias("lat")
+    )
+    q = df.select(spatial.cell_encode_col(F.col("lon"), F.col("lat"), 12).alias("c"))
+    jvm = spark.sparkContext._jvm
+    code = jvm.org.apache.spark.sql.execution.debug.package.codegenString(
+        q._jdf.queryExecution().executedPlan()
+    )
+    assert "WholeStageCodegen" in code or "GeneratedClass" in code
+    assert code.count("java.lang.Math.tan(") <= 1
 
 
 def test_cell_parent_col_matches_kernel(spark, points_df):
@@ -160,10 +204,14 @@ def test_pip_join_hole_excluded(spark):
 
 
 def test_pip_join_is_broadcast(spark, points_df):
+    """The broadcast path is one Arrow crossing over (lon, lat) with the
+    polygon index shipped as a broadcast variable: no join, no exchange."""
     df, _ = points_df
     polys = fixtures.polygons_admin_df(spark)
     plan = pip_join(df, polys)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+    assert plan.count("ArrowEvalPython") == 1
+    assert "BatchEvalPython" not in plan
+    assert "Join" not in plan and "Exchange" not in plan
 
 
 def test_point_tiles_match_fixture_formula(spark, points_df):

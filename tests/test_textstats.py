@@ -140,3 +140,50 @@ def test_batch_stats_random_fuzz():
         ref = ts.doc_stats(t)
         got = tuple(int(cols[c][i]) for c in ts.STAT_COLS)
         assert got == ref, f"{i}: {t[:60]!r} got={got} ref={ref}"
+
+
+def test_batch_stats_nan_in_batch():
+    """pandas can surface a missing string as NaN instead of None: a NaN
+    row is a NULL row and must not fail the rest of the batch."""
+    texts = ["a b c", float("nan"), None, "the der"]
+    nulls, cols = ts.batch_stats(texts)
+    assert nulls.tolist() == [False, True, True, False]
+    ref_n, ref_cols = ts.batch_stats(["a b c", None, None, "the der"])
+    assert nulls.tolist() == ref_n.tolist()
+    for c in ts.STAT_COLS:
+        assert cols[c][[0, 3]].tolist() == ref_cols[c][[0, 3]].tolist(), c
+
+
+def test_arrow_text_kernels_nan_in_batch(spark, monkeypatch):
+    """Every mapInPandas text kernel treats a NaN text like NULL: capture
+    each kernel's batch function and feed it a batch holding NaN, None and
+    real text side by side."""
+    import pandas as pd
+
+    from imposm2_spark.operators import curation, dedup, ranking
+
+    docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+    frame_cls = type(docs)
+    captured = []
+    real = frame_cls.mapInPandas
+
+    def capture(self, func, schema, *args, **kwargs):
+        captured.append(func)
+        return real(self, func, schema, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "mapInPandas", capture)
+    dedup.minhash_signatures(docs)
+    dedup.shingle_frame(docs)
+    dedup.simhash_clusters(docs)
+    curation._ngram_rows_kernel(docs, 3, "doc_id", "text")
+    ranking._doc_stats_kernel(docs, ["a", "b"], "doc_id", "text")
+    assert len(captured) == 5
+
+    def run(gen, missing):
+        pdf = pd.DataFrame(
+            {"doc_id": [1, 2, 3], "text": ["one two three four", missing, "x y z w"]}
+        )
+        return [str(out.to_dict("list")) for out in gen(iter([pdf]))]
+
+    for gen in captured:
+        assert run(gen, float("nan")) == run(gen, None)
