@@ -2,16 +2,20 @@
 
 r6 optimization (guide §4.2: hand whole Arrow batches to vectorized native
 code instead of interpreted expression trees). The token-hash -> shingle ->
-MinHash -> band chain in operators/dedup.py and the SimHash fold are pure
-integer arithmetic, so a NumPy kernel can reproduce them BIT-IDENTICALLY —
-these functions are the exact twins of:
+MinHash -> band chain, the SimHash fold and the decontamination n-grams are
+pure integer arithmetic, so a NumPy kernel can reproduce them BIT-IDENTICALLY
+— these functions are the exact twins of the higher-order-function (HOF)
+expressions the DuckDB oracles mirror:
 
-    token_hashes()     = transform(split(text, ' '), char_hash)
-    shingle_hashes()   = word-3-gram rolling combine
-    minhash_signature()/band_keys()
-    simhash_from_hashes()
+    operators/dedup.py   token_hashes()   = transform(split(text, ' '), char_hash)
+                         shingle_hashes() = word-3-gram rolling combine
+    tests/hof_twins.py   minhash_signature() / band_keys()
+                         simhash_from_hashes()
+                         ngram_hashes()
 
-Every function here is differential-tested against the Catalyst expressions
+The library operators run only these kernels; the HOF forms in
+tests/hof_twins.py are kept as test references. Every function here is
+differential-tested against those Catalyst expressions
 (tests/test_texthash.py) on the driver corpus plus adversarial inputs
 (empties, runs of spaces, long tokens, non-ASCII). Semantics notes, pinned
 by those tests:
@@ -109,8 +113,8 @@ _BAND_ROWS = len(PERMS) // N_BANDS
 
 
 def minhash_sig_from_shingles(shs: np.ndarray) -> np.ndarray:
-    """(16,) signature mins, twin of minhash_signature (empty -> all -1
-    sentinel never used: callers drop <3-token docs first)."""
+    """(16,) signature mins, twin of hof_twins.minhash_signature (empty ->
+    all -1 sentinel never used: callers drop <3-token docs first)."""
     if not len(shs):
         return np.full(len(PERMS), -1, dtype=np.int64)
     # (16, n) permuted hashes; a*s < 2^31 * 2^31 fits int64
@@ -119,7 +123,7 @@ def minhash_sig_from_shingles(shs: np.ndarray) -> np.ndarray:
 
 
 def band_keys_from_sig(sig: np.ndarray) -> np.ndarray:
-    """(4,) band keys, twin of band_keys()."""
+    """(4,) band keys, twin of hof_twins.band_keys()."""
     out = np.empty(N_BANDS, dtype=np.int64)
     for b in range(N_BANDS):
         key = sig[_BAND_ROWS * b]
@@ -130,7 +134,7 @@ def band_keys_from_sig(sig: np.ndarray) -> np.ndarray:
 
 
 def simhash_from_tokens(th: np.ndarray) -> int:
-    """32-bit majority-vote fingerprint, twin of simhash_from_hashes."""
+    """32-bit majority-vote fingerprint, twin of hof_twins.simhash_from_hashes."""
     n = len(th)
     if n == 0:
         return 0
@@ -143,7 +147,7 @@ def simhash_from_tokens(th: np.ndarray) -> int:
 
 
 def ngram_hashes_from_tokens(th: np.ndarray, n: int) -> np.ndarray:
-    """Word-n-gram rolling hashes, twin of curation.ngram_hashes: gram_i is
+    """Word-n-gram rolling hashes, twin of hof_twins.ngram_hashes: gram_i is
     seeded with h_i and folds (acc*COMBINE + h_{i+j}) % MOD for j=1..n-1;
     fewer than n tokens -> empty (generalizes shingle_hashes_from_tokens,
     which is the n=3 case)."""

@@ -34,8 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text_analysis import CHAR_MOD, token_count_ws
-from .dedup import _COMBINE, token_hashes
+from ..functions.text_analysis import token_count_ws
 
 DECONTAM_N = 13  # word-n-gram order for benchmark-overlap checks
 
@@ -45,43 +44,12 @@ SAMPLE_A = 1_103_515_245
 SAMPLE_B = 12_345
 
 
-def ngram_hashes(th: F.Column, n: int) -> F.Column:
-    """Word-n-gram rolling hashes from token hashes (generalizes the fixed
-    3-gram shingle_hashes): gram_i = fold_{j=1..n-1} (acc*C + h_{i+j}) % M
-    seeded with h_i. Fewer than n tokens -> empty array.
-
-    `th` MUST be a cheap reference (a bound column or lambda variable), not a
-    compound expression: higher-order lambdas are interpreted without CSE, so
-    every element_at(th, ...) re-evaluates th — n references per gram times
-    the per-token char fold turned a 2s scan into 200s before
-    text_ngram_hashes below bound it once (measured, BENCH round 3)."""
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(th) - (n - 1)),
-        lambda i: F.aggregate(
-            F.sequence(F.lit(1), F.lit(n - 1)),
-            F.element_at(th, i),
-            lambda acc, j: (acc * _COMBINE + F.element_at(th, i + j)) % CHAR_MOD,
-        ),
-    )
-    return F.when(F.size(th) >= n, grams).otherwise(F.array().cast("array<long>"))
-
-
-def text_ngram_hashes(text: F.Column, n: int) -> F.Column:
-    """n-gram hashes straight from text, with the token-hash array bound ONCE
-    as a lambda variable (transform over a single-element array wrapper) so
-    the interpreted gram fold references a value, not an expression."""
-    return F.element_at(
-        F.transform(F.array(token_hashes(text)), lambda th: ngram_hashes(th, n)), 1
-    )
-
-
 def _ngram_rows_kernel(
     df: DataFrame, n: int, id_col: str, text_col: str
 ) -> DataFrame:
     """Exploded (id, _g) rows of per-doc DISTINCT n-gram hashes via the
-    NumPy texthash kernel — bit-identical to
-    explode(array_distinct(text_ngram_hashes(...))) (tests/test_texthash.py)
-    at a fraction of the interpreted-fold cost (guide §4.2)."""
+    NumPy texthash kernel — bit-identical to the oracle's interpreted
+    n-gram fold (tests/test_texthash.py) at a fraction of its cost."""
     import numpy as np
     import pandas as pd
 
@@ -115,31 +83,15 @@ def contamination_hits(
     n: int = DECONTAM_N,
     id_col: str = "doc_id",
     text_col: str = "text",
-    engine: str = "arrow",
 ) -> DataFrame:
     """(id, n_hits): count of DISTINCT train-doc n-grams that appear anywhere
     in the test set. Only contaminated docs appear (n_hits >= 1).
 
-    engine='arrow' (default, r6): the n-gram hashes come from the batched
-    NumPy kernel (values identical — the interpreted 12-step fold per gram
-    was the scan's dominant cost). engine='hof' keeps the expression path
-    (the oracle's textual twin; differential-tested equal)."""
-    if engine == "arrow":
-        tr = _ngram_rows_kernel(train, n, id_col, text_col)
-        te = _ngram_rows_kernel(test, n, id_col, text_col).select("_g").distinct()
-    elif engine == "hof":
-        tr = train.select(
-            F.col(id_col),
-            F.explode(
-                F.array_distinct(text_ngram_hashes(F.col(text_col), n))
-            ).alias("_g"),
-        )
-        te = (
-            test.select(F.explode(text_ngram_hashes(F.col(text_col), n)).alias("_g"))
-            .distinct()
-        )
-    else:
-        raise ValueError(f"engine must be 'arrow' or 'hof', got {engine!r}")
+    The n-gram hashes come from the batched NumPy kernel (values identical
+    to the oracle's interpreted 12-step fold per gram, which was the scan's
+    dominant cost; differential-tested in tests/test_texthash.py)."""
+    tr = _ngram_rows_kernel(train, n, id_col, text_col)
+    te = _ngram_rows_kernel(test, n, id_col, text_col).select("_g").distinct()
     return (
         tr.join(F.broadcast(te), "_g")
         .groupBy(id_col)
@@ -376,7 +328,7 @@ def _repetition_metrics_hof(
     single simple expressions (no struct-accumulator folds — an earlier
     fold formulation was 2x SLOWER than the explode shape at 1M docs);
     arrays are bound ONCE as lambda variables (transform over a 1-element
-    array — HOF lambdas have no CSE; see text_ngram_hashes)."""
+    array — HOF lambdas have no CSE)."""
     toks = docs.select(
         F.col(id_col),
         F.split(F.col(text_col), " ").alias("_toks"),

@@ -14,8 +14,9 @@ inserted-way anti-join P4, SURVEY.md §2.2). Four tiers:
                    set (the verify kernel of minhash_lsh, exposed standalone).
 
 All hashing is integer (rolling 31-polynomial mod 1e9+7, fixed permutation
-constants below), built from JVM higher-order functions — whole-stage codegen,
-no Python boundary, and bit-identical DuckDB oracle twins in plans.registry.
+constants below). Signature, shingle and SimHash scans run the batched NumPy
+kernels in kernels/texthash.py; the pair verify stays in JVM expressions.
+Both are bit-identical to the DuckDB oracle twins in plans.registry.
 
 Scale notes (10^12 docs):
   * the LSH self-join shuffles on (band_idx, band_key); hot buckets (boiler-
@@ -88,27 +89,6 @@ def shingle_hashes(th: F.Column) -> F.Column:
     )
 
 
-def minhash_signature(shs: F.Column) -> list[F.Column]:
-    """16 MinHash components (duplicate shingles are harmless under min)."""
-    return [
-        F.array_min(F.transform(shs, lambda h: (F.lit(a) * h + F.lit(b)) % MINHASH_P)).alias(
-            f"m{j}"
-        )
-        for j, (a, b) in enumerate(PERMS)
-    ]
-
-
-def band_keys() -> list[F.Column]:
-    """Collapse each band of BAND_ROWS signature components into one key."""
-    out = []
-    for b in range(N_BANDS):
-        key = F.col(f"m{BAND_ROWS * b}")
-        for r in range(1, BAND_ROWS):
-            key = (key * _COMBINE + F.col(f"m{BAND_ROWS * b + r}")) % MINHASH_P
-        out.append(key.alias(f"band{b}"))
-    return out
-
-
 def jaccard(sa: F.Column, sb: F.Column) -> F.Column:
     """Exact set-Jaccard over shingle-hash arrays, rounded for hash-compare.
 
@@ -123,35 +103,16 @@ def jaccard(sa: F.Column, sb: F.Column) -> F.Column:
 
 
 def minhash_signatures(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    engine: str = "arrow",
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """(id, shs, m0..m15, band0..band3); docs with <SHINGLE_N tokens dropped.
 
-    engine='arrow' (default, r6 — guide §4.2): one batched mapInPandas pass
-    through the NumPy twins in kernels/texthash.py. The whole chain is
-    integer arithmetic, so the kernel is BIT-IDENTICAL to the interpreted
-    HOF expressions (differential-tested in tests/test_texthash.py incl.
+    One batched mapInPandas pass through the NumPy twins in
+    kernels/texthash.py. The whole chain is integer arithmetic, so the
+    kernel is BIT-IDENTICAL to the interpreted HOF expressions the oracle
+    mirrors (differential-tested against them in tests/test_texthash.py incl.
     non-ASCII and empty-token edges) while replacing O(chars + 16*shingles)
-    interpreted expression evaluation per row with vectorized array math.
-    engine='hof' keeps the Catalyst expression formulation (the oracle's
-    textual twin, used by the differential tests)."""
-    if engine == "arrow":
-        return _minhash_signatures_kernel(docs, id_col, text_col)
-    if engine != "hof":
-        raise ValueError(f"engine must be 'arrow' or 'hof', got {engine!r}")
-    th = docs.select(
-        F.col(id_col), token_hashes(F.col(text_col)).alias("_th")
-    ).where(F.size("_th") >= SHINGLE_N)
-    sh = th.select(id_col, shingle_hashes(F.col("_th")).alias("shs"))
-    sig = sh.select(id_col, "shs", *minhash_signature(F.col("shs")))
-    return sig.select(id_col, "shs", *[F.col(f"m{j}") for j in range(len(PERMS))], *band_keys())
-
-
-def _minhash_signatures_kernel(
-    docs: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
-    """Arrow engine behind minhash_signatures (see its docstring)."""
+    interpreted expression evaluation per row with vectorized array math."""
     import numpy as np
     import pandas as pd
 
@@ -194,25 +155,15 @@ def _minhash_signatures_kernel(
 
 
 def shingle_frame(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    engine: str = "arrow",
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """(id, shs): per-doc word-3-gram shingle hashes; <SHINGLE_N-token and
     NULL-text docs dropped (the minhash_signatures row contract minus the
     signature columns).
 
-    engine='arrow' (default, r6): batched NumPy kernel — bit-identical to
-    the HOF chain (tests/test_texthash.py) at ~4x the throughput (guide
-    §4.2; measured 2.17s -> 0.55s for the sf1.0 scan). engine='hof' keeps
-    the Catalyst expression formulation."""
-    if engine == "hof":
-        return (
-            docs.select(id_col, token_hashes(F.col(text_col)).alias("_th"))
-            .where(F.size("_th") >= SHINGLE_N)
-            .select(id_col, shingle_hashes(F.col("_th")).alias("shs"))
-        )
-    if engine != "arrow":
-        raise ValueError(f"engine must be 'arrow' or 'hof', got {engine!r}")
+    Batched NumPy kernel — bit-identical to the HOF chain (tests/
+    test_texthash.py) at ~4x its throughput (measured 2.17s -> 0.55s for the
+    sf1.0 scan)."""
     import numpy as np
     import pandas as pd
 
@@ -265,9 +216,9 @@ def minhash_lsh_pairs(
     candidate set instead."""
     # r6 optimization (guide §5 caching): the signature frame feeds ~5 plan
     # branches (bands explode, the bucket-count gate, BOTH verify sides, and
-    # every re-execution of the returned frame) and each branch used to
-    # re-run the per-char token-hash + shingle + 16-permutation chain over
-    # the whole corpus — the dominant cost of this operator. Persist it once
+    # every re-execution of the returned frame) and each branch would re-run
+    # the signature kernel over the whole corpus — the dominant cost of this
+    # operator. Persist it once
     # per invocation (predecessor released via _SIG_PREV above; footprint =
     # id + shingle hashes + 20 longs per doc, MEMORY_AND_DISK so oversized
     # inputs spill instead of OOM). At true 10^12 scale callers materialize
@@ -345,110 +296,32 @@ def minhash_dropped_buckets(
     )
 
 
-# ---------------------------------------------------------------------------
-# SimHash: 32-bit majority-vote fingerprint over token hashes.
-# The oracle extracts bit b as floor(h / 2^b) % 2 (DuckDB lambdas lack
-# bitwise shift-by-column); the engine uses literal bit MASKS + bitwiseAND —
-# identical values because token hashes are nonnegative (< CHAR_MOD < 2^30).
-# ---------------------------------------------------------------------------
-SIMHASH_BITS = 32
-
-
-def _bit_masks() -> F.Column:
-    """One literal mask per bit: a constant array, built once per plan.
-    Constructed lazily — F.lit requires an active SparkContext, so a
-    module-level constant would break import before session start."""
-    return F.array(*[F.lit(1 << b).cast("long") for b in range(SIMHASH_BITS)])
-
-
-def simhash_from_hashes(th: F.Column) -> F.Column:
-    """SimHash from a PRECOMPUTED token-hash array column, in ONE array pass.
-
-    Higher-order functions are interpreted (not codegen'd), and passing
-    `text` directly would re-run the O(chars) rolling hash per reference —
-    callers materialize the hash array in a prior projection (see
-    simhash_clusters). Within this expression the token array is folded
-    ONCE, zip_with-ing a 32-counter array state against literal bit masks
-    (r3 verdict watch item: the previous form scanned the array once per bit
-    with a float pow/floor per token-bit — measured 2.3x slower at sf0.1:
-    2.32s vs 1.03s median-of-3, outputs bit-identical). The counts array is
-    then bound once as a lambda variable (aggregate over a 1-element array)
-    before the 32 element_at references — an unbound expression would re-run
-    the whole fold per reference (the HOF re-evaluation trap, SKILL.md r3)."""
-    n = F.size(th)
-    counts = F.aggregate(
-        th,
-        F.array_repeat(F.lit(0).cast("long"), SIMHASH_BITS),
-        lambda acc, h: F.zip_with(
-            acc,
-            _bit_masks(),
-            lambda c, m: c
-            + F.when(h.cast("long").bitwiseAND(m) != 0, 1).otherwise(0),
-        ),
-    )
-    return F.aggregate(
-        F.array(counts),  # binds the counts fold ONCE as a lambda variable
-        F.lit(0).cast("long"),
-        lambda _zero, cs: F.aggregate(
-            F.sequence(F.lit(0), F.lit(SIMHASH_BITS - 1)),
-            F.lit(0).cast("long"),
-            lambda acc, b: acc * 2
-            + F.when(F.element_at(cs, b.cast("int") + 1) * 2 > n, 1).otherwise(0),
-        ),
-    )
-
-
-def simhash(text: F.Column) -> F.Column:
-    """Single-column convenience form (tests); hot paths use the two-phase
-    simhash_clusters plan to avoid re-hashing per bit."""
-    return simhash_from_hashes(token_hashes(text))
-
-
 def simhash_clusters(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    engine: str = "arrow",
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """Docs sharing a SimHash fingerprint — near-dup clusters in one groupBy.
 
-    engine='arrow' (default, r6 — guide §4.2): fingerprints come from the
-    batched NumPy kernel (kernels/texthash.py::simhash_from_tokens, already
-    differential-tested bit-identical) instead of the interpreted 32-counter
-    zip_with fold — the fold was this operator's whole scan cost. NULL text
-    fingerprints as 0 on BOTH engines (the HOF outer fold over [NULL]
-    counts emits 0 per bit; the kernel's empty token array does the same —
-    engine-parity pytest incl. NULL rows). The groupBy shuffles
-    (simhash, partial agg) either way. engine='hof' keeps the Catalyst
-    formulation (the oracle's textual twin)."""
-    if engine == "arrow":
-        import numpy as np
-        import pandas as pd
+    Fingerprints are 32-bit majority votes over the token hashes, from the
+    batched NumPy kernel (kernels/texthash.py::simhash_from_tokens,
+    differential-tested bit-identical to the HOF fold the oracle mirrors).
+    NULL text fingerprints as 0, as the fold does over an empty token array
+    (parity pytest incl. NULL rows). The groupBy shuffles (simhash, partial
+    agg)."""
+    import numpy as np
+    import pandas as pd
 
-        from ..kernels import texthash as tx
+    from ..kernels import texthash as tx
 
-        def gen(batches):
-            for pdf in batches:
-                fps = np.fromiter(
-                    (
-                        tx.simhash_from_tokens(tx.token_hashes_doc(t))
-                        for t in pdf[text_col]
-                    ),
-                    dtype=np.int64,
-                    count=len(pdf),
-                )
-                yield pd.DataFrame(
-                    {id_col: pdf[id_col].to_numpy(), "simhash": fps}
-                )
+    def gen(batches):
+        for pdf in batches:
+            fps = np.fromiter(
+                (tx.simhash_from_tokens(tx.token_hashes_doc(t)) for t in pdf[text_col]),
+                dtype=np.int64,
+                count=len(pdf),
+            )
+            yield pd.DataFrame({id_col: pdf[id_col].to_numpy(), "simhash": fps})
 
-        fp = docs.select(id_col, text_col).mapInPandas(
-            gen, f"{id_col} long, simhash long"
-        )
-    elif engine == "hof":
-        th = docs.select(F.col(id_col), token_hashes(F.col(text_col)).alias("_th"))
-        fp = th.select(
-            F.col(id_col), simhash_from_hashes(F.col("_th")).alias("simhash")
-        )
-    else:
-        raise ValueError(f"engine must be 'arrow' or 'hof', got {engine!r}")
+    fp = docs.select(id_col, text_col).mapInPandas(gen, f"{id_col} long, simhash long")
     return (
         fp.groupBy("simhash")
         .agg(F.count("*").alias("n_docs"), F.min(id_col).alias("keeper_id"))
@@ -741,8 +614,8 @@ def ngram_jaccard_pairs(
     Pairs referencing a doc with < SHINGLE_N tokens keep the empty-shingle
     semantics (jaccard 0.0, or null when both sides are empty) — no rows are
     dropped relative to the caller's pair table."""
-    # token hashes bound ONCE via the single-element-array transform trick
-    # (see curation.text_ngram_hashes): shingle_hashes references its input
+    # token hashes bound ONCE via the single-element-array transform trick:
+    # shingle_hashes references its input
     # ~5x inside interpreted lambdas (no CSE), so inlining token_hashes there
     # re-runs the per-char fold per reference — measured 25x slower at sf0.1.
     sh = docs.select(

@@ -75,10 +75,11 @@ MAX_INLINE_TERMS = 64
 _SUM_DEC = "decimal(28,9)"
 
 # _bm25_inline persists its per-doc (dl, tfs) frame (consumed by the 1-row
-# stats aggregate AND the scoring join — two branches that each re-ran the
-# O(tokens x k) fold); each invocation releases its predecessor's cache
-# (the registry _KNN_PREV pattern), bounding the footprint at one live
-# instance. The unpersisted predecessor stays recomputable via lineage.
+# stats aggregate AND the scoring join — two branches that would each re-run
+# the O(tokens x k) _doc_stats_expr fold); each invocation releases its
+# predecessor's cache (the registry _KNN_PREV pattern), bounding the
+# footprint at one live instance. The unpersisted predecessor stays
+# recomputable via lineage.
 _BM25_PREV: list[DataFrame] = []
 
 
@@ -101,12 +102,14 @@ def _doc_stats_expr(text_col: F.Column, terms: list[str]) -> F.Column:
     """Per-row struct(dl, tfs[k]) in ONE pass over the token array.
 
     The token array is bound once as a lambda variable (aggregate over a
-    1-element array — the HOF re-evaluation guard, same idiom as
-    dedup.simhash_from_hashes); the inner fold zip_withs a k-counter state
-    against the literal term array, so the row cost is O(tokens · k) with
-    no explode and no shuffle."""
+    1-element array — the HOF re-evaluation guard); the inner fold zip_withs
+    a k-counter state against the literal term array, so the row cost is
+    O(tokens · k) with no explode and no shuffle. NULL text folds as the
+    empty string: dl 0, every tf 0 — the join path's answer, where the doc
+    has no tokens yet still counts in N (a NULL token array NPEs the fold)."""
     k = len(terms)
-    toks = F.filter(F.split(F.trim(text_col), r"\s+"), lambda x: x != "")
+    text = F.coalesce(text_col, F.lit(""))
+    toks = F.filter(F.split(F.trim(text), r"\s+"), lambda x: x != "")
     term_lits = F.array(*[F.lit(t) for t in terms])
     zero = F.struct(
         F.lit(0).cast("long").alias("dl"),
@@ -130,68 +133,9 @@ def _doc_stats_expr(text_col: F.Column, terms: list[str]) -> F.Column:
     )
 
 
-def _doc_stats_kernel(
-    docs: DataFrame, terms: list[str], id_col: str, text_col: str
-) -> DataFrame:
-    """(id, s struct<dl, tfs>) via one Arrow-batched pass — the integer twin
-    of _doc_stats_expr (r6, guide §4.2: the interpreted fold zip_withs a
-    k-counter array per token; this is a dict lookup per token in C-backed
-    machinery). Tokenization pinned to the expression chain's semantics:
-    tokens are the maximal runs of non-\\s chars (Java \\s = the six ASCII
-    separators; trim strips only spaces and empties are filtered, so the
-    runs of the RAW text are exactly the surviving tokens). NULL text
-    yields NULL dl/tfs (the fold NPEs in codegen on NULL — the kernel is
-    the robust path; engine-parity pytest on non-null rows).
-
-    NOT the default (r6, measured): at 200k docs / 5 terms the kernel
-    benched 1.32s vs the fold's 0.97s on this host — the bound single-pass
-    fold is already cheap at small k, and the per-token Python dict walk
-    plus the Arrow list column costs more than it saves. Kept as the
-    engine='arrow' option for large k or dirty (nullable-text) corpora."""
-    import re
-
-    import pandas as pd
-
-    split_re = re.compile("[ \t\n\x0b\x0c\r]+")
-    term_idx = {t: i for i, t in enumerate(terms)}
-    k = len(terms)
-
-    def gen(batches):
-        for pdf in batches:
-            dls, tfss = [], []
-            for t in pdf[text_col]:
-                if not isinstance(t, str):
-                    dls.append(None)
-                    tfss.append(None)
-                    continue
-                toks = [x for x in split_re.split(t) if x]
-                tfs = [0] * k
-                for x in toks:
-                    i = term_idx.get(x)
-                    if i is not None:
-                        tfs[i] += 1
-                dls.append(len(toks))
-                tfss.append(tfs)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "dl": pd.array(dls, dtype="Int64"),
-                    "tfs": tfss,
-                }
-            )
-
-    mid = docs.select(id_col, text_col).mapInPandas(
-        gen, f"{id_col} long, dl long, tfs array<long>"
-    )
-    return mid.select(
-        id_col, F.struct(F.col("dl"), F.col("tfs")).alias("s")
-    )
-
-
 def _bm25_inline(
     docs: DataFrame, terms: list[str], *, id_col: str, text_col: str,
     k1: float, b: float, top_k: int, term_dp: int, score_dp: int,
-    engine: str = "hof",
 ) -> DataFrame:
     """Zero-shuffle BM25 for a driver-known term list: per-doc (dl, tfs)
     in-row, ALL corpus statistics (N, sum_dl, per-term df) in ONE
@@ -208,14 +152,9 @@ def _bm25_inline(
     # CacheManager entry (see plans/curate.py, same fix)
     while _BM25_PREV:
         _BM25_PREV.pop().unpersist()
-    if engine == "arrow":
-        base = _doc_stats_kernel(docs, terms, id_col, text_col).persist()
-    elif engine == "hof":
-        base = docs.select(
-            F.col(id_col), _doc_stats_expr(F.col(text_col), terms).alias("s")
-        ).persist()
-    else:
-        raise ValueError(f"engine must be 'arrow' or 'hof', got {engine!r}")
+    base = docs.select(
+        F.col(id_col), _doc_stats_expr(F.col(text_col), terms).alias("s")
+    ).persist()
     _BM25_PREV.append(base)
     stats = F.broadcast(
         base.agg(

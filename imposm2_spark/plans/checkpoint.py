@@ -44,7 +44,10 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..sources.catalog import atomic_write_json
 
-ENGINE_VERSION = "imposm2_spark/0.1"
+# Bump whenever a stage's output schema or semantics change: a manifest
+# written under another version is recomputed, never reused (0.2: the spine's
+# enrich stage checkpoints (url, lon, lat, n_chars) only).
+ENGINE_VERSION = "imposm2_spark/0.2"
 TMP_SUFFIX = ".__tmp__"
 MANIFEST = "_manifest.json"
 

@@ -13,10 +13,11 @@ oracle-checked as a whole in plans.registry::curate_corpus):
                       transitive clustering, not the greedy pair-drop
   5. stats          — per-language kept counts + token totals
 
-Scale shape: stages 1-2 are codegen'd filters (no shuffle); stage 3 is one
-hash aggregation; stage 4 reuses the banded-LSH self-join (bounded buckets)
-plus a bounded label-propagation loop over dup nodes only; stage 5 one
-aggregation. Nothing quadratic, nothing driver-side.
+Scale shape: stages 1-2 are one scoring scan — a single Arrow-batched stats
+UDF (kernels/textstats.py) feeding codegen'd filters, no shuffle; stage 3 is
+one hash aggregation; stage 4 reuses the banded-LSH self-join (bounded
+buckets) plus a bounded label-propagation loop over dup nodes only; stage 5
+one aggregation. Nothing quadratic, nothing driver-side.
 """
 
 from __future__ import annotations
@@ -24,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text_analysis import lang_id, quality_score, token_count_ws
+from ..functions.text_analysis import doc_stats_udf, stats_lang, stats_quality
 from ..operators.dedup import dedup_connected_components, minhash_lsh_pairs
 
 # Each curate() invocation unpersists its PREDECESSOR's gated frame (the
@@ -44,48 +45,29 @@ def curate(
     neardup_threshold: float = 0.5,
     id_col: str = "doc_id",
     text_col: str = "text",
-    engine: str = "arrow",
 ) -> DataFrame:
     """Returns the kept documents: (doc_id, text, lang_pred, quality, n_tokens).
 
-    engine='arrow' (default, r6 — guide §4.2): the scoring scan evaluates
-    ONE Arrow-batched stats UDF (kernels/textstats.py) per row instead of
-    ~8 interpreted references to the `\\s+` tokenizer plus four stopword
-    filters and two regex passes; the float blend / rounding / lang argmax
-    stay in the SAME shared Spark expressions (functions.text_analysis
-    quality_expr/lang_expr), so outputs are bit-identical (differential-
-    tested in tests/test_textstats.py; the curate oracle pins the whole
-    composition). engine='hof' keeps the expression chain (the oracle's
-    textual twin)."""
-    if engine == "arrow":
-        from ..functions.text_analysis import (
-            doc_stats_udf,
-            stats_lang,
-            stats_quality,
-        )
-
-        stats = doc_stats_udf()
-        scored = docs.select(
-            F.col(id_col),
-            F.col(text_col),
-            stats(F.col(text_col)).alias("_s"),
-        ).select(
-            F.col(id_col),
-            F.col(text_col),
-            stats_lang(F.col("_s")).alias("lang_pred"),
-            F.round(stats_quality(F.col("_s")), 6).alias("quality"),
-            F.col("_s.n_ws").alias("n_tokens"),
-        )
-    elif engine == "hof":
-        scored = docs.select(
-            F.col(id_col),
-            F.col(text_col),
-            lang_id(F.col(text_col)).alias("lang_pred"),
-            F.round(quality_score(F.col(text_col)), 6).alias("quality"),
-            token_count_ws(F.col(text_col)).alias("n_tokens"),
-        )
-    else:
-        raise ValueError(f"engine must be 'arrow' or 'hof', got {engine!r}")
+    The scoring scan evaluates ONE Arrow-batched stats UDF
+    (kernels/textstats.py) per row instead of ~8 interpreted references to
+    the `\\s+` tokenizer plus four stopword filters and two regex passes;
+    the float blend / rounding / lang argmax stay in the SAME shared Spark
+    expressions (functions.text_analysis stats_quality/stats_lang), so
+    outputs are bit-identical to the expression chain (differential-tested
+    in tests/test_textstats.py; the curate oracle pins the whole
+    composition)."""
+    stats = doc_stats_udf()
+    scored = docs.select(
+        F.col(id_col),
+        F.col(text_col),
+        stats(F.col(text_col)).alias("_s"),
+    ).select(
+        F.col(id_col),
+        F.col(text_col),
+        stats_lang(F.col("_s")).alias("lang_pred"),
+        F.round(stats_quality(F.col("_s")), 6).alias("quality"),
+        F.col("_s.n_ws").alias("n_tokens"),
+    )
     gated = scored.where(
         (F.col("quality") >= min_quality) & F.col("lang_pred").isin(*langs)
     )

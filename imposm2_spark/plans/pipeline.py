@@ -13,6 +13,10 @@ Shape of the physical plan (verified by tests/test_plans.py explain checks):
   -> single shuffle for the final tile aggregation
 A polygon side over pip.MAX_BROADCAST_POLYGONS instead runs the enrich
 crossing, then pip_join's cell-key shuffle join and refine.
+
+located_points is that enrich + locate layer; the streaming spine
+(streaming.ingest) runs it per micro-batch. spine_resumable checkpoints the
+same enrich crossing (_enriched_points) before its pip_join stage.
 """
 
 from __future__ import annotations
@@ -88,6 +92,50 @@ def _enrich_fused_udf(index_bc=None, id_type=None):
     return F.pandas_udf(_f, T.StructType(fields))
 
 
+def _enriched_points(docs: DataFrame, keep_cols: tuple[str, ...] = ()) -> DataFrame:
+    """(keep_cols..., lon, lat, n_chars) through the fused enrich crossing,
+    without the locate: html and the extracted text never come back."""
+    return docs.select(
+        *keep_cols, _enrich_fused_udf()(F.col("url"), F.col("html")).alias("_g")
+    ).select(*keep_cols, "_g.lon", "_g.lat", "_g.n_chars")
+
+
+def located_points(
+    docs: DataFrame,
+    polygons: DataFrame,
+    cell_level: int,
+    keep_cols: tuple[str, ...] = (),
+    salt_factor: int | None = None,
+) -> DataFrame:
+    """(keep_cols..., lon, lat, n_chars, polygon_id): one row per document
+    and containing polygon — the spine's enrich + point-in-polygon layer.
+
+    Polygon side within pip's MAX_BROADCAST_POLYGONS (pulled eagerly, one
+    capped action): extract + geotag + locate run in one Arrow crossing and
+    the ids explode JVM-side. Over the cap: the same enrich without the
+    locate, then pip_join's shuffle path (`salt_factor` applies there only).
+    Rows are identical either way (pytest-pinned). `keep_cols` are input
+    columns carried through unchanged (e.g. url, warc_ts)."""
+    index = pip.polygon_index(polygons, cell_level, pip.MAX_BROADCAST_POLYGONS)
+    if index is None:
+        return pip_join(
+            _enriched_points(docs, keep_cols),
+            polygons,
+            cell_level=cell_level,
+            broadcast_polygons=False,
+            salt_factor=salt_factor,
+        )
+    fused = _enrich_fused_udf(
+        docs.sparkSession.sparkContext.broadcast(index),
+        polygons.schema["polygon_id"].dataType,
+    )
+    located = docs.select(*keep_cols, fused(F.col("url"), F.col("html")).alias("_g"))
+    return located.select(
+        *keep_cols, "_g.lon", "_g.lat", "_g.n_chars",
+        F.explode("_g.polygon_ids").alias("polygon_id"),
+    )
+
+
 def spine(
     docs: DataFrame,
     polygons: DataFrame,
@@ -100,35 +148,10 @@ def spine(
     sum_chars aggregates the extracted-text length so the extraction stage
     is a CONSUMED part of the plan — without a consumer Catalyst's column
     pruning (correctly) deletes the extract work and the flagship query
-    silently stops measuring it.
-
-    Polygon side within pip's MAX_BROADCAST_POLYGONS (pulled eagerly, one
-    capped action): extract + geotag + point-in-polygon run in one Arrow
-    crossing and the ids explode JVM-side. Over the cap: the same enrich
-    without the locate, then pip_join's shuffle path (`salt_factor` applies
-    there only). Tile rows are identical either way (pytest-pinned).
+    silently stops measuring it. The enrich + locate layer is
+    located_points (one Arrow crossing under the broadcast cap).
     """
-    index = pip.polygon_index(polygons, cell_level, pip.MAX_BROADCAST_POLYGONS)
-    if index is None:
-        enriched = docs.select(
-            _enrich_fused_udf()(F.col("url"), F.col("html")).alias("_g")
-        ).select("_g.lon", "_g.lat", "_g.n_chars")
-        joined = pip_join(
-            enriched,
-            polygons,
-            cell_level=cell_level,
-            broadcast_polygons=False,
-            salt_factor=salt_factor,
-        )
-    else:
-        fused = _enrich_fused_udf(
-            docs.sparkSession.sparkContext.broadcast(index),
-            polygons.schema["polygon_id"].dataType,
-        )
-        joined = docs.select(fused(F.col("url"), F.col("html")).alias("_g")).select(
-            "_g.lon", "_g.lat", "_g.n_chars",
-            F.explode("_g.polygon_ids").alias("polygon_id"),
-        )
+    joined = located_points(docs, polygons, cell_level, salt_factor=salt_factor)
     tiled = assign_point_tiles(joined, list(zooms))
     return tiled.groupBy("z", "x", "y").agg(
         F.count("*").alias("n_docs"),
@@ -149,9 +172,12 @@ def spine_resumable(
     """The spine with M6 durable stage boundaries (plans.checkpoint).
 
     Stage cuts sit where recompute is expensive and the output is much
-    smaller than the input — the checkpointed frames drop `html`:
-      enrich   : scan + Arrow extract/geotag (Python-boundary cost)
-      pip_join : shuffle/broadcast join + exact refine (join cost)
+    smaller than the input:
+      enrich   : scan + the spine's fused extract/geotag Arrow crossing
+                 (one Python node); checkpoints only (url, lon, lat,
+                 n_chars) — no html or text column is written
+      pip_join : broadcast locate or shuffle join + refine over the
+                 enrich checkpoint (join cost)
     The final tile aggregation is cheap relative to its input and stays
     uncheckpointed. A restart replays only missing/invalidated stages.
     """
@@ -161,9 +187,7 @@ def spine_resumable(
     enriched = mgr.stage(
         spark,
         "enrich",
-        lambda: geotag_stage(extract_stage(docs))
-        .withColumn("n_chars", F.length("text_extracted").cast("long"))
-        .drop("html"),
+        lambda: _enriched_points(docs, ("url",)),
         input_fingerprint=input_fingerprint,
     )
     # the polygons input must invalidate the join checkpoint too: folding

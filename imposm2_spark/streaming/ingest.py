@@ -7,11 +7,14 @@ built on Structured Streaming file sources instead of OSM diff files:
 
   * `stream_ingest` — readStream over a landing directory of document parquet
     (the Iceberg-table stand-in), per-microbatch extract+geotag enrichment
-    (same Arrow kernels as the batch spine — code shared, not forked), parquet
-    append sink. Exactly-once per input file via the streaming checkpoint
+    (the batch extract_stage/geotag_stage: the sink keeps `text_extracted`),
+    parquet append sink. Exactly-once per input file via the streaming checkpoint
     (file-source tracking + idempotent sink commit); `availableNow` drains the
     backlog and stops, so batch backfills and continuous tailing share one
     code path.
+  * `stream_spine` / `stream_curated_spine` — the batch spine's enrich +
+    locate layer (plans.pipeline.located_points: one Arrow crossing under the
+    broadcast cap) feeding watermarked windowed tile stats.
   * `stream_tile_counts` — event-time windowed aggregation (warc_ts) with a
     watermark for late documents: counts per (window, tile) in update mode,
     the streaming twin of the spine's tile groupBy.
@@ -32,7 +35,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.spatial import cell_encode_col
-from ..plans.pipeline import extract_stage, geotag_stage
+from ..plans.pipeline import extract_stage, geotag_stage, located_points
 
 DOCUMENTS_WEB_SCHEMA = T.StructType(
     [
@@ -114,8 +117,9 @@ def stream_spine(
     cell_level: int = 12,
     max_files_per_trigger: int | None = 8,
 ) -> StreamingQuery:
-    """The full M1 spine as one Structured Streaming job: extract -> geotag ->
-    stream-STATIC broadcast PIP join -> watermarked windowed tile stats.
+    """The full M1 spine as one Structured Streaming job: extract + geotag +
+    locate against the STATIC polygon side -> watermarked windowed tile
+    stats.
 
     `cell_level` defaults to the batch spine's 12 (review r5: this twin
     defaulted to 4, whose 22.5-degree prefilter cells degrade the PIP
@@ -123,10 +127,11 @@ def stream_spine(
     result stays correct, the refine cost does not). Match it to the
     polygon fixture's cover level, as the batch spine does.
 
-    The polygon side is static (rings pulled once, re-shipped per executor by
-    pip_join's broadcast path); the streaming side goes through only
-    stateless ops before the windowed aggregation, so watermark metadata
-    propagates and closed-window state is evicted — the streaming twin of
+    The polygon side is static (its PolygonIndex is pulled once at start and
+    broadcast; over pip.MAX_BROADCAST_POLYGONS it takes pip_join's shuffle
+    path instead); the streaming side goes through only stateless ops before
+    the windowed aggregation, so watermark metadata propagates and
+    closed-window state is evicted — the streaming twin of
     plans.pipeline.spine, batch-parity-tested in tests/test_streaming.py.
 
     SINK CONTRACT — `sink` MUST upsert, not append: outputMode('update')
@@ -196,22 +201,14 @@ def _spine_query(
     watermark: str,
     cell_level: int,
 ) -> StreamingQuery:
-    """Shared spine tail: extract -> geotag -> stream-static PIP ->
-    watermarked windowed tile stats -> update-mode foreachBatch."""
+    """Shared spine tail: the batch spine's located_points (extract + geotag
+    + locate in ONE Arrow crossing, then explode, under the broadcast cap;
+    enrich then pip_join's shuffle path over it) -> watermarked windowed
+    tile stats -> update-mode foreachBatch."""
     from ..functions.spatial import tile_x, tile_y
-    from ..operators.pip import pip_join
 
-    enriched = (
-        geotag_stage(extract_stage(docs))
-        .withColumn("n_chars", F.length("text_extracted").cast("long"))
-        .drop("html")
-        .withWatermark("warc_ts", watermark)
-    )
-    joined = pip_join(
-        enriched,
-        polygons,
-        cell_level=cell_level,
-        keep_point_cols=["url", "warc_ts", "lon", "lat", "n_chars"],
+    joined = located_points(
+        docs.withWatermark("warc_ts", watermark), polygons, cell_level, ("warc_ts",)
     )
     counts = (
         joined.groupBy(

@@ -1,0 +1,186 @@
+"""Catalyst higher-order-function (HOF) formulations of the text-hash chain.
+
+The library computes signatures, SimHash fingerprints and decontamination
+n-grams with the batched NumPy kernels in imposm2_spark/kernels/texthash.py.
+These expression forms are the textual twins of the DuckDB oracle SQL in
+plans.registry and serve the differential tests as references: a kernel is
+correct when it matches them bit for bit. They are not library code — no
+operator calls them.
+
+The token and shingle hashes they start from (operators.dedup.token_hashes /
+shingle_hashes) stay in the library: ngram_jaccard_pairs uses them.
+"""
+
+from __future__ import annotations
+
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from imposm2_spark.functions.text_analysis import CHAR_MOD
+from imposm2_spark.operators.dedup import (
+    _COMBINE,
+    BAND_ROWS,
+    MINHASH_P,
+    N_BANDS,
+    PERMS,
+    SHINGLE_N,
+    shingle_hashes,
+    token_hashes,
+)
+
+SIMHASH_BITS = 32
+
+
+def minhash_signature(shs: F.Column) -> list[F.Column]:
+    """16 MinHash components (duplicate shingles are harmless under min)."""
+    return [
+        F.array_min(F.transform(shs, lambda h: (F.lit(a) * h + F.lit(b)) % MINHASH_P)).alias(
+            f"m{j}"
+        )
+        for j, (a, b) in enumerate(PERMS)
+    ]
+
+
+def band_keys() -> list[F.Column]:
+    """Collapse each band of BAND_ROWS signature components into one key."""
+    out = []
+    for b in range(N_BANDS):
+        key = F.col(f"m{BAND_ROWS * b}")
+        for r in range(1, BAND_ROWS):
+            key = (key * _COMBINE + F.col(f"m{BAND_ROWS * b + r}")) % MINHASH_P
+        out.append(key.alias(f"band{b}"))
+    return out
+
+
+def _bit_masks() -> F.Column:
+    """One literal mask per bit: a constant array, built once per plan.
+    Constructed lazily — F.lit requires an active SparkContext, so a
+    module-level constant would break import before session start."""
+    return F.array(*[F.lit(1 << b).cast("long") for b in range(SIMHASH_BITS)])
+
+
+def simhash_from_hashes(th: F.Column) -> F.Column:
+    """SimHash from a PRECOMPUTED token-hash array column, in ONE array pass.
+
+    The oracle extracts bit b as floor(h / 2^b) % 2 (DuckDB lambdas lack
+    bitwise shift-by-column); this form uses literal bit MASKS + bitwiseAND —
+    identical values because token hashes are nonnegative (< CHAR_MOD < 2^30).
+    The token array is folded ONCE, zip_with-ing a 32-counter array state
+    against the masks; the counts array is then bound once as a lambda
+    variable (aggregate over a 1-element array) before the 32 element_at
+    references — an unbound expression would re-run the whole fold per
+    reference (HOF lambdas have no common-subexpression elimination)."""
+    n = F.size(th)
+    counts = F.aggregate(
+        th,
+        F.array_repeat(F.lit(0).cast("long"), SIMHASH_BITS),
+        lambda acc, h: F.zip_with(
+            acc,
+            _bit_masks(),
+            lambda c, m: c
+            + F.when(h.cast("long").bitwiseAND(m) != 0, 1).otherwise(0),
+        ),
+    )
+    return F.aggregate(
+        F.array(counts),  # binds the counts fold ONCE as a lambda variable
+        F.lit(0).cast("long"),
+        lambda _zero, cs: F.aggregate(
+            F.sequence(F.lit(0), F.lit(SIMHASH_BITS - 1)),
+            F.lit(0).cast("long"),
+            lambda acc, b: acc * 2
+            + F.when(F.element_at(cs, b.cast("int") + 1) * 2 > n, 1).otherwise(0),
+        ),
+    )
+
+
+def simhash(text: F.Column) -> F.Column:
+    """Single-column convenience form of simhash_from_hashes."""
+    return simhash_from_hashes(token_hashes(text))
+
+
+def ngram_hashes(th: F.Column, n: int) -> F.Column:
+    """Word-n-gram rolling hashes from token hashes (generalizes the fixed
+    3-gram shingle_hashes): gram_i = fold_{j=1..n-1} (acc*C + h_{i+j}) % M
+    seeded with h_i. Fewer than n tokens -> empty array.
+
+    `th` MUST be a cheap reference (a bound column or lambda variable), not a
+    compound expression: every element_at(th, ...) re-evaluates th inside the
+    interpreted lambdas."""
+    grams = F.transform(
+        F.sequence(F.lit(1), F.size(th) - (n - 1)),
+        lambda i: F.aggregate(
+            F.sequence(F.lit(1), F.lit(n - 1)),
+            F.element_at(th, i),
+            lambda acc, j: (acc * _COMBINE + F.element_at(th, i + j)) % CHAR_MOD,
+        ),
+    )
+    return F.when(F.size(th) >= n, grams).otherwise(F.array().cast("array<long>"))
+
+
+def text_ngram_hashes(text: F.Column, n: int) -> F.Column:
+    """n-gram hashes straight from text, with the token-hash array bound ONCE
+    as a lambda variable (transform over a single-element array wrapper)."""
+    return F.element_at(
+        F.transform(F.array(token_hashes(text)), lambda th: ngram_hashes(th, n)), 1
+    )
+
+
+# --- operator compositions: what each operator computes, as HOF expressions
+
+
+def minhash_signatures_hof(
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
+) -> DataFrame:
+    """(id, shs, m0..m15, band0..band3) — dedup.minhash_signatures' rows."""
+    th = docs.select(
+        F.col(id_col), token_hashes(F.col(text_col)).alias("_th")
+    ).where(F.size("_th") >= SHINGLE_N)
+    sh = th.select(id_col, shingle_hashes(F.col("_th")).alias("shs"))
+    sig = sh.select(id_col, "shs", *minhash_signature(F.col("shs")))
+    return sig.select(
+        id_col, "shs", *[F.col(f"m{j}") for j in range(len(PERMS))], *band_keys()
+    )
+
+
+def shingle_frame_hof(
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
+) -> DataFrame:
+    """(id, shs) — dedup.shingle_frame's rows."""
+    return (
+        docs.select(id_col, token_hashes(F.col(text_col)).alias("_th"))
+        .where(F.size("_th") >= SHINGLE_N)
+        .select(id_col, shingle_hashes(F.col("_th")).alias("shs"))
+    )
+
+
+def simhash_clusters_hof(
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
+) -> DataFrame:
+    """(simhash, n_docs, keeper_id) — dedup.simhash_clusters' rows."""
+    th = docs.select(F.col(id_col), token_hashes(F.col(text_col)).alias("_th"))
+    fp = th.select(F.col(id_col), simhash_from_hashes(F.col("_th")).alias("simhash"))
+    return (
+        fp.groupBy("simhash")
+        .agg(F.count("*").alias("n_docs"), F.min(id_col).alias("keeper_id"))
+        .where(F.col("n_docs") > 1)
+    )
+
+
+def contamination_hits_hof(
+    train: DataFrame,
+    test: DataFrame,
+    n: int,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """(id, n_hits) — curation.contamination_hits' rows."""
+    tr = train.select(
+        F.col(id_col),
+        F.explode(F.array_distinct(text_ngram_hashes(F.col(text_col), n))).alias("_g"),
+    )
+    te = test.select(F.explode(text_ngram_hashes(F.col(text_col), n)).alias("_g")).distinct()
+    return (
+        tr.join(F.broadcast(te), "_g")
+        .groupBy(id_col)
+        .agg(F.count("*").alias("n_hits"))
+    )

@@ -73,7 +73,8 @@ def test_minhash_max_bucket_drops_boilerplate(spark):
 
 
 def test_simhash_identical_texts_cluster(spark):
-    from imposm2_spark.operators.dedup import simhash, simhash_clusters
+    from hof_twins import simhash
+    from imposm2_spark.operators.dedup import simhash_clusters
 
     docs = _corpus(spark)
     clusters = simhash_clusters(docs).collect()

@@ -8,7 +8,13 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from imposm2_spark.plans.checkpoint import MANIFEST, TMP_SUFFIX, CheckpointManager, fingerprint_of
+from imposm2_spark.plans.checkpoint import (
+    ENGINE_VERSION,
+    MANIFEST,
+    TMP_SUFFIX,
+    CheckpointManager,
+    fingerprint_of,
+)
 
 pytestmark = pytest.mark.spark
 
@@ -102,6 +108,25 @@ def test_corrupt_manifest_recomputes(spark, root):
     assert calls2 == ["s1", "s2"]
 
 
+def test_engine_version_change_recomputes(spark, root):
+    """A stage written under another engine version (an older output
+    schema) is recomputed, not reused, even with a matching fingerprint."""
+    calls = []
+    mgr, _ = _run_pipeline(spark, root, calls)
+    assert mgr.manifest("stage1")["engine_version"] == ENGINE_VERSION
+    path = os.path.join(root, "stage1", MANIFEST)
+    with open(path) as f:
+        m = json.load(f)
+    m["engine_version"] = "imposm2_spark/0.0"
+    with open(path, "w") as f:
+        json.dump(m, f)
+    calls2 = []
+    mgr2, df2 = _run_pipeline(spark, root, calls2)
+    assert calls2[0] == "s1" and not mgr2.results["stage1"].skipped
+    assert mgr2.manifest("stage1")["engine_version"] == ENGINE_VERSION
+    assert df2.count() == 5
+
+
 def test_lineage_and_metrics(spark, root):
     calls = []
     mgr, _ = _run_pipeline(spark, root, calls)
@@ -151,6 +176,41 @@ def test_spine_resumable_end_to_end(spark, tmp_path):
     mgr = CheckpointManager(root)
     assert mgr.manifest("enrich")["total_rows"] == 500
     assert mgr.manifest("pip_join")["parents"] == ["enrich"]
+
+
+def test_spine_resumable_enrich_is_one_crossing_without_text(spark, tmp_path, monkeypatch):
+    """The enrich stage runs the spine's fused extract/geotag UDF: exactly
+    one Python node, and the checkpoint holds no html or text column."""
+    import re
+
+    from conftest import SF_SMOKE
+    from imposm2_spark.plans.pipeline import spine_resumable
+    from imposm2_spark.sources import fixtures, testdata
+
+    built = {}
+    real = CheckpointManager.stage
+
+    def spy(self, spark, stage_id, build, **kw):
+        def capture():
+            built[stage_id] = build()
+            return built[stage_id]
+
+        return real(self, spark, stage_id, capture, **kw)
+
+    monkeypatch.setattr(CheckpointManager, "stage", spy)
+    docs = testdata.synth_documents_web(testdata.load(spark, SF_SMOKE, "documents"))
+    polys = fixtures.world_octants_df(spark, cell_level=4)
+    root = str(tmp_path / "spine_ckpt")
+    spine_resumable(
+        spark, docs, polys, root, "sf0.001", zooms=(2,), cell_level=4
+    ).collect()
+    plan = built["enrich"]._jdf.queryExecution().executedPlan().toString()
+    assert re.findall(r"\w*(?:EvalPython|InPandas|InArrow)\w*", plan) == [
+        "ArrowEvalPython"
+    ]
+    cols = spark.read.parquet(CheckpointManager(root).data_dir("enrich")).columns
+    assert cols == ["url", "lon", "lat", "n_chars"]
+    assert not {"html", "text", "text_extracted"} & set(cols)
 
 
 def test_spine_resumable_invalidates_on_polygon_change(spark, tmp_path):

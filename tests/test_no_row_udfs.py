@@ -35,3 +35,26 @@ def test_python_boundaries_are_arrow_batched():
             if form in src:
                 found.add(form)
     assert found >= {"pandas_udf", "applyInPandas", "mapInPandas"}
+
+
+# the quality classifier's inline/arrow pair is a declared contract of the
+# quality query; every other operator has one implementation
+ENGINE_PARAM_ALLOWED = {("functions/classify.py", "score_quality")}
+
+
+def test_no_engine_forks():
+    """No function in the package takes an `engine` parameter: an operator
+    has ONE implementation, and reference formulations live in tests/."""
+    import ast
+
+    offenders = []
+    for py in PKG.rglob("*.py"):
+        rel = py.relative_to(PKG).as_posix()
+        for node in ast.walk(ast.parse(py.read_text())):
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            a = node.args
+            names = [x.arg for x in a.posonlyargs + a.args + a.kwonlyargs]
+            if "engine" in names and (rel, node.name) not in ENGINE_PARAM_ALLOWED:
+                offenders.append(f"{rel}:{node.lineno}: def {node.name}")
+    assert not offenders, "engine= forks found:\n" + "\n".join(offenders)

@@ -113,7 +113,11 @@ def test_bm25_inline_plan_zero_corpus_shuffle(spark):
 
 
 def test_bm25_inline_matches_join_path(spark):
-    docs = _docs(spark)
+    # a NULL-text doc has no tokens but still counts in N on both paths
+    # (the inline fold used to NPE on it)
+    docs = _docs(spark).unionByName(
+        spark.createDataFrame([(5, None)], "doc_id int, text string")
+    )
     q = _qterms(spark, "spark", "rows", "tile", "zzz")
     inline = sorted(map(tuple, bm25_rank(docs, q).collect()))
     joined = sorted(map(tuple, bm25_rank(docs, q, max_inline_terms=0).collect()))
@@ -125,14 +129,16 @@ def test_bm25_inline_matches_join_path(spark):
 
 
 def test_bm25_doc_stats_engines_agree(spark):
-    """r6: the Arrow (dl, tfs) kernel must match the HOF fold row-for-row,
-    including NULL text, empty text, tab/space edge tokenization."""
+    """The inline path's (dl, tfs) fold must match a plain-Python count:
+    dl = tokens of the trimmed text split on Java \\s runs (the six ASCII
+    separators), tf = occurrences of each term. Covers empty text,
+    tab/space edge tokenization, a control char inside a token, and NULL
+    text (dl 0, every tf 0 — the doc still counts in N)."""
+    import re
+
     from pyspark.sql import functions as F
 
-    from imposm2_spark.operators.ranking import (
-        _doc_stats_expr,
-        _doc_stats_kernel,
-    )
+    from imposm2_spark.operators.ranking import _doc_stats_expr
 
     rows = [
         (1, "spark fast spark  fast\tspark"),
@@ -142,22 +148,20 @@ def test_bm25_doc_stats_engines_agree(spark):
         (6, "nomatch only here"),
         (7, "fast" * 3),
         (8, "a\x01b fast"),
+        (9, None),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     terms = ["fast", "spark", "a\x01b"]
-    hof = {
-        r["doc_id"]: (r["s"]["dl"], tuple(r["s"]["tfs"]) if r["s"]["tfs"] is not None else None)
+    got = {
+        r["doc_id"]: (r["s"]["dl"], tuple(r["s"]["tfs"]))
         for r in docs.select(
             "doc_id", _doc_stats_expr(F.col("text"), terms).alias("s")
         ).collect()
     }
-    kern = {
-        r["doc_id"]: (r["s"]["dl"], tuple(r["s"]["tfs"]) if r["s"]["tfs"] is not None else None)
-        for r in _doc_stats_kernel(docs, terms, "doc_id", "text").collect()
-    }
-    assert hof == kern
-    # NULL text: the HOF fold NPEs in codegen (zip_with over a null array) —
-    # the kernel instead yields NULL dl/tfs, which the n_terms filter drops.
-    nd = spark.createDataFrame([(9, None)], "doc_id long, text string")
-    r = _doc_stats_kernel(nd, terms, "doc_id", "text").collect()[0]
-    assert r["s"]["dl"] is None and r["s"]["tfs"] is None
+
+    def count(text):
+        toks = [t for t in re.split("[ \t\n\x0b\x0c\r]+", text or "") if t]
+        return len(toks), tuple(toks.count(t) for t in terms)
+
+    assert got == {i: count(t) for i, t in rows}
+    assert got[9] == (0, (0, 0, 0))

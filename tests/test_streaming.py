@@ -210,6 +210,35 @@ def test_stream_spine_matches_batch(spark, tmp_path):
     assert got == want
 
 
+def test_stream_spine_one_python_node_no_join(spark, tmp_path):
+    """Under the broadcast cap the streaming spine's micro-batch plan has the
+    batch spine's shape: extract + geotag + locate in ONE Python node, then
+    an explode — no join (read from the query's last execution)."""
+    import re
+
+    from imposm2_spark.sources import fixtures
+    from imposm2_spark.streaming import stream_spine
+
+    landing = str(tmp_path / "landing")
+    os.makedirs(landing)
+    _land_batches(spark, landing, n_batches=2)
+    q = stream_spine(
+        spark,
+        landing + "/*",
+        str(tmp_path / "ckpt"),
+        fixtures.world_octants_df(spark, cell_level=4),
+        sink=lambda df, _bid: df.collect(),
+        zoom=2,
+        cell_level=4,
+    )
+    q.awaitTermination(180)
+    plan = q._jsq.explainInternal(False)
+    assert re.findall(r"\w*(?:EvalPython|InPandas|InArrow)\w*", plan) == [
+        "ArrowEvalPython"
+    ], plan
+    assert "Join" not in plan, plan
+
+
 def test_curated_spine_dedup_suppresses_cross_batch_through_restart(spark, tmp_path):
     """r4: the full streaming curation story. stream_curated_spine chains
     first-seen stateful dedup in front of the spine; duplicate documents

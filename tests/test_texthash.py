@@ -1,8 +1,9 @@
 """Differential tests: kernels.texthash NumPy twins vs the Catalyst chain.
 
-The kernel's claim is BIT-IDENTITY with the interpreted HOF expressions in
-operators/dedup.py on arbitrary input (the r6 optimization only holds if a
-swap between engines can never change a value). Adversarial cases cover the
+The kernel's claim is BIT-IDENTITY with the interpreted HOF expressions
+(operators/dedup.py token/shingle hashes, the rest in tests/hof_twins.py —
+the oracle SQL's textual twins) on arbitrary input: each operator must equal
+its HOF composition row for row. Adversarial cases cover the
 split/ascii edge semantics: empty strings, runs of spaces, leading/trailing
 separators, non-ASCII codepoints, and tokens past the fast-path length cap.
 """
@@ -13,14 +14,17 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from imposm2_spark.kernels import texthash as tx
-from imposm2_spark.operators.dedup import (
+from hof_twins import (
     band_keys,
+    contamination_hits_hof,
     minhash_signature,
-    shingle_hashes,
+    minhash_signatures_hof,
+    shingle_frame_hof,
+    simhash_clusters_hof,
     simhash_from_hashes,
-    token_hashes,
 )
+from imposm2_spark.kernels import texthash as tx
+from imposm2_spark.operators.dedup import shingle_hashes, token_hashes
 
 pytestmark = pytest.mark.spark
 
@@ -89,8 +93,8 @@ def test_long_token_fallback_path():
 
 
 def test_minhash_signatures_engines_identical(spark):
-    """The arrow signature engine must equal the HOF/oracle twin row-for-row
-    on the driver corpus + adversarial docs (incl. NULL text, <3 tokens)."""
+    """The signature kernel must equal the HOF/oracle twin row-for-row on the
+    driver corpus + adversarial docs (incl. NULL text, <3 tokens)."""
     from imposm2_spark.operators.dedup import minhash_signatures
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
@@ -108,14 +112,12 @@ def test_minhash_signatures_engines_identical(spark):
              *[r[f"band{b}"] for b in range(4)])
             for r in df.collect()
         )
-    assert canon(minhash_signatures(docs, engine="arrow")) == canon(
-        minhash_signatures(docs, engine="hof")
-    )
+    assert canon(minhash_signatures(docs)) == canon(minhash_signatures_hof(docs))
 
 
 def test_contamination_hits_engines_identical(spark):
-    """The arrow decontamination engine equals the HOF/oracle twin."""
-    from imposm2_spark.operators.curation import contamination_hits
+    """The decontamination kernel equals the HOF/oracle twin."""
+    from imposm2_spark.operators.curation import DECONTAM_N, contamination_hits
     from pyspark.sql import functions as F2
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
@@ -128,7 +130,7 @@ def test_contamination_hits_engines_identical(spark):
     a = sorted((r["doc_id"], r["n_hits"]) for r in contamination_hits(train, test).collect())
     b = sorted(
         (r["doc_id"], r["n_hits"])
-        for r in contamination_hits(train, test, engine="hof").collect()
+        for r in contamination_hits_hof(train, test, DECONTAM_N).collect()
     )
     assert a == b and len(a) > 0
 
@@ -145,13 +147,12 @@ def test_shingle_frame_engines_identical(spark):
         )
     )
     canon = lambda df: sorted((r["doc_id"], tuple(r["shs"])) for r in df.collect())
-    assert canon(shingle_frame(docs)) == canon(shingle_frame(docs, engine="hof"))
+    assert canon(shingle_frame(docs)) == canon(shingle_frame_hof(docs))
 
 
 def test_simhash_clusters_engines_agree(spark):
-    """r6: the arrow engine of simhash_clusters must match the HOF chain
-    row-for-row, including NULL-text docs (NULL fingerprints group
-    together on both engines)."""
+    """simhash_clusters' kernel must match the HOF chain row-for-row,
+    including NULL-text docs (NULL fingerprints group together on both)."""
     from imposm2_spark.operators.dedup import simhash_clusters
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -162,10 +163,10 @@ def test_simhash_clusters_engines_agree(spark):
     df = docs.select("doc_id", "text").unionByName(extra)
     hof = {
         (r["simhash"], r["n_docs"], r["keeper_id"])
-        for r in simhash_clusters(df, engine="hof").collect()
+        for r in simhash_clusters_hof(df).collect()
     }
     arrow = {
         (r["simhash"], r["n_docs"], r["keeper_id"])
-        for r in simhash_clusters(df, engine="arrow").collect()
+        for r in simhash_clusters(df).collect()
     }
     assert hof == arrow and len(hof) > 0

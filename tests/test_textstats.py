@@ -160,7 +160,7 @@ def test_arrow_text_kernels_nan_in_batch(spark, monkeypatch):
     real text side by side."""
     import pandas as pd
 
-    from imposm2_spark.operators import curation, dedup, ranking
+    from imposm2_spark.operators import curation, dedup
 
     docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
     frame_cls = type(docs)
@@ -176,8 +176,7 @@ def test_arrow_text_kernels_nan_in_batch(spark, monkeypatch):
     dedup.shingle_frame(docs)
     dedup.simhash_clusters(docs)
     curation._ngram_rows_kernel(docs, 3, "doc_id", "text")
-    ranking._doc_stats_kernel(docs, ["a", "b"], "doc_id", "text")
-    assert len(captured) == 5
+    assert len(captured) == 4
 
     def run(gen, missing):
         pdf = pd.DataFrame(
