@@ -3,7 +3,10 @@
 Reference analog: imposm2 has no session concept — parallelism was a
 ``--concurrency`` flag fanning out multiprocessing workers
 (imposm/app.py::main, imposm/dbimporter.py). Here parallelism is Spark's;
-the only knobs we own are AQE, Arrow, and shuffle partition counts.
+the knobs we own are driver memory, AQE, Arrow batch size, shuffle partition
+counts, locality wait in local mode, and the Python worker daemon
+(worker_daemon.py), which keeps every Python task from re-reading
+pyspark.zip.
 """
 
 from __future__ import annotations
@@ -17,6 +20,23 @@ from pyspark.sql import SparkSession
 DEFAULT_ARROW_BATCH = 10_000
 
 
+def _default_shuffle_partitions(master: str) -> int:
+    """Shuffle partitions for `master`: its task slots, at least 8.
+
+    ``local[N]`` and ``local[N,F]`` run N slots, ``local-cluster[W,C,M]``
+    W executors of C cores. ``*`` and masters without a bracket (``local``,
+    ``yarn``, ``k8s://...``) give ``os.cpu_count()``.
+    """
+    if "[" not in master:
+        return os.cpu_count() or 8
+    args = master[master.find("[") + 1 : master.find("]")].split(",")
+    if master.startswith("local-cluster"):
+        return max(int(args[0]) * int(args[1]), 8)
+    if args[0].strip() == "*":
+        return os.cpu_count() or 8
+    return max(int(args[0]), 8)
+
+
 def get_spark(
     app_name: str = "imposm2_spark",
     master: str | None = None,
@@ -25,15 +45,22 @@ def get_spark(
 ) -> SparkSession:
     """Build (or get) a SparkSession with engine defaults.
 
-    master defaults to ``local[$SPARK_GRAFT_CPUS]`` (env) or ``local[*]``.
+    master defaults to ``local[$SPARK_GRAFT_CPUS]`` (env) or ``local[*]``,
+    shuffle_partitions to the master's task slots (_default_shuffle_partitions).
+
+    Python workers start from ``imposm2_spark.worker_daemon``, so executors
+    must be able to import ``imposm2_spark`` when their Python daemon starts:
+    install the package or put it on their PYTHONPATH. Shipping it only with
+    ``--py-files`` is not enough: those files join a worker's path at the
+    start of each task, after the daemon has started. Such a job builds its
+    own session on Spark's stock daemon, as scripts/submit_spine.py does.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
     if shuffle_partitions is None:
         # match core count, not the 200 default — local mode shuffles hit disk
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "*"
-        shuffle_partitions = os.cpu_count() or 8 if n == "*" else max(int(n), 8)
+        shuffle_partitions = _default_shuffle_partitions(master)
 
     b = (
         SparkSession.builder.master(master)
@@ -56,6 +83,9 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_ARROW_BATCH", str(DEFAULT_ARROW_BATCH)),
         )
         .config("spark.ui.enabled", "false")
+        # pyspark invalidates import caches at the start of every Python task,
+        # which re-read pyspark.zip's directory: ~0.14 CPU-s per task
+        .config("spark.python.daemon.module", "imposm2_spark.worker_daemon")
         .config("spark.driver.extraJavaOptions", "-Duser.timezone=UTC")
     )
     if master.startswith("local") and not master.startswith("local-cluster"):

@@ -1,0 +1,133 @@
+"""session.get_spark defaults and the Python worker daemon it selects."""
+
+import json
+import os
+import subprocess
+import sys
+from types import SimpleNamespace
+
+import pytest
+
+from imposm2_spark import session
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+@pytest.mark.parametrize(
+    "master, expected",
+    [
+        ("local[4]", 8),
+        ("local[16]", 16),
+        ("local[4,2]", 8),
+        ("local[12, 3]", 12),
+        ("local-cluster[2,1,1024]", 8),
+        ("local-cluster[3, 4, 1024]", 12),
+        ("local[*]", os.cpu_count()),
+        ("local[*,2]", os.cpu_count()),
+        ("local", os.cpu_count()),
+        ("yarn", os.cpu_count()),
+    ],
+)
+def test_default_shuffle_partitions(monkeypatch, master, expected):
+    """get_spark's shuffle-partition default, read from the builder's
+    config without starting a session."""
+    conf = {}
+
+    class Builder:
+        def master(self, m):
+            return self
+
+        def appName(self, name):
+            return self
+
+        def config(self, key, value):
+            conf[key] = value
+            return self
+
+        def getOrCreate(self):
+            return SimpleNamespace(sparkContext=SimpleNamespace(setLogLevel=lambda level: None))
+
+    monkeypatch.setattr(session, "SparkSession", SimpleNamespace(builder=Builder()))
+    session.get_spark(master=master)
+    assert conf["spark.sql.shuffle.partitions"] == str(expected)
+
+
+@pytest.mark.spark
+def test_python_workers_run_on_the_worker_daemon(spark):
+    """Every pandas UDF task of a get_spark session runs in a worker forked
+    from imposm2_spark.worker_daemon, with its zipimport patch in place."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("string")
+    def daemon_state(s: pd.Series) -> pd.Series:
+        import sys
+        import zipimport
+
+        main = sys.modules["__main__"]
+        spec = getattr(main, "__spec__", None)
+        patched = zipimport.zipimporter.invalidate_caches is getattr(
+            main, "invalidate_caches_if_changed", None
+        )
+        return pd.Series([f"{spec.name if spec else None}:{patched}"] * len(s))
+
+    rows = spark.range(0, 4, 1, 4).select(daemon_state("id").alias("s")).collect()
+    assert {r.s for r in rows} == {"imposm2_spark.worker_daemon:True"}
+
+
+_ZIP_SEMANTICS = r"""
+import importlib, json, os, sys, zipfile, zipimport
+
+zpath = os.path.join(sys.argv[1], "mods.zip")
+
+def write_zip(extra):
+    with zipfile.ZipFile(zpath, "w") as z:
+        z.writestr("zm_a.py", "X = 1\n")
+        z.writestr("zm_pkg/__init__.py", "")
+        z.writestr("zm_pkg/sub.py", "Y = 2\n")
+        for name, src in extra.items():
+            z.writestr(name, src)
+
+write_zip({})
+sys.path.insert(0, zpath)
+import zm_a, zm_pkg.sub  # one importer for the archive, one for zm_pkg/
+
+from imposm2_spark import worker_daemon
+worker_daemon.install()
+
+reads = []
+stock_read = zipimport._read_directory
+def counting_read(path):
+    reads.append(path)
+    return stock_read(path)
+zipimport._read_directory = counting_read
+
+importlib.invalidate_caches()
+first = reads.count(zpath)
+for _ in range(10):
+    importlib.invalidate_caches()
+repeat = reads.count(zpath) - first
+
+write_zip({"zm_b.py": "Z = 3\n", "zm_pkg/new.py": "W = 4\n"})
+importlib.invalidate_caches()
+after_rewrite = reads.count(zpath) - first - repeat
+import zm_b, zm_pkg.new
+print(json.dumps({"first": first, "repeat": repeat, "after_rewrite": after_rewrite,
+                  "imported": [zm_b.Z, zm_pkg.new.W]}))
+"""
+
+
+def test_zip_invalidation_rereads_only_changed_archives(tmp_path):
+    """Run in a subprocess: the patch must not leak into this process."""
+    out = subprocess.run(
+        [sys.executable, "-c", _ZIP_SEMANTICS, str(tmp_path)],
+        capture_output=True, text=True, timeout=120, check=True,
+        env={**os.environ, "PYTHONPATH": REPO},
+    )
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    # the archive's two importers share one read; the ten repeats read nothing
+    assert got["first"] == 1
+    assert got["repeat"] == 0
+    # a rewritten archive is read again, and both importers see the new names
+    assert got["after_rewrite"] == 1
+    assert got["imported"] == [3, 4]
