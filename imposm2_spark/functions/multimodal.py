@@ -96,12 +96,6 @@ def _byte_histogram(payload: bytes) -> np.ndarray:
     return hist / arr.size
 
 
-def fake_decode_features(payloads: pd.Series) -> pd.DataFrame:
-    """Vectorized-per-batch stand-in for decode + feature extraction."""
-    feats = [_byte_histogram(p if p is not None else b"") for p in payloads]
-    return pd.DataFrame({"features": feats})
-
-
 def media_pixels_from_text(text: bytes, width: int, height: int) -> np.ndarray:
     """Deterministic (H, W, 3) uint8 image derived from text bytes (tiled)."""
     src = np.frombuffer(text, dtype=np.uint8) if text else np.zeros(1, dtype=np.uint8)

@@ -219,11 +219,6 @@ def covering_cells_bbox(
     return cell_from_xy(gx.ravel(), gy.ravel(), level)
 
 
-def cell_size_deg(level: int) -> float:
-    """Longitude span of one cell at `level` (worst-case planar size proxy)."""
-    return 360.0 / (1 << level)
-
-
 def morton_blocks(
     x0: int, x1: int, y0: int, y1: int, level: int
 ) -> list[tuple[int, int]]:

@@ -172,11 +172,6 @@ def rings_bbox(rings: list[Ring]) -> tuple[float, float, float, float]:
     )
 
 
-def pseudo_area(ring: Ring) -> float:
-    """PseudoArea field (imposm/mapping.py::PseudoArea): |shoelace| in coord units."""
-    return abs(ring_signed_area(ring))
-
-
 def polygon_area(rings: list[Ring]) -> float:
     """Area of one polygon [shell, hole, ...]: |shell| - sum(|holes|).
 

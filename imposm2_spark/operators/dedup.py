@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text_analysis import CHAR_MOD, char_hash
+from ..session import cache_scope
 
 # fixed MinHash permutation constants: h_j(x) = (a_j * x + b_j) mod P
 # (random.Random(421), a forced odd; frozen here as literals — regenerating
@@ -53,14 +54,6 @@ assert N_BANDS * BAND_ROWS == len(PERMS)
 
 SHINGLE_N = 3
 _COMBINE = 8191  # token-hash combiner multiplier (shared with oracle SQL)
-
-# minhash_lsh_pairs persists its signature frame (consumed by ~5 plan
-# branches — bands, bucket counts, both verify sides, and the returned
-# frame's re-executions); each invocation releases its PREDECESSOR's cache
-# (the registry _KNN_PREV pattern) so repeated bench/oracle invocations pin
-# one signature set, not one per call. The unpersisted predecessor stays
-# recomputable through its lineage.
-_SIG_PREV: list[DataFrame] = []
 
 
 def token_hashes(text: F.Column) -> F.Column:
@@ -219,18 +212,13 @@ def minhash_lsh_pairs(
     # every re-execution of the returned frame) and each branch would re-run
     # the signature kernel over the whole corpus — the dominant cost of this
     # operator. Persist it once
-    # per invocation (predecessor released via _SIG_PREV above; footprint =
-    # id + shingle hashes + 20 longs per doc, MEMORY_AND_DISK so oversized
+    # per invocation (predecessor released by session.cache_scope; footprint
+    # = id + shingle hashes + 20 longs per doc, MEMORY_AND_DISK so oversized
     # inputs spill instead of OOM). At true 10^12 scale callers materialize
     # signatures as a table instead; within one invocation this is the same
     # compute-once discipline.
-    # release BEFORE persist: identical lineage across invocations shares ONE
-    # CacheManager entry (semantic plan equality), so the reverse order
-    # silently dropped the fresh cache (see plans/curate.py, same fix)
-    while _SIG_PREV:
-        _SIG_PREV.pop().unpersist()
-    sig = minhash_signatures(docs, id_col, text_col).persist()
-    _SIG_PREV.append(sig)
+    hold = cache_scope("minhash_lsh_pairs")
+    sig = hold(minhash_signatures(docs, id_col, text_col))
     # NOTE (r6, measured): an EAGER sig.count() here looked attractive (fill
     # the cache once before the multi-branch consumers) but benched WORSE
     # end-to-end (curate_corpus 32.6s vs 22.2s, dedup_minhash_family 7.3s vs

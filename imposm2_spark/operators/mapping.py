@@ -24,6 +24,8 @@ from dataclasses import dataclass, field as dc_field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import cache_scope
+
 ANY = "__any__"
 
 
@@ -330,13 +332,6 @@ def apply_fields(routed: DataFrame, spec: TableSpec, tags_col: str = "tags") -> 
     return df.select(*cols, *derived)
 
 
-# build_tables persists its routed frame when several specs consume it; each
-# invocation releases its PREDECESSOR's cache BEFORE persisting (CacheManager
-# keys by semantic plan equality — see plans/curate.py, same fix), bounding
-# the footprint at one live instance.
-_ROUTE_PREV: list[DataFrame] = []
-
-
 def build_tables(
     elements: DataFrame,
     specs: list[TableSpec],
@@ -350,11 +345,9 @@ def build_tables(
     per-table apply_fields branch used to re-execute the routing join +
     dedup aggregation (DataFrame branches share no work without a cache);
     the routed frame is persisted across the branches (released on the next
-    invocation via _ROUTE_PREV)."""
-    while _ROUTE_PREV:
-        _ROUTE_PREV.pop().unpersist()
+    invocation, session.cache_scope)."""
+    hold = cache_scope("build_tables")
     routed = route(elements, specs, spark, id_col=id_col, tags_col=tags_col)
     if len(specs) > 1:
-        routed = routed.persist()
-        _ROUTE_PREV.append(routed)
+        routed = hold(routed)
     return {s.name: apply_fields(routed, s, tags_col=tags_col) for s in specs}

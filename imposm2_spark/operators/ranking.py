@@ -59,6 +59,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from ..session import cache_scope
+
 K1 = 1.2
 B = 0.75
 
@@ -73,15 +75,6 @@ MAX_INLINE_TERMS = 64
 # terms at the idf*(k1+1) ceiling stays far inside it, so the exact sum
 # cannot overflow at any realistic query size.
 _SUM_DEC = "decimal(28,9)"
-
-# _bm25_inline persists its per-doc (dl, tfs) frame (consumed by the 1-row
-# stats aggregate AND the scoring join — two branches that would each re-run
-# the O(tokens x k) _doc_stats_expr fold); each invocation releases its
-# predecessor's cache (the registry _KNN_PREV pattern), bounding the
-# footprint at one live instance. The unpersisted predecessor stays
-# recomputable via lineage.
-_BM25_PREV: list[DataFrame] = []
-
 
 def doc_lengths(
     docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
@@ -148,14 +141,10 @@ def _bm25_inline(
     # consume this frame — unpersisted, the interpreted O(tokens x k) fold
     # ran twice over the corpus (r6, guide §5 caching; rows are id + one
     # small struct, so the cache is corpus-row-count bounded, never text)
-    # release BEFORE persist: identical lineage across invocations shares one
-    # CacheManager entry (see plans/curate.py, same fix)
-    while _BM25_PREV:
-        _BM25_PREV.pop().unpersist()
-    base = docs.select(
+    hold = cache_scope("bm25_inline")
+    base = hold(docs.select(
         F.col(id_col), _doc_stats_expr(F.col(text_col), terms).alias("s")
-    ).persist()
-    _BM25_PREV.append(base)
+    ))
     stats = F.broadcast(
         base.agg(
             F.count("*").alias("n_docs"),

@@ -27,15 +27,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text_analysis import doc_stats_udf, stats_lang, stats_quality
 from ..operators.dedup import dedup_connected_components, minhash_lsh_pairs
-
-# Each curate() invocation unpersists its PREDECESSOR's gated frame (the
-# registry's _KNN_PREV pattern): persisted DataFrames live in the SQL
-# CacheManager until explicit unpersist() or session stop — they are NOT
-# reclaimed when the Python reference goes out of scope — so repeated
-# bench/oracle invocations would otherwise pin one cached copy of the
-# gated corpus per call. The unpersisted predecessor stays recomputable
-# through its lineage.
-_CURATE_PREV: list[DataFrame] = []
+from ..session import cache_scope
 
 
 def curate(
@@ -79,23 +71,14 @@ def curate(
     # the final anti-join consume it on several branches, and rebuilding it
     # per branch would repeat the keepers hash-agg + semi-join (cheap next
     # to scoring, but free to avoid). Footprint stays bounded at one live
-    # invocation via the predecessor-release holder above (module comment).
-    # Release the PREDECESSOR invocation's caches BEFORE persisting (r6,
-    # measured): CacheManager keys entries by SEMANTIC plan equality, and a
-    # repeated invocation builds identical lineage — persist-then-release
-    # made the new persist a no-op against the old entry and the release
-    # then dropped that shared entry, so every bench rep after the first ran
-    # fully uncached ("Asked to cache already cached data" warnings in the
-    # r5 bench logs were this bug).
-    while _CURATE_PREV:
-        _CURATE_PREV.pop().unpersist()
-    gated = gated.persist()
+    # invocation: the next call releases both (session.cache_scope).
+    hold = cache_scope("curate")
+    gated = hold(gated)
     # exact dedup: keep the lowest id per content hash
     keepers = gated.groupBy(F.md5(text_col).alias("_h")).agg(
         F.min(id_col).alias(id_col)
     )
-    exact = gated.join(keepers, id_col, "left_semi").persist()
-    _CURATE_PREV.extend([gated, exact])
+    exact = hold(gated.join(keepers, id_col, "left_semi"))
     # near-dup: exact transitive clustering — keep the smallest id per
     # connected component of the verified pair graph
     pairs = minhash_lsh_pairs(exact, id_col=id_col, text_col=text_col,

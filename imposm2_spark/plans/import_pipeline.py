@@ -27,17 +27,9 @@ from ..operators.assemble import (
     way_polygons,
     with_point_wkb,
 )
+from ..session import cache_scope
 
 INTERESTING_RELATION_TYPES = ("multipolygon", "boundary")
-
-# Each import_tables() invocation releases its PREDECESSOR's cached frames
-# (the registry's _KNN_PREV pattern): the intra-pipeline caches feed the
-# returned LAZY table frames, so they cannot be unpersisted within the call,
-# and CacheManager entries are NOT reclaimed when Python references drop —
-# repeated driver/bench invocations would otherwise pin six cached copies of
-# the routed/assembled intermediates per call. The unpersisted predecessors
-# stay recomputable through their lineage.
-_IMPORT_PREV: list[DataFrame] = []
 
 
 def import_tables(
@@ -64,15 +56,9 @@ def import_tables(
     repair_rings (G5, default off): self-intersecting way rings are rebuilt
     under the even-odd rule instead of dropped (way pass only; relation ring
     validity is the merge kernel's)."""
-    # release the previous invocation's caches FIRST (module comment), then
-    # track this invocation's through _cached so the next call releases them
-    while _IMPORT_PREV:
-        _IMPORT_PREV.pop().unpersist()
-
-    def _cached(df: DataFrame) -> DataFrame:
-        c = df.cache()
-        _IMPORT_PREV.append(c)
-        return c
+    # the intra-pipeline caches feed the returned LAZY table frames, so they
+    # outlive this call: the next call releases them (session.cache_scope)
+    hold = cache_scope("import_tables")
 
     if tag_whitelist:
         keys = M.spec_tag_keys(specs)
@@ -98,12 +84,12 @@ def import_tables(
         # frame, and without the cache each table's branch re-runs the Arrow
         # stage (same rationale as aw/rel_out; with the lines/polys caches
         # the 16-table fixture import went 13.6s -> 9.3s)
-        routed_pts = _cached(with_point_wkb(routed_nodes))
+        routed_pts = hold(with_point_wkb(routed_nodes))
         for s in point_specs:
             out[s.name] = M.apply_fields(routed_pts, s)
 
     # ---- shared way assembly, pruned to needed ways ----
-    routed_ways = _cached(M.route(ways, line_specs + poly_specs, spark))
+    routed_ways = hold(M.route(ways, line_specs + poly_specs, spark))
     interesting_rels = relations.where(
         F.element_at("tags", "type").isin(*INTERESTING_RELATION_TYPES)
     )
@@ -112,10 +98,10 @@ def import_tables(
     ).where(F.col("m.type") == "way").select(F.col("m.ref").alias("id")).distinct()
     needed = routed_ways.select("id").distinct().unionByName(member_way_ids).distinct()
     pruned_ways = ways.join(needed, "id", "left_semi")
-    aw = _cached(assemble_ways(pruned_ways, nodes.select("id", "lon", "lat")))
+    aw = hold(assemble_ways(pruned_ways, nodes.select("id", "lon", "lat")))
 
     # ---- relation pass (before way pass, by dependency) ----
-    rel_out = _cached(assemble_relations(
+    rel_out = hold(assemble_relations(
         interesting_rels, aw, relation_builder=relation_builder
     ))
     if poly_specs:
@@ -127,7 +113,7 @@ def import_tables(
         # re-executed route()'s explode + broadcast join + min_by agg over
         # the relation output; with 5 polygon specs that chain ran ~10x per
         # import. Same rationale as the routed_pts/lines/polys caches.
-        routed_rels = _cached(M.route(rel_elements, poly_specs, spark))
+        routed_rels = hold(M.route(rel_elements, poly_specs, spark))
         for s in poly_specs:
             out[s.name] = M.apply_fields(routed_rels, s)
 
@@ -135,13 +121,13 @@ def import_tables(
     surviving = suppress_inserted_ways(aw, rel_out)
     if line_specs:
         # shared by every line spec — cache so the Arrow stage runs once
-        lines = _cached(way_linestrings(surviving).select("id", "coords", "wkb"))
+        lines = hold(way_linestrings(surviving).select("id", "coords", "wkb"))
         routed_lines = routed_ways.join(lines, "id")
         for s in line_specs:
             out[s.name] = M.apply_fields(routed_lines, s)
     if poly_specs:
         # shared by every polygon spec — cache so the Arrow stage runs once
-        polys = _cached(way_polygons(surviving, repair=repair_rings).select(
+        polys = hold(way_polygons(surviving, repair=repair_rings).select(
             "id", "rings", "area", "wkb"
         ))
         routed_polys = routed_ways.join(polys, "id")

@@ -31,6 +31,7 @@ from ..sources.testdata import (
     load,
     load_spread,
 )
+from ..session import cache_scope
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -210,12 +211,9 @@ UNION ALL
 SELECT 'kring' AS variant, doc_id, site_id, rank FROM base
 """
 
-# per-process lifecycle holders for registry queries that own heavyweight
-# resources (knn_join's persisted result; q_ann_ivf_append's on-disk index).
-# Driver queries are invoked repeatedly and sequentially (bench reps, oracle
-# passes); each invocation releases its PREDECESSOR's resource, bounding the
-# footprint at one live instance instead of one per invocation.
-_KNN_PREV: list[DataFrame] = []
+# q_ann_ivf_append's on-disk index: driver queries are invoked repeatedly
+# and sequentially (bench reps, oracle passes); each invocation deletes its
+# PREDECESSOR's directory, bounding the footprint at one live index.
 _IVF_APPEND_DIRS: list[str] = []
 
 
@@ -233,19 +231,11 @@ def q_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("brute").alias("variant"), "doc_id", "site_id", "rank"
     )
     # knn_join returns a persisted materialized frame the CALLER owns
-    # (operators/knn.py contract): release the previous invocation's cache
-    # so repeated bench/oracle invocations pin one result, not one per rep
-    # (the unpersisted predecessor stays recomputable through its lineage).
-    # Release BEFORE the call (r6): CacheManager keys by semantic plan
-    # equality, and the repeat invocation's identical result plan shares the
-    # predecessor's entry — releasing after dropped the fresh cache and the
-    # noop sink recomputed the whole ring loop (the r5 2.1x knn anomaly the
-    # VERDICT flagged is exactly this: the r5 commit moved consolidation
-    # into one cached union whose cache the next rep then dropped).
-    while _KNN_PREV:
-        _KNN_PREV.pop().unpersist()
-    kring_raw = knn_join(pts, sites, k=3, level=6)
-    _KNN_PREV.append(kring_raw)
+    # (operators/knn.py contract): the scope opens BEFORE the call, so the
+    # predecessor's entry, which an identical result plan shares, is gone
+    # when knn_join persists (the r5 2.1x knn anomaly was the reverse order)
+    hold = cache_scope("knn_join_3")
+    kring_raw = hold(knn_join(pts, sites, k=3, level=6))
     kring = kring_raw.select(
         F.lit("kring").alias("variant"), "doc_id", "site_id", "rank"
     )

@@ -354,6 +354,7 @@ def test_curate_releases_predecessor_cache(spark):
     explicit unpersist — each curate() call must release its predecessor's
     gated frame, bounding the footprint at one live invocation."""
     from imposm2_spark.plans import curate as C
+    from imposm2_spark.session import _SCOPES
 
     docs = spark.createDataFrame(
         [(i, "the quick brown fox jumps over the lazy dog again and again")
@@ -361,7 +362,7 @@ def test_curate_releases_predecessor_cache(spark):
         "doc_id long, text string",
     )
     C.curate(docs).count()
-    prev = C._CURATE_PREV[0]
+    prev = _SCOPES["curate"][0]
     assert prev.storageLevel.useMemory
     # r6: predecessors release BEFORE the successor persists (CacheManager
     # keys by semantic plan equality — releasing after dropped the fresh
@@ -370,12 +371,12 @@ def test_curate_releases_predecessor_cache(spark):
     docs2 = docs.where(F.col("doc_id") % 2 == 0)
     C.curate(docs2).count()
     assert not prev.storageLevel.useMemory
-    assert C._CURATE_PREV and C._CURATE_PREV[0] is not prev
-    assert C._CURATE_PREV[0].storageLevel.useMemory
+    assert _SCOPES["curate"] and _SCOPES["curate"][0] is not prev
+    assert _SCOPES["curate"][0].storageLevel.useMemory
     # identical-input rerun: the shared entry stays LIVE for the new frame
     # (the old bug dropped it and every rep after the first ran uncached)
     C.curate(docs2).count()
-    assert C._CURATE_PREV[0].storageLevel.useMemory
+    assert _SCOPES["curate"][0].storageLevel.useMemory
 
 
 def test_registry_window_guard_is_a_real_raise():

@@ -74,14 +74,16 @@ def test_import_tables_releases_predecessor_caches(spark):
     intermediates, bounding the footprint at one live invocation."""
     from imposm2_spark.plans import import_pipeline as IP
     from imposm2_spark.operators import defaultmapping as dm
+    from imposm2_spark.session import _SCOPES
     from imposm2_spark.sources import fixtures
 
     nodes, ways, relations = fixtures.osm_dfs(spark)
     out1 = IP.import_tables(spark, nodes, ways, relations, dm.ALL_SPECS)
     next(iter(out1.values())).count()
-    prev = list(IP._IMPORT_PREV)
+    prev = list(_SCOPES["import_tables"])
     assert prev and any(df.storageLevel.useMemory for df in prev)
     out2 = IP.import_tables(spark, nodes, ways, relations, dm.ALL_SPECS)
     next(iter(out2.values())).count()
     assert all(not df.storageLevel.useMemory for df in prev)
-    assert IP._IMPORT_PREV and all(df not in prev for df in IP._IMPORT_PREV)
+    held = _SCOPES["import_tables"]
+    assert held and all(df not in prev for df in held)

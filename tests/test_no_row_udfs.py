@@ -58,3 +58,30 @@ def test_no_engine_forks():
             if "engine" in names and (rel, node.name) not in ENGINE_PARAM_ALLOWED:
                 offenders.append(f"{rel}:{node.lineno}: def {node.name}")
     assert not offenders, "engine= forks found:\n" + "\n".join(offenders)
+
+
+def test_no_module_cache_holders():
+    """Frames that outlive their call are held through session.cache_scope
+    only: no module-level `list[DataFrame]` holder, and no
+    `<holder>.pop().unpersist()` release loop outside session.py."""
+    import ast
+
+    offenders = []
+    for py in PKG.rglob("*.py"):
+        rel = py.relative_to(PKG).as_posix()
+        tree = ast.parse(py.read_text())
+        for node in tree.body:
+            if (isinstance(node, ast.AnnAssign)
+                    and ast.unparse(node.annotation) == "list[DataFrame]"):
+                offenders.append(f"{rel}:{node.lineno}: {ast.unparse(node.target)}")
+        if rel == "session.py":
+            continue
+        for node in ast.walk(tree):
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "unpersist"
+                    and isinstance(node.func.value, ast.Call)
+                    and isinstance(node.func.value.func, ast.Attribute)
+                    and node.func.value.func.attr == "pop"):
+                offenders.append(f"{rel}:{node.lineno}: {ast.unparse(node)}")
+    assert not offenders, "cache holders outside cache_scope:\n" + "\n".join(offenders)

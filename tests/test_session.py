@@ -8,6 +8,7 @@ from types import SimpleNamespace
 
 import pytest
 
+import __spark_entry__
 from imposm2_spark import session
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -131,3 +132,80 @@ def test_zip_invalidation_rereads_only_changed_archives(tmp_path):
     # a rewritten archive is read again, and both importers see the new names
     assert got["after_rewrite"] == 1
     assert got["imported"] == [3, 4]
+
+
+_CURATE_ACROSS_RESTART = r"""
+import json
+from imposm2_spark import session
+from imposm2_spark.plans.curate import curate
+
+def run():
+    spark = session.get_spark(master="local[2]")
+    docs = spark.createDataFrame(
+        [(i, f"the quick brown fox {i % 7} jumps over the lazy dog again")
+         for i in range(40)],
+        "doc_id long, text string",
+    )
+    return spark, curate(docs).count()
+
+spark, first = run()
+spark.stop()
+spark, second = run()
+held = session._SCOPES["curate"]
+print(json.dumps({"first": first, "second": second,
+                  "cached": [df.storageLevel.useMemory for df in held]}))
+spark.stop()
+"""
+
+
+def test_cache_scope_survives_session_restart():
+    """curate(), spark.stop(), a new get_spark() and curate() again: the
+    second call must not unpersist the stopped session's frames in the JVM
+    (that raised a NullPointerException), and its own frames are cached.
+    Run in a subprocess: stopping the suite's session would end it."""
+    out = subprocess.run(
+        [sys.executable, "-c", _CURATE_ACROSS_RESTART],
+        capture_output=True, text=True, timeout=300,
+        env={**os.environ, "PYTHONPATH": REPO, "SPARK_GRAFT_DRIVER_MEM": "1g"},
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert got["second"] == got["first"] > 0
+    assert got["cached"] == [True, True]
+
+
+def _cached_partitions(spark, df) -> int:
+    """Partitions of `df`'s CacheManager entry held in the block manager."""
+    entry = spark._jsparkSession.sharedState().cacheManager().lookupCachedData(df._jdf)
+    if entry.isEmpty():
+        return 0
+    rdd_id = entry.get().cachedRepresentation().cacheBuilder().cachedColumnBuffers().id()
+    return sum(
+        info.numCachedPartitions()
+        for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        if info.id() == rdd_id
+    )
+
+
+@pytest.mark.spark
+@pytest.mark.parametrize("name", sorted(__spark_entry__.queries()))
+def test_second_invocation_keeps_scopes_live(spark, name):
+    """A query invoked again holds the same cache_scope entries as its first
+    invocation, and every held frame is cached with data in it (the r5 bug
+    released the rerun's shared CacheManager entry, so reruns ran uncached).
+    Scope entries are counted, not persistent RDDs: localCheckpoint blocks
+    are freed on GC, so that count flickers."""
+    from conftest import SF_SMOKE
+
+    query = __spark_entry__.queries()[name]
+    snapshots = []
+    for _ in range(2):
+        before = dict(session._SCOPES)
+        query(spark, SF_SMOKE).write.format("noop").mode("overwrite").save()
+        opened = {k: v for k, v in session._SCOPES.items() if v is not before.get(k)}
+        snapshots.append({k: len(v) for k, v in opened.items()})
+        for scope, frames in opened.items():
+            for df in frames:
+                assert df.storageLevel.useMemory, scope
+                assert _cached_partitions(spark, df) > 0, scope
+    assert snapshots[1] == snapshots[0]
