@@ -27,6 +27,13 @@ by those tests:
     module-level ASCII caveat in functions/text_analysis.py applies to both
     engines equally.
 
+Whole-batch kernels: batch_shingles / batch_signatures run the same chain
+over an entire Arrow string batch at once (one UTF-32 buffer with document
+bounds, no per-document loop) and are tested equal to the per-document
+functions above; bucket_pairs is the grouped LSH pair kernel of
+operators/dedup.py::minhash_lsh_pairs (enumerate each bucket's pairs, verify
+them by a sorted merge of their distinct shingles).
+
 Overflow safety: per-char contributions are codepoint * 31^k mod P with
 P ~ 1e9, so a partial int64 sum over L chars is bounded by L * 1.1e15;
 tokens longer than _MAX_FAST_TOKEN chars (where that bound nears 2^63) are
@@ -36,6 +43,7 @@ re-hashed with the exact per-char Python fold instead.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 from ..functions.text_analysis import CHAR_MOD
 from ..operators.dedup import _COMBINE, MINHASH_P, N_BANDS, PERMS, SHINGLE_N
@@ -58,6 +66,51 @@ def char_hash_py(s: str) -> int:
     return h
 
 
+def _token_hashes(cps: np.ndarray, bounds: np.ndarray, text: str) -> tuple[np.ndarray, np.ndarray]:
+    """(hashes, n_tok): int64 token hashes of every document of one UTF-32
+    buffer, and each document's token count.
+
+    `cps` holds the codepoints of `text`; document d spans
+    cps[bounds[d]:bounds[d+1]]. Each document splits on single spaces into
+    (its spaces + 1) tokens, so document d's tokens start at token index
+    d + (spaces before bounds[d]), in document then position order."""
+    n_docs = len(bounds) - 1
+    is_sep = cps == _SPACE
+    sp = np.flatnonzero(is_sep)
+    sp_doc = np.searchsorted(bounds, sp, "right") - 1
+    first_tok = np.arange(n_docs) + np.searchsorted(sp, bounds[:-1])
+    n_tok = n_docs + len(sp)
+    # token k spans [starts[k], ends[k]): a document bound or a separator
+    # closes the token before it and opens the one after it
+    k = np.arange(len(sp))
+    starts = np.empty(n_tok, dtype=np.int64)
+    ends = np.empty(n_tok, dtype=np.int64)
+    starts[first_tok] = bounds[:-1]
+    starts[sp_doc + k + 1] = sp + 1
+    ends[sp_doc + k] = sp
+    n_doc_tok = np.diff(np.append(first_tok, n_tok))
+    ends[first_tok + n_doc_tok - 1] = bounds[1:]
+    lengths = ends - starts
+    out = np.zeros(n_tok, dtype=np.int64)
+    nonempty = lengths > 0
+    if nonempty.any():
+        # per-char exponent = chars-to-token-end - 1; contributions are
+        # codepoint * 31^exp summed per token (congruent to the fold mod P)
+        tok_of_char = np.repeat(np.arange(n_tok), lengths)
+        char_idx = np.flatnonzero(~is_sep)
+        exp = ends[tok_of_char] - 1 - char_idx
+        exp_safe = np.minimum(exp, _MAX_FAST_TOKEN - 1)  # long tokens redone below
+        contrib = cps[char_idx] * _POW31[exp_safe]
+        # reduceat over nonzero-length segments only (an empty segment would
+        # echo a stray element under reduceat's i==j rule)
+        boundaries = np.zeros(n_tok, dtype=np.int64)
+        np.cumsum(lengths[:-1], out=boundaries[1:])
+        out[nonempty] = np.add.reduceat(contrib, boundaries[nonempty]) % CHAR_MOD
+    for t in np.flatnonzero(lengths > _MAX_FAST_TOKEN):
+        out[t] = char_hash_py(text[starts[t] : ends[t]])  # exact redo (rare)
+    return out, n_doc_tok
+
+
 def token_hashes_doc(text: str | None) -> np.ndarray:
     """int64 token-hash array for ONE document (twin of token_hashes).
 
@@ -66,37 +119,8 @@ def token_hashes_doc(text: str | None) -> np.ndarray:
     callers mask None docs separately)."""
     if not isinstance(text, str):
         return np.empty(0, dtype=np.int64)
-    if not text:
-        return np.zeros(1, dtype=np.int64)  # split('') -> [''] -> hash 0
     cps = np.frombuffer(text.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
-    n = len(cps)
-    is_sep = cps == _SPACE
-    # token k spans [starts[k], ends[k]) between separator positions
-    sep_idx = np.flatnonzero(is_sep)
-    starts = np.concatenate(([0], sep_idx + 1))
-    ends = np.concatenate((sep_idx, [n]))
-    lengths = ends - starts
-    out = np.zeros(len(starts), dtype=np.int64)
-    nonempty = lengths > 0
-    if nonempty.any():
-        # per-char exponent = chars-to-token-end - 1; contributions are
-        # codepoint * 31^exp summed per token (congruent to the fold mod P)
-        tok_of_char = np.repeat(np.arange(len(starts)), lengths)
-        char_idx = np.flatnonzero(~is_sep)
-        exp = ends[tok_of_char] - 1 - char_idx
-        exp_safe = np.minimum(exp, _MAX_FAST_TOKEN - 1)  # long tokens redone below
-        contrib = cps[char_idx] * _POW31[exp_safe]
-        # reduceat over nonzero-length segments only (an empty segment would
-        # echo a stray element under reduceat's i==j rule)
-        boundaries = np.zeros(len(starts), dtype=np.int64)
-        np.cumsum(lengths[:-1], out=boundaries[1:])
-        out[nonempty] = np.add.reduceat(contrib, boundaries[nonempty]) % CHAR_MOD
-    long_toks = np.flatnonzero(lengths > _MAX_FAST_TOKEN)
-    if len(long_toks):  # exact per-char redo for oversized tokens (rare)
-        toks = text.split(" ")
-        for t in long_toks:
-            out[t] = char_hash_py(toks[t])
-    return out
+    return _token_hashes(cps, np.array([0, len(cps)]), text)[0]
 
 
 def shingle_hashes_from_tokens(th: np.ndarray) -> np.ndarray:
@@ -123,8 +147,9 @@ def minhash_sig_from_shingles(shs: np.ndarray) -> np.ndarray:
 
 
 def band_keys_from_sig(sig: np.ndarray) -> np.ndarray:
-    """(4,) band keys, twin of hof_twins.band_keys()."""
-    out = np.empty(N_BANDS, dtype=np.int64)
+    """(4,) band keys of a (16,) signature, or (4, n) of (16, n) signatures;
+    twin of hof_twins.band_keys()."""
+    out = np.empty((N_BANDS, *sig.shape[1:]), dtype=np.int64)
     for b in range(N_BANDS):
         key = sig[_BAND_ROWS * b]
         for r in range(1, _BAND_ROWS):
@@ -158,3 +183,181 @@ def ngram_hashes_from_tokens(th: np.ndarray, n: int) -> np.ndarray:
     for j in range(1, n):
         acc = (acc * _COMBINE + th[j : j + m]) % CHAR_MOD
     return acc
+
+
+# ---------------------------------------------------------------------------
+# whole-batch kernels: one pass over an Arrow batch, no per-document loop
+# ---------------------------------------------------------------------------
+
+
+def _codepoints(texts) -> tuple[np.ndarray, np.ndarray, np.ndarray, str]:
+    """(cps, bounds, valid, text) of a string batch: `text` is the whole
+    batch as one str, `cps` its int64 codepoints, document d spans
+    cps[bounds[d]:bounds[d+1]] and `valid` marks the non-NULL documents.
+
+    The UTF-8 data buffer decodes once; a document's codepoint bound is the
+    number of UTF-8 lead (non-continuation) bytes before its byte offset."""
+    arr = texts if isinstance(texts, (pa.Array, pa.ChunkedArray)) else pa.array(texts, pa.string())
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    valid = ~arr.is_null().to_numpy(zero_copy_only=False)
+    _, off_buf, data_buf = arr.buffers()
+    off_type = np.int64 if pa.types.is_large_string(arr.type) else np.int32
+    offs = np.frombuffer(off_buf, dtype=off_type)[arr.offset : arr.offset + len(arr) + 1]
+    data = np.frombuffer(data_buf or b"", dtype=np.uint8)[offs[0] : offs[-1]]
+    text = str(data, "utf-8")
+    cps = np.frombuffer(text.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
+    lead_before = np.zeros(len(data) + 1, dtype=np.int64)
+    np.cumsum((data & 0xC0) != 0x80, out=lead_before[1:])
+    return cps, lead_before[offs - offs[0]], valid, text
+
+
+def batch_shingles(texts) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(rows, offsets, shs) for a batch of texts (an Arrow string array or a
+    sequence of str/None): the word-3-gram shingle hashes of every document
+    with >= SHINGLE_N tokens, in one pass over the batch's UTF-32 buffer.
+
+    rows: int64 input positions of the kept documents (NULL and
+    <SHINGLE_N-token documents dropped); kept document k's shingles are
+    shs[offsets[k]:offsets[k+1]] in shingle order — bit-identical to
+    shingle_hashes_from_tokens(token_hashes_doc(text)) per document."""
+    cps, bounds, valid, text = _codepoints(texts)
+    n_docs = len(bounds) - 1
+    th, n_tok = _token_hashes(cps, bounds, text)
+    keep = valid & (n_tok >= SHINGLE_N)
+    rows = np.flatnonzero(keep)
+    offsets = np.zeros(len(rows) + 1, dtype=np.int64)
+    np.cumsum(n_tok[rows] - (SHINGLE_N - 1), out=offsets[1:])
+    if not len(rows):
+        return rows, offsets, np.empty(0, np.int64)
+    # a shingle starting at token t is kept when tokens t..t+2 share a kept doc
+    tok_doc = np.repeat(np.arange(n_docs), n_tok)
+    same_doc = tok_doc[SHINGLE_N - 1 :] == tok_doc[: 1 - SHINGLE_N]
+    return rows, offsets, shingle_hashes_from_tokens(th)[same_doc & keep[tok_doc[: 1 - SHINGLE_N]]]
+
+
+def batch_signatures(texts) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """(rows, offsets, shs, sig, bands): batch_shingles plus each kept
+    document's MinHash signature sig[j] (16, n_kept) and LSH band keys
+    bands[b] (4, n_kept) — bit-identical to minhash_sig_from_shingles and
+    band_keys_from_sig per document."""
+    rows, offsets, shs = batch_shingles(texts)
+    sig = np.empty((len(PERMS), len(rows)), dtype=np.int64)
+    if len(rows):  # every kept document holds >= 1 shingle
+        for j in range(len(PERMS)):
+            sig[j] = np.minimum.reduceat((shs * _PERM_A[j] + _PERM_B[j]) % MINHASH_P, offsets[:-1])
+    return rows, offsets, shs, sig, band_keys_from_sig(sig)
+
+
+# pair verify step size: bucket_pairs materializes at most this many pairs'
+# shingle sets at once, so memory stays flat however large a bucket is
+_PAIR_CHUNK = 4096
+# shingle hashes are < CHAR_MOD <= 2^30, so (row << 30) | hash sorts a set of
+# per-row shingle arrays row by row in one int64 array
+_HASH_BITS = 30
+assert CHAR_MOD <= 1 << _HASH_BITS
+_PAIR_SCHEMA = pa.schema([(c, pa.int64()) for c in ("doc_a", "doc_b", "n_inter", "n_union")])
+
+
+def _segments(starts: np.ndarray, lengths: np.ndarray) -> np.ndarray:
+    """Concatenated ranges [starts[i], starts[i] + lengths[i])."""
+    before = np.cumsum(lengths) - lengths
+    return np.repeat(starts - before, lengths) + np.arange(lengths.sum())
+
+
+def _keys(rb: pa.RecordBatch) -> tuple[np.ndarray, np.ndarray]:
+    return rb.column("band_idx").to_numpy(), rb.column("band_key").to_numpy()
+
+
+def bucket_pairs(batches, max_bucket: int | None):
+    """Verified candidate pairs of every LSH bucket, one pass over batches
+    of (id, band_idx, band_key, shs) rows sorted by (band_idx, band_key).
+
+    A bucket is a run of rows with one (band_idx, band_key); a run that
+    reaches the end of a batch carries into the next. Runs larger than
+    `max_bucket` are skipped (None: no cap). Every other run of n rows
+    yields its n(n-1)/2 pairs as (doc_a < doc_b, n_inter, n_union), where
+    n_inter / n_union count the DISTINCT shingles the two documents share /
+    hold together. A pair colliding in several uncapped bands is yielded
+    once per band: a bucket cannot see whether another band's bucket of the
+    same pair was capped, so the caller de-duplicates the yielded pairs."""
+    carry = None  # the last run seen, which the next batch may extend
+    skip = None  # (band_idx, band_key) of a run already over max_bucket
+    for rb in batches:
+        if skip is not None and rb.num_rows:
+            bidx, bkey = _keys(rb)
+            same = (bidx == skip[0]) & (bkey == skip[1])
+            rb = rb.slice(rb.num_rows if same.all() else int(np.argmin(same)))
+            if rb.num_rows:
+                skip = None
+        if not rb.num_rows:
+            continue
+        if carry is not None:
+            rb = pa.Table.from_batches([carry, rb]).combine_chunks().to_batches()[0]
+        bidx, bkey = _keys(rb)
+        starts = np.flatnonzero(np.append(True, (bidx[1:] != bidx[:-1]) | (bkey[1:] != bkey[:-1])))
+        carry = rb.slice(starts[-1])
+        if max_bucket is not None and carry.num_rows > max_bucket:
+            skip, carry = (bidx[-1], bkey[-1]), None
+        yield from _run_pairs(rb, starts[:-1], starts[-1], max_bucket)
+    if carry is not None:
+        yield from _run_pairs(carry, np.zeros(1, np.int64), carry.num_rows, max_bucket)
+
+
+def _run_pairs(rb: pa.RecordBatch, starts: np.ndarray, end: int, max_bucket: int | None):
+    """bucket_pairs over the complete runs of `rb` beginning at `starts`,
+    the last ending at row `end`."""
+    sizes = np.diff(np.append(starts, end))
+    keep = sizes >= 2
+    if max_bucket is not None:
+        keep &= sizes <= max_bucket
+    if not keep.any():
+        return
+    size = sizes[keep]
+    r = _segments(starts[keep], size)  # rows of the kept runs, run by run
+    pos = np.arange(len(r)) - np.repeat(np.cumsum(size) - size, size)
+    # row i of a run pairs with the rows after it: pair p belongs to the
+    # last row whose first pair index is <= p
+    n_after = np.repeat(size, size) - 1 - pos
+    first = np.cumsum(n_after) - n_after
+    ids = rb.column("id").to_numpy()[r]
+    shs = rb.column("shs")
+    vals, off = _distinct_sorted(shs.offsets.to_numpy(), shs.values.to_numpy(), r)
+    n_pairs = int(first[-1] + n_after[-1])
+    for p0 in range(0, n_pairs, _PAIR_CHUNK):
+        p = np.arange(p0, min(p0 + _PAIR_CHUNK, n_pairs))
+        a = np.searchsorted(first, p, "right") - 1
+        b = a + 1 + (p - first[a])
+        n_inter, n_union = _intersect(vals, off, a, b)
+        lo, hi = np.minimum(ids[a], ids[b]), np.maximum(ids[a], ids[b])
+        ok = lo != hi
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(x[ok]) for x in (lo, hi, n_inter, n_union)], schema=_PAIR_SCHEMA)
+
+
+def _distinct_sorted(offsets, values, r) -> tuple[np.ndarray, np.ndarray]:
+    """(vals, off): the distinct shingles of list rows r (row i holds
+    values[offsets[i]:offsets[i+1]]), ascending, row k's at
+    vals[off[k]:off[k+1]] — one sort over the row-keyed hashes."""
+    lo = offsets[r]
+    n = offsets[r + 1] - lo
+    key = (np.repeat(np.arange(len(r), dtype=np.int64), n) << _HASH_BITS) | values[_segments(lo, n)]
+    key.sort()
+    key = key[np.append(True, key[1:] != key[:-1])] if len(key) else key
+    off = np.searchsorted(key >> _HASH_BITS, np.arange(len(r) + 1))
+    return key & ((1 << _HASH_BITS) - 1), off
+
+
+def _intersect(vals, off, a, b) -> tuple[np.ndarray, np.ndarray]:
+    """(|A & B|, |A | B|) of the distinct sorted shingle sets of row pairs
+    (a[i], b[i]): both sides pair-keyed into one ascending array each, then
+    one sorted merge (searchsorted) finds the shared keys."""
+    la, lb = off[a + 1] - off[a], off[b + 1] - off[b]
+    pair = np.arange(len(a), dtype=np.int64)
+    ka = (np.repeat(pair, la) << _HASH_BITS) | vals[_segments(off[a], la)]
+    pb = np.repeat(pair, lb)
+    kb = (pb << _HASH_BITS) | vals[_segments(off[b], lb)]
+    at = np.minimum(np.searchsorted(ka, kb), len(ka) - 1)
+    hit = ka[at] == kb if len(ka) else np.zeros(len(kb), bool)
+    n_inter = np.bincount(pb[hit], minlength=len(a)).astype(np.int64)
+    return n_inter, la + lb - n_inter

@@ -4,29 +4,31 @@ Graft additions (no imposm2 analog; the closest reference concept is the
 inserted-way anti-join P4, SURVEY.md §2.2). Four tiers:
 
   * exact        — md5 hash-groupBy (registered directly in plans.registry)
-  * minhash_lsh  — shingle -> MinHash signature -> banded LSH self-join ->
+  * minhash_lsh  — shingle -> MinHash signature -> banded LSH buckets ->
                    exact-Jaccard verify. THE scale path for near-dup text at
-                   10^12 docs: candidate generation is an equi-join on
-                   (band_idx, band_key), never an all-pairs product.
+                   10^12 docs: candidates are the pairs within one
+                   (band_idx, band_key) bucket, enumerated per bucket by one
+                   grouped kernel, never an all-pairs product.
   * simhash      — 32-bit majority-vote fingerprint; equal fingerprints ->
                    near-dup clusters (cheap, single groupBy).
   * ngram_jaccard— exact word-shingle Jaccard on an explicit candidate-pair
-                   set (the verify kernel of minhash_lsh, exposed standalone).
+                   set (minhash_lsh's verify as JVM array expressions,
+                   exposed standalone).
 
 All hashing is integer (rolling 31-polynomial mod 1e9+7, fixed permutation
-constants below). Signature, shingle and SimHash scans run the batched NumPy
-kernels in kernels/texthash.py; the pair verify stays in JVM expressions.
-Both are bit-identical to the DuckDB oracle twins in plans.registry.
+constants below). Signature, shingle and SimHash scans and the LSH pair
+verify run the batched NumPy kernels in kernels/texthash.py, bit-identical
+to the DuckDB oracle twins in plans.registry.
 
 Scale notes (10^12 docs):
-  * the LSH self-join shuffles on (band_idx, band_key); hot buckets (boiler-
+  * the LSH buckets shuffle on (band_idx, band_key); hot buckets (boiler-
     plate pages) are bounded by `max_bucket` — buckets larger than that are
     dropped (they are boilerplate clusters, better handled by the exact-dup
     pass). Truncation is not silent: `minhash_dropped_buckets` returns the
     dropped (band_idx, band_key, n_docs) rows for the same inputs, the
     no-silent-caps accounting signal.
-  * signatures are 16 longs + bands 4 longs per doc — tiny vs the text.
-  * verify joins texts back by id only for surviving candidate pairs.
+  * signatures are 16 longs + bands 4 longs per doc — tiny vs the text;
+    the bucket shuffle carries each doc's shingle hashes once per band.
 """
 
 from __future__ import annotations
@@ -35,7 +37,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text_analysis import CHAR_MOD, char_hash
-from ..session import cache_scope
 
 # fixed MinHash permutation constants: h_j(x) = (a_j * x + b_j) mod P
 # (random.Random(421), a forced odd; frozen here as literals — regenerating
@@ -83,16 +84,21 @@ def shingle_hashes(th: F.Column) -> F.Column:
 
 
 def jaccard(sa: F.Column, sb: F.Column) -> F.Column:
-    """Exact set-Jaccard over shingle-hash arrays, rounded for hash-compare.
+    """Exact set-Jaccard over shingle-hash arrays, rounded for hash-compare."""
+    inter = F.size(F.array_intersect(F.array_distinct(sa), F.array_distinct(sb)))
+    union = F.size(F.array_union(sa, sb))
+    return _jaccard_ratio(inter, union)
+
+
+def _jaccard_ratio(n_inter: F.Column, n_union: F.Column) -> F.Column:
+    """round(n_inter / n_union, 9) from distinct-shingle counts.
 
     try_divide, not `/`: two EMPTY shingle sets make the union size 0, and
     plain division under Spark 4's default ANSI mode raises DIVIDE_BY_ZERO
     and aborts the job (review r5, runtime-confirmed) — the documented
     contract is NULL for the empty/empty pair, same rationale as
     ann.cosine_sim's zero-norm handling."""
-    inter = F.size(F.array_intersect(F.array_distinct(sa), F.array_distinct(sb)))
-    union = F.size(F.array_union(sa, sb))
-    return F.round(F.try_divide(inter.cast("double"), union), 9)
+    return F.round(F.try_divide(n_inter.cast("double"), n_union), 9)
 
 
 def minhash_signatures(
@@ -100,51 +106,30 @@ def minhash_signatures(
 ) -> DataFrame:
     """(id, shs, m0..m15, band0..band3); docs with <SHINGLE_N tokens dropped.
 
-    One batched mapInPandas pass through the NumPy twins in
-    kernels/texthash.py. The whole chain is integer arithmetic, so the
-    kernel is BIT-IDENTICAL to the interpreted HOF expressions the oracle
-    mirrors (differential-tested against them in tests/test_texthash.py incl.
-    non-ASCII and empty-token edges) while replacing O(chars + 16*shingles)
-    interpreted expression evaluation per row with vectorized array math."""
-    import numpy as np
-    import pandas as pd
+    One mapInArrow pass through kernels/texthash.py::batch_signatures, which
+    hashes, shingles, MinHashes and bands each Arrow batch on one UTF-32
+    buffer. The whole chain is integer arithmetic, so the kernel is
+    BIT-IDENTICAL to the interpreted HOF expressions the oracle mirrors
+    (differential-tested against them in tests/test_texthash.py incl.
+    non-ASCII and empty-token edges)."""
+    import pyarrow as pa
 
     from ..kernels import texthash as tx
 
-    schema = (
-        f"{id_col} long, shs array<long>, "
-        + ", ".join(f"m{j} long" for j in range(len(PERMS)))
-        + ", "
-        + ", ".join(f"band{b} long" for b in range(N_BANDS))
-    )
+    longs = [f"m{j}" for j in range(len(PERMS))] + [f"band{b}" for b in range(N_BANDS)]
+    schema = f"{id_col} long, shs array<long>, " + ", ".join(f"{c} long" for c in longs)
 
     def gen(batches):
-        for pdf in batches:
-            ids, shs_out, sigs, bands = [], [], [], []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
-                if not isinstance(t, str):
-                    continue  # NULL text: the HOF chain's size(NULL) filter
-                th = tx.token_hashes_doc(t)
-                if len(th) < SHINGLE_N:
-                    continue
-                shs = tx.shingle_hashes_from_tokens(th)
-                sig = tx.minhash_sig_from_shingles(shs)
-                ids.append(int(i))
-                shs_out.append(shs)
-                sigs.append(sig)
-                bands.append(tx.band_keys_from_sig(sig))
-            if not ids:
-                continue
-            S = np.stack(sigs)
-            B = np.stack(bands)
-            d = {id_col: np.asarray(ids, dtype=np.int64), "shs": shs_out}
-            for j in range(len(PERMS)):
-                d[f"m{j}"] = S[:, j]
-            for b in range(N_BANDS):
-                d[f"band{b}"] = B[:, b]
-            yield pd.DataFrame(d)
+        for rb in batches:
+            rows, offsets, shs, sig, bands = tx.batch_signatures(rb.column(1))
+            if len(rows):
+                yield pa.RecordBatch.from_arrays(
+                    [_ids(rb, rows), _lists(offsets, shs), *map(pa.array, sig),
+                     *map(pa.array, bands)],
+                    names=[id_col, "shs", *longs],
+                )
 
-    return docs.select(id_col, text_col).mapInPandas(gen, schema)
+    return docs.select(id_col, text_col).mapInArrow(gen, schema)
 
 
 def shingle_frame(
@@ -152,35 +137,35 @@ def shingle_frame(
 ) -> DataFrame:
     """(id, shs): per-doc word-3-gram shingle hashes; <SHINGLE_N-token and
     NULL-text docs dropped (the minhash_signatures row contract minus the
-    signature columns).
-
-    Batched NumPy kernel — bit-identical to the HOF chain (tests/
-    test_texthash.py) at ~4x its throughput (measured 2.17s -> 0.55s for the
-    sf1.0 scan)."""
-    import numpy as np
-    import pandas as pd
+    signature columns), from the token/shingle half of the same batch
+    kernel (kernels/texthash.py::batch_shingles)."""
+    import pyarrow as pa
 
     from ..kernels import texthash as tx
 
     def gen(batches):
-        for pdf in batches:
-            ids, out = [], []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
-                if not isinstance(t, str):
-                    continue
-                th = tx.token_hashes_doc(t)
-                if len(th) < SHINGLE_N:
-                    continue
-                ids.append(int(i))
-                out.append(tx.shingle_hashes_from_tokens(th))
-            if ids:
-                yield pd.DataFrame(
-                    {id_col: np.asarray(ids, dtype=np.int64), "shs": out}
+        for rb in batches:
+            rows, offsets, shs = tx.batch_shingles(rb.column(1))
+            if len(rows):
+                yield pa.RecordBatch.from_arrays(
+                    [_ids(rb, rows), _lists(offsets, shs)], names=[id_col, "shs"]
                 )
 
-    return docs.select(id_col, text_col).mapInPandas(
-        gen, f"{id_col} long, shs array<long>"
-    )
+    return docs.select(id_col, text_col).mapInArrow(gen, f"{id_col} long, shs array<long>")
+
+
+def _ids(rb, rows):
+    """Column 0 of Arrow batch `rb` at positions `rows`, as int64."""
+    import pyarrow as pa
+
+    return rb.column(0).take(pa.array(rows)).cast(pa.int64())
+
+
+def _lists(offsets, values):
+    """array<long> column: row k = values[offsets[k]:offsets[k+1]]."""
+    import pyarrow as pa
+
+    return pa.ListArray.from_arrays(pa.array(offsets.astype("int32")), pa.array(values))
 
 
 def minhash_lsh_pairs(
@@ -197,6 +182,18 @@ def minhash_lsh_pairs(
     `max_bucket` drops degenerate boilerplate buckets (see module docstring;
     `minhash_dropped_buckets` reports what was dropped).
 
+    Grouped per bucket, not a flat self-join: each doc's (id, shs) row is
+    exploded once per band, shuffled and sorted on (band_idx, band_key), and
+    ONE mapInArrow kernel (kernels/texthash.py::bucket_pairs) walks the
+    sorted buckets, skips those over `max_bucket`, enumerates each bucket's
+    pairs and verifies them by a sorted merge of their distinct shingles,
+    yielding (doc_a, doc_b, n_inter, n_union). A pair colliding in several
+    uncapped bands comes out once per band; one distinct() over those four
+    longs keeps it once (n_inter and n_union are functions of the pair), and
+    the JVM rounds the ratio with the same expression as `jaccard`. So the
+    shingle arrays cross one exchange (once per doc and band) and no per-
+    pair product or join-back exists.
+
     RECALL CONTRACT (review r5): the output is a SUBSET of all qualifying
     pairs — LSH candidate generation is probabilistic. With the frozen
     banding (4 bands x 4 rows), P(candidate | jaccard=j) = 1-(1-j^4)^4:
@@ -207,53 +204,26 @@ def minhash_lsh_pairs(
     raise recall at low j but explode the candidate count). For exhaustive
     pairs above a low threshold use ngram_jaccard_pairs on an explicit
     candidate set instead."""
-    # r6 optimization (guide §5 caching): the signature frame feeds ~5 plan
-    # branches (bands explode, the bucket-count gate, BOTH verify sides, and
-    # every re-execution of the returned frame) and each branch would re-run
-    # the signature kernel over the whole corpus — the dominant cost of this
-    # operator. Persist it once
-    # per invocation (predecessor released by session.cache_scope; footprint
-    # = id + shingle hashes + 20 longs per doc, MEMORY_AND_DISK so oversized
-    # inputs spill instead of OOM). At true 10^12 scale callers materialize
-    # signatures as a table instead; within one invocation this is the same
-    # compute-once discipline.
-    hold = cache_scope("minhash_lsh_pairs")
-    sig = hold(minhash_signatures(docs, id_col, text_col))
-    # NOTE (r6, measured): an EAGER sig.count() here looked attractive (fill
-    # the cache once before the multi-branch consumers) but benched WORSE
-    # end-to-end (curate_corpus 32.6s vs 22.2s, dedup_minhash_family 7.3s vs
-    # 5.1s at sf1.0) — the extra standalone job costs more than the partial
-    # duplicate compute it avoids. Kept lazy deliberately.
-    # band rows are (id, band_idx, band_key) ONLY — 3 longs/row. Carrying the
-    # shingle arrays through the explode / self-join / dropDuplicates would
-    # shuffle ~8x the corpus shingle set (thousands of longs per doc); instead
-    # the shingles join back per side for surviving candidate pairs, exactly
-    # the ngram_jaccard_pairs shape (all branches now read the cached
-    # signatures; plan-locked in tests/test_plans).
-    bands = sig.select(
-        F.col(id_col),
+    from ..kernels import texthash as tx
+
+    rows = minhash_signatures(docs, id_col, text_col).select(
+        F.col(id_col).alias("id"),
+        "shs",
         F.posexplode(F.array(*[F.col(f"band{b}") for b in range(N_BANDS)])).alias(
             "band_idx", "band_key"
         ),
     )
-    if max_bucket is not None:
-        counts = bands.groupBy("band_idx", "band_key").count()
-        keep = counts.where(F.col("count") <= max_bucket).drop("count")
-        bands = bands.join(keep, ["band_idx", "band_key"], "left_semi")
-    a = bands.select(F.col(id_col).alias("doc_a"), "band_idx", "band_key")
-    b = bands.select(F.col(id_col).alias("doc_b"), "band_idx", "band_key")
-    cand = (
-        a.join(b, ["band_idx", "band_key"])
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .dropDuplicates(["doc_a", "doc_b"])
-        .select("doc_a", "doc_b")
+    found = (
+        rows.repartition("band_idx", "band_key")
+        .sortWithinPartitions("band_idx", "band_key")
+        .mapInArrow(lambda batches: tx.bucket_pairs(batches, max_bucket),
+                    "doc_a long, doc_b long, n_inter long, n_union long")
     )
-    sh = sig.select(id_col, "shs")
+    ratio = _jaccard_ratio(F.col("n_inter"), F.col("n_union"))
     return (
-        cand.join(sh.select(F.col(id_col).alias("doc_a"), F.col("shs").alias("sa")), "doc_a")
-        .join(sh.select(F.col(id_col).alias("doc_b"), F.col("shs").alias("sb")), "doc_b")
-        .select("doc_a", "doc_b", jaccard(F.col("sa"), F.col("sb")).alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
+        found.where(ratio >= threshold)
+        .distinct()
+        .select("doc_a", "doc_b", ratio.alias("jaccard"))
     )
 
 

@@ -15,8 +15,8 @@ oracle-checked as a whole in plans.registry::curate_corpus):
 
 Scale shape: stages 1-2 are one scoring scan — a single Arrow-batched stats
 UDF (kernels/textstats.py) feeding codegen'd filters, no shuffle; stage 3 is
-one hash aggregation; stage 4 reuses the banded-LSH self-join (bounded
-buckets) plus a bounded label-propagation loop over dup nodes only; stage 5
+one hash aggregation; stage 4 reuses the grouped banded-LSH pair kernel
+(bounded buckets) plus a bounded label-propagation loop over dup nodes only; stage 5
 one aggregation. Nothing quadratic, nothing driver-side.
 """
 

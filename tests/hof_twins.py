@@ -24,6 +24,8 @@ from imposm2_spark.operators.dedup import (
     N_BANDS,
     PERMS,
     SHINGLE_N,
+    jaccard,
+    minhash_signatures,
     shingle_hashes,
     token_hashes,
 )
@@ -150,6 +152,45 @@ def shingle_frame_hof(
         docs.select(id_col, token_hashes(F.col(text_col)).alias("_th"))
         .where(F.size("_th") >= SHINGLE_N)
         .select(id_col, shingle_hashes(F.col("_th")).alias("shs"))
+    )
+
+
+def minhash_lsh_pairs_join(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    threshold: float = 0.5,
+    max_bucket: int | None = 10_000,
+) -> DataFrame:
+    """(doc_a, doc_b, jaccard) — dedup.minhash_lsh_pairs' rows, as the flat
+    join composition: explode the band keys, semi-join a bucket-count gate,
+    self-join on (band_idx, band_key), drop duplicate pairs, join each
+    side's shingles back by id and verify with the JVM array expressions."""
+    sig = minhash_signatures(docs, id_col, text_col)
+    bands = sig.select(
+        F.col(id_col),
+        F.posexplode(F.array(*[F.col(f"band{b}") for b in range(N_BANDS)])).alias(
+            "band_idx", "band_key"
+        ),
+    )
+    if max_bucket is not None:
+        counts = bands.groupBy("band_idx", "band_key").count()
+        keep = counts.where(F.col("count") <= max_bucket).drop("count")
+        bands = bands.join(keep, ["band_idx", "band_key"], "left_semi")
+    a = bands.select(F.col(id_col).alias("doc_a"), "band_idx", "band_key")
+    b = bands.select(F.col(id_col).alias("doc_b"), "band_idx", "band_key")
+    cand = (
+        a.join(b, ["band_idx", "band_key"])
+        .where(F.col("doc_a") < F.col("doc_b"))
+        .dropDuplicates(["doc_a", "doc_b"])
+        .select("doc_a", "doc_b")
+    )
+    sh = sig.select(id_col, "shs")
+    return (
+        cand.join(sh.select(F.col(id_col).alias("doc_a"), F.col("shs").alias("sa")), "doc_a")
+        .join(sh.select(F.col(id_col).alias("doc_b"), F.col("shs").alias("sb")), "doc_b")
+        .select("doc_a", "doc_b", jaccard(F.col("sa"), F.col("sb")).alias("jaccard"))
+        .where(F.col("jaccard") >= threshold)
     )
 
 

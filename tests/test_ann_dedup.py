@@ -72,6 +72,51 @@ def test_minhash_max_bucket_drops_boilerplate(spark):
     assert n_capped == 0  # boilerplate bucket dropped, not exploded
 
 
+@pytest.mark.parametrize("max_bucket", [None, 2, 10_000])
+def test_minhash_lsh_pairs_matches_join_twin(spark, max_bucket):
+    """The grouped per-bucket kernel returns the flat join composition's
+    pair set with the same 9-dp Jaccard, capped or not, on the sf0.001
+    documents plus a near-dup variant of each."""
+    from conftest import SF_SMOKE
+    from hof_twins import minhash_lsh_pairs_join
+    from imposm2_spark.operators.dedup import minhash_lsh_pairs
+    from imposm2_spark.sources import testdata
+
+    docs = testdata.load(spark, SF_SMOKE, "documents").select("doc_id", "text")
+    variants = docs.select(
+        (F.col("doc_id") + 1_000_000).alias("doc_id"),
+        F.concat("text", F.lit(" dup")).alias("text"),
+    )
+    corpus = docs.unionByName(variants)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    got = rows(minhash_lsh_pairs(corpus, max_bucket=max_bucket))
+    assert got == rows(minhash_lsh_pairs_join(corpus, max_bucket=max_bucket))
+    assert got or max_bucket == 2
+
+
+def test_minhash_bucket_split_across_arrow_batches(spark):
+    """Buckets of 50 identical docs reach the pair kernel in 7-row Arrow
+    batches: a bucket carried across batches still yields all its pairs,
+    and the cap still drops it whole."""
+    from imposm2_spark.operators.dedup import minhash_lsh_pairs
+
+    same = spark.createDataFrame(
+        [(i, "all the same boilerplate text body here") for i in range(50)],
+        ["doc_id", "text"],
+    )
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    orig = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "7")
+        assert minhash_lsh_pairs(same, threshold=0.5, max_bucket=None).count() == 1225
+        assert minhash_lsh_pairs(same, threshold=0.5, max_bucket=10).count() == 0
+    finally:
+        spark.conf.set(key, orig)
+
+
 def test_simhash_identical_texts_cluster(spark):
     from hof_twins import simhash
     from imposm2_spark.operators.dedup import simhash_clusters

@@ -1,9 +1,9 @@
 """North-rule enforcement (SURVEY.md §2.10): NO per-row Python UDFs anywhere.
 
 Engine Python boundaries must be Arrow-batched (@pandas_udf, applyInPandas,
-mapInPandas). A row-at-a-time `F.udf(...)` / `@udf` in the engine is a
-10-100x regression at 100 TB — this test greps the package source so one
-can't slip in silently.
+mapInPandas, mapInArrow). A row-at-a-time `F.udf(...)` / `@udf` in the
+engine is a 10-100x regression at 100 TB — this test greps the package
+source so one can't slip in silently.
 """
 
 import re
@@ -27,14 +27,14 @@ def test_no_row_at_a_time_udfs():
 
 def test_python_boundaries_are_arrow_batched():
     # every Python-boundary construct used must be one of the Arrow forms
-    allowed = ("pandas_udf", "applyInPandas", "mapInPandas")
+    allowed = ("pandas_udf", "applyInPandas", "mapInPandas", "mapInArrow")
     found = set()
     for py in PKG.rglob("*.py"):
         src = py.read_text()
         for form in allowed:
             if form in src:
                 found.add(form)
-    assert found >= {"pandas_udf", "applyInPandas", "mapInPandas"}
+    assert found >= {"pandas_udf", "applyInPandas", "mapInPandas", "mapInArrow"}
 
 
 # the quality classifier's inline/arrow pair is a declared contract of the

@@ -122,20 +122,33 @@ def test_tfidf_tokenizes_once(spark):
 
 
 def test_minhash_lsh_band_shuffle_carries_no_arrays(spark):
-    """T2 scale shape: the LSH candidate-generation exchanges (band-bucket
-    counts, band self-join, pair dedup) must move (id, band_idx, band_key)
-    longs only. Carrying the shingle arrays through the explode/self-join
-    shuffles ~8x the corpus shingle set; shingles may appear ONLY in the
-    per-side verify joins (joined back by id for surviving candidates)."""
+    """T2 scale shape, on the operator's own plan: the shingle arrays cross
+    ONE exchange, the (band_idx, band_key) bucket shuffle that feeds the
+    grouped pair kernel; the pair de-duplication exchange moves longs only;
+    no join (no self-join, no shingle join-back); two Python crossings (the
+    signature scan and the pair kernel)."""
     import re
 
-    p = plan_of(registry.queries()["dedup_minhash_family"](spark, SF))
-    # every shuffle Exchange's Input line must be array-free
-    blocks = re.split(r"\n\(\d+\) ", p)
-    for blk in blocks:
-        if blk.startswith("Exchange\n"):
-            input_line = next(l for l in blk.splitlines() if l.startswith("Input"))
-            assert "shs" not in input_line and "sa#" not in input_line and "sb#" not in input_line, blk
+    from imposm2_spark.operators.dedup import minhash_lsh_pairs
+
+    docs = testdata.load(spark, SF, "documents").select("doc_id", "text")
+    p = plan_of(minhash_lsh_pairs(docs))
+    exchanges = [blk for blk in re.split(r"\n\(\d+\) ", p) if blk.startswith("Exchange\n")]
+    assert exchanges, p
+
+    def line(blk, head):
+        return next(l for l in blk.splitlines() if l.startswith(head))
+
+    with_arrays = [blk for blk in exchanges if "shs#" in line(blk, "Input")]
+    assert len(with_arrays) == 1, p
+    assert re.search(r"hashpartitioning\(band_idx#\d+, band_key#\d+L,",
+                     line(with_arrays[0], "Arguments")), with_arrays[0]
+    for blk in exchanges:
+        if blk is not with_arrays[0]:
+            cols = re.search(r"Input \[\d+\]: \[(.*)\]", blk).group(1).split(", ")
+            assert all(re.fullmatch(r"\w+#\d+L", c) for c in cols), blk
+    assert join_nodes(p) == []
+    assert len(python_nodes(p)) == 2, python_nodes(p)
 
 
 def test_import_pipeline_prunes_tags_before_shuffle(spark):

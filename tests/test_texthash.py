@@ -170,3 +170,78 @@ def test_simhash_clusters_engines_agree(spark):
         for r in simhash_clusters(df).collect()
     }
     assert hof == arrow and len(hof) > 0
+
+
+def test_batch_signatures_match_per_document_twins():
+    """The whole-batch kernel equals the per-document kernels on every
+    adversarial text (NULL, "", runs of spaces, non-ASCII, the 5001-char
+    token), as a list and as a sliced Arrow array."""
+    import pyarrow as pa
+
+    texts = [None] + ADVERSARIAL + [None, "  a b c  ", "中 文 字 符"]
+    for batch in (texts, pa.array(["pad"] + texts)[1:]):
+        rows, offsets, shs, sig, bands = tx.batch_signatures(batch)
+        want = [(i, tx.token_hashes_doc(t)) for i, t in enumerate(texts)
+                if isinstance(t, str)]
+        want = [(i, th) for i, th in want if len(th) >= 3]
+        assert rows.tolist() == [i for i, _ in want]
+        for k, (_, th) in enumerate(want):
+            s = tx.shingle_hashes_from_tokens(th)
+            assert shs[offsets[k] : offsets[k + 1]].tolist() == s.tolist()
+            m = tx.minhash_sig_from_shingles(s)
+            assert sig[:, k].tolist() == m.tolist()
+            assert bands[:, k].tolist() == tx.band_keys_from_sig(m).tolist()
+    assert [len(x) for x in tx.batch_signatures([])] == [0, 1, 0, 16, 4]
+
+
+def _band_batch(rows):
+    """Arrow batch of (id, band_idx, band_key, shs) rows, sorted as the
+    operator's bucket shuffle sorts them."""
+    import pyarrow as pa
+
+    rows = sorted(rows, key=lambda r: (r[1], r[2]))
+    return pa.RecordBatch.from_arrays(
+        [pa.array([r[0] for r in rows], pa.int64()),
+         pa.array([r[1] for r in rows], pa.int32()),
+         pa.array([r[2] for r in rows], pa.int64()),
+         pa.array([r[3] for r in rows], pa.list_(pa.int64()))],
+        names=["id", "band_idx", "band_key", "shs"],
+    )
+
+
+def test_bucket_pairs_capped_lower_band_keeps_pair():
+    """Docs 1 and 2 share a band-0 bucket that also holds doc 3 (capped at
+    max_bucket=2) and an uncapped band-1 bucket: the pair comes out exactly
+    once. Emitting a pair only from its lowest colliding band would lose it."""
+    sa, sb, sc = [5, 6, 7, 7], [6, 7, 8], [1, 2, 3]
+    rows = [
+        (1, 0, 100, sa), (2, 0, 100, sb), (3, 0, 100, sc),
+        (1, 1, 200, sa), (2, 1, 200, sb), (3, 1, 300, sc),
+    ]
+    out = [r for rb in tx.bucket_pairs(iter([_band_batch(rows)]), 2) for r in rb.to_pylist()]
+    assert out == [{"doc_a": 1, "doc_b": 2, "n_inter": 2, "n_union": 4}]
+    # uncapped, band 0 adds its three pairs (the pair twice overall)
+    out = [r for rb in tx.bucket_pairs(iter([_band_batch(rows)]), None) for r in rb.to_pylist()]
+    assert sorted((r["doc_a"], r["doc_b"]) for r in out) == [(1, 2), (1, 2), (1, 3), (2, 3)]
+
+
+def test_bucket_pairs_memory_flat_at_1000_doc_bucket():
+    """One 1000-doc bucket yields all 499,500 pairs while the verify holds
+    _PAIR_CHUNK pairs at a time. Verifying every pair at once would
+    allocate the pair-keyed shingle arrays, 2 x 499,500 x 16 x 8 bytes
+    (128 MB), alone."""
+    import tracemalloc
+
+    n = 1000
+    rows = [(i, 0, 7, [(i * 16 + j) % 40 for j in range(16)]) for i in range(n)]
+    batch = _band_batch(rows)
+    tracemalloc.start()
+    try:
+        n_pairs = 0
+        for rb in tx.bucket_pairs(iter([batch]), None):
+            n_pairs += rb.num_rows
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert n_pairs == n * (n - 1) // 2
+    assert peak < 16 * 2**20, peak

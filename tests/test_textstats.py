@@ -157,26 +157,34 @@ def test_batch_stats_nan_in_batch():
 def test_arrow_text_kernels_nan_in_batch(spark, monkeypatch):
     """Every mapInPandas text kernel treats a NaN text like NULL: capture
     each kernel's batch function and feed it a batch holding NaN, None and
-    real text side by side."""
+    real text side by side. The mapInArrow kernels (Arrow strings have no
+    NaN) drop a NULL text: a batch holding one yields what the batch
+    without it yields."""
     import pandas as pd
+    import pyarrow as pa
 
     from imposm2_spark.operators import curation, dedup
 
     docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
     frame_cls = type(docs)
-    captured = []
-    real = frame_cls.mapInPandas
+    captured = {"mapInPandas": [], "mapInArrow": []}
 
-    def capture(self, func, schema, *args, **kwargs):
-        captured.append(func)
-        return real(self, func, schema, *args, **kwargs)
+    def capturing(method):
+        real = getattr(frame_cls, method)
 
-    monkeypatch.setattr(frame_cls, "mapInPandas", capture)
+        def capture(self, func, schema, *args, **kwargs):
+            captured[method].append(func)
+            return real(self, func, schema, *args, **kwargs)
+
+        monkeypatch.setattr(frame_cls, method, capture)
+
+    capturing("mapInPandas")
+    capturing("mapInArrow")
     dedup.minhash_signatures(docs)
     dedup.shingle_frame(docs)
     dedup.simhash_clusters(docs)
     curation._ngram_rows_kernel(docs, 3, "doc_id", "text")
-    assert len(captured) == 4
+    assert len(captured["mapInPandas"]) == 2 and len(captured["mapInArrow"]) == 2
 
     def run(gen, missing):
         pdf = pd.DataFrame(
@@ -184,5 +192,15 @@ def test_arrow_text_kernels_nan_in_batch(spark, monkeypatch):
         )
         return [str(out.to_dict("list")) for out in gen(iter([pdf]))]
 
-    for gen in captured:
+    for gen in captured["mapInPandas"]:
         assert run(gen, float("nan")) == run(gen, None)
+
+    def run_arrow(gen, ids, texts):
+        rb = pa.RecordBatch.from_arrays(
+            [pa.array(ids, pa.int64()), pa.array(texts, pa.string())], names=["doc_id", "text"]
+        )
+        return [out.to_pylist() for out in gen(iter([rb]))]
+
+    for gen in captured["mapInArrow"]:
+        with_null = run_arrow(gen, [1, 2, 3], ["one two three four", None, "x y z w"])
+        assert with_null and with_null == run_arrow(gen, [1, 3], ["one two three four", "x y z w"])
