@@ -46,11 +46,6 @@ def token_count_ws(text: Column) -> Column:
     return F.size(ws_tokens(text)).cast("long")
 
 
-def token_count_bpe(text: Column) -> Column:
-    """Count of BPE-ish regex tokens (letters/digits/punct runs)."""
-    return F.size(F.regexp_extract_all(text, F.lit(BPE_TOKEN_RE), 0)).cast("long")
-
-
 def char_hash(s: Column) -> Column:
     """Rolling 31-polynomial hash of a string's codepoints, mod CHAR_MOD."""
     return F.aggregate(

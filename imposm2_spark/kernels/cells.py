@@ -136,17 +136,6 @@ def cell_parent(cell: np.ndarray, parent_level: int) -> np.ndarray:
     return np.where(invalid, INVALID_CELL, out)
 
 
-def cell_bounds(cell: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """-> (lon_min, lat_min, lon_max, lat_max) of each cell (degrees)."""
-    level, x, y = cell_decode(cell)
-    n = (np.int64(1) << level).astype(np.float64)
-    lon_min = x / n * 360.0 - 180.0
-    lon_max = (x + 1) / n * 360.0 - 180.0
-    lat_max = np.degrees(np.arctan(np.sinh(np.pi * (1.0 - 2.0 * y / n))))
-    lat_min = np.degrees(np.arctan(np.sinh(np.pi * (1.0 - 2.0 * (y + 1) / n))))
-    return lon_min, lat_min, lon_max, lat_max
-
-
 def k_ring(cell: int, r: int) -> np.ndarray:
     """All cells within Chebyshev distance r of `cell` (incl. itself), same level.
 
@@ -168,15 +157,6 @@ def k_ring(cell: int, r: int) -> np.ndarray:
         _, idx = np.unique(cells, return_index=True)
         cells = cells[np.sort(idx)]
     return cells
-
-
-def k_ring_shell(cell: int, r: int) -> np.ndarray:
-    """Only the cells at exactly Chebyshev distance r (the ring shell)."""
-    if r == 0:
-        return np.asarray([cell], dtype=np.int64)
-    full = k_ring(cell, r)
-    inner = set(k_ring(cell, r - 1).tolist())
-    return np.asarray([c for c in full.tolist() if c not in inner], dtype=np.int64)
 
 
 def covering_cells_bbox(

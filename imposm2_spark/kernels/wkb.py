@@ -103,15 +103,11 @@ def _parse_rings(buf: bytes, off: int) -> tuple[list[np.ndarray], int]:
     return rings, off
 
 
-def rings_to_nested(rings: list[np.ndarray]) -> list[list[list[float]]]:
-    """Kernel rings -> the engine's ARRAY<ARRAY<ARRAY<DOUBLE>>> column shape."""
-    return [np.asarray(r, dtype=np.float64).tolist() for r in rings]
-
-
 def nested_to_rings(nested) -> list[np.ndarray]:
-    """Robust to Arrow's object-dtype nested arrays (ndarray-of-ndarray)."""
+    """Robust to Arrow's object-dtype nested arrays (ndarray-of-ndarray).
+    NULL rings (None) are no rings: [] contains no point and covers no tile."""
     out = []
-    for r in nested:
+    for r in nested if nested is not None else ():
         arr = np.asarray(r)
         if arr.dtype == object:
             arr = np.vstack([np.asarray(p, dtype=np.float64) for p in r])

@@ -58,15 +58,6 @@ def _norm2(a: F.Column) -> F.Column:
     )
 
 
-def cosine_sim(a: F.Column, b: F.Column) -> F.Column:
-    """Exact cosine similarity, sequential-sum order (oracle-parallel).
-
-    try_divide: a zero-norm vector yields NULL (no direction — module
-    docstring) instead of the ANSI-mode DIVIDE_BY_ZERO error; for nonzero
-    norms the value is bit-identical to plain division."""
-    return F.try_divide(_dot(a, b), F.sqrt(_norm2(a) * _norm2(b)))
-
-
 def _as_double(col: F.Column) -> F.Column:
     return col.cast("array<double>")
 
@@ -367,8 +358,9 @@ def cosine_topk_lsh(
     tested (tests/test_ann_dedup.py) on planted near-duplicates.
     """
     # norms precomputed per side (O(n)), not per pair (review r5 — the brute
-    # and IVF paths already did this); dot/sqrt(qn*nn) folds in the same
-    # order as cosine_sim, so values stay bit-identical to the oracle
+    # and IVF paths already did this); try_divide(_dot, sqrt(_norm2 *
+    # _norm2)) keeps the oracle's sequential-sum order, so values stay
+    # bit-identical to it
     c = corpus.select(
         F.col(id_col),
         _as_double(F.col(vec_col)).alias("_v"),
@@ -890,8 +882,9 @@ def embedding_neardup_window(
     b = corpus.select(
         F.col(id_col).alias("vec_b"), _as_double(F.col(vec_col)).alias("_vb")
     ).withColumn("_nb", _norm2(F.col("_vb")))
-    # per-side norm precompute; dot/sqrt(na*nb) folds identically to
-    # cosine_sim, so the rounded sim matches the oracle bit-for-bit
+    # per-side norm precompute; try_divide(_dot, sqrt(_norm2 * _norm2))
+    # keeps the oracle's sequential-sum order, so the rounded sim matches
+    # it bit-for-bit
     return (
         pair_ids.join(a, "vec_a")
         .join(b, "vec_b")  # inner join drops ids past the corpus end
@@ -945,8 +938,9 @@ def embedding_neardup_lsh(
     )
     pairs = a.join(b, "_sig").where(F.col("vec_b") > F.col("vec_a"))
     # no dropDuplicates (review r5): each row carries exactly one _sig, so a
-    # (vec_a, vec_b) pair joins at most once; per-side norm precompute folds
-    # identically to cosine_sim (oracle bit-parity preserved)
+    # (vec_a, vec_b) pair joins at most once; per-side norm precompute, then
+    # try_divide(_dot, sqrt(_norm2 * _norm2)) in the oracle's sequential-sum
+    # order (oracle bit-parity preserved)
     return pairs.select(
         "vec_a",
         "vec_b",

@@ -195,9 +195,19 @@ def repetition_metrics(
     """Intra-document repetition metrics + keep flag (Gopher Table A1 shape).
 
     Per doc: (id, n_tokens, dup_token_frac, dup_token_char_frac,
-    top_bigram_char_frac, keep) — semantics documented on
-    `_repetition_metrics_hof`, the pure-HOF differential twin this r5
-    rewrite must match row-for-row (tests/test_curation.py).
+    top_bigram_char_frac, keep) where
+      * dup_token_frac       = 1 - distinct_tokens / n_tokens
+      * dup_token_char_frac  = chars of token slots AFTER their first
+                               occurrence / length(text)
+      * top_bigram_char_frac = occurrences-of-most-frequent-word-bigram x
+                               its length / length(text), clamped to 1.0
+                               (overlapping occurrences can exceed the text);
+                               ties broken by lexicographically greatest gram
+      * keep                 = all three under the module thresholds
+                               (evaluated on the 6dp-rounded values so the
+                               DuckDB oracle agrees bit-for-bit)
+    Tokens are split on single spaces. A pure-HOF formulation of the same
+    rows is the differential twin in tests/hof_twins.py.
 
     Scale shape: one Arrow-batched mapInPandas over (id, text) — still ZERO
     shuffles/joins/aggregations (plan-locked). The r4 HOF shape was already
@@ -274,152 +284,6 @@ def repetition_metrics(
         F.least(
             F.lit(1.0),
             F.col("_top_cnt") * F.col("_top_len")
-            / F.greatest("_n_chars", F.lit(1)),
-        ),
-        6,
-    )
-    return mid.select(
-        F.col(id_col),
-        "n_tokens",
-        dup_frac.alias("dup_token_frac"),
-        dup_char_frac.alias("dup_token_char_frac"),
-        top_frac.alias("top_bigram_char_frac"),
-        (
-            (dup_frac <= DUP_TOKEN_FRAC_MAX)
-            & (dup_char_frac <= DUP_TOKEN_CHAR_FRAC_MAX)
-            & (top_frac <= TOP_BIGRAM_CHAR_FRAC_MAX)
-        ).alias("keep"),
-    )
-
-
-def _repetition_metrics_hof(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Pure-HOF formulation of repetition_metrics — kept as the DIFFERENTIAL
-    TWIN (tests assert it matches the Arrow kernel row-for-row on the
-    fixture corpus; it is not registered and not on the hot path).
-
-    Per doc: (id, n_tokens, dup_token_frac, dup_token_char_frac,
-    top_bigram_char_frac, keep) where
-      * dup_token_frac       = 1 - distinct_tokens / n_tokens
-      * dup_token_char_frac  = chars of token slots AFTER their first
-                               occurrence / length(text)
-      * top_bigram_char_frac = occurrences-of-most-frequent-word-bigram x
-                               its length / length(text), clamped to 1.0
-                               (overlapping occurrences can exceed the text);
-                               ties broken by lexicographically greatest gram
-      * keep                 = all three under the module thresholds
-                               (evaluated on the 6dp-rounded values so the
-                               DuckDB oracle agrees bit-for-bit)
-
-    Scale shape: EVERYTHING is in-row — zero shuffles, no join, no
-    aggregation (plan-tested). The r4-initial shape exploded grams through
-    two hash aggregations and an equi-join back; correct but the 50x gram
-    blow-up transited two exchanges. Duplicate accounting needs no scan at
-    all: dup slot chars = (total slot chars) - (distinct token chars),
-    and total slot chars = n_chars - (n_tokens - 1) exactly, because
-    split-on-single-space consumes exactly n_tokens-1 one-char separators
-    for ANY input. The top bigram is the longest run in the SORTED gram
-    array: run starts = positions whose gram differs from its predecessor
-    (one filter over an index sequence), run lengths = successive-start
-    deltas, winner = array_max over (cnt, gram) structs — struct ordering
-    ties break on the lexicographically greatest gram, matching the
-    oracle's `ORDER BY cnt DESC, gram DESC`. All HOF lambdas here are
-    single simple expressions (no struct-accumulator folds — an earlier
-    fold formulation was 2x SLOWER than the explode shape at 1M docs);
-    arrays are bound ONCE as lambda variables (transform over a 1-element
-    array — HOF lambdas have no CSE)."""
-    toks = docs.select(
-        F.col(id_col),
-        F.split(F.col(text_col), " ").alias("_toks"),
-        F.length(F.col(text_col)).alias("_n_chars"),
-    )
-
-    zero = F.lit(0).cast("long")
-
-    # (distinct count, distinct chars) off the deduped token array, bound once
-    stats = F.element_at(
-        F.transform(
-            F.array(F.array_distinct(F.col("_toks"))),
-            lambda d: F.struct(
-                F.size(d).cast("long").alias("distinct"),
-                F.aggregate(
-                    d, zero, lambda acc, x: acc + F.length(x)
-                ).alias("dchars"),
-            ),
-        ),
-        1,
-    )
-
-    def _best_run(gs: F.Column) -> F.Column:
-        """(cnt, gram) of the modal gram from a BOUND sorted gram array."""
-        n = F.size(gs)
-        starts = F.filter(
-            F.sequence(F.lit(1), n),
-            lambda i: (i == F.lit(1))
-            | (F.element_at(gs, i) != F.element_at(gs, i - 1)),
-        )
-        return F.element_at(
-            F.transform(
-                F.array(starts),
-                lambda st: F.array_max(
-                    F.transform(
-                        F.sequence(F.lit(1), F.size(st)),
-                        lambda j: F.struct(
-                            (
-                                F.when(
-                                    j < F.size(st), F.element_at(st, j + 1)
-                                ).otherwise(n + 1)
-                                - F.element_at(st, j)
-                            ).cast("long").alias("cnt"),
-                            F.element_at(
-                                gs, F.element_at(st, j)
-                            ).alias("gram"),
-                        ),
-                    )
-                ),
-            ),
-            1,
-        )
-
-    gram_arr = F.transform(
-        F.sequence(F.lit(1), F.size("_toks") - 1),
-        lambda i: F.concat_ws(
-            " ",
-            F.element_at(F.col("_toks"), i),
-            F.element_at(F.col("_toks"), i + 1),
-        ),
-    )
-    top = F.when(
-        F.size("_toks") >= 2,
-        F.element_at(
-            F.transform(
-                F.array(F.array_sort(gram_arr)), lambda gs: _best_run(gs)
-            ),
-            1,
-        ),
-    ).otherwise(F.struct(zero.alias("cnt"), F.lit("").alias("gram")))
-
-    mid = toks.select(
-        F.col(id_col),
-        F.size("_toks").cast("long").alias("n_tokens"),
-        F.col("_n_chars"),
-        stats.alias("_s"),
-        top.alias("_t"),
-    )
-    dup_frac = F.round(
-        F.lit(1.0) - F.col("_s.distinct") / F.col("n_tokens"), 6
-    )
-    dup_char_frac = F.round(
-        (F.col("_n_chars") - F.col("n_tokens") + 1 - F.col("_s.dchars"))
-        / F.greatest("_n_chars", F.lit(1)),
-        6,
-    )
-    top_frac = F.round(
-        F.least(
-            F.lit(1.0),
-            F.col("_t.cnt")
-            * F.length(F.col("_t.gram"))
             / F.greatest("_n_chars", F.lit(1)),
         ),
         6,

@@ -96,8 +96,9 @@ def _jaccard_ratio(n_inter: F.Column, n_union: F.Column) -> F.Column:
     try_divide, not `/`: two EMPTY shingle sets make the union size 0, and
     plain division under Spark 4's default ANSI mode raises DIVIDE_BY_ZERO
     and aborts the job (review r5, runtime-confirmed) — the documented
-    contract is NULL for the empty/empty pair, same rationale as
-    ann.cosine_sim's zero-norm handling."""
+    contract is NULL for the empty/empty pair, same rationale as the ann
+    operators' try_divide(_dot, sqrt(_norm2 * _norm2)) on zero-norm
+    vectors."""
     return F.round(F.try_divide(n_inter.cast("double"), n_union), 9)
 
 

@@ -2,7 +2,8 @@
 
 A representative subset of imposm2's default mapping (places, roads split by
 class, buildings, landusages, waterways/waterareas, admin boundaries), enough
-to exercise every FieldType and the union-view/generalized-table machinery.
+to exercise every FieldType except Class (the matched key; tested on its own
+in tests/test_mapping.py) and the union-view/generalized-table machinery.
 Semantics per table follow the public imposm.org default mapping docs.
 """
 

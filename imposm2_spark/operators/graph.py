@@ -176,26 +176,3 @@ def pagerank(
     finally:
         edges_deg.unpersist()
         nodes.unpersist()
-
-
-def host_authority(
-    pages: DataFrame,
-    url_col: str = "url",
-    outlinks_col: str = "outlinks",
-    iterations: int = 3,
-    scale: int = 10**9,
-) -> DataFrame:
-    """Convenience composition for the webtext shape: pages carrying an
-    `outlinks ARRAY<STRING>` column → (host, rank_n) via `urlx.url_host`
-    on both endpoints. The explode + host projection is the ONE
-    corpus-sized scan; everything after runs on the distinct host-edge
-    frame with host strings as opaque node ids."""
-    from ..functions import urlx
-
-    host_edges = pages.select(
-        urlx.url_host(F.col(url_col)).alias("src"),
-        F.explode(outlinks_col).alias("out_url"),
-    ).select("src", urlx.url_host(F.col("out_url")).alias("dst"))
-    return pagerank(host_edges, iterations=iterations, scale=scale).select(
-        F.col("node").alias("host"), "rank_n"
-    )

@@ -97,9 +97,10 @@ def interval_join(
     the explode and broadcast-range-join instead. Default None: everything
     explodes, one pass over the points. Enabling the split adds a SECOND full
     scan of the point side for the broadcast branch — the 8M-point XL A/B
-    (BENCH_XL_r05.json) measured that a net loss (2.48s vs 2.03s) unless the
-    long tail's explode factor outweighs the extra scan, so opt in only for
-    genuinely open-ended interval tails. The long side is assumed small;
+    (BENCH_XL_r05.json, from `git show 1d3b96c:scripts/bench_interval_xl.py`)
+    measured that a net loss (2.48s vs 2.03s) unless the long tail's explode
+    factor outweighs the extra scan, so opt in only for genuinely open-ended
+    interval tails. The long side is assumed small;
     Spark's broadcast size limit is the deliberate loud failure if not.
 
     Returns all point columns (keys first), then every non-key interval

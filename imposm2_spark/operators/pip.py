@@ -231,7 +231,8 @@ def pip_join(
     points:   any DataFrame with lon/lat columns (plus carried columns).
     polygons: (polygon_id, rings ARRAY<ARRAY<ARRAY<DOUBLE>>>, cells ARRAY<LONG>)
               where `cells` are level-`cell_level` covering cells (see
-              sources.fixtures.make_polygons_admin / operators.tiles.covering_cells).
+              sources.fixtures.make_polygons_admin /
+              kernels.cells.covering_cells_bbox).
     Output: the point columns (or `keep_point_cols`) plus polygon_id.
 
     broadcast_polygons=True EAGERLY pulls the polygon side to the driver at

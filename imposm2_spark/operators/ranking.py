@@ -219,7 +219,8 @@ def bm25_rank(
     bounded limit(cap+1) collect), the ZERO-SHUFFLE in-row plan runs —
     per-doc (dl, tf...) folded in one bound HOF pass, corpus stats in one
     1-row agg, no explode, no (doc, term) exchange; measured 2.0x over the
-    postings join at 8M docs (BENCH_XL_r05 bm25_xl — and that corpus is the
+    postings join at 8M docs (BENCH_XL_r05 bm25_xl, from
+    `git show 1d3b96c:scripts/bench_bm25_xl.py` — and that corpus is the
     postings path's BEST case: a ~30-word vocabulary where 5 query terms
     match ~1/6 of all tokens; with realistically rare terms the join path's
     shuffle shrinks but the inline path's cost is unchanged — already

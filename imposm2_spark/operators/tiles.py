@@ -138,6 +138,8 @@ def _covering_tiles_kernel(
     and vertex-in (polygon wholly inside tile) is the exact intersection set
     for closed rings (boundary-touching tiles included)."""
     ring_arrays = nested_to_rings(rings_nested)
+    if not ring_arrays:
+        return []  # NULL or empty rings: no area, no tiles
     lon_min, lat_min, lon_max, lat_max = geom.rings_bbox(ring_arrays)
     cover = kcells.covering_cells_bbox(
         lon_min, lat_min, lon_max, lat_max, z, max_cells=max_cells
@@ -210,29 +212,6 @@ def assign_polygon_tiles(
     for t in outs[1:]:
         result = result.unionByName(t)
     return result
-
-
-def covering_cells(
-    polygons: DataFrame, cell_level: int,
-    max_cells_per_polygon: int | None = MAX_COVER_CELLS,
-) -> DataFrame:
-    """Attach a `cells ARRAY<LONG>` covering-cells column (bbox cover) for J4.
-
-    `max_cells_per_polygon` bounds the per-row densified grid (review r5) —
-    same loud-failure contract as assign_polygon_tiles."""
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _cover(rings: pd.Series) -> pd.Series:
-        def one(nested):
-            arrays = nested_to_rings(nested)
-            return kcells.covering_cells_bbox(
-                *geom.rings_bbox(arrays), cell_level,
-                max_cells=max_cells_per_polygon,
-            ).tolist()
-
-        return rings.map(one)
-
-    return polygons.withColumn("cells", _cover(F.col("rings")))
 
 
 def raster_patch_join(
@@ -337,6 +316,8 @@ def clip_tiles_udf(z: int, max_cells: int | None = None):
 
     def _one(rings_nested) -> list[dict]:
         ring_arrays = nested_to_rings(rings_nested)
+        if not ring_arrays:
+            return []  # NULL or empty rings: nothing to cut
         # candidates = the bbox tile grid directly — the SH cut itself
         # decides emptiness, so the exact-cover refinement (ray-cast +
         # SAT) would be pure overhead here (measured: 20.5s -> 17.2s at

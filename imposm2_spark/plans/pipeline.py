@@ -24,26 +24,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.geotag import geotag
-from ..functions.textx import extract_text
 from ..operators import pip
 from ..operators.pip import pip_join
 from ..operators.tiles import assign_point_tiles
 
 DEFAULT_ZOOMS = (8, 12)
-
-
-def extract_stage(docs: DataFrame) -> DataFrame:
-    """html -> extracted text (frozen spec v1), kept alongside the input text
-    column (if any) so parity can be asserted downstream."""
-    return docs.withColumn("text_extracted", extract_text("html"))
-
-
-def geotag_stage(docs: DataFrame) -> DataFrame:
-    g = geotag("url", "html")
-    return docs.withColumn("_geo", g).select(
-        "*", F.col("_geo.lon").alias("lon"), F.col("_geo.lat").alias("lat")
-    ).drop("_geo")
 
 
 def _enrich_fused_udf(index_bc=None, id_type=None):

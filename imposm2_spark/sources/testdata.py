@@ -116,7 +116,7 @@ FROM documents
 def replicate_docs(
     docs: DataFrame, replication: int, spark: SparkSession, cols: tuple[str, ...] = ("text",)
 ) -> DataFrame:
-    """Crawl-mirror fan-out shared by the bench headlines and XL scripts:
+    """Crawl-mirror fan-out of the bench.py headlines:
     replicate the docs table R times with DISJOINT doc_ids (rep * 1e6 shift
     — testdata ids stay far below 1e6) and verbatim payload columns, via a
     parallel range x broadcast cross-join so partitioning follows the range
@@ -218,9 +218,9 @@ def derived_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def segments_from_docs(docs: DataFrame) -> DataFrame:
-    """Segment synthesis over ANY (doc_id) frame — the XL rehearsal fans the
-    id space out first; replica blocks (+rep*1e6) form their own far-apart
-    street runs since seq/grp arithmetic is pure id math."""
+    """Segment synthesis over ANY (doc_id) frame — a replicated id space
+    (replicate_docs) works too: replica blocks (+rep*1e6) form their own
+    far-apart street runs since seq/grp arithmetic is pure id math."""
     d = F.col("doc_id")
     grp = (d % N_STREETS).alias("grp")
     base = docs.select(

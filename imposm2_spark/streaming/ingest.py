@@ -7,11 +7,10 @@ built on Structured Streaming file sources instead of OSM diff files:
 
   * `stream_ingest` — readStream over a landing directory of document parquet
     (the Iceberg-table stand-in), per-microbatch extract+geotag enrichment
-    (the batch extract_stage/geotag_stage: the sink keeps `text_extracted`),
-    parquet append sink. Exactly-once per input file via the streaming checkpoint
-    (file-source tracking + idempotent sink commit); `availableNow` drains the
-    backlog and stops, so batch backfills and continuous tailing share one
-    code path.
+    (the sink keeps `text_extracted`), parquet append sink. Exactly-once per
+    input file via the streaming checkpoint (file-source tracking +
+    idempotent sink commit); `availableNow` drains the backlog and stops, so
+    batch backfills and continuous tailing share one code path.
   * `stream_spine` / `stream_curated_spine` — the batch spine's enrich +
     locate layer (plans.pipeline.located_points: one Arrow crossing under the
     broadcast cap) feeding watermarked windowed tile stats.
@@ -34,8 +33,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from ..functions.geotag import geotag
 from ..functions.spatial import cell_encode_col
-from ..plans.pipeline import extract_stage, geotag_stage, located_points
+from ..functions.textx import extract_text
+from ..plans.pipeline import located_points
 
 DOCUMENTS_WEB_SCHEMA = T.StructType(
     [
@@ -66,9 +67,17 @@ def read_document_stream(
     return reader.parquet(landing_dir)
 
 
+def _geotagged(docs: DataFrame) -> DataFrame:
+    """docs + (lon, lat) from geotag(url, html)."""
+    g = geotag("url", "html")
+    return docs.withColumn("_geo", g).select(
+        "*", F.col("_geo.lon").alias("lon"), F.col("_geo.lat").alias("lat")
+    ).drop("_geo")
+
+
 def enrich(docs: DataFrame, cell_level: int = 12) -> DataFrame:
     """Shared enrichment: extract + geotag + cell id, html dropped post-use."""
-    out = geotag_stage(extract_stage(docs))
+    out = _geotagged(docs.withColumn("text_extracted", extract_text("html")))
     return out.withColumn(
         "cell", cell_encode_col(F.col("lon"), F.col("lat"), cell_level)
     ).drop("html")
@@ -252,7 +261,7 @@ def stream_tile_counts(
     from ..functions.spatial import tile_x, tile_y
 
     src = read_document_stream(spark, landing_dir, max_files_per_trigger)
-    enriched = geotag_stage(src).withWatermark("warc_ts", watermark)
+    enriched = _geotagged(src).withWatermark("warc_ts", watermark)
     counts = (
         enriched.groupBy(
             F.window("warc_ts", window).alias("w"),

@@ -40,18 +40,6 @@ from ..sources.catalog import Deploy
 TOMBSTONE_OP = "delete"
 
 
-def read_diff_stream(
-    spark: SparkSession, landing_dir: str, schema: str, max_files: int = 4
-) -> DataFrame:
-    """File-source stream of diff records (one or more parquet files per
-    change set). `maxFilesPerTrigger` bounds micro-batch size at scale."""
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files)
-        .parquet(landing_dir)
-    )
-
-
 def read_current(spark: SparkSession, deploy: Deploy, table: str) -> DataFrame:
     """Consumer view of the deployed table: tombstones filtered out."""
     from pyspark.sql import functions as F

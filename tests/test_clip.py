@@ -315,3 +315,27 @@ def test_clip_polyline_length_conservation_fuzz(data, n):
         for y in range(gy0, gy1 + 1)
     )
     assert covered == pytest.approx(full, rel=1e-9, abs=1e-12)
+
+
+@pytest.mark.spark
+def test_null_and_empty_rings_emit_no_tiles(spark):
+    """A polygon row with NULL rings and one with [] rings cover no tile and
+    cut nothing: the batch they share with real polygons yields exactly the
+    real polygons' rows instead of failing."""
+    from imposm2_spark.operators.tiles import (
+        assign_polygon_tiles, clip_polygons_to_tiles,
+    )
+    from imposm2_spark.sources import fixtures
+
+    polys = fixtures.polygons_admin_df(spark)
+    bad = spark.createDataFrame(
+        [(98, "null_rings", 2, None, [1]), (99, "empty_rings", 2, [], [1])],
+        schema=fixtures.POLYGONS_ADMIN_SCHEMA,
+    )
+    with_bad = polys.unionByName(bad).coalesce(1)
+    for op in (
+        lambda df: assign_polygon_tiles(df, [8]),
+        lambda df: clip_polygons_to_tiles(df, 8),
+    ):
+        want = sorted(map(tuple, op(polys).collect()))
+        assert sorted(map(tuple, op(with_bad).collect())) == want and want

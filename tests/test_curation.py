@@ -325,10 +325,8 @@ def test_repetition_arrow_kernel_matches_hof_twin(spark):
     single-token docs, consecutive-space empties, and non-ASCII tokens."""
     import random
 
-    from imposm2_spark.operators.curation import (
-        _repetition_metrics_hof,
-        repetition_metrics,
-    )
+    from hof_twins import repetition_metrics_hof
+    from imposm2_spark.operators.curation import repetition_metrics
 
     rng = random.Random(5)
     vocab = ["a", "bb", "ab", "c", "bc", "ü", "zz"]
@@ -345,7 +343,7 @@ def test_repetition_arrow_kernel_matches_hof_twin(spark):
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     got = {tuple(r) for r in repetition_metrics(df).collect()}
-    want = {tuple(r) for r in _repetition_metrics_hof(df).collect()}
+    want = {tuple(r) for r in repetition_metrics_hof(df).collect()}
     assert got == want
 
 

@@ -134,7 +134,7 @@ def test_wkb_roundtrip():
 
 
 def test_nested_roundtrip():
-    nested = wkb.rings_to_nested([SQ, HOLE])
+    nested = [SQ.tolist(), HOLE.tolist()]
     back = wkb.nested_to_rings(nested)
     assert np.array_equal(back[0], SQ) and np.array_equal(back[1], HOLE)
 

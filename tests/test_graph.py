@@ -123,22 +123,6 @@ def test_bad_params_raise(spark):
         graph.pagerank(df, damping_num=20, damping_den=20)
 
 
-def test_host_authority_composition(spark):
-    pages = spark.createDataFrame(
-        [
-            ("https://www.A.org/x", ["https://b.org/1", "https://c.org/2"]),
-            ("https://b.org/y", ["https://a.org/", "https://a.org/z#f"]),
-            ("https://c.org/q", ["https://a.org:443/p"]),
-        ],
-        "url string, outlinks array<string>",
-    )
-    out = {r["host"]: r["rank_n"] for r in graph.host_authority(pages, iterations=2).collect()}
-    # host fold: www./case/port-stripped; duplicate a.org outlinks collapse
-    twin = py_pagerank([(0, 1), (0, 2), (1, 0), (2, 0)], 2)
-    assert out == {"a.org": twin[0], "b.org": twin[1], "c.org": twin[2]}
-    assert out["a.org"] > out["b.org"]
-
-
 def test_tol_early_termination_matches_full_run(spark):
     """r6 (VERDICT r5 ask #7): with tol_n set, the loop stops at the integer
     fixpoint and the result equals the fixed-iteration run that goes past

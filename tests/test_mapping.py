@@ -5,6 +5,8 @@ north_star requires matching these row-for-row; the truth tables here encode
 the frozen engine semantics documented in operators/mapping.py.
 """
 
+from dataclasses import replace
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -12,6 +14,7 @@ from imposm2_spark.operators import defaultmapping as dm
 from imposm2_spark.operators.mapping import (
     ANY,
     Bool,
+    Class,
     Direction,
     Integer,
     OneOfInt,
@@ -152,11 +155,15 @@ def test_build_tables_field_columns(spark):
         [(7, {"highway": "secondary", "name": "B96", "oneway": "yes",
               "bridge": "viaduct", "ref": "B 96"})],
     )
-    tables = build_tables(els, dm.ALL_SPECS, spark)
+    # Class (SURVEY F3) is no default-mapping field: add it to one spec
+    mainroads = replace(dm.MAINROADS, fields=(*dm.MAINROADS.fields, ("class", Class())))
+    specs = [mainroads if s is dm.MAINROADS else s for s in dm.ALL_SPECS]
+    tables = build_tables(els, specs, spark)
     r = tables["mainroads"].collect()[0]
     assert (r.id, r.name, r.type, r.tunnel, r.bridge, r.oneway, r.ref) == (
         7, "B96", "secondary", False, True, 1, "B 96"
     )
+    assert r["class"] == "highway"  # the matched mapping key
     # untouched tables are empty, schema intact
     assert tables["places"].count() == 0
     assert "z_order" in tables["places"].columns

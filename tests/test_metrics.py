@@ -36,7 +36,7 @@ def test_duplicate_point_name_rejected(spark):
 
 
 def test_spine_with_metrics(spark):
-    from imposm2_spark.plans.pipeline import extract_stage, geotag_stage
+    from hof_twins import staged_enrich
     from imposm2_spark.sources import testdata
 
     mx = Metrics()
@@ -44,7 +44,7 @@ def test_spine_with_metrics(spark):
         testdata.load(spark, "/root/testdata/sf0.001", "documents")
     )
     enriched = mx.observed(
-        geotag_stage(extract_stage(docs)),
+        staged_enrich(docs),
         "enriched",
         extra={"null_geo": F.count(F.when(F.col("lon").isNull(), 1))},
     )

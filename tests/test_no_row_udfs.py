@@ -6,6 +6,7 @@ engine is a 10-100x regression at 100 TB — this test greps the package
 source so one can't slip in silently.
 """
 
+import ast
 import re
 from pathlib import Path
 
@@ -45,8 +46,6 @@ ENGINE_PARAM_ALLOWED = {("functions/classify.py", "score_quality")}
 def test_no_engine_forks():
     """No function in the package takes an `engine` parameter: an operator
     has ONE implementation, and reference formulations live in tests/."""
-    import ast
-
     offenders = []
     for py in PKG.rglob("*.py"):
         rel = py.relative_to(PKG).as_posix()
@@ -64,8 +63,6 @@ def test_no_module_cache_holders():
     """Frames that outlive their call are held through session.cache_scope
     only: no module-level `list[DataFrame]` holder, and no
     `<holder>.pop().unpersist()` release loop outside session.py."""
-    import ast
-
     offenders = []
     for py in PKG.rglob("*.py"):
         rel = py.relative_to(PKG).as_posix()
@@ -85,3 +82,60 @@ def test_no_module_cache_holders():
                     and node.func.value.func.attr == "pop"):
                 offenders.append(f"{rel}:{node.lineno}: {ast.unparse(node)}")
     assert not offenders, "cache holders outside cache_scope:\n" + "\n".join(offenders)
+
+
+def _is_registered(node) -> bool:
+    """A def decorated with registry.register(...): the registry calls it."""
+    for d in node.decorator_list:
+        f = d.func if isinstance(d, ast.Call) else d
+        if isinstance(f, ast.Name) and f.id == "register":
+            return True
+    return False
+
+
+def _references(path: Path) -> list[tuple[str, int]]:
+    """(name, lineno) of every Name / Attribute / from-import in a file."""
+    out = []
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.Name):
+            out.append((node.id, node.lineno))
+        elif isinstance(node, ast.Attribute):
+            out.append((node.attr, node.lineno))
+        elif isinstance(node, ast.ImportFrom):
+            out.extend((a.name, node.lineno) for a in node.names)
+    return out
+
+
+def test_no_caller_less_library_code():
+    """Every top-level def in the package has a caller outside its own body
+    (in the package, tests/, scripts/, perfbench/, bench*.py or the driver
+    entry), and every `_private` one has a caller in the package itself:
+    a reference a test needs lives in tests/, not in the library."""
+    root = PKG.parent
+    lib = sorted(PKG.rglob("*.py"))
+    outside = [
+        *sorted((root / "tests").rglob("*.py")),
+        *sorted((root / "scripts").rglob("*.py")),
+        *sorted((root / "perfbench").rglob("*.py")),
+        *sorted(root.glob("bench*.py")),
+        root / "__spark_entry__.py",
+    ]
+    refs = {p: _references(p) for p in lib + outside}
+    offenders = []
+    for py in lib:
+        rel = py.relative_to(PKG).as_posix()
+        for node in ast.parse(py.read_text()).body:
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                continue
+            if _is_registered(node):
+                continue
+            own = range(node.lineno, node.end_lineno + 1)
+            users = {
+                p for p, names in refs.items()
+                if any(n == node.name and not (p == py and ln in own) for n, ln in names)
+            }
+            if not users:
+                offenders.append(f"{rel}:{node.lineno}: {node.name} has no caller")
+            elif node.name.startswith("_") and not users & set(lib):
+                offenders.append(f"{rel}:{node.lineno}: {node.name} has only test callers")
+    assert not offenders, "caller-less library code:\n" + "\n".join(offenders)

@@ -14,7 +14,7 @@ from imposm2_spark.sources import fixtures
 pytestmark = pytest.mark.spark
 
 LEVEL = 12
-POLAR_ID, NO_CELLS_ID = 90, 91
+POLAR_ID, NO_CELLS_ID, NULL_RINGS_ID = 90, 91, 92
 BATCH_KEY = "spark.sql.execution.arrow.maxRecordsPerBatch"
 
 
@@ -158,3 +158,42 @@ def test_spine_over_cap_matches_broadcast_path(spark, monkeypatch):
     a = sorted(map(tuple, broadcast.collect()))
     b = sorted(map(tuple, over_cap.collect()))
     assert a == b and len(a) > 0
+
+
+def _null_rings_polygon(spark, cells):
+    """A polygon row with NULL rings and a non-empty covering-cell list."""
+    return spark.createDataFrame(
+        [(NULL_RINGS_ID, "null_rings", 2, None, cells)],
+        schema=fixtures.POLYGONS_ADMIN_SCHEMA,
+    )
+
+
+def test_null_rings_polygon_contains_nothing(spark, frames):
+    """A NULL-rings polygon is a candidate for the points in its cells on
+    both pip_join paths and contains none of them: the rows equal those
+    without it."""
+    pts, polys, _ = frames
+    cells = kcells.covering_cells_bbox(-10.0, -10.0, 0.0, 0.0, LEVEL).tolist()
+    with_null = polys.unionByName(_null_rings_polygon(spark, cells))
+    for broadcast in (True, False):
+        want, got = (
+            sorted(map(tuple, pip_join(
+                pts, p, broadcast_polygons=broadcast, keep_point_cols=["pid"]
+            ).collect()))
+            for p in (polys, with_null)
+        )
+        assert got == want and want, broadcast
+
+
+def test_spine_ignores_null_rings_polygon(spark):
+    """spine() pulls the polygon side into its index at plan time; a
+    NULL-rings row over the octants' cells adds no tile row."""
+    from imposm2_spark.plans.pipeline import spine
+
+    docs = fixtures.documents_web_df(spark, 200)
+    polys = fixtures.world_octants_df(spark, cell_level=4)
+    cells = [c for r in polys.select("cells").collect() for c in r.cells]
+    with_null = polys.unionByName(_null_rings_polygon(spark, cells))
+    want = sorted(map(tuple, spine(docs, polys, zooms=(2,), cell_level=4).collect()))
+    got = sorted(map(tuple, spine(docs, with_null, zooms=(2,), cell_level=4).collect()))
+    assert got == want and want

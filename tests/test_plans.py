@@ -438,17 +438,18 @@ def test_dedup_substrings_jvm_only_combined_aggs(spark):
 
 def test_spine_fused_stage_matches_staged_path(spark):
     """r6: the fused extract+geotag+length crossing must reproduce the
-    staged (extract_stage -> geotag_stage -> length) tile rows exactly."""
+    staged (extract, then geotag, then length) tile rows exactly."""
     from imposm2_spark.operators.pip import pip_join
     from imposm2_spark.operators.tiles import assign_point_tiles
-    from imposm2_spark.plans.pipeline import extract_stage, geotag_stage, spine
+    from hof_twins import staged_enrich
+    from imposm2_spark.plans.pipeline import spine
 
     docs = testdata.synth_documents_web(testdata.load(spark, SF, "documents"))
     polys = fixtures.world_octants_df(spark, cell_level=4)
     fused = sorted(
         map(tuple, spine(docs, polys, zooms=(2,), cell_level=4).collect())
     )
-    enriched = geotag_stage(extract_stage(docs)).withColumn(
+    enriched = staged_enrich(docs).withColumn(
         "n_chars", F.length("text_extracted").cast("long")
     )
     joined = pip_join(

@@ -10,13 +10,18 @@ from pyspark.sql import functions as F
 
 from imposm2_spark.operators.merge import apply_diff
 from imposm2_spark.sources.catalog import Deploy
-from imposm2_spark.streaming.updates import (
-    read_current,
-    read_diff_stream,
-    stream_updates,
-)
+from imposm2_spark.streaming.updates import read_current, stream_updates
 
 DIFF_SCHEMA = "id long, version long, op string, val string"
+
+
+def _diff_stream(spark, landing, max_files=4):
+    """File-source stream of the diff files under `landing`."""
+    return (
+        spark.readStream.schema(DIFF_SCHEMA)
+        .option("maxFilesPerTrigger", max_files)
+        .parquet(landing + "/*")
+    )
 
 
 def _write_diff(spark, path, rows):
@@ -42,7 +47,7 @@ def test_stream_updates_parity_and_resume(spark, tmp_path):
     _write_diff(spark, os.path.join(landing, "diff1"), d1)
     _write_diff(spark, os.path.join(landing, "diff2"), d2)
 
-    diffs = read_diff_stream(spark, landing + "/*", DIFF_SCHEMA, max_files=1)
+    diffs = _diff_stream(spark, landing, max_files=1)
     q = stream_updates(diffs, deploy, "elements", key="id", checkpoint_dir=ckpt)
     q.awaitTermination(120)
 
@@ -63,7 +68,7 @@ def test_stream_updates_parity_and_resume(spark, tmp_path):
     # publish nothing (file-source progress is checkpointed)
     v_before = deploy.current()["elements"]
     q2 = stream_updates(
-        read_diff_stream(spark, landing + "/*", DIFF_SCHEMA, max_files=1),
+        _diff_stream(spark, landing, max_files=1),
         deploy, "elements", key="id", checkpoint_dir=ckpt,
     )
     q2.awaitTermination(120)
@@ -72,7 +77,7 @@ def test_stream_updates_parity_and_resume(spark, tmp_path):
     # incremental catch-up: one new diff file -> exactly one more publish
     _write_diff(spark, os.path.join(landing, "diff3"), [(3, 4, "delete", None)])
     q3 = stream_updates(
-        read_diff_stream(spark, landing + "/*", DIFF_SCHEMA, max_files=1),
+        _diff_stream(spark, landing, max_files=1),
         deploy, "elements", key="id", checkpoint_dir=ckpt,
     )
     q3.awaitTermination(120)
@@ -103,7 +108,7 @@ def test_concurrent_reader_snapshot_isolation(spark, tmp_path):
     _write_diff(spark, os.path.join(landing, "diff1"),
                 [(0, 2, "delete", None), (90, 2, "create", "new")])
     q = stream_updates(
-        read_diff_stream(spark, landing + "/*", DIFF_SCHEMA),
+        _diff_stream(spark, landing),
         deploy, "elements", key="id", checkpoint_dir=str(tmp_path / "ck"),
     )
     q.awaitTermination(120)
@@ -156,7 +161,7 @@ def test_malformed_diff_rejected_before_publish(spark, tmp_path):
     _write_diff(spark, os.path.join(landing, "diff1"),
                 [(0, 2, "upsert", "x"), (1, 2, "modify", "ok")])
     q = stream_updates(
-        read_diff_stream(spark, landing + "/*", DIFF_SCHEMA),
+        _diff_stream(spark, landing),
         deploy, "elements", key="id", checkpoint_dir=str(tmp_path / "ck"),
     )
     with _pytest.raises((StreamingQueryException, Py4JJavaError)) as ei:

@@ -55,13 +55,11 @@ def test_stream_ingest_exactly_once_and_resume(spark, tmp_path):
     final = spark.read.parquet(out)
     assert final.count() == n1 + 37
     # enrichment identical to the batch path for the same urls
-    from imposm2_spark.plans.pipeline import extract_stage, geotag_stage
+    from hof_twins import staged_enrich
 
-    batch = geotag_stage(
-        extract_stage(
-            testdata.synth_documents_web(
-                testdata.load(spark, "/root/testdata/sf0.001", "documents")
-            )
+    batch = staged_enrich(
+        testdata.synth_documents_web(
+            testdata.load(spark, "/root/testdata/sf0.001", "documents")
         )
     ).select("url", "lon", "lat")
     joined = final.select("url", F.col("lon").alias("slon"), F.col("lat").alias("slat")).join(
@@ -74,6 +72,8 @@ def test_stream_ingest_exactly_once_and_resume(spark, tmp_path):
 
 
 def test_stream_tile_counts_watermark(spark, tmp_path):
+    import re
+
     from imposm2_spark.streaming import stream_tile_counts
 
     landing = str(tmp_path / "landing")
@@ -93,6 +93,12 @@ def test_stream_tile_counts_watermark(spark, tmp_path):
     assert len(rows) > 0
     assert sum(r[3] for r in rows) == 500  # every doc lands in one tile window
     assert all(r[1] is not None and r[2] is not None for r in rows)
+    # the counts consume only lon/lat: one Python node, geotag, no extract
+    plan = q._jsq.explainInternal(False)
+    assert re.findall(r"\w*(?:EvalPython|InPandas|InArrow)\w*", plan) == [
+        "ArrowEvalPython"
+    ], plan
+    assert "geotag_udf" in plan and "extract_text_udf" not in plan, plan
 
 
 def test_stateful_stream_dedup_across_batches(spark, tmp_path):
@@ -184,11 +190,11 @@ def test_stream_spine_matches_batch(spark, tmp_path):
     # batch twin over the same landing files
     from imposm2_spark.functions.spatial import tile_x, tile_y
     from imposm2_spark.operators.pip import pip_join
-    from imposm2_spark.plans.pipeline import extract_stage, geotag_stage
+    from hof_twins import staged_enrich
     from imposm2_spark.streaming.ingest import DOCUMENTS_WEB_SCHEMA
 
     docs = spark.read.schema(DOCUMENTS_WEB_SCHEMA).parquet(landing + "/*")
-    enriched = geotag_stage(extract_stage(docs)).withColumn(
+    enriched = staged_enrich(docs).withColumn(
         "n_chars", F.length("text_extracted").cast("long")
     )
     joined = pip_join(
@@ -300,8 +306,8 @@ def test_curated_spine_dedup_suppresses_cross_batch_through_restart(spark, tmp_p
     from pyspark.sql import Window as W
 
     from imposm2_spark.functions.spatial import tile_x, tile_y
+    from hof_twins import staged_enrich
     from imposm2_spark.operators.pip import pip_join
-    from imposm2_spark.plans.pipeline import extract_stage, geotag_stage
 
     all_docs = (
         spark.read.schema(DOCUMENTS_WEB_SCHEMA).parquet(landing + "/b0")
@@ -317,7 +323,7 @@ def test_curated_spine_dedup_suppresses_cross_batch_through_restart(spark, tmp_p
         .where(F.col("_rn") == 1)
         .drop("_rn", "_b")
     )
-    enriched = geotag_stage(extract_stage(kept)).withColumn(
+    enriched = staged_enrich(kept).withColumn(
         "n_chars", F.length("text_extracted").cast("long")
     )
     joined = pip_join(
@@ -451,7 +457,7 @@ def test_synth_geo_meta_never_scientific_notation(spark):
     cast('string') come out as '1.0E-4', which the geotag meta regex
     rejects — the planted-coordinate contract silently degraded to the
     url-hash fallback for those docs. %.4f formatting must round-trip."""
-    from imposm2_spark.plans.pipeline import geotag_stage
+    from imposm2_spark.functions.geotag import geotag
     from imposm2_spark.sources.testdata import synth_documents_web
 
     # doc_id solving (uid*7919) % 1_700_000 == 850_001 -> lat == 0.0001
@@ -466,7 +472,7 @@ def test_synth_geo_meta_never_scientific_notation(spark):
     web = synth_documents_web(docs)
     html = web.select("html").collect()[0][0].decode()
     assert "E-" not in html and "E+" not in html, html
-    row = geotag_stage(web).select("lat", "lon").collect()[0]
+    row = web.select(geotag("url", "html").alias("g")).select("g.lat", "g.lon").collect()[0]
     assert abs(row["lat"] - 0.0001) < 1e-9  # planted value, not the fallback
 
 

@@ -10,6 +10,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from hof_twins import token_count_bpe
 from imposm2_spark.functions import text_analysis as ta
 from imposm2_spark.kernels import textstats as ts
 
@@ -63,7 +64,7 @@ def stats_frames(spark):
         F.round(ta.quality_score(F.col("text")), 6).alias("score"),
         ta.lang_id(F.col("text")).alias("lang_pred"),
         ta.token_count_ws(F.col("text")).alias("n_ws"),
-        ta.token_count_bpe(F.col("text")).alias("n_bpe"),
+        token_count_bpe(F.col("text")).alias("n_bpe"),
         ta.fingerprint(F.col("text")).alias("fp"),
     )
     stats = ta.doc_stats_udf()

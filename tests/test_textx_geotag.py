@@ -91,9 +91,11 @@ def test_extract_udf_batch_invariance(spark):
 def test_geotag_udf_matches_golden(spark):
     pdf = fixtures.make_documents_web(300)
     df = spark.createDataFrame(pdf, schema=fixtures.DOCUMENTS_WEB_SCHEMA)
-    from imposm2_spark.plans.pipeline import geotag_stage
+    from imposm2_spark.functions.geotag import geotag
 
-    rows = geotag_stage(df).select("url", "lon", "lat").collect()
+    rows = df.select("url", geotag("url", "html").alias("g")).select(
+        "url", "g.lon", "g.lat"
+    ).collect()
     golden = {r["url"]: (r["golden_lon"], r["golden_lat"]) for _, r in pdf.iterrows()}
     for r in rows:
         glon, glat = golden[r.url]
