@@ -27,12 +27,14 @@ by those tests:
     module-level ASCII caveat in functions/text_analysis.py applies to both
     engines equally.
 
-Whole-batch kernels: batch_shingles / batch_signatures run the same chain
-over an entire Arrow string batch at once (one UTF-32 buffer with document
-bounds, no per-document loop) and are tested equal to the per-document
-functions above; bucket_pairs is the grouped LSH pair kernel of
+Whole-batch kernels: batch_shingles / batch_signatures / batch_band_sets
+run the same chain over an entire Arrow string batch at once, on one stream
+of units with document bounds (text_units: the UTF-8 bytes themselves when
+the batch is all ASCII, else its UTF-32 codepoints; no per-document loop),
+and are tested equal to the per-document functions above on both views;
+bucket_pairs is the grouped LSH pair kernel of
 operators/dedup.py::minhash_lsh_pairs (enumerate each bucket's pairs, verify
-them by a sorted merge of their distinct shingles).
+them by a sorted merge of their packed distinct-shingle sets).
 
 Overflow safety: per-char contributions are codepoint * 31^k mod P with
 P ~ 1e9, so a partial int64 sum over L chars is bounded by L * 1.1e15;
@@ -41,6 +43,8 @@ re-hashed with the exact per-char Python fold instead.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
@@ -60,22 +64,27 @@ _SPACE = 32
 
 def char_hash_py(s: str) -> int:
     """Exact per-char fold twin of functions.text_analysis.char_hash."""
+    return _fold(map(ord, s))
+
+
+def _fold(codepoints) -> int:
+    """char_hash over an iterable of codepoints, folded exactly in Python."""
     h = 0
-    for ch in s:
-        h = (h * 31 + ord(ch)) % CHAR_MOD
+    for c in codepoints:
+        h = (h * 31 + c) % CHAR_MOD
     return h
 
 
-def _token_hashes(cps: np.ndarray, bounds: np.ndarray, text: str) -> tuple[np.ndarray, np.ndarray]:
-    """(hashes, n_tok): int64 token hashes of every document of one UTF-32
-    buffer, and each document's token count.
+def _token_hashes(units: np.ndarray, bounds: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(hashes, n_tok): int64 token hashes of every document of one unit
+    stream (see Units), and each document's token count.
 
-    `cps` holds the codepoints of `text`; document d spans
-    cps[bounds[d]:bounds[d+1]]. Each document splits on single spaces into
-    (its spaces + 1) tokens, so document d's tokens start at token index
-    d + (spaces before bounds[d]), in document then position order."""
+    Document d spans units[bounds[d]:bounds[d+1]]. Each document splits on
+    single spaces into (its spaces + 1) tokens, so document d's tokens start
+    at token index d + (spaces before bounds[d]), in document then position
+    order."""
     n_docs = len(bounds) - 1
-    is_sep = cps == _SPACE
+    is_sep = units == _SPACE
     sp = np.flatnonzero(is_sep)
     sp_doc = np.searchsorted(bounds, sp, "right") - 1
     first_tok = np.arange(n_docs) + np.searchsorted(sp, bounds[:-1])
@@ -90,24 +99,23 @@ def _token_hashes(cps: np.ndarray, bounds: np.ndarray, text: str) -> tuple[np.nd
     ends[sp_doc + k] = sp
     n_doc_tok = np.diff(np.append(first_tok, n_tok))
     ends[first_tok + n_doc_tok - 1] = bounds[1:]
-    lengths = ends - starts
     out = np.zeros(n_tok, dtype=np.int64)
-    nonempty = lengths > 0
+    # token k plus the separator after it spans [starts[k], starts[k+1]):
+    # these spans tile the stream, so one reduceat over the non-empty spans
+    # sums each token's contributions codepoint * 31^(chars to token end - 1)
+    # (congruent to the fold mod P); a separator contributes 0
+    span = np.diff(np.append(starts, len(units)))
+    nonempty = span > 0
     if nonempty.any():
-        # per-char exponent = chars-to-token-end - 1; contributions are
-        # codepoint * 31^exp summed per token (congruent to the fold mod P)
-        tok_of_char = np.repeat(np.arange(n_tok), lengths)
-        char_idx = np.flatnonzero(~is_sep)
-        exp = ends[tok_of_char] - 1 - char_idx
-        exp_safe = np.minimum(exp, _MAX_FAST_TOKEN - 1)  # long tokens redone below
-        contrib = cps[char_idx] * _POW31[exp_safe]
-        # reduceat over nonzero-length segments only (an empty segment would
-        # echo a stray element under reduceat's i==j rule)
-        boundaries = np.zeros(n_tok, dtype=np.int64)
-        np.cumsum(lengths[:-1], out=boundaries[1:])
-        out[nonempty] = np.add.reduceat(contrib, boundaries[nonempty]) % CHAR_MOD
-    for t in np.flatnonzero(lengths > _MAX_FAST_TOKEN):
-        out[t] = char_hash_py(text[starts[t] : ends[t]])  # exact redo (rare)
+        exp = np.repeat(ends - 1, span)
+        exp -= np.arange(len(units))
+        np.clip(exp, 0, _MAX_FAST_TOKEN - 1, out=exp)  # long tokens redone below
+        contrib = _POW31[exp]
+        contrib *= units
+        contrib[is_sep] = 0
+        out[nonempty] = np.add.reduceat(contrib, starts[nonempty]) % CHAR_MOD
+    for t in np.flatnonzero(ends - starts > _MAX_FAST_TOKEN):
+        out[t] = _fold(units[starts[t] : ends[t]].tolist())  # exact redo (rare)
     return out, n_doc_tok
 
 
@@ -119,8 +127,8 @@ def token_hashes_doc(text: str | None) -> np.ndarray:
     callers mask None docs separately)."""
     if not isinstance(text, str):
         return np.empty(0, dtype=np.int64)
-    cps = np.frombuffer(text.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
-    return _token_hashes(cps, np.array([0, len(cps)]), text)[0]
+    cps = np.frombuffer(text.encode("utf-32-le"), dtype=np.uint32)
+    return _token_hashes(cps, np.array([0, len(cps)]))[0]
 
 
 def shingle_hashes_from_tokens(th: np.ndarray) -> np.ndarray:
@@ -189,41 +197,65 @@ def ngram_hashes_from_tokens(th: np.ndarray, n: int) -> np.ndarray:
 # whole-batch kernels: one pass over an Arrow batch, no per-document loop
 # ---------------------------------------------------------------------------
 
+# shingle hashes are < CHAR_MOD <= 2^30, so (row << 30) | hash sorts a set of
+# per-row shingle arrays row by row in one int64 array
+_HASH_BITS = 30
+assert CHAR_MOD <= 1 << _HASH_BITS
 
-def _codepoints(texts) -> tuple[np.ndarray, np.ndarray, np.ndarray, str]:
-    """(cps, bounds, valid, text) of a string batch: `text` is the whole
-    batch as one str, `cps` its int64 codepoints, document d spans
-    cps[bounds[d]:bounds[d+1]] and `valid` marks the non-NULL documents.
 
-    The UTF-8 data buffer decodes once; a document's codepoint bound is the
-    number of UTF-8 lead (non-continuation) bytes before its byte offset."""
-    arr = texts if isinstance(texts, (pa.Array, pa.ChunkedArray)) else pa.array(texts, pa.string())
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
+class Units(NamedTuple):
+    """A string batch as one stream of units, one unit per codepoint.
+
+    `units` is the batch's UTF-8 data buffer itself (uint8) when every
+    document is ASCII, else its UTF-32 decode (uint32). Document d spans
+    units[bounds[d]:bounds[d+1]]; `valid` marks the non-NULL documents."""
+
+    units: np.ndarray
+    bounds: np.ndarray
+    valid: np.ndarray
+
+
+def text_units(texts) -> Units:
+    """The Units of a string batch: an Arrow string array, or a sequence
+    whose non-str items (None, pandas' NaN) are NULL. Units pass through.
+
+    An all-ASCII batch is read in place, with no decode; otherwise the UTF-8
+    buffer decodes once, and a document's codepoint bound is the number of
+    UTF-8 lead (non-continuation) bytes before its byte offset."""
+    if isinstance(texts, Units):
+        return texts
+    if isinstance(texts, pa.ChunkedArray):
+        arr = texts.combine_chunks()
+    elif isinstance(texts, pa.Array):
+        arr = texts
+    else:
+        arr = pa.array([t if isinstance(t, str) else None for t in texts], pa.string())
     valid = ~arr.is_null().to_numpy(zero_copy_only=False)
     _, off_buf, data_buf = arr.buffers()
     off_type = np.int64 if pa.types.is_large_string(arr.type) else np.int32
     offs = np.frombuffer(off_buf, dtype=off_type)[arr.offset : arr.offset + len(arr) + 1]
     data = np.frombuffer(data_buf or b"", dtype=np.uint8)[offs[0] : offs[-1]]
-    text = str(data, "utf-8")
-    cps = np.frombuffer(text.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
+    bounds = offs - offs[0]
+    if not len(data) or data.max() < 0x80:
+        return Units(data, bounds.astype(np.int64), valid)
+    cps = np.frombuffer(str(data, "utf-8").encode("utf-32-le"), dtype=np.uint32)
     lead_before = np.zeros(len(data) + 1, dtype=np.int64)
     np.cumsum((data & 0xC0) != 0x80, out=lead_before[1:])
-    return cps, lead_before[offs - offs[0]], valid, text
+    return Units(cps, lead_before[bounds], valid)
 
 
 def batch_shingles(texts) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(rows, offsets, shs) for a batch of texts (an Arrow string array or a
-    sequence of str/None): the word-3-gram shingle hashes of every document
-    with >= SHINGLE_N tokens, in one pass over the batch's UTF-32 buffer.
+    """(rows, offsets, shs) for a batch of texts (anything text_units
+    takes): the word-3-gram shingle hashes of every document with
+    >= SHINGLE_N tokens, in one pass over the batch's unit stream.
 
     rows: int64 input positions of the kept documents (NULL and
     <SHINGLE_N-token documents dropped); kept document k's shingles are
     shs[offsets[k]:offsets[k+1]] in shingle order — bit-identical to
     shingle_hashes_from_tokens(token_hashes_doc(text)) per document."""
-    cps, bounds, valid, text = _codepoints(texts)
+    units, bounds, valid = text_units(texts)
     n_docs = len(bounds) - 1
-    th, n_tok = _token_hashes(cps, bounds, text)
+    th, n_tok = _token_hashes(units, bounds)
     keep = valid & (n_tok >= SHINGLE_N)
     rows = np.flatnonzero(keep)
     offsets = np.zeros(len(rows) + 1, dtype=np.int64)
@@ -249,13 +281,46 @@ def batch_signatures(texts) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndar
     return rows, offsets, shs, sig, band_keys_from_sig(sig)
 
 
+def batch_band_sets(texts) -> list[pa.Array]:
+    """Columns band0..band3 and shs of a batch, one row per document: its
+    LSH band keys (batch_signatures) and its set of distinct shingles,
+    ascending, packed as native-order int32s into one binary value — the
+    form bucket_pairs verifies. NULL and <SHINGLE_N-token documents are
+    NULL in every column. Sorting here sorts each document once, not once
+    per band."""
+    units = text_units(texts)
+    rows, offsets, shs, _, bands = batch_signatures(units)
+    n = len(units.bounds) - 1
+    key = (np.repeat(np.arange(len(rows), dtype=np.int64), np.diff(offsets)) << _HASH_BITS) | shs
+    key.sort()
+    key = key[np.append(True, key[1:] != key[:-1])] if len(key) else key
+    size = np.zeros(n, dtype=np.int32)
+    size[rows] = np.diff(np.searchsorted(key >> _HASH_BITS, np.arange(len(rows) + 1)))
+    off = np.zeros(n + 1, dtype=np.int32)
+    np.cumsum(size * 4, out=off[1:])
+    kept = np.zeros(n, dtype=bool)
+    kept[rows] = True
+    sets = pa.Array.from_buffers(pa.binary(), n, [
+        pa.py_buffer(np.packbits(kept, bitorder="little")), pa.py_buffer(off),
+        pa.py_buffer((key & ((1 << _HASH_BITS) - 1)).astype(np.int32))])
+    keys = np.zeros((N_BANDS, n), dtype=np.int64)
+    keys[:, rows] = bands
+    return [*(pa.array(k, mask=~kept) for k in keys), sets]
+
+
+def _packed_sets(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """(off, vals) of a batch_band_sets column: row i's distinct sorted
+    shingles are vals[off[i]:off[i+1]]."""
+    _, off_buf, data_buf = col.buffers()
+    off_type = np.int64 if pa.types.is_large_binary(col.type) else np.int32
+    off = np.frombuffer(off_buf, dtype=off_type)[col.offset : col.offset + len(col) + 1] // 4
+    vals = np.frombuffer(data_buf or b"", dtype=np.int32, count=int(off[-1]))
+    return off.astype(np.int64), vals
+
+
 # pair verify step size: bucket_pairs materializes at most this many pairs'
 # shingle sets at once, so memory stays flat however large a bucket is
 _PAIR_CHUNK = 4096
-# shingle hashes are < CHAR_MOD <= 2^30, so (row << 30) | hash sorts a set of
-# per-row shingle arrays row by row in one int64 array
-_HASH_BITS = 30
-assert CHAR_MOD <= 1 << _HASH_BITS
 _PAIR_SCHEMA = pa.schema([(c, pa.int64()) for c in ("doc_a", "doc_b", "n_inter", "n_union")])
 
 
@@ -271,7 +336,8 @@ def _keys(rb: pa.RecordBatch) -> tuple[np.ndarray, np.ndarray]:
 
 def bucket_pairs(batches, max_bucket: int | None):
     """Verified candidate pairs of every LSH bucket, one pass over batches
-    of (id, band_idx, band_key, shs) rows sorted by (band_idx, band_key).
+    of (id, band_idx, band_key, shs) rows sorted by (band_idx, band_key),
+    where shs is a document's packed shingle set (batch_band_sets).
 
     A bucket is a run of rows with one (band_idx, band_key); a run that
     reaches the end of a batch carries into the next. Runs larger than
@@ -320,14 +386,13 @@ def _run_pairs(rb: pa.RecordBatch, starts: np.ndarray, end: int, max_bucket: int
     # last row whose first pair index is <= p
     n_after = np.repeat(size, size) - 1 - pos
     first = np.cumsum(n_after) - n_after
-    ids = rb.column("id").to_numpy()[r]
-    shs = rb.column("shs")
-    vals, off = _distinct_sorted(shs.offsets.to_numpy(), shs.values.to_numpy(), r)
+    ids = rb.column("id").to_numpy()
+    off, vals = _packed_sets(rb.column("shs"))
     n_pairs = int(first[-1] + n_after[-1])
     for p0 in range(0, n_pairs, _PAIR_CHUNK):
         p = np.arange(p0, min(p0 + _PAIR_CHUNK, n_pairs))
         a = np.searchsorted(first, p, "right") - 1
-        b = a + 1 + (p - first[a])
+        a, b = r[a], r[a + 1 + (p - first[a])]
         n_inter, n_union = _intersect(vals, off, a, b)
         lo, hi = np.minimum(ids[a], ids[b]), np.maximum(ids[a], ids[b])
         ok = lo != hi
@@ -335,21 +400,8 @@ def _run_pairs(rb: pa.RecordBatch, starts: np.ndarray, end: int, max_bucket: int
             [pa.array(x[ok]) for x in (lo, hi, n_inter, n_union)], schema=_PAIR_SCHEMA)
 
 
-def _distinct_sorted(offsets, values, r) -> tuple[np.ndarray, np.ndarray]:
-    """(vals, off): the distinct shingles of list rows r (row i holds
-    values[offsets[i]:offsets[i+1]]), ascending, row k's at
-    vals[off[k]:off[k+1]] — one sort over the row-keyed hashes."""
-    lo = offsets[r]
-    n = offsets[r + 1] - lo
-    key = (np.repeat(np.arange(len(r), dtype=np.int64), n) << _HASH_BITS) | values[_segments(lo, n)]
-    key.sort()
-    key = key[np.append(True, key[1:] != key[:-1])] if len(key) else key
-    off = np.searchsorted(key >> _HASH_BITS, np.arange(len(r) + 1))
-    return key & ((1 << _HASH_BITS) - 1), off
-
-
 def _intersect(vals, off, a, b) -> tuple[np.ndarray, np.ndarray]:
-    """(|A & B|, |A | B|) of the distinct sorted shingle sets of row pairs
+    """(|A & B|, |A | B|) of the packed shingle sets of row pairs
     (a[i], b[i]): both sides pair-keyed into one ascending array each, then
     one sorted merge (searchsorted) finds the shared keys."""
     la, lb = off[a + 1] - off[a], off[b + 1] - off[b]

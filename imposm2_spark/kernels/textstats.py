@@ -23,6 +23,10 @@ the Catalyst chain on adversarial inputs):
     stay INSIDE tokens.
   * NULL text: any non-str value (None, or NaN where pandas surfaces a
     missing string that way) is a NULL row.
+  * the batch kernel reads units, one per codepoint (texthash.text_units):
+    the UTF-8 bytes of an all-ASCII batch, else the UTF-32 decode. Every
+    class test, stopword pack and fingerprint term reads a unit's value,
+    which is the codepoint either way.
   * stopword membership compares lower(token) against pure-ASCII stopword
     sets. ASCII-only lowering (A-Z -> a-z) is exact for that comparison:
     the only non-ASCII codepoint Java/Python lowercase into ASCII is the
@@ -43,12 +47,8 @@ from __future__ import annotations
 import numpy as np
 
 from ..functions.text_analysis import CHAR_MOD, LANG_ORDER, LANG_STOPWORDS
-
-_MAX_FAST = 4096
-_POW31 = np.empty(_MAX_FAST, dtype=np.int64)
-_POW31[0] = 1
-for _k in range(1, _MAX_FAST):
-    _POW31[_k] = (_POW31[_k - 1] * 31) % CHAR_MOD
+from .texthash import _MAX_FAST_TOKEN as _MAX_FAST
+from .texthash import _POW31, text_units
 
 _POW31_CHUNK = int(pow(31, _MAX_FAST, CHAR_MOD))  # 31^4096 mod P
 
@@ -75,93 +75,83 @@ STAT_COLS = (
 )
 
 
-def _seg_sum(mask: np.ndarray, starts: np.ndarray, ends: np.ndarray) -> np.ndarray:
-    """Per-document sums of a 0/1 (or small-int) mask via one cumsum —
-    robust to empty documents (reduceat's i==j echo rule never applies)."""
-    cs = np.empty(len(mask) + 1, dtype=np.int64)
-    cs[0] = 0
-    np.cumsum(mask, out=cs[1:])
-    return cs[ends] - cs[starts]
+# unit class codes (ASCII; every unit >= 128 is punct): the six \s chars
+# split into space and the five others, which alone can open or close a
+# trimmed text with an empty token
+_PUNCT, _ALPHA, _DIGIT, _SPACE, _WS5 = range(5)
+_CLASS = np.full(256, _PUNCT, dtype=np.uint8)
+_CLASS[ord("A"):ord("Z") + 1] = _CLASS[ord("a"):ord("z") + 1] = _ALPHA
+_CLASS[ord("0"):ord("9") + 1] = _DIGIT
+_CLASS[9:14] = _WS5
+_CLASS[32] = _SPACE
 
-
-def _run_starts(cls: np.ndarray, doc_starts_mask: np.ndarray) -> np.ndarray:
-    """Run-start mask for a char-class over the concatenated batch, with
-    runs broken at document boundaries."""
-    prev = np.empty(len(cls), dtype=bool)
-    if len(cls):
-        prev[0] = False
-        prev[1:] = cls[:-1]
-        prev[doc_starts_mask] = False
-    return cls & ~prev
+# every stopword's pack, ascending, with a bit per language that holds it
+_STOP_KEYS = np.unique(np.concatenate(list(_STOP_PACKED.values())))
+_STOP_BITS = sum(np.isin(_STOP_KEYS, _STOP_PACKED[lang]).astype(np.int64) << li
+                 for li, lang in enumerate(LANG_ORDER))
 
 
 def batch_stats(texts) -> tuple[np.ndarray, dict]:
-    """Vectorized STAT_COLS for a whole Arrow batch in ONE set of NumPy
-    passes over the concatenated codepoint stream (the per-doc form pays
-    ~30 small-array allocations per row — measured slower than the HOF
-    chain on short docs; this form is one classification + a handful of
-    segment reductions per BATCH). Returns (null_mask, {col: int64 array})
-    where rows with null_mask keep garbage values (callers mask to NULL).
-    Semantics identical to doc_stats (differential-tested)."""
-    nulls = np.fromiter((not isinstance(t, str) for t in texts), dtype=bool,
-                        count=len(texts))
-    idx_nn = np.flatnonzero(~nulls)
-    nd = len(texts)
+    """STAT_COLS of a whole batch (anything texthash.text_units takes: an
+    Arrow string array, a list holding None / NaN for NULL, or Units) in
+    one set of NumPy passes over its unit stream — one classification, then
+    per-document reductions (np.add.reduceat over the non-empty documents).
+    Returns (null_mask, {col: int64 array}) where rows with null_mask keep
+    garbage values (callers mask to NULL). Semantics identical to doc_stats
+    (differential-tested)."""
+    units, bounds, valid = text_units(texts)
+    nd = len(bounds) - 1
     out = {c: np.zeros(nd, dtype=np.int64) for c in STAT_COLS}
-    if len(idx_nn) == 0:
-        return nulls, out
-    nn_texts = [texts[i] for i in idx_nn]
-    joined = "".join(nn_texts)
-    cps = np.frombuffer(joined.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
-    lens = np.fromiter(map(len, nn_texts), dtype=np.int64, count=len(nn_texts))
-    ends = np.cumsum(lens)
-    starts = ends - lens
-    n = len(cps)
-    doc_starts_mask = np.zeros(n, dtype=bool)
-    doc_starts_mask[starts[lens > 0]] = True
+    lens = np.diff(bounds)
+    ne = np.flatnonzero(lens > 0)
+    if not len(ne):
+        return ~valid, out
+    seg = bounds[ne]  # the non-empty documents tile the stream from here
+    last = bounds[ne + 1] - 1
 
-    upper = (cps >= 65) & (cps <= 90)
-    alpha = upper | ((cps >= 97) & (cps <= 122))
-    digit = (cps >= 48) & (cps <= 57)
-    ws6 = (cps == 32) | ((cps >= 9) & (cps <= 13))
-    n_alpha = _seg_sum(alpha, starts, ends)
-    n_digit = _seg_sum(digit, starts, ends)
-    n_ws6 = _seg_sum(ws6, starts, ends)
-    n_punct = lens - n_alpha - n_digit - n_ws6
-    runs_a = _seg_sum(_run_starts(alpha, doc_starts_mask), starts, ends)
-    runs_d = _seg_sum(_run_starts(digit, doc_starts_mask), starts, ends)
-    n_bpe = runs_a + runs_d + n_punct
+    def seg_sum(mask):
+        return np.add.reduceat(mask, seg, dtype=np.int64)
+
+    def run_starts(mask):
+        # a run opens where the class starts, or at a document's first unit
+        rs = mask.copy()
+        rs[1:] &= ~mask[:-1]
+        rs[seg] = mask[seg]
+        return rs
+
+    cls = _CLASS[units if units.dtype == np.uint8 else np.minimum(units, 255)]
+    alpha, digit = cls == _ALPHA, cls == _DIGIT
+    tok = cls < _SPACE
+    n_alpha, n_digit = seg_sum(alpha), seg_sum(digit)
+    n_punct = lens[ne] - n_alpha - n_digit - seg_sum(~tok)
+    n_bpe = seg_sum(run_starts(alpha)) + seg_sum(run_starts(digit)) + n_punct
 
     # ws tokens (see doc_stats for the trim/empty-token semantics): the
     # count of non-ws6 runs is trim-invariant, so only the lead/trail empty
-    # tokens need the trim bounds — the first/last NON-SPACE char per doc.
-    tok = ~ws6
-    rs_tok = _run_starts(tok, doc_starts_mask)
-    runs_tok = _seg_sum(rs_tok, starts, ends)
-    nonspace = cps != 32
-    n_nonspace = _seg_sum(nonspace, starts, ends)
-    cs_ns = np.empty(n + 1, dtype=np.int64)
-    cs_ns[0] = 0
-    np.cumsum(nonspace, out=cs_ns[1:])
-    rank = cs_ns[1:] - np.repeat(cs_ns[starts], lens)  # nonspace rank in doc
-    first_ns = nonspace & (rank == 1)
-    total_rep = np.repeat(n_nonspace, lens)
-    last_ns = nonspace & (rank == total_rep)
-    lead = _seg_sum(first_ns & ws6, starts, ends)
-    trail = _seg_sum(last_ns & ws6, starts, ends)
-    n_tokens = np.where(n_nonspace > 0, runs_tok + lead + trail, 0)
+    # tokens need the trim bounds — the first/last NON-SPACE unit per doc,
+    # which is the first/last unit unless that one is a space
+    rs_tok = run_starts(tok)
+    first_ns, last_ns = seg.copy(), last.copy()
+    has_ns = np.ones(len(ne), dtype=bool)
+    padded = np.flatnonzero((cls[seg] == _SPACE) | (cls[last] == _SPACE))
+    if len(padded):
+        ns = np.flatnonzero(cls != _SPACE)
+        lo = np.searchsorted(ns, seg[padded])
+        hi = np.searchsorted(ns, last[padded], "right")
+        has_ns[padded] = hi > lo
+        some = padded[hi > lo]
+        first_ns[some] = ns[lo[hi > lo]]
+        last_ns[some] = ns[hi[hi > lo] - 1]
+    edges = (cls[first_ns] == _WS5).astype(np.int64) + (cls[last_ns] == _WS5)
+    n_tokens = np.where(has_ns, seg_sum(rs_tok) + edges, 0)
 
     # stopword hits: candidate tokens are ASCII-only, length <= 4.
-    # Token ends: a token char whose NEXT char is non-token or opens a doc.
-    nxt = np.empty(n, dtype=bool)
-    if n:
-        nxt[-1] = False
-        nxt[:-1] = tok[1:]
-        nxt[np.roll(doc_starts_mask, -1)] = False  # next char opens a new doc
-    tok_end_mask = tok & ~nxt
+    # Token ends: a token unit whose next unit is non-token or opens a doc.
+    tok_end = tok.copy()
+    tok_end[:-1] &= ~tok[1:]
+    tok_end[last] = tok[last]
     t_starts = np.flatnonzero(rs_tok)
-    t_ends = np.flatnonzero(tok_end_mask) + 1
-    t_lens = t_ends - t_starts
+    t_lens = np.flatnonzero(tok_end) + 1 - t_starts
     cand = np.flatnonzero(t_lens <= 4)
     if len(cand):
         s4 = t_starts[cand]
@@ -169,50 +159,47 @@ def batch_stats(texts) -> tuple[np.ndarray, dict]:
         packs = np.zeros(len(cand), dtype=np.int64)
         ok = np.ones(len(cand), dtype=bool)
         for j in range(4):
-            have = l4 > j
-            c = np.where(have, cps[np.minimum(s4 + j, n - 1)], 0)
-            c = np.where(have, c, 0)
+            c = np.where(l4 > j, units[np.minimum(s4 + j, len(units) - 1)], 0).astype(np.int64)
             ok &= c < 128
-            c = c + 32 * ((c >= 65) & (c <= 90))
+            c += 32 * ((c >= 65) & (c <= 90))  # ASCII lower
             packs = (packs << 7) | c
-        doc_of = np.searchsorted(ends, s4, side="right")
-        for lang in LANG_ORDER:
-            m = ok & np.isin(packs, _STOP_PACKED[lang])
-            hits = np.bincount(doc_of[m], minlength=len(idx_nn))
-            out[f"h_{lang}"][idx_nn] = hits
-    # fingerprint: per-doc Horner via positional powers + one reduceat over
-    # nonempty docs (partial sums bounded: len <= _MAX_FAST chars fast path)
-    fp = np.zeros(len(idx_nn), dtype=np.int64)
-    fast = lens <= _MAX_FAST
-    nonempty_fast = fast & (lens > 0)
-    if nonempty_fast.any():
-        exp = np.repeat(ends, lens) - 1 - np.arange(n)
-        exp = np.minimum(exp, _MAX_FAST - 1)
-        contrib = cps * _POW31[exp]
-        # reduceat sums run to the NEXT boundary or array end; empty docs
-        # contribute no boundary (no duplicate indices) and slow-doc chars
-        # are masked to 0 so they never pollute a preceding fast segment
-        for k in np.flatnonzero(~fast):
-            contrib[starts[k]:ends[k]] = 0
-        fp[nonempty_fast] = np.add.reduceat(contrib, starts[nonempty_fast]) % CHAR_MOD
-    for k in np.flatnonzero(~fast):  # rare oversized docs: exact chunked redo
-        t = nn_texts[k]
-        h = 0
-        for st in range(0, len(t), _MAX_FAST):
-            chunk = cps[starts[k] + st: starts[k] + min(st + _MAX_FAST, len(t))]
-            m = len(chunk)
-            csum = int((chunk * _POW31[m - 1::-1]).sum() % CHAR_MOD)
-            h = (h * (_POW31_CHUNK if m == _MAX_FAST else int(_POW31[m])) + csum) % CHAR_MOD
-        fp[k] = h
+        at = np.minimum(np.searchsorted(_STOP_KEYS, packs), len(_STOP_KEYS) - 1)
+        bits = np.where(ok & (_STOP_KEYS[at] == packs), _STOP_BITS[at], 0)
+        doc_of = np.searchsorted(bounds, s4, side="right") - 1
+        for li, lang in enumerate(LANG_ORDER):
+            out[f"h_{lang}"] = np.bincount(doc_of[(bits >> li) & 1 > 0], minlength=nd)
 
-    out["n_chars"][idx_nn] = lens
-    out["n_tokens"][idx_nn] = n_tokens
-    out["alpha_chars"][idx_nn] = n_alpha
-    out["punct_chars"][idx_nn] = n_punct
-    out["n_ws"][idx_nn] = n_tokens
-    out["n_bpe"][idx_nn] = n_bpe
-    out["fp"][idx_nn] = fp
-    return nulls, out
+    # fingerprint: per-doc Horner via positional powers + one reduceat over
+    # nonempty docs (partial sums bounded: len <= _MAX_FAST units fast path)
+    exp = np.repeat(bounds[1:] - 1, lens)
+    exp -= np.arange(len(units))
+    np.minimum(exp, _MAX_FAST - 1, out=exp)
+    contrib = _POW31[exp]
+    contrib *= units
+    slow = np.flatnonzero(lens[ne] > _MAX_FAST)
+    for k in slow:  # oversized docs: masked here, exact chunked fold below
+        contrib[seg[k] : last[k] + 1] = 0
+    fp = np.add.reduceat(contrib, seg) % CHAR_MOD
+    for k in slow:
+        fp[k] = _fold_chunked(units[seg[k] : last[k] + 1].astype(np.int64))
+
+    out["n_chars"] = lens.astype(np.int64)
+    for col, v in (("n_tokens", n_tokens), ("alpha_chars", n_alpha), ("punct_chars", n_punct),
+                   ("n_ws", n_tokens), ("n_bpe", n_bpe), ("fp", fp)):
+        out[col][ne] = v
+    return ~valid, out
+
+
+def _fold_chunked(cps: np.ndarray) -> int:
+    """Rolling 31-polynomial of int64 codepoints mod CHAR_MOD, in chunks of
+    _MAX_FAST so the int64 partial sums stay bounded."""
+    h = 0
+    for st in range(0, len(cps), _MAX_FAST):
+        chunk = cps[st:st + _MAX_FAST]
+        m = len(chunk)
+        csum = int((chunk * _POW31[m - 1::-1]).sum() % CHAR_MOD)
+        h = (h * (_POW31_CHUNK if m == _MAX_FAST else int(_POW31[m])) + csum) % CHAR_MOD
+    return h
 
 
 def doc_stats(text: str | None) -> tuple | None:
@@ -245,13 +232,7 @@ def doc_stats(text: str | None) -> tuple | None:
     n_bpe = runs_a + runs_d + n_punct
     # fingerprint: Horner fold over all codepoints mod P, chunked so the
     # int64 partial sums stay bounded (see kernels/texthash.py overflow note)
-    fp = 0
-    for st in range(0, n, _MAX_FAST):
-        chunk = cps[st:st + _MAX_FAST]
-        m = len(chunk)
-        csum = int((chunk * _POW31[m - 1::-1]).sum() % CHAR_MOD)
-        fp = (fp * (_POW31_CHUNK if m == _MAX_FAST else int(_POW31[m]))
-              + csum) % CHAR_MOD
+    fp = _fold_chunked(cps)
     # ws tokens of the TRIMMED text. Spark's trim() strips ASCII SPACE
     # (0x20) ONLY — not the other \s chars — and Java split with limit -1
     # keeps a leading/trailing EMPTY token when the trimmed string starts/

@@ -28,7 +28,8 @@ Scale notes (10^12 docs):
     dropped (band_idx, band_key, n_docs) rows for the same inputs, the
     no-silent-caps accounting signal.
   * signatures are 16 longs + bands 4 longs per doc — tiny vs the text;
-    the bucket shuffle carries each doc's shingle hashes once per band.
+    the bucket shuffle carries each doc's distinct shingles, 4 bytes each,
+    once per band.
 """
 
 from __future__ import annotations
@@ -108,11 +109,11 @@ def minhash_signatures(
     """(id, shs, m0..m15, band0..band3); docs with <SHINGLE_N tokens dropped.
 
     One mapInArrow pass through kernels/texthash.py::batch_signatures, which
-    hashes, shingles, MinHashes and bands each Arrow batch on one UTF-32
-    buffer. The whole chain is integer arithmetic, so the kernel is
-    BIT-IDENTICAL to the interpreted HOF expressions the oracle mirrors
-    (differential-tested against them in tests/test_texthash.py incl.
-    non-ASCII and empty-token edges)."""
+    hashes, shingles, MinHashes and bands each Arrow batch on one unit
+    stream (texthash.text_units). The whole chain is integer arithmetic, so
+    the kernel is BIT-IDENTICAL to the interpreted HOF expressions the
+    oracle mirrors (differential-tested against them in
+    tests/test_texthash.py incl. non-ASCII and empty-token edges)."""
     import pyarrow as pa
 
     from ..kernels import texthash as tx
@@ -183,17 +184,20 @@ def minhash_lsh_pairs(
     `max_bucket` drops degenerate boilerplate buckets (see module docstring;
     `minhash_dropped_buckets` reports what was dropped).
 
-    Grouped per bucket, not a flat self-join: each doc's (id, shs) row is
-    exploded once per band, shuffled and sorted on (band_idx, band_key), and
-    ONE mapInArrow kernel (kernels/texthash.py::bucket_pairs) walks the
-    sorted buckets, skips those over `max_bucket`, enumerates each bucket's
-    pairs and verifies them by a sorted merge of their distinct shingles,
-    yielding (doc_a, doc_b, n_inter, n_union). A pair colliding in several
-    uncapped bands comes out once per band; one distinct() over those four
-    longs keeps it once (n_inter and n_union are functions of the pair), and
-    the JVM rounds the ratio with the same expression as `jaccard`. So the
-    shingle arrays cross one exchange (once per doc and band) and no per-
-    pair product or join-back exists.
+    Grouped per bucket, not a flat self-join: one mapInArrow scan
+    (kernels/texthash.py::batch_band_sets) gives each doc its band keys and
+    its distinct shingles, sorted and packed as int32s into one binary value
+    `shs`. The (id, shs) row is exploded once per band, shuffled and sorted
+    on (band_idx, band_key), and ONE mapInArrow kernel
+    (kernels/texthash.py::bucket_pairs) walks the sorted buckets, skips
+    those over `max_bucket`, enumerates each bucket's pairs and verifies
+    them by a sorted merge of their packed sets, yielding (doc_a, doc_b,
+    n_inter, n_union). A pair colliding in several uncapped bands comes out
+    once per band; one distinct() over those four longs keeps it once
+    (n_inter and n_union are functions of the pair), and the JVM rounds the
+    ratio with the same expression as `jaccard`. So the packed sets cross
+    one exchange (once per doc and band) and no per-pair product or
+    join-back exists.
 
     RECALL CONTRACT (review r5): the output is a SUBSET of all qualifying
     pairs — LSH candidate generation is probabilistic. With the frozen
@@ -205,10 +209,34 @@ def minhash_lsh_pairs(
     raise recall at low j but explode the candidate count). For exhaustive
     pairs above a low threshold use ngram_jaccard_pairs on an explicit
     candidate set instead."""
+    import pyarrow as pa
+
     from ..kernels import texthash as tx
 
-    rows = minhash_signatures(docs, id_col, text_col).select(
-        F.col(id_col).alias("id"),
+    bands = [f"band{b}" for b in range(N_BANDS)]
+
+    def gen(batches):
+        for rb in batches:
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(0).cast(pa.int64()), *tx.batch_band_sets(rb.column(1))],
+                names=["id", *bands, "shs"])
+
+    scan = docs.select(id_col, text_col).mapInArrow(
+        gen, "id long, " + ", ".join(f"{b} long" for b in bands) + ", shs binary")
+    return _verified_pairs(scan, "id", threshold, max_bucket)
+
+
+def _verified_pairs(
+    sets: DataFrame, id_col: str, threshold: float, max_bucket: int | None
+) -> DataFrame:
+    """minhash_lsh_pairs after its scan: the bucket shuffle, pair kernel and
+    verify over a frame of (id_col, band0..band3, shs) rows, shs being a
+    document's packed shingle set (kernels/texthash.py::batch_band_sets);
+    rows whose shs is NULL hold no shingles and are skipped."""
+    from ..kernels import texthash as tx
+
+    rows = sets.where(F.col("shs").isNotNull()).select(
+        F.col(id_col).cast("long").alias("id"),
         "shs",
         F.posexplode(F.array(*[F.col(f"band{b}") for b in range(N_BANDS)])).alias(
             "band_idx", "band_key"
@@ -323,12 +351,12 @@ def dedup_connected_components(
     are orders of magnitude smaller than the corpus (they hold DUP nodes
     only), and the iterative plan loop pays ~2 jobs x O(seconds) of fixed
     latency per doubling round regardless of size. When the pair table fits
-    `driver_max_edges` rows (ONE bounded limit(cap+1) collect — the
+    `driver_max_edges` rows (ONE bounded limit(cap+1) Arrow collect — the
     pip_join max_broadcast_polygons contract; ~16 bytes/edge, so the
     default 10^6 cap is ~mid-MB of driver memory), labels are computed with
-    an exact union-find over the collected edges and parallelized back —
-    identical output (min reachable id per node, pytest-pinned equal to
-    the loop), zero iterative rounds. Larger graphs take the loop below
+    NumPy over the collected edges (_cc_driver) and come back as one Arrow
+    frame — identical output (min reachable id per node, pytest-pinned
+    equal to the loop), zero iterative rounds. Larger graphs take the loop below
     unchanged; pass None to force the loop.
 
     use_reliable_checkpoint: per-round state normally lives in
@@ -352,8 +380,8 @@ def dedup_connected_components(
         # expensive) pair lineage exactly once on the fast path; if the
         # extra row comes back the graph is big and the loop re-evaluates —
         # the rare path by construction (dup graphs are corpus-tiny).
-        head = pairs.select(a_col, b_col).limit(driver_max_edges + 1).collect()
-        if len(head) <= driver_max_edges:
+        head = pairs.select(a_col, b_col).limit(driver_max_edges + 1).toArrow()
+        if head.num_rows <= driver_max_edges:
             return _cc_driver(pairs.sparkSession, head)
     sc = pairs.sparkSession.sparkContext
     ckpt_dir = sc.getCheckpointDir()
@@ -469,42 +497,40 @@ def dedup_connected_components(
     return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 
-def _cc_driver(spark, edge_rows) -> DataFrame:
-    """Exact union-find over a bounded, collected edge list — the small-graph
-    engine behind dedup_connected_components(driver_max_edges=...). Returns
+def _cc_driver(spark, edges) -> DataFrame:
+    """Exact connected components of a bounded, collected Arrow edge table
+    (two integer columns) — the small-graph engine behind
+    dedup_connected_components(driver_max_edges=...). Returns
     (doc_id, cluster_id) for every node appearing in the edges, cluster_id =
     the smallest id reachable through the pair graph — byte-identical to the
-    distributed loop's contract (pytest-pinned)."""
-    parent: dict = {}
+    distributed loop's contract (pytest-pinned).
 
-    def find(x):
-        root = x
-        while parent[root] != root:
-            root = parent[root]
-        while parent[x] != root:  # path compression
-            parent[x], x = root, parent[x]
-        return root
+    Whole-array min-label hooking: nodes are numbered in id order and every
+    node points at a smaller-or-equal number, so following pointers ends at
+    the smallest node of a tree. Each round hooks, for every edge whose
+    endpoints reach different roots, the larger root onto the smaller one,
+    then jumps pointers (label <- label[label]) until each node points at
+    its root; it stops when no edge joins two roots."""
+    import numpy as np
+    import pandas as pd
 
-    for r in edge_rows:
-        a, b = r[0], r[1]
-        if a not in parent:
-            parent[a] = a
-        if b not in parent:
-            parent[b] = b
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[ra] = rb
-    comp_min: dict = {}
-    for node in parent:
-        root = find(node)
-        cur = comp_min.get(root)
-        if cur is None or node < cur:
-            comp_min[root] = node
-    rows = sorted((node, comp_min[find(node)]) for node in parent)
-    # 1 slice: a parallelize over default parallelism would schedule ~32
-    # near-empty tasks for a frame this small (bounded by driver_max_edges)
+    ends = [edges.column(i).to_numpy().astype(np.int64) for i in (0, 1)]
+    nodes, idx = np.unique(np.concatenate(ends), return_inverse=True)
+    ea, eb = idx[: len(ends[0])], idx[len(ends[0]) :]
+    label = np.arange(len(nodes))
+    while True:
+        la, lb = label[ea], label[eb]
+        apart = la != lb
+        if not apart.any():
+            break
+        np.minimum.at(label, np.maximum(la, lb)[apart], np.minimum(la, lb)[apart])
+        while True:
+            jumped = label[label]
+            if (jumped == label).all():
+                break
+            label = jumped
     return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, max(1, len(rows) // 500_000 + 1)),
+        pd.DataFrame({"doc_id": nodes, "cluster_id": nodes[label]}),
         "doc_id long, cluster_id long",
     )
 

@@ -46,6 +46,7 @@ from ..functions.spatial import cell_encode_col
 from ..kernels import geom
 from ..kernels.cells import cell_encode
 from ..kernels.wkb import nested_to_rings
+from .tiles import with_rings
 
 DEFAULT_CELL_LEVEL = 12
 # driver-side cap on the polygon pull of the broadcast path; over it, the
@@ -286,7 +287,7 @@ def _pip_join_shuffle(
         # cells-only job at call time).
         salt_factor = auto_salt_factor(pts, ["_cell"])
     salted = bool(salt_factor and salt_factor > 1)
-    poly_cells = explode_polygon_cells(polygons, salt_factor)
+    poly_cells = explode_polygon_cells(with_rings(polygons), salt_factor)
     if salted:
         pts = pts.withColumn(
             "_salt", F.pmod(F.xxhash64(lon_c, lat_c), F.lit(salt_factor)).cast("int")

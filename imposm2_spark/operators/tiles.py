@@ -182,6 +182,14 @@ def covering_tiles_udf(
 MAX_COVER_CELLS = 1 << 20  # per-polygon covering-grid bound (review r5)
 
 
+def with_rings(polygons: DataFrame) -> DataFrame:
+    """The polygon rows holding at least one ring. A NULL or [] rings row
+    covers and cuts nothing, and an Arrow batch of only such rows crashes
+    the Python worker (pyarrow 16.1 reading an all-empty triple-nested
+    list column), so the ring UDFs never see one."""
+    return polygons.where(F.size("rings") > 0)
+
+
 def assign_polygon_tiles(
     polygons: DataFrame, zooms: list[int], refine: str = "center",
     max_cells_per_polygon: int | None = MAX_COVER_CELLS,
@@ -196,6 +204,7 @@ def assign_polygon_tiles(
     kernel fails loudly at the bound instead of stalling an executor."""
     if not zooms:
         raise ValueError("assign_polygon_tiles: zooms must be non-empty")
+    polygons = with_rings(polygons)
     outs = []
     for z in zooms:
         tiles = polygons.select(
@@ -371,7 +380,7 @@ def clip_polygons_to_tiles(
     polygon partition, fan-out inside the kernel, explode after; no join,
     no shuffle beyond the input's layout. `max_cells_per_polygon` bounds
     the per-polygon covering grid with the same loud-failure contract."""
-    tiles = polygons.select(
+    tiles = with_rings(polygons).select(
         "polygon_id",
         F.lit(z).alias("z"),
         F.explode(

@@ -339,3 +339,43 @@ def test_null_and_empty_rings_emit_no_tiles(spark):
     ):
         want = sorted(map(tuple, op(polys).collect()))
         assert sorted(map(tuple, op(with_bad).collect())) == want and want
+
+
+@pytest.mark.spark
+def test_ringless_polygons_alone_in_a_batch(spark):
+    """At one row per Arrow batch, a NULL or [] rings row fills a batch on
+    its own; pyarrow cannot read such a batch of the triple-nested rings
+    column and the Python worker crashes. The ring operators (tile cover,
+    clip, the pip shuffle path's refine) drop those rows before the UDF, so
+    the output equals the output without them."""
+    from imposm2_spark.operators.pip import pip_join
+    from imposm2_spark.operators.tiles import (
+        assign_polygon_tiles, clip_polygons_to_tiles,
+    )
+    from imposm2_spark.sources import fixtures
+
+    polys = fixtures.polygons_admin_df(spark).limit(1)
+    cells = polys.first()["cells"]
+    bad = spark.createDataFrame(
+        [(98, "null_rings", 2, None, cells), (99, "empty_rings", 2, [], cells)],
+        schema=fixtures.POLYGONS_ADMIN_SCHEMA,
+    )
+    with_bad = polys.unionByName(bad).coalesce(1)
+    ring = polys.first()["rings"][0]
+    lon = sum(p[0] for p in ring[:-1]) / (len(ring) - 1)
+    lat = sum(p[1] for p in ring[:-1]) / (len(ring) - 1)
+    points = spark.createDataFrame([(1, lon, lat)], "pid long, lon double, lat double")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        for op in (
+            lambda df: assign_polygon_tiles(df, [8]),
+            lambda df: clip_polygons_to_tiles(df, 8),
+            lambda df: pip_join(points, df, keep_point_cols=["pid"],
+                                broadcast_polygons=False),
+        ):
+            want = sorted(map(tuple, op(polys).collect()))
+            assert sorted(map(tuple, op(with_bad).collect())) == want and want
+    finally:
+        spark.conf.set(key, old)

@@ -28,10 +28,14 @@ def plan_nodes(plan):
     return re.findall(r"\n\(\d+\) (\w+)", plan)
 
 
+def is_python(node):
+    """Does the node evaluate Python (Arrow/batch UDFs, pandas/arrow maps)?"""
+    return "Python" in node or "InPandas" in node or "InArrow" in node
+
+
 def python_nodes(plan):
-    """Nodes that evaluate Python (Arrow/batch UDFs, pandas/arrow maps)."""
-    return [n for n in plan_nodes(plan) if "Python" in n or "InPandas" in n
-            or "InArrow" in n]
+    """Nodes that evaluate Python."""
+    return [n for n in plan_nodes(plan) if is_python(n)]
 
 
 def join_nodes(plan):
@@ -149,6 +153,42 @@ def test_minhash_lsh_band_shuffle_carries_no_arrays(spark):
             assert all(re.fullmatch(r"\w+#\d+L", c) for c in cols), blk
     assert join_nodes(p) == []
     assert len(python_nodes(p)) == 2, python_nodes(p)
+
+
+def test_curate_reads_each_text_in_one_crossing(spark, monkeypatch):
+    """curate reads the text in ONE Python node, over the exact-deduped
+    texts: the scan that gives stats, band keys and packed shingle sets.
+    The pair kernel reads the packed sets only, and the one cached frame is
+    the gated scan output. Checked on the lineage of the pairs it clusters
+    and of the frame it returns."""
+    import re
+
+    from imposm2_spark import session
+    from imposm2_spark.plans import curate as curate_mod
+
+    seen = []
+    real = curate_mod.dedup_connected_components
+
+    def spy(pairs, *args, **kwargs):
+        seen.append(pairs)
+        return real(pairs, *args, **kwargs)
+
+    monkeypatch.setattr(curate_mod, "dedup_connected_components", spy)
+    docs = testdata.load(spark, SF, "documents").select("doc_id", "text")
+    kept = curate_mod.curate(docs)
+    assert len(seen) == 1
+    for df in (seen[0], kept):
+        readers = set()
+        # an AQE plan lists a cached subtree twice (final and initial plan):
+        # count distinct Python nodes by their Arguments line
+        for blk in re.split(r"\n\(\d+\) ", plan_of(df)):
+            lines = blk.splitlines()
+            if lines and is_python(lines[0]) and any(
+                l.startswith("Input") and re.search(r"\btext#\d+", l) for l in lines
+            ):
+                readers.add(next(l for l in lines if l.startswith("Arguments")))
+        assert len(readers) == 1, readers
+    assert len(session._SCOPES["curate"]) == 1
 
 
 def test_import_pipeline_prunes_tags_before_shuffle(spark):

@@ -194,9 +194,46 @@ def test_batch_signatures_match_per_document_twins():
     assert [len(x) for x in tx.batch_signatures([])] == [0, 1, 0, 16, 4]
 
 
+def test_batch_signatures_same_on_byte_and_codepoint_views():
+    """A batch gives the same kept rows, shingles, signatures, band keys and
+    packed sets for its documents whether it is all ASCII (byte view) or
+    also holds one non-ASCII document (UTF-32 view); lists and sliced Arrow
+    arrays alike."""
+    from test_textstats import UNIT_EDGES, _unit_batches
+
+    n = len(UNIT_EDGES)
+
+    def shared(batch):
+        rows, offsets, shs, sig, bands = tx.batch_signatures(batch)
+        k = int(np.searchsorted(rows, n))
+        columns = [c[:n].to_pylist() for c in tx.batch_band_sets(batch)]
+        return (rows[:k].tolist(), shs[: offsets[k]].tolist(), sig[:, :k].tolist(),
+                bands[:, :k].tolist(), columns)
+
+    runs = _unit_batches(UNIT_EDGES)
+    want = shared(runs[0][0])
+    kept = [i for i, t in enumerate(UNIT_EDGES) if isinstance(t, str) and len(t.split(" ")) >= 3]
+    assert want[0] == kept
+    for batch, dtype in runs:
+        assert tx.text_units(batch).units.dtype == dtype
+        assert shared(batch) == want
+    # the band columns hold the kept documents' keys, NULL elsewhere, and a
+    # packed set holds the document's distinct shingles, ascending
+    _, offsets, shs, _, bands = tx.batch_signatures(UNIT_EDGES)
+    *band_cols, sets = want[4]
+    for b, col in enumerate(band_cols):
+        assert [col[i] for i in kept] == bands[b].tolist()
+        assert all(col[i] is None for i in range(n) if i not in kept)
+    assert all(sets[i] is None for i in range(n) if i not in kept)
+    for k, i in enumerate(kept):
+        distinct = np.unique(shs[offsets[k] : offsets[k + 1]]).astype(np.int32)
+        assert sets[i] == distinct.tobytes()
+
+
 def _band_batch(rows):
     """Arrow batch of (id, band_idx, band_key, shs) rows, sorted as the
-    operator's bucket shuffle sorts them."""
+    operator's bucket shuffle sorts them, each shingle list packed as the
+    signature scan packs it (distinct, ascending int32s)."""
     import pyarrow as pa
 
     rows = sorted(rows, key=lambda r: (r[1], r[2]))
@@ -204,7 +241,8 @@ def _band_batch(rows):
         [pa.array([r[0] for r in rows], pa.int64()),
          pa.array([r[1] for r in rows], pa.int32()),
          pa.array([r[2] for r in rows], pa.int64()),
-         pa.array([r[3] for r in rows], pa.list_(pa.int64()))],
+         pa.array([np.unique(np.asarray(r[3], np.int32)).tobytes() for r in rows],
+                  pa.binary())],
         names=["id", "band_idx", "band_key", "shs"],
     )
 

@@ -143,6 +143,48 @@ def test_batch_stats_random_fuzz():
         assert got == ref, f"{i}: {t[:60]!r} got={got} ref={ref}"
 
 
+# edges of the unit view: NULL, empty and whitespace-only text, leading and
+# trailing \t / \x0b (empty tokens after trim), a token past _MAX_FAST
+UNIT_EDGES = [
+    None, "", " ", "   ", "\t", "\x0b", "\tlead", "trail\x0b", " \ta b\x0b ",
+    "\x0b the a\t", "the  a b", "THE x 12!", "x" * 5000 + " the", None,
+]
+
+
+def _unit_batches(texts):
+    """(batch, expected unit dtype) pairs holding `texts` first: a list,
+    sliced Arrow arrays (offset != 0), and both again with one non-ASCII
+    document appended, which moves the batch onto the UTF-32 view."""
+    import numpy as np
+    import pyarrow as pa
+
+    padded = pa.array(["pad", *texts, "ü x"])
+    return [
+        (texts, np.uint8),
+        (padded[1:-1], np.uint8),
+        ([*texts, float("nan")], np.uint8),
+        ([*texts, "ü x"], np.uint32),
+        (padded[1:], np.uint32),
+    ]
+
+
+def test_batch_stats_same_on_byte_and_codepoint_views():
+    """The byte view of an all-ASCII batch and the UTF-32 view of a batch
+    that also holds one non-ASCII document give the same stats for the
+    documents they share, equal to the scalar reference."""
+    from imposm2_spark.kernels.texthash import text_units
+
+    want = [ts.doc_stats(t) for t in UNIT_EDGES]
+    for batch, dtype in _unit_batches(UNIT_EDGES):
+        assert text_units(batch).units.dtype == dtype
+        nulls, cols = ts.batch_stats(batch)
+        for i, ref in enumerate(want):
+            assert nulls[i] == (ref is None), i
+            if ref is not None:
+                got = tuple(int(cols[c][i]) for c in ts.STAT_COLS)
+                assert got == ref, f"{i}: {UNIT_EDGES[i][:40]!r} got={got} ref={ref}"
+
+
 def test_batch_stats_nan_in_batch():
     """pandas can surface a missing string as NaN instead of None: a NaN
     row is a NULL row and must not fail the rest of the batch."""
