@@ -8,8 +8,9 @@ tag, use it; otherwise derive a deterministic fallback from the url:
 Reference analog: imposm2's node (lon, lat) is intrinsic to the input; the
 graft derives it, after which documents play the node-stream role (SURVEY §1.3).
 
-Runs as one Arrow-batched pandas UDF returning a struct; blake2b per row is a
-cheap C call at batch granularity (not a Spark per-row Python UDF).
+geotag_udf runs geotag_pair as one Arrow-batched pandas UDF returning a struct;
+the spine's crossing runs geotag_batch, the same rule over a whole Arrow batch
+(one regex pass over its html bytes, blake2b only for the rows without a tag).
 """
 
 from __future__ import annotations
@@ -19,9 +20,12 @@ from hashlib import blake2b
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..kernels.texthash import value_buffer
 
 # lat;lon with optional whitespace — the geo.position microformat
 _GEO_META_RE = re.compile(
@@ -61,6 +65,40 @@ def geotag_pair(url: str | None, html: bytes | None) -> tuple[float, float]:
     # NaN rather than None depending on the Arrow conversion path
     u = url if isinstance(url, str) else ""
     return fallback_lon(u), fallback_lat(u)
+
+
+def geotag_batch(url: pa.Array, html: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """(lon, lat) float64 arrays: geotag_pair of every row of an Arrow
+    batch (url string, html binary), at batch cost.
+
+    One _GEO_META_RE pass over the batch's html bytes; a row takes its first
+    match, the rows without one take the url-hash fallback. A match cannot
+    start in one row and depend on the next without running into it, so a
+    match that spans two rows sends the whole batch to geotag_pair."""
+    data, bounds, valid = value_buffer(html)
+    n = len(html)
+    lon = np.full(n, np.nan)
+    lat = np.full(n, np.nan)
+    hits = [(m.start(), m.end(), m[1], m[2]) for m in _GEO_META_RE.finditer(data.tobytes())]
+    if hits:
+        start, end, lat_s, lon_s = zip(*hits)
+        row = np.searchsorted(bounds, start, side="right") - 1
+        if (np.asarray(end) > bounds[row + 1]).any():
+            pairs = np.array([geotag_pair(u, h) for u, h in zip(url.to_pylist(), html.to_pylist())],
+                             dtype=np.float64).reshape(n, 2)
+            return pairs[:, 0].copy(), pairs[:, 1].copy()
+        row, first = np.unique(row, return_index=True)
+        keep = valid[row]
+        row, first = row[keep], first[keep]
+        # numpy parses a byte string to the correctly rounded double, as float() does
+        lat[row] = np.array(lat_s, dtype=bytes)[first].astype(np.float64)
+        lon[row] = np.array(lon_s, dtype=bytes)[first].astype(np.float64)
+    rest = np.flatnonzero(np.isnan(lon))
+    if len(rest):
+        urls = [u if isinstance(u, str) else "" for u in url.take(pa.array(rest)).to_pylist()]
+        lon[rest] = [fallback_lon(u) for u in urls]
+        lat[rest] = [fallback_lat(u) for u in urls]
+    return lon, lat
 
 
 _GEO_SCHEMA = T.StructType(

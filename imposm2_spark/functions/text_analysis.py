@@ -172,6 +172,7 @@ def doc_stats_udf():
     column cannot duplicate the evaluation below the pushed-down predicate
     (guide §4.4)."""
     import pandas as pd
+    import pyarrow as pa
     from pyspark.sql import types as T
 
     from ..kernels import textstats as ts
@@ -184,7 +185,8 @@ def doc_stats_udf():
     def _stats(texts):  # pd.Series -> pd.DataFrame (struct); hints omitted —
         # the explicit returnType drives the scalar-struct path (the hint
         # checker rejects the Series->DataFrame spelling on Spark 4.1)
-        nulls, cols = ts.batch_stats(list(texts))
+        # the batch as Arrow (NaN / None -> NULL), which the kernel reads in place
+        nulls, cols = ts.batch_stats(pa.Array.from_pandas(texts, type=pa.string()))
         df = pd.DataFrame({c: cols[c] for c in ts.STAT_COLS})
         if nulls.any():
             df = df.astype("Int64")

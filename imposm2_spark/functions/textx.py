@@ -26,10 +26,14 @@ import re
 from html import unescape
 from html.parser import HTMLParser
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..kernels.texthash import value_buffer
 
 SPEC_VERSION = 1
 
@@ -147,6 +151,104 @@ def extract_text_bytes(html: bytes | None) -> str | None:
     p.feed(s)
     p.close()
     return p.text()
+
+
+# ---------------------------------------------------------------------------
+# Whole-batch path: extract_text_bytes of every row of a binary Arrow batch at
+# batch cost. The rows that can take it are the ones _fast_extract admits
+# whose text is also plain ASCII without NUL, '&' (no unescape) or a
+# script/style tag (no raw text): there, extraction is "replace every tag by
+# a space, then canonicalize the whitespace", so the batch joins those rows
+# with NUL separators, decodes once, strips every tag with one sub of the
+# fast path's tag grammar and canonicalizes the whitespace with NumPy. A tag
+# match cannot see past its own row without consuming the separator after
+# it, so the separator count proves every match stayed inside one row.
+# ---------------------------------------------------------------------------
+_TAGS = re.compile(f"{_ENDTAGFIND.pattern}|{_TAG_STRICT.pattern}")
+# a `<` _RISKY rejects, or a raw-text element's start tag (any case; a longer
+# name such as <scripts> is sent to the row path too)
+_ROW_TAGS = re.compile(_RISKY.pattern.encode() + rb"|<(?i:script|style)")
+# NUL (the separator), '&' and non-ASCII bytes
+_ROW_BYTES = np.zeros(256, dtype=bool)
+_ROW_BYTES[[0, ord("&"), *range(0x80, 0x100)]] = True
+# the characters str.split() splits on below 0x80, mapped to a space
+_ASCII_WS = bytes(c for c in range(0x80) if chr(c).isspace())
+_WS_TO_SPACE = bytes.maketrans(_ASCII_WS, b" " * len(_ASCII_WS))
+_SPACE, _LT = ord(" "), ord("<")
+
+
+def _strip_joined(data: np.ndarray, lens: np.ndarray) -> tuple[pa.Array, np.ndarray] | None:
+    """(texts, has_lt) of the rows data holds back to back (row k has
+    lens[k] bytes; ASCII, no NUL): each row's tags replaced by spaces and
+    its whitespace canonicalized. has_lt marks rows where a `<` survived (not
+    a tag _fast_extract accepts). None when a tag match crossed a row end."""
+    m = len(lens)
+    starts = np.cumsum(lens)[:-1]
+    joined = np.insert(data, starts, 0).tobytes().decode("ascii")
+    out = _TAGS.sub(" ", joined).encode("ascii").translate(_WS_TO_SPACE)
+    b = np.frombuffer(out, dtype=np.uint8)
+    sep = b == 0
+    if np.count_nonzero(sep) != m - 1:
+        return None
+    # drop a space that opens a row or follows a space, then one that ends a row
+    gap = b == _SPACE
+    after = np.empty_like(gap)
+    after[:1] = True
+    after[1:] = gap[:-1] | sep[:-1]
+    b = b[~(gap & after)]
+    gap = b == _SPACE
+    before = np.empty_like(gap)
+    before[-1:] = True
+    before[:-1] = b[1:] == 0
+    b = b[~(gap & before)]
+    seps = np.flatnonzero(b == 0)
+    offsets = np.empty(m + 1, dtype=np.int32)
+    offsets[0], offsets[-1] = 0, len(b) - len(seps)
+    offsets[1:-1] = seps - np.arange(len(seps))
+    texts = pa.Array.from_buffers(
+        pa.string(), m, [None, pa.py_buffer(offsets), pa.py_buffer(b[b != 0])]
+    )
+    lt = np.flatnonzero(b == _LT)
+    has_lt = np.zeros(m, dtype=bool)
+    has_lt[np.searchsorted(seps, lt)] = True
+    return texts, has_lt
+
+
+def extract_text_batch(html: pa.Array) -> pa.Array:
+    """extract_text_bytes of every row of a binary Arrow array, as a string
+    array (NULL for NULL), at batch cost: see the whole-batch path above.
+    Every other row runs extract_text_bytes, and so does the whole batch
+    when a tag crossed a row end."""
+    data, bounds, valid = value_buffer(html)
+    lens = np.diff(bounds)
+    raw = data.tobytes()
+    slow = ~valid
+    if not raw.isascii() or b"\x00" in raw or b"&" in raw:
+        bad = np.flatnonzero(_ROW_BYTES[data])
+        slow[np.searchsorted(bounds, bad, side="right") - 1] = True
+    tags = [m.start() for m in _ROW_TAGS.finditer(raw)]
+    if tags:
+        slow[np.searchsorted(bounds, tags, side="right") - 1] = True
+    fast = np.flatnonzero(~slow)
+    texts = pa.array([], pa.string())
+    if len(fast):
+        kept = data[np.repeat(~slow, lens)] if len(fast) < len(html) else data
+        stripped = _strip_joined(kept, lens[fast])
+        if stripped is None:
+            fast = fast[:0]
+        else:
+            texts, has_lt = stripped
+            if has_lt.any():
+                texts = texts.filter(pa.array(~has_lt))
+                fast = fast[~has_lt]
+    if len(fast) == len(html):
+        return texts
+    rest = np.setdiff1d(np.arange(len(html)), fast, assume_unique=True)
+    rest_texts = pa.array(
+        [extract_text_bytes(h) for h in html.take(pa.array(rest)).to_pylist()], pa.string()
+    )
+    order = np.argsort(np.concatenate([fast, rest]), kind="stable")
+    return pa.concat_arrays([texts, rest_texts]).take(pa.array(order))
 
 
 def extract_text_bytes_reference(html: bytes | None) -> str | None:

@@ -215,6 +215,19 @@ class Units(NamedTuple):
     valid: np.ndarray
 
 
+def value_buffer(arr: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(data, bounds, valid) of a string or binary Arrow array, read in
+    place: row d's bytes are data[bounds[d]:bounds[d+1]] (uint8, int64
+    bounds; offset != 0 slices included) and `valid` marks non-NULL rows."""
+    valid = ~arr.is_null().to_numpy(zero_copy_only=False)
+    _, off_buf, data_buf = arr.buffers()
+    large = pa.types.is_large_string(arr.type) or pa.types.is_large_binary(arr.type)
+    offs = np.frombuffer(off_buf, dtype=np.int64 if large else np.int32)
+    offs = offs[arr.offset : arr.offset + len(arr) + 1]
+    data = np.frombuffer(data_buf or b"", dtype=np.uint8)[offs[0] : offs[-1]]
+    return data, (offs - offs[0]).astype(np.int64), valid
+
+
 def text_units(texts) -> Units:
     """The Units of a string batch: an Arrow string array, or a sequence
     whose non-str items (None, pandas' NaN) are NULL. Units pass through.
@@ -230,14 +243,9 @@ def text_units(texts) -> Units:
         arr = texts
     else:
         arr = pa.array([t if isinstance(t, str) else None for t in texts], pa.string())
-    valid = ~arr.is_null().to_numpy(zero_copy_only=False)
-    _, off_buf, data_buf = arr.buffers()
-    off_type = np.int64 if pa.types.is_large_string(arr.type) else np.int32
-    offs = np.frombuffer(off_buf, dtype=off_type)[arr.offset : arr.offset + len(arr) + 1]
-    data = np.frombuffer(data_buf or b"", dtype=np.uint8)[offs[0] : offs[-1]]
-    bounds = offs - offs[0]
+    data, bounds, valid = value_buffer(arr)
     if not len(data) or data.max() < 0x80:
-        return Units(data, bounds.astype(np.int64), valid)
+        return Units(data, bounds, valid)
     cps = np.frombuffer(str(data, "utf-8").encode("utf-32-le"), dtype=np.uint32)
     lead_before = np.zeros(len(data) + 1, dtype=np.int64)
     np.cumsum((data & 0xC0) != 0x80, out=lead_before[1:])

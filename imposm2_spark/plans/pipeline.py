@@ -6,17 +6,19 @@ with web documents playing the node-stream role (SURVEY.md §1.3).
 
 Shape of the physical plan (verified by tests/test_plans.py explain checks):
   parquet/createDataFrame scan
-  -> ONE ArrowEvalPython: extract + geotag + PolygonIndex.locate per batch
-     (html crosses once; lon, lat, n_chars and the polygon ids return)
+  -> ONE MapInArrow: geotag + extract + PolygonIndex.locate per Arrow batch,
+     each a whole-batch kernel (html crosses once; lon, lat, n_chars and the
+     polygon ids return; no ArrowEvalPython)
   -> explode of the polygon ids (no join)
   -> codegen'd tile arithmetic
   -> single shuffle for the final tile aggregation
 A polygon side over pip.MAX_BROADCAST_POLYGONS instead runs the enrich
-crossing, then pip_join's cell-key shuffle join and refine.
+crossing without the locate, then pip_join's cell-key shuffle join and
+refine.
 
 located_points is that enrich + locate layer; the streaming spine
 (streaming.ingest) runs it per micro-batch. spine_resumable checkpoints the
-same enrich crossing (_enriched_points) before its pip_join stage.
+same enrich crossing (_enrich without the locate) before its pip_join stage.
 """
 
 from __future__ import annotations
@@ -31,58 +33,59 @@ from ..operators.tiles import assign_point_tiles
 DEFAULT_ZOOMS = (8, 12)
 
 
-def _enrich_fused_udf(index_bc=None, id_type=None):
-    """ONE Arrow-batched struct UDF for the spine's Python stage: html
-    crosses once, and only (lon, lat, n_chars[, polygon_ids]) return.
+def _enrich(
+    docs: DataFrame, keep_cols: tuple[str, ...] = (), index=None, id_type=None
+) -> DataFrame:
+    """(keep_cols..., lon, lat, n_chars[, polygon_ids]) of every document:
+    the spine's Python stage as ONE mapInArrow over (keep_cols..., url,
+    html) Arrow batches. html crosses once and never comes back.
 
-    * extraction + geotag run per row over (url, html); n_chars =
-      len(extracted) in Python == the codepoint count Spark's length()
-      computes (same string, byte-identical extractor — parity pytest in
-      tests/test_textx_geotag.py), so the text never ships back;
-    * with `index_bc` (a broadcast operators.pip.PolygonIndex) the batch's
-      points are located in the same crossing: polygon_ids holds each
-      point's containing polygons (ids of type `id_type`), replacing a
-      cell-key join plus a second Arrow crossing for the refine."""
+    * geotag and extraction run over the whole batch
+      (functions.geotag.geotag_batch, functions.textx.extract_text_batch,
+      each equal to its per-row function on every row); n_chars is
+      pc.utf8_length of the extracted text, the codepoint count Spark's
+      length() computes, so the text never ships back;
+    * with `index` (an operators.pip.PolygonIndex, broadcast here) the
+      batch's points are located in the same crossing: polygon_ids is a
+      ListArray of each point's containing polygon ids (of type `id_type`),
+      with offsets from the row ids locate() returns;
+    * keep columns pass through untouched, their fields (and any event-time
+      watermark on them) declared as the input's."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
     from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_type
 
-    from ..functions.geotag import geotag_pair
-    from ..functions.textx import extract_text_bytes
+    from ..functions.geotag import geotag_batch
+    from ..functions.textx import extract_text_batch
 
-    fields = [
+    fields = [docs.schema[c] for c in keep_cols] + [
         T.StructField("lon", T.DoubleType()),
         T.StructField("lat", T.DoubleType()),
         T.StructField("n_chars", T.LongType()),
     ]
-    if index_bc is not None:
+    bc = id_arrow = None
+    if index is not None:
         fields.append(T.StructField("polygon_ids", T.ArrayType(id_type)))
+        id_arrow = to_arrow_type(id_type)
+        bc = docs.sparkSession.sparkContext.broadcast(index)
+    names = [f.name for f in fields]
 
-    def _f(url, html):  # pd.Series x2 -> pd.DataFrame (struct)
-        n = len(url)
-        lons = np.empty(n, dtype=np.float64)
-        lats = np.empty(n, dtype=np.float64)
-        ncs = []
-        for i, (u, h) in enumerate(zip(url, html)):
-            lons[i], lats[i] = geotag_pair(u, h)
-            t = extract_text_bytes(h)
-            ncs.append(None if t is None else len(t))
-        out = pd.DataFrame(
-            {"lon": lons, "lat": lats, "n_chars": pd.array(ncs, dtype="Int64")}
-        )
-        if index_bc is not None:
-            out["polygon_ids"] = index_bc.value.ids_per_row(lons, lats)
-        return out
+    def enrich(batches):
+        for rb in batches:
+            url, html = rb.column("url"), rb.column("html")
+            lon, lat = geotag_batch(url, html)
+            n_chars = pc.utf8_length(extract_text_batch(html)).cast(pa.int64())
+            cols = [rb.column(c) for c in keep_cols] + [pa.array(lon), pa.array(lat), n_chars]
+            if bc is not None:
+                row, pid = bc.value.locate(lon, lat)
+                offsets = np.searchsorted(row, np.arange(len(lon) + 1)).astype(np.int32)
+                cols.append(pa.ListArray.from_arrays(pa.array(offsets), pa.array(pid, id_arrow)))
+            yield pa.RecordBatch.from_arrays(cols, names=names)
 
-    return F.pandas_udf(_f, T.StructType(fields))
-
-
-def _enriched_points(docs: DataFrame, keep_cols: tuple[str, ...] = ()) -> DataFrame:
-    """(keep_cols..., lon, lat, n_chars) through the fused enrich crossing,
-    without the locate: html and the extracted text never come back."""
-    return docs.select(
-        *keep_cols, _enrich_fused_udf()(F.col("url"), F.col("html")).alias("_g")
-    ).select(*keep_cols, "_g.lon", "_g.lat", "_g.n_chars")
+    inputs = [*keep_cols, *(c for c in ("url", "html") if c not in keep_cols)]
+    return docs.select(*inputs).mapInArrow(enrich, T.StructType(fields))
 
 
 def located_points(
@@ -104,20 +107,15 @@ def located_points(
     index = pip.polygon_index(polygons, cell_level, pip.MAX_BROADCAST_POLYGONS)
     if index is None:
         return pip_join(
-            _enriched_points(docs, keep_cols),
+            _enrich(docs, keep_cols),
             polygons,
             cell_level=cell_level,
             broadcast_polygons=False,
             salt_factor=salt_factor,
         )
-    fused = _enrich_fused_udf(
-        docs.sparkSession.sparkContext.broadcast(index),
-        polygons.schema["polygon_id"].dataType,
-    )
-    located = docs.select(*keep_cols, fused(F.col("url"), F.col("html")).alias("_g"))
+    located = _enrich(docs, keep_cols, index, polygons.schema["polygon_id"].dataType)
     return located.select(
-        *keep_cols, "_g.lon", "_g.lat", "_g.n_chars",
-        F.explode("_g.polygon_ids").alias("polygon_id"),
+        *keep_cols, "lon", "lat", "n_chars", F.explode("polygon_ids").alias("polygon_id")
     )
 
 
@@ -172,7 +170,7 @@ def spine_resumable(
     enriched = mgr.stage(
         spark,
         "enrich",
-        lambda: _enriched_points(docs, ("url",)),
+        lambda: _enrich(docs, ("url",)),
         input_fingerprint=input_fingerprint,
     )
     # the polygons input must invalidate the join checkpoint too: folding

@@ -11,7 +11,7 @@ oracle can reproduce it exactly (see plans.registry PTS_SQL).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 TABLES = (
@@ -134,6 +134,23 @@ def replicate_docs(
     )
 
 
+def _grid4(units: Column) -> Column:
+    """`units` * 1e-4 as "%.4f" renders it, from integer arithmetic: sign,
+    integer part, '.', the 4-digit fraction. Not cast("string") of the
+    double: Java's Double.toString turns |v| < 1e-3 into scientific notation
+    ("1.0E-4"), which the geotag meta regex rejects. On this exact grid
+    nothing rounds, so this equals format_string("%.4f") of the double
+    (java.util.Formatter per value) without its cost."""
+    mag = F.abs(units)
+    frac = mag % 10_000
+    return F.concat(
+        F.when(units < 0, F.lit("-")).otherwise(F.lit("")),
+        ((mag - frac) / 10_000).cast("long").cast("string"),
+        F.lit("."),
+        F.lpad(frac.cast("string"), 4, "0"),
+    )
+
+
 def synth_documents_web(
     docs: DataFrame, replication: int | None = None, spark: SparkSession | None = None
 ) -> DataFrame:
@@ -154,34 +171,31 @@ def synth_documents_web(
         docs = docs.withColumn("rep", F.lit(0))
 
     uid = F.col("doc_id") + F.col("rep") * F.lit(1_000_000)
-    lon = (uid * LON_MUL) % LON_MOD / 10_000.0 - 180.0
-    lat = (uid * LAT_MUL) % LAT_MOD / 10_000.0 - 85.0
-    # %.4f, NOT cast("string"): Java Double.toString turns |v| < 1e-3 into
-    # scientific notation ("1.0E-4") which the geotag meta regex rejects, so
-    # those docs silently fell to the url-hash fallback and landed on wrong
-    # tiles. The grid is exactly 4 decimals, so %.4f is lossless.
+    # the point in 1e-4 degree units: lon = (uid * LON_MUL) % LON_MOD / 1e4
+    # - 180, lat = (uid * LAT_MUL) % LAT_MOD / 1e4 - 85
+    lon = (uid * LON_MUL) % LON_MOD - 1_800_000
+    lat = (uid * LAT_MUL) % LAT_MOD - 850_000
     meta = F.when(
         uid % 10 != 0,
         F.concat(
             F.lit('<meta name="geo.position" content="'),
-            F.format_string("%.4f", lat),
+            _grid4(lat),
             F.lit(";"),
-            F.format_string("%.4f", lon),
+            _grid4(lon),
             F.lit('"/>'),
         ),
     ).otherwise(F.lit(""))
-    html = F.encode(
-        F.concat(
-            F.lit("<html><head><title>D"),
-            uid.cast("string"),
-            F.lit("</title>"),
-            meta,
-            F.lit("</head><body><p>"),
-            F.col("text"),
-            F.lit("</p></body></html>"),
-        ),
-        "utf-8",
-    )
+    # cast, not encode(..., "utf-8"): the same bytes without encode's
+    # per-row UTF-8 validation
+    html = F.concat(
+        F.lit("<html><head><title>D"),
+        uid.cast("string"),
+        F.lit("</title>"),
+        meta,
+        F.lit("</head><body><p>"),
+        F.col("text"),
+        F.lit("</p></body></html>"),
+    ).cast("binary")
     return docs.select(
         F.concat(F.lit("https://example.org/d/"), F.lpad(uid.cast("string"), 10, "0")).alias("url"),
         F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),

@@ -179,8 +179,8 @@ def test_spine_resumable_end_to_end(spark, tmp_path):
 
 
 def test_spine_resumable_enrich_is_one_crossing_without_text(spark, tmp_path, monkeypatch):
-    """The enrich stage runs the spine's fused extract/geotag UDF: exactly
-    one Python node, and the checkpoint holds no html or text column."""
+    """The enrich stage runs the spine's enrich crossing: exactly one
+    Python node, and the checkpoint holds no html or text column."""
     import re
 
     from conftest import SF_SMOKE
@@ -206,7 +206,7 @@ def test_spine_resumable_enrich_is_one_crossing_without_text(spark, tmp_path, mo
     ).collect()
     plan = built["enrich"]._jdf.queryExecution().executedPlan().toString()
     assert re.findall(r"\w*(?:EvalPython|InPandas|InArrow)\w*", plan) == [
-        "ArrowEvalPython"
+        "MapInArrow"
     ]
     cols = spark.read.parquet(CheckpointManager(root).data_dir("enrich")).columns
     assert cols == ["url", "lon", "lat", "n_chars"]

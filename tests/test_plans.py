@@ -290,9 +290,10 @@ def test_spine_python_stages_are_arrow_batched(spark):
     from imposm2_spark.plans.pipeline import spine
 
     p = plan_of(spine(docs, polys, zooms=(2,), cell_level=4))
-    # extract + geotag + point-in-polygon in ONE Arrow crossing (html
-    # crosses once), the polygon ids exploded JVM-side: no join
-    assert python_nodes(p) == ["ArrowEvalPython"]
+    # extract + geotag + point-in-polygon in ONE whole-batch Arrow crossing
+    # (html crosses once), the polygon ids exploded JVM-side: no join
+    assert python_nodes(p) == ["MapInArrow"]
+    assert "ArrowEvalPython" not in p
     assert join_nodes(p) == []
 
 

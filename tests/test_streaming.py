@@ -240,9 +240,34 @@ def test_stream_spine_one_python_node_no_join(spark, tmp_path):
     q.awaitTermination(180)
     plan = q._jsq.explainInternal(False)
     assert re.findall(r"\w*(?:EvalPython|InPandas|InArrow)\w*", plan) == [
-        "ArrowEvalPython"
+        "MapInArrow"
     ], plan
     assert "Join" not in plan, plan
+
+
+def test_located_points_keeps_the_event_time_watermark(spark, monkeypatch):
+    """The spine's Arrow crossing returns new columns; a carried event-time
+    column must still carry its watermark, or the windowed aggregate after
+    it keeps its state forever."""
+    from imposm2_spark.operators import pip
+    from imposm2_spark.plans.pipeline import located_points
+    from imposm2_spark.sources import fixtures
+
+    docs = spark.readStream.format("rate").load().select(
+        F.concat(F.lit("https://x.example/"), F.col("value").cast("string")).alias("url"),
+        F.lit("<p>x</p>").cast("binary").alias("html"),
+        F.col("timestamp").alias("warc_ts"),
+    ).withWatermark("warc_ts", "1 minute")
+    polys = fixtures.world_octants_df(spark, cell_level=4)
+
+    def delay():
+        out = located_points(docs, polys, 4, ("warc_ts",))
+        return out.schema["warc_ts"].metadata.get("spark.watermarkDelayMs")
+
+    assert delay() == 60_000
+    # over the broadcast cap: the enrich crossing, then pip_join's shuffle path
+    monkeypatch.setattr(pip, "MAX_BROADCAST_POLYGONS", 1)
+    assert delay() == 60_000
 
 
 def test_curated_spine_dedup_suppresses_cross_batch_through_restart(spark, tmp_path):
