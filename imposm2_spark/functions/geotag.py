@@ -8,9 +8,9 @@ tag, use it; otherwise derive a deterministic fallback from the url:
 Reference analog: imposm2's node (lon, lat) is intrinsic to the input; the
 graft derives it, after which documents play the node-stream role (SURVEY §1.3).
 
-geotag_udf runs geotag_pair as one Arrow-batched pandas UDF returning a struct;
-the spine's crossing runs geotag_batch, the same rule over a whole Arrow batch
-(one regex pass over its html bytes, blake2b only for the rows without a tag).
+geotag_pair applies the rule to one document; geotag_batch applies it to a
+whole Arrow batch (one regex pass over its html bytes, blake2b only for the
+rows without a tag) inside plans.pipeline's one enrich crossing.
 """
 
 from __future__ import annotations
@@ -19,11 +19,7 @@ import re
 from hashlib import blake2b
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..kernels.texthash import value_buffer
 
@@ -99,25 +95,3 @@ def geotag_batch(url: pa.Array, html: pa.Array) -> tuple[np.ndarray, np.ndarray]
         lon[rest] = [fallback_lon(u) for u in urls]
         lat[rest] = [fallback_lat(u) for u in urls]
     return lon, lat
-
-
-_GEO_SCHEMA = T.StructType(
-    [T.StructField("lon", T.DoubleType()), T.StructField("lat", T.DoubleType())]
-)
-
-
-@F.pandas_udf(_GEO_SCHEMA)
-def geotag_udf(url: pd.Series, html: pd.Series) -> pd.DataFrame:
-    n = len(url)
-    lon = np.empty(n, dtype=np.float64)
-    lat = np.empty(n, dtype=np.float64)
-    for i, (u, h) in enumerate(zip(url, html)):
-        lon[i], lat[i] = geotag_pair(u, h)
-    return pd.DataFrame({"lon": lon, "lat": lat})
-
-
-def geotag(url_col: Column | str, html_col: Column | str) -> Column:
-    """df.withColumn('geo', geotag('url', 'html')) -> struct<lon double, lat double>."""
-    u = F.col(url_col) if isinstance(url_col, str) else url_col
-    h = F.col(html_col) if isinstance(html_col, str) else html_col
-    return geotag_udf(u, h)

@@ -2,7 +2,8 @@
 
 North-rule invariant (BASELINE.json input_hint): byte-identical extracted text
 per url. Reference analog: imposm2's parse stage (imposm.parser XML/PBF decode)
-— here the "parse" is HTML to text, executed as an Arrow-batched pandas UDF.
+— here the "parse" is HTML to text, run over whole Arrow batches
+(extract_text_batch) inside plans.pipeline's one enrich crossing.
 
 FROZEN SPEC v1 — do not change without regolding tests/test_textx.py:
   1. Decode input bytes as UTF-8 (errors='replace').
@@ -27,11 +28,7 @@ from html import unescape
 from html.parser import HTMLParser
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..kernels.texthash import value_buffer
 
@@ -259,18 +256,3 @@ def extract_text_bytes_reference(html: bytes | None) -> str | None:
     p.feed(html.decode("utf-8", errors="replace"))
     p.close()
     return p.text()
-
-
-def extract_text_series(html: pd.Series) -> pd.Series:
-    """Vectorized batch loop over one Arrow batch (pandas Series of bytes)."""
-    return html.map(extract_text_bytes)
-
-
-@F.pandas_udf(T.StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    return extract_text_series(html)
-
-
-def extract_text(html_col: Column | str) -> Column:
-    """DataFrame-facing entry: df.withColumn('text', extract_text(F.col('html')))."""
-    return extract_text_udf(F.col(html_col) if isinstance(html_col, str) else html_col)

@@ -17,10 +17,11 @@ side is pulled to the driver once, capped at `max_broadcast_polygons`, and
 built into a PolygonIndex: the sorted covering cells with their polygons,
 and the rings by polygon. It ships once per executor as a Spark broadcast.
 The physical plan is scan -> ONE ArrowEvalPython over (lon, lat) -> explode:
-the UDF runs PolygonIndex.locate over the whole Arrow batch (cell encode,
-searchsorted candidate lookup, per-polygon refine) and returns each point's
-containing polygon ids. There is no join, no exchange and no second Python
-crossing; plans.pipeline.spine calls the same locate inside its enrich UDF.
+the Arrow UDF runs PolygonIndex.located_ids over the whole Arrow batch (cell
+encode, searchsorted candidate lookup, per-polygon refine) and returns each
+point's containing polygon ids as a ListArray. There is no join, no exchange
+and no second Python crossing; plans.pipeline's enrich crossing builds the
+same ListArray with the same method.
 
 Shuffle path (polygon side over the cap, or broadcast_polygons=False): the
 polygon side is exploded to one row per covering cell and equi-joined with
@@ -38,9 +39,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from ..functions.spatial import cell_encode_col
 from ..kernels import geom
@@ -151,13 +154,13 @@ class PolygonIndex:
                 keep[grp] = geom.points_in_rings(lon[r], lat[r], self.rings[poly[grp[0]]])
         return row[keep], self.polygon_ids[poly[keep]]
 
-    def ids_per_row(self, lon, lat) -> list[list]:
-        """locate() regrouped per row: the containing polygon ids of each
-        point, [] for none — the shape of an ARRAY column of a pandas UDF."""
+    def located_ids(self, lon, lat, id_type: pa.DataType) -> pa.ListArray:
+        """locate() regrouped per row: each point's containing polygon ids
+        (Arrow type `id_type`), [] for none, as one ListArray whose offsets
+        are the row bounds of locate()'s pairs."""
         row, pid = self.locate(lon, lat)
-        bounds = np.searchsorted(row, np.arange(len(lon) + 1)).tolist()
-        ids = pid.tolist()
-        return [ids[a:b] for a, b in zip(bounds[:-1], bounds[1:])]
+        offsets = np.searchsorted(row, np.arange(len(lon) + 1)).astype(np.int32)
+        return pa.ListArray.from_arrays(pa.array(offsets), pa.array(pid, id_type))
 
 
 def polygon_index(
@@ -183,10 +186,11 @@ def polygon_index(
 
 def _locate_udf(index_bc, id_type: T.DataType):
     """(lon, lat) -> ARRAY of the containing polygon ids, per Arrow batch."""
+    id_arrow = to_arrow_type(id_type)
 
-    @F.pandas_udf(T.ArrayType(id_type))
-    def _locate(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        return pd.Series(index_bc.value.ids_per_row(lon, lat))
+    @F.arrow_udf(T.ArrayType(id_type))
+    def _locate(lon: pa.Array, lat: pa.Array) -> pa.Array:
+        return index_bc.value.located_ids(lon, lat, id_arrow)
 
     return _locate
 

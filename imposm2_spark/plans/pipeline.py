@@ -16,9 +16,15 @@ A polygon side over pip.MAX_BROADCAST_POLYGONS instead runs the enrich
 crossing without the locate, then pip_join's cell-key shuffle join and
 refine.
 
-located_points is that enrich + locate layer; the streaming spine
-(streaming.ingest) runs it per micro-batch. spine_resumable checkpoints the
-same enrich crossing (_enrich without the locate) before its pip_join stage.
+_enrich is the one document-enrich crossing of the package. Its callers:
+  * located_points, the enrich + locate layer (with the index under the
+    cap, without it over the cap); the spine and the streaming spines
+    (streaming.ingest) run it, the latter per micro-batch;
+  * spine_resumable, which checkpoints the crossing without the locate
+    before its pip_join stage;
+  * streaming.ingest.enrich (the stream ingest's sink keeps the extracted
+    text) and streaming.ingest.stream_tile_counts (geotag only, no
+    extraction).
 """
 
 from __future__ import annotations
@@ -34,24 +40,30 @@ DEFAULT_ZOOMS = (8, 12)
 
 
 def _enrich(
-    docs: DataFrame, keep_cols: tuple[str, ...] = (), index=None, id_type=None
+    docs: DataFrame,
+    keep_cols: tuple[str, ...] = (),
+    index=None,
+    id_type=None,
+    text_col: str | None = "n_chars",
 ) -> DataFrame:
-    """(keep_cols..., lon, lat, n_chars[, polygon_ids]) of every document:
-    the spine's Python stage as ONE mapInArrow over (keep_cols..., url,
-    html) Arrow batches. html crosses once and never comes back.
+    """(keep_cols..., lon, lat[, text_col][, polygon_ids]) of every
+    document: the Python stage of every document path (callers in the
+    module header) as ONE mapInArrow over (keep_cols..., url, html) Arrow
+    batches. html crosses once and never comes back.
 
-    * geotag and extraction run over the whole batch
-      (functions.geotag.geotag_batch, functions.textx.extract_text_batch,
-      each equal to its per-row function on every row); n_chars is
-      pc.utf8_length of the extracted text, the codepoint count Spark's
-      length() computes, so the text never ships back;
+    * geotag runs over the whole batch (functions.geotag.geotag_batch,
+      equal to geotag_pair on every row);
+    * `text_col` names what the extracted text
+      (functions.textx.extract_text_batch, equal to extract_text_bytes on
+      every row) returns as: "n_chars" is pc.utf8_length of it, the
+      codepoint count Spark's length() computes, so the text never ships
+      back; "text_extracted" is the text itself; None runs no extraction;
     * with `index` (an operators.pip.PolygonIndex, broadcast here) the
-      batch's points are located in the same crossing: polygon_ids is a
-      ListArray of each point's containing polygon ids (of type `id_type`),
-      with offsets from the row ids locate() returns;
+      batch's points are located in the same crossing: polygon_ids is
+      PolygonIndex.located_ids, a ListArray of each point's containing
+      polygon ids (of type `id_type`);
     * keep columns pass through untouched, their fields (and any event-time
       watermark on them) declared as the input's."""
-    import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
     from pyspark.sql import types as T
@@ -63,8 +75,10 @@ def _enrich(
     fields = [docs.schema[c] for c in keep_cols] + [
         T.StructField("lon", T.DoubleType()),
         T.StructField("lat", T.DoubleType()),
-        T.StructField("n_chars", T.LongType()),
     ]
+    if text_col is not None:
+        text_type = T.LongType() if text_col == "n_chars" else T.StringType()
+        fields.append(T.StructField(text_col, text_type))
     bc = id_arrow = None
     if index is not None:
         fields.append(T.StructField("polygon_ids", T.ArrayType(id_type)))
@@ -76,12 +90,12 @@ def _enrich(
         for rb in batches:
             url, html = rb.column("url"), rb.column("html")
             lon, lat = geotag_batch(url, html)
-            n_chars = pc.utf8_length(extract_text_batch(html)).cast(pa.int64())
-            cols = [rb.column(c) for c in keep_cols] + [pa.array(lon), pa.array(lat), n_chars]
+            cols = [rb.column(c) for c in keep_cols] + [pa.array(lon), pa.array(lat)]
+            if text_col is not None:
+                text = extract_text_batch(html)
+                cols.append(pc.utf8_length(text).cast(pa.int64()) if text_col == "n_chars" else text)
             if bc is not None:
-                row, pid = bc.value.locate(lon, lat)
-                offsets = np.searchsorted(row, np.arange(len(lon) + 1)).astype(np.int32)
-                cols.append(pa.ListArray.from_arrays(pa.array(offsets), pa.array(pid, id_arrow)))
+                cols.append(bc.value.located_ids(lon, lat, id_arrow))
             yield pa.RecordBatch.from_arrays(cols, names=names)
 
     inputs = [*keep_cols, *(c for c in ("url", "html") if c not in keep_cols)]

@@ -7,7 +7,8 @@ built on Structured Streaming file sources instead of OSM diff files:
 
   * `stream_ingest` — readStream over a landing directory of document parquet
     (the Iceberg-table stand-in), per-microbatch extract+geotag enrichment
-    (the sink keeps `text_extracted`), parquet append sink. Exactly-once per
+    in the batch spine's one Arrow crossing (plans.pipeline._enrich; the
+    sink keeps `text_extracted`), parquet append sink. Exactly-once per
     input file via the streaming checkpoint (file-source tracking +
     idempotent sink commit); `availableNow` drains the backlog and stops, so
     batch backfills and continuous tailing share one code path.
@@ -16,7 +17,8 @@ built on Structured Streaming file sources instead of OSM diff files:
     broadcast cap) feeding watermarked windowed tile stats.
   * `stream_tile_counts` — event-time windowed aggregation (warc_ts) with a
     watermark for late documents: counts per (window, tile) in update mode,
-    the streaming twin of the spine's tile groupBy.
+    the streaming twin of the spine's tile groupBy. Its lon/lat come from
+    the same crossing, run without extraction.
 
 At production scale the landing dir is an object-store prefix and the sink an
 Iceberg table (sources.catalog); the streaming checkpoint dir carries offsets
@@ -33,10 +35,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from ..functions.geotag import geotag
 from ..functions.spatial import cell_encode_col
-from ..functions.textx import extract_text
-from ..plans.pipeline import located_points
+from ..plans.pipeline import _enrich, located_points
 
 DOCUMENTS_WEB_SCHEMA = T.StructType(
     [
@@ -67,20 +67,15 @@ def read_document_stream(
     return reader.parquet(landing_dir)
 
 
-def _geotagged(docs: DataFrame) -> DataFrame:
-    """docs + (lon, lat) from geotag(url, html)."""
-    g = geotag("url", "html")
-    return docs.withColumn("_geo", g).select(
-        "*", F.col("_geo.lon").alias("lon"), F.col("_geo.lat").alias("lat")
-    ).drop("_geo")
-
-
 def enrich(docs: DataFrame, cell_level: int = 12) -> DataFrame:
-    """Shared enrichment: extract + geotag + cell id, html dropped post-use."""
-    out = _geotagged(docs.withColumn("text_extracted", extract_text("html")))
-    return out.withColumn(
-        "cell", cell_encode_col(F.col("lon"), F.col("lat"), cell_level)
-    ).drop("html")
+    """Shared enrichment: every non-html column, then text_extracted, lon,
+    lat (extract + geotag in one Arrow crossing) and the JVM-side cell id."""
+    keep = tuple(c for c in docs.columns if c != "html")
+    out = _enrich(docs, keep, text_col="text_extracted")
+    return out.select(
+        *keep, "text_extracted", "lon", "lat",
+        cell_encode_col(F.col("lon"), F.col("lat"), cell_level).alias("cell"),
+    )
 
 
 def stream_ingest(
@@ -261,7 +256,7 @@ def stream_tile_counts(
     from ..functions.spatial import tile_x, tile_y
 
     src = read_document_stream(spark, landing_dir, max_files_per_trigger)
-    enriched = _geotagged(src).withWatermark("warc_ts", watermark)
+    enriched = _enrich(src, ("warc_ts",), text_col=None).withWatermark("warc_ts", watermark)
     counts = (
         enriched.groupBy(
             F.window("warc_ts", window).alias("w"),

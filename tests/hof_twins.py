@@ -9,8 +9,9 @@
   ngram_jaccard_pairs uses them.
 * token_count_bpe and repetition_metrics_hof: the expression forms of the
   textstats kernel's n_bpe and of curation.repetition_metrics' Arrow kernel.
-* staged_enrich: the spine's enrich as two separate UDF projections (extract,
-  then geotag), the reference for the fused crossing of plans.pipeline.
+* staged_enrich: the spine's enrich as two separate row-loop pandas UDF
+  projections over extract_text_bytes then geotag_pair, the reference for
+  the one whole-batch crossing of plans.pipeline.
 
 A kernel or fused path is correct when it matches these row for row. They
 are not library code — no operator calls them.
@@ -18,12 +19,15 @@ are not library code — no operator calls them.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from imposm2_spark.functions.geotag import geotag
+from imposm2_spark.functions.geotag import geotag_pair
 from imposm2_spark.functions.text_analysis import BPE_TOKEN_RE, CHAR_MOD
-from imposm2_spark.functions.textx import extract_text
+from imposm2_spark.functions.textx import extract_text_bytes
 from imposm2_spark.operators.curation import (
     DUP_TOKEN_CHAR_FRAC_MAX,
     DUP_TOKEN_FRAC_MAX,
@@ -376,14 +380,26 @@ def repetition_metrics_hof(
     )
 
 
+@F.pandas_udf(T.StringType())
+def _extract_text_rows(html: pd.Series) -> pd.Series:
+    return html.map(extract_text_bytes)
+
+
+@F.pandas_udf(
+    T.StructType([T.StructField("lon", T.DoubleType()), T.StructField("lat", T.DoubleType())])
+)
+def _geotag_rows(url: pd.Series, html: pd.Series) -> pd.DataFrame:
+    pairs = np.array([geotag_pair(u, h) for u, h in zip(url, html)], dtype=np.float64)
+    return pd.DataFrame(pairs.reshape(len(url), 2), columns=["lon", "lat"])
+
+
 def staged_enrich(docs: DataFrame) -> DataFrame:
-    """docs + (text_extracted, lon, lat): the spine's enrich as two UDF
-    projections, extract_text(html) then geotag(url, html). The fused
-    crossing of plans.pipeline must reproduce its rows."""
-    g = geotag("url", "html")
+    """docs + (text_extracted, lon, lat): the spine's enrich as two row-loop
+    UDF projections, extract_text_bytes(html) then geotag_pair(url, html).
+    The one crossing of plans.pipeline must reproduce its rows."""
     return (
-        docs.withColumn("text_extracted", extract_text("html"))
-        .withColumn("_geo", g)
+        docs.withColumn("text_extracted", _extract_text_rows("html"))
+        .withColumn("_geo", _geotag_rows("url", "html"))
         .select("*", F.col("_geo.lon").alias("lon"), F.col("_geo.lat").alias("lat"))
         .drop("_geo")
     )

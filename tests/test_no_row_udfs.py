@@ -139,3 +139,31 @@ def test_no_caller_less_library_code():
             elif node.name.startswith("_") and not users & set(lib):
                 offenders.append(f"{rel}:{node.lineno}: {node.name} has only test callers")
     assert not offenders, "caller-less library code:\n" + "\n".join(offenders)
+
+
+def test_one_document_enrich_path():
+    """The whole-batch document kernels have ONE library caller, the enrich
+    crossing every document path runs (plans/pipeline.py::_enrich), and
+    their modules stay free of pandas and pyspark: a second, per-row
+    document path cannot come back unnoticed."""
+    kernels = {"extract_text_batch", "geotag_batch"}
+    callers = {k: set() for k in kernels}
+    for py in PKG.rglob("*.py"):
+        rel = py.relative_to(PKG).as_posix()
+        for top in ast.parse(py.read_text()).body:
+            for node in ast.walk(top):
+                if not isinstance(node, ast.Call):
+                    continue
+                f = node.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                if name in kernels:
+                    callers[name].add(f"{rel}::{getattr(top, 'name', '<module>')}")
+    assert callers == {k: {"plans/pipeline.py::_enrich"} for k in kernels}, callers
+    for rel in ("functions/textx.py", "functions/geotag.py"):
+        imported = set()
+        for node in ast.walk(ast.parse((PKG / rel).read_text())):
+            if isinstance(node, ast.Import):
+                imported |= {a.name.split(".")[0] for a in node.names}
+            elif isinstance(node, ast.ImportFrom) and node.level == 0:
+                imported.add(node.module.split(".")[0])
+        assert not imported & {"pandas", "pyspark"}, (rel, imported)

@@ -4,6 +4,7 @@ over-cap (shuffle-join) path against its broadcast path."""
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from imposm2_spark.kernels import cells as kcells
@@ -118,13 +119,16 @@ def test_locate_empty_batch_and_empty_index():
     index = PolygonIndex.from_rows(rows, LEVEL)
     row, pid = index.locate(np.empty(0), np.empty(0))
     assert len(row) == 0 and len(pid) == 0
-    assert index.ids_per_row(np.empty(0), np.empty(0)) == []
+    assert index.located_ids(np.empty(0), np.empty(0), pa.int64()).to_pylist() == []
     empty = PolygonIndex([], [], [], LEVEL)
-    assert empty.ids_per_row(np.r_[1.0, np.nan], np.r_[1.0, 2.0]) == [[], []]
+    ids = empty.located_ids(np.r_[1.0, np.nan], np.r_[1.0, 2.0], pa.int64())
+    assert ids.to_pylist() == [[], []]
 
 
 def test_locate_returns_pairs_by_row():
-    """locate's pairs are grouped by row, and ids_per_row regroups them."""
+    """locate's pairs are grouped by row, and located_ids regroups them
+    into a ListArray (NULL coordinates, as an Arrow UDF hands them over,
+    match nothing)."""
     rows = _polygons_pdf().to_dict("records")
     index = PolygonIndex.from_rows(rows, LEVEL)
     lon = np.r_[23.2, 40.0, 30.5, np.nan]
@@ -132,7 +136,11 @@ def test_locate_returns_pairs_by_row():
     row, pid = index.locate(lon, lat)
     assert row.tolist() == sorted(row.tolist())
     assert sorted(zip(row.tolist(), pid.tolist())) == [(0, 20), (0, 21), (0, 22), (2, 23)]
-    assert [sorted(x) for x in index.ids_per_row(lon, lat)] == [[20, 21, 22], [], [23], []]
+    ids = index.located_ids(lon, lat, pa.int32())
+    assert ids.type == pa.list_(pa.int32())
+    assert [sorted(x) for x in ids.to_pylist()] == [[20, 21, 22], [], [23], []]
+    arrow = index.located_ids(pa.array([23.2, None, 30.5]), pa.array([23.2, 1.0, None]), pa.int64())
+    assert [sorted(x) for x in arrow.to_pylist()] == [[20, 21, 22], [], []]
 
 
 def test_pip_join_empty_points(spark, frames):

@@ -61,14 +61,67 @@ def test_stream_ingest_exactly_once_and_resume(spark, tmp_path):
         testdata.synth_documents_web(
             testdata.load(spark, "/root/testdata/sf0.001", "documents")
         )
-    ).select("url", "lon", "lat")
-    joined = final.select("url", F.col("lon").alias("slon"), F.col("lat").alias("slat")).join(
-        batch, "url"
-    )
+    ).select("url", "lon", "lat", "text_extracted")
+    joined = final.select(
+        "url",
+        F.col("lon").alias("slon"),
+        F.col("lat").alias("slat"),
+        F.col("text_extracted").alias("stext"),
+    ).join(batch, "url")
+    assert joined.count() == n1  # the late urls are not in the batch side
     mismatch = joined.where(
-        (F.col("slon") != F.col("lon")) | (F.col("slat") != F.col("lat"))
+        (F.col("slon") != F.col("lon"))
+        | (F.col("slat") != F.col("lat"))
+        | ~F.col("stext").eqNullSafe(F.col("text_extracted"))
     ).count()
     assert mismatch == 0
+
+
+def test_stream_ingest_dirty_rows_one_per_batch(spark, tmp_path):
+    """A micro-batch of NULL url, NULL html, empty html and non-ASCII html
+    rows, each its own Arrow batch (maxRecordsPerBatch=1), comes out of the
+    ingest crossing equal to the row functions, in the sink's column order."""
+    import datetime
+
+    from imposm2_spark.functions.geotag import geotag_pair
+    from imposm2_spark.functions.textx import extract_text_bytes
+    from imposm2_spark.streaming import stream_ingest
+    from imposm2_spark.streaming.ingest import DOCUMENTS_WEB_SCHEMA
+
+    ts = datetime.datetime(2024, 1, 1)
+    rows = [
+        (None, ts, b"<p>null url</p>", "t0", "en"),
+        ("https://d.example/1", ts, None, "t1", "en"),
+        ("https://d.example/2", ts, b"", "t2", "en"),
+        ("https://d.example/3", ts,
+         '<meta name="geo.position" content="48.2;16.3"><p>caf\u00e9 \u2603\u00a0x</p>'.encode(),
+         "t3", "de"),
+        ("https://d.example/4", ts, "<p>\u4e2d\u6587 &amp; b</p>".encode(), None, None),
+    ]
+    landing = str(tmp_path / "landing")
+    spark.createDataFrame(rows, DOCUMENTS_WEB_SCHEMA).coalesce(1).write.parquet(landing)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    orig = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        q = stream_ingest(spark, landing, str(tmp_path / "out"), str(tmp_path / "ckpt"))
+        q.awaitTermination(120)
+    finally:
+        spark.conf.set(key, orig)
+    out = spark.read.parquet(str(tmp_path / "out"))
+    assert out.columns == [
+        "url", "warc_ts", "text", "lang", "text_extracted", "lon", "lat", "cell"
+    ]
+    got = {r.text: r for r in out.collect()}
+    assert len(got) == len(rows)
+    for url, _, html, text, _ in rows:
+        r = got[text]
+        assert r.url == url
+        assert r.text_extracted == extract_text_bytes(html)
+        assert (r.lon, r.lat) == geotag_pair(url, html)
+        assert r.cell is not None
+    assert got["t3"].text_extracted == "caf\u00e9 \u2603 x"
+    assert (got["t3"].lon, got["t3"].lat) == (16.3, 48.2)
 
 
 def test_stream_tile_counts_watermark(spark, tmp_path):
@@ -93,12 +146,15 @@ def test_stream_tile_counts_watermark(spark, tmp_path):
     assert len(rows) > 0
     assert sum(r[3] for r in rows) == 500  # every doc lands in one tile window
     assert all(r[1] is not None and r[2] is not None for r in rows)
-    # the counts consume only lon/lat: one Python node, geotag, no extract
+    # the counts consume only lon/lat: the one enrich crossing, run without
+    # extraction (no n_chars or text_extracted among its outputs)
     plan = q._jsq.explainInternal(False)
     assert re.findall(r"\w*(?:EvalPython|InPandas|InArrow)\w*", plan) == [
-        "ArrowEvalPython"
+        "MapInArrow"
     ], plan
-    assert "geotag_udf" in plan and "extract_text_udf" not in plan, plan
+    crossing = [ln for ln in plan.splitlines() if "MapInArrow" in ln]
+    assert len(crossing) == 1 and "lon#" in crossing[0], plan
+    assert "n_chars" not in crossing[0] and "text_extracted" not in crossing[0], plan
 
 
 def test_stateful_stream_dedup_across_batches(spark, tmp_path):
@@ -482,8 +538,8 @@ def test_synth_geo_meta_never_scientific_notation(spark):
     cast('string') come out as '1.0E-4', which the geotag meta regex
     rejects — the planted-coordinate contract silently degraded to the
     url-hash fallback for those docs. %.4f formatting must round-trip."""
-    from imposm2_spark.functions.geotag import geotag
     from imposm2_spark.sources.testdata import synth_documents_web
+    from imposm2_spark.streaming import enrich
 
     # doc_id solving (uid*7919) % 1_700_000 == 850_001 -> lat == 0.0001
     # (exactly-zero lat only exists at uid % 10 == 0, where the meta tag is
@@ -497,7 +553,7 @@ def test_synth_geo_meta_never_scientific_notation(spark):
     web = synth_documents_web(docs)
     html = web.select("html").collect()[0][0].decode()
     assert "E-" not in html and "E+" not in html, html
-    row = web.select(geotag("url", "html").alias("g")).select("g.lat", "g.lon").collect()[0]
+    row = enrich(web).select("lat", "lon").collect()[0]
     assert abs(row["lat"] - 0.0001) < 1e-9  # planted value, not the fallback
 
 

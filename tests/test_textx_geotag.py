@@ -35,9 +35,11 @@ def test_extractor_golden_cases():
 
 
 def test_extractor_matches_fixture_golden_column():
+    import pyarrow as pa
+
     df = fixtures.make_documents_web(120)
-    extracted = textx.extract_text_series(df["html"])
-    mismatches = df[extracted != df["text"]]
+    extracted = textx.extract_text_batch(pa.array(list(df["html"]), pa.binary())).to_pylist()
+    mismatches = df[[e != t for e, t in zip(extracted, df["text"])]]
     assert len(mismatches) == 0, mismatches[["url", "text"]].head()
 
 
@@ -70,35 +72,37 @@ def test_geotag_fallback_deterministic():
 
 
 @pytest.mark.spark
-def test_extract_udf_batch_invariance(spark):
-    """Byte-identical output at maxRecordsPerBatch 100 vs 10000 (north rule)."""
+def test_enrich_text_batch_invariance(spark):
+    """Byte-identical extracted text per url at maxRecordsPerBatch 100 vs
+    10000 (north rule), through the stream ingest's enrich crossing."""
+    from imposm2_spark.streaming import enrich
+
     pdf = fixtures.make_documents_web(500)
     df = spark.createDataFrame(pdf, schema=fixtures.DOCUMENTS_WEB_SCHEMA)
     results = {}
-    for batch in ("100", "10000"):
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", batch)
-        out = (
-            df.withColumn("tx", textx.extract_text("html"))
-            .select("url", "tx")
-            .collect()
-        )
-        results[batch] = {r.url: r.tx for r in out}
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    orig = spark.conf.get(key)
+    try:
+        for batch in ("100", "10000"):
+            spark.conf.set(key, batch)
+            out = enrich(df).select("url", "text_extracted").collect()
+            results[batch] = {r.url: r.text_extracted for r in out}
+    finally:
+        spark.conf.set(key, orig)
     assert results["100"] == results["10000"]
     golden = dict(zip(pdf["url"], pdf["text"]))
     assert results["10000"] == golden  # byte-identical per url
 
 
 @pytest.mark.spark
-def test_geotag_udf_matches_golden(spark):
+def test_enrich_geotag_matches_golden(spark):
+    from imposm2_spark.streaming import enrich
+
     pdf = fixtures.make_documents_web(300)
     df = spark.createDataFrame(pdf, schema=fixtures.DOCUMENTS_WEB_SCHEMA)
-    from imposm2_spark.functions.geotag import geotag
-
-    rows = df.select("url", geotag("url", "html").alias("g")).select(
-        "url", "g.lon", "g.lat"
-    ).collect()
+    rows = enrich(df).select("url", "lon", "lat").collect()
     golden = {r["url"]: (r["golden_lon"], r["golden_lat"]) for _, r in pdf.iterrows()}
+    assert len(rows) == len(golden)
     for r in rows:
         glon, glat = golden[r.url]
         assert r.lon == pytest.approx(glon, abs=1e-9)
@@ -179,11 +183,12 @@ def test_fast_extractor_takes_fast_path_on_synthetic_pages():
 
 
 def test_geotag_null_url_and_html_do_not_kill_the_batch(spark):
-    """Review r5: a NULL url raised AttributeError inside the pandas UDF and
+    """Review r5: a NULL url raised AttributeError inside the geotag UDF and
     failed the whole Arrow batch; it must hash as the empty string instead
     (deterministic fallback point), and a geo-meta page still wins even
-    with a NULL url."""
-    from imposm2_spark.functions.geotag import fallback_lat, fallback_lon, geotag
+    with a NULL url. A NULL html extracts to NULL."""
+    from imposm2_spark.functions.geotag import fallback_lat, fallback_lon
+    from imposm2_spark.streaming import enrich
 
     rows = [
         (1, None, None),
@@ -191,10 +196,12 @@ def test_geotag_null_url_and_html_do_not_kill_the_batch(spark):
         (3, "https://a.example/x", None),
     ]
     df = spark.createDataFrame(rows, "doc_id long, url string, html binary")
-    got = {r.doc_id: r.geo for r in df.select("doc_id", geotag("url", "html").alias("geo")).collect()}
+    got = {r.doc_id: r for r in enrich(df).collect()}
     assert got[1].lon == fallback_lon("") and got[1].lat == fallback_lat("")
     assert (got[2].lon, got[2].lat) == (16.3, 48.2)
     assert got[3].lon == fallback_lon("https://a.example/x")
+    assert got[1].text_extracted is None and got[3].text_extracted is None
+    assert got[2].text_extracted == ""
 
 
 # ---------------------------------------------------------------------------
