@@ -8,27 +8,27 @@ implements. No imposm2 analog (SURVEY §2.11 graft table, T31).
 Model = (weights: gram -> integer milli-weight, bias, threshold). Features
 are lowercase whitespace word UNIGRAMS plus adjacent "a_b" BIGRAMS; the
 logit is the BIGINT sum of matched weights plus bias — integer arithmetic,
-so results are bit-identical across partitionings, plans, and engines (the
+so results are bit-identical across partitionings and plans (the
 same exactness discipline as T29 PageRank), and a DuckDB oracle can check
 the scoring pass value-for-value.
 
-Two plans, one frozen arithmetic (the T30 BM25 pattern):
+One arithmetic, two plans chosen by the type of `weights`:
 
-  * inline (default for vocabularies <= `max_inline_weights`): the weight
-    table compiles into a literal MAP and the logit is ONE bound-HOF fold
-    over the gram array — zero shuffles, zero joins, the whole scoring
-    pass is a single codegen'd scan (plan-locked exchange-free). A real
-    fastText gate is ~10^5-10^6 grams; a pruned production gate in the
-    10^2-10^3 range fits a 64 KB task binary comfortably.
-  * join (large vocabularies): explode grams -> broadcast equi-join on the
-    weight table -> one map-side-combined per-doc sum, left-joined back so
-    zero-match documents still score (bias only). The corpus never
-    shuffles; the (doc, gram) exchange is the per-doc sum only.
+  * dict weights: a batched mapInPandas kernel (`_score_arrow`) — C-level
+    dict lookups per gram over whole Arrow batches, zero shuffles, the
+    10^12-doc configuration. Its tokenization (trim spaces, lower, ASCII
+    \\s+ split) matches the JVM expression `grams_expr` and is
+    differential-fuzzed against the join plan in tests/test_classify.py,
+    non-ASCII text included.
+  * DataFrame weights (vocabularies too large to ship in a closure):
+    explode grams -> broadcast equi-join on the weight table -> one
+    map-side-combined per-doc sum, left-joined back so zero-match
+    documents still score (bias only). The corpus never shuffles; the
+    (doc, gram) exchange is the per-doc sum only.
 
-Both plans emit identical rows (pytest inline == join). The gram fold
-binds the token array ONCE as a lambda variable (aggregate over a
-1-element array — the HOF re-evaluation guard measured in the r3 n-gram
-fold and the T30 tf fold).
+The join plan's gram fold binds the token array ONCE as a lambda variable
+(aggregate over a 1-element array — the HOF re-evaluation guard measured in
+the r3 n-gram fold and the T30 tf fold).
 """
 
 from __future__ import annotations
@@ -37,11 +37,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 __all__ = ["score_quality", "grams_expr"]
-
-# inline-plan vocabulary cap: a literal map beyond this goes through the
-# broadcast-join plan instead (a >100k-entry literal bloats the plan tree
-# and every task binary; broadcast handles it natively)
-MAX_INLINE_WEIGHTS = 4096
 
 
 def _tokens(text_col: Column) -> Column:
@@ -79,49 +74,21 @@ def score_quality(
     text_col: str = "text",
     bias_milli: int = 0,
     threshold_milli: int = 0,
-    max_inline_weights: int = MAX_INLINE_WEIGHTS,
-    engine: str = "inline",
 ) -> DataFrame:
     """Score every document: (id cols..., n_grams, logit_milli, keep).
 
-    weights: {gram: milli-weight} dict or a DataFrame(gram string,
-    weight_milli long) — a DataFrame always takes the broadcast-join plan.
+    weights: {gram: milli-weight} dict (the mapInPandas kernel) or a
+    DataFrame(gram string, weight_milli long) (the broadcast-join plan).
     logit_milli = bias + sum(matched weights), BIGINT; keep = logit_milli
     >= threshold_milli. Repeated grams count once per occurrence (bag
-    semantics, like fastText's sum over input features).
-
-    engine (dict weights only):
-      * 'inline' — literal-map bound-HOF fold, zero shuffles, pure JVM.
-        The interpreted fold costs ~O(grams x vocab) comparisons per doc
-        (map literals linear-scan in interpreted mode).
-      * 'arrow'  — batched mapInPandas kernel: C-level dict lookups per
-        gram, the 10^12-doc configuration (same successor pattern as the
-        T23 repetition kernel). Tokenization uses an ASCII \\s+ split +
-        lower() matching the JVM expression byte-for-byte on ASCII text
-        (the frozen corpus contract; inline == arrow is differential-
-        fuzzed in tests/test_classify.py). Integer sums -> bit-identical.
-      Vocabularies over `max_inline_weights` fall back to the join plan
-      under 'inline'; 'arrow' handles any dict size.
+    semantics, like fastText's sum over input features). Integer sums, so
+    both plans are bit-identical.
     """
-    ids = [F.col(c) for c in id_cols]
-    grams = grams_expr(F.col(text_col))
-
     if isinstance(weights, dict):
-        if engine == "arrow":
-            return _score_arrow(
-                docs, weights, id_cols, text_col, bias_milli, threshold_milli
-            )
-        if engine != "inline":
-            raise ValueError(f"unknown engine {engine!r}; use 'inline' or 'arrow'")
-        if len(weights) <= max_inline_weights:
-            return _score_inline(
-                docs, weights, ids, grams, bias_milli, threshold_milli
-            )
-        spark = docs.sparkSession
-        weights = spark.createDataFrame(
-            sorted(weights.items()), "gram string, weight_milli long"
+        return _score_arrow(
+            docs, weights, id_cols, text_col, bias_milli, threshold_milli
         )
-    return _score_join(docs, weights, ids, id_cols, grams, bias_milli, threshold_milli)
+    return _score_join(docs, weights, id_cols, text_col, bias_milli, threshold_milli)
 
 
 def _score_arrow(docs, weights, id_cols, text_col, bias_milli, threshold_milli):
@@ -148,7 +115,9 @@ def _score_arrow(docs, weights, id_cols, text_col, bias_milli, threshold_milli):
             texts = pdf[text_col]
             n_grams, logits = [], []
             for t in texts:
-                toks = [x for x in ws_re.split((t or "").strip().lower()) if x]
+                # strip(" "): Spark's trim (the join plan) removes only
+                # spaces; a bare strip() also eats U+00A0, U+2003, \x1c-\x1f
+                toks = [x for x in ws_re.split((t or "").strip(" ").lower()) if x]
                 s = sum(get(tk, 0) for tk in toks)
                 n = len(toks)
                 if n > 1:
@@ -167,31 +136,8 @@ def _score_arrow(docs, weights, id_cols, text_col, bias_milli, threshold_milli):
     return docs.mapInPandas(score_batches, out_schema)
 
 
-def _score_inline(docs, weights, ids, grams, bias_milli, threshold_milli):
-    zero = F.lit(0).cast("long")
-    if weights:
-        items = []
-        for k, v in sorted(weights.items()):
-            items += [F.lit(k), F.lit(int(v)).cast("long")]
-        wmap = F.create_map(*items)
-        lookup = lambda g: F.coalesce(F.element_at(wmap, g), zero)  # noqa: E731
-    else:
-        lookup = lambda g: zero  # noqa: E731
-    scored = docs.select(
-        *ids,
-        F.size(grams).cast("long").alias("n_grams"),
-        (
-            F.aggregate(grams, zero, lambda acc, g: acc + lookup(g))
-            + F.lit(int(bias_milli)).cast("long")
-        ).alias("logit_milli"),
-    )
-    return scored.withColumn(
-        "keep", F.col("logit_milli") >= F.lit(int(threshold_milli)).cast("long")
-    )
-
-
-def _score_join(docs, wdf, ids, id_cols, grams, bias_milli, threshold_milli):
-    base = docs.select(*ids, grams.alias("_grams"))
+def _score_join(docs, wdf, id_cols, text_col, bias_milli, threshold_milli):
+    base = docs.select(*id_cols, grams_expr(F.col(text_col)).alias("_grams"))
     exploded = base.select(
         *[F.col(c) for c in id_cols], F.explode("_grams").alias("gram")
     )

@@ -20,19 +20,11 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-CHAR_MOD = 1_000_000_007  # rolling-hash modulus (shared with operators.dedup)
+from ..kernels.texthash import CHAR_MOD
+from ..kernels.textstats import LANG_ORDER, LANG_STOPWORDS
 
 # BPE-ish token pattern: letter runs, digit runs, single punctuation marks
 BPE_TOKEN_RE = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
-
-# tiny built-in stopword sets for the n-gram/stopword language heuristic
-LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
-    "en": ("the", "and", "of", "to", "in", "is", "a", "that", "for", "it"),
-    "de": ("der", "die", "und", "das", "ist", "von", "zu", "mit", "den", "ein"),
-    "fr": ("le", "la", "et", "les", "des", "un", "une", "est", "du", "que"),
-    "es": ("el", "la", "de", "que", "y", "los", "en", "un", "una", "es"),
-}
-LANG_ORDER = ("en", "de", "fr", "es")  # deterministic argmax tiebreak
 
 
 def ws_tokens(text: Column) -> Column:

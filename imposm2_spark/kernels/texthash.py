@@ -49,8 +49,28 @@ from typing import NamedTuple
 import numpy as np
 import pyarrow as pa
 
-from ..functions.text_analysis import CHAR_MOD
-from ..operators.dedup import _COMBINE, MINHASH_P, N_BANDS, PERMS, SHINGLE_N
+# The text-hash constants live here, with the kernels that use them, so
+# the kernels import without pyspark; functions.text_analysis and
+# operators.dedup (the expression forms) and the oracle SQL import them.
+CHAR_MOD = 1_000_000_007  # rolling-hash modulus of char_hash
+
+# fixed MinHash permutation constants: h_j(x) = (a_j * x + b_j) mod P
+# (random.Random(421), a forced odd; frozen here as literals — regenerating
+# them would silently re-key every stored signature)
+MINHASH_P = 2_147_483_647
+PERMS: tuple[tuple[int, int], ...] = (
+    (1405398811, 1318097825), (1312766851, 546384608), (1859270843, 1895728960),
+    (1060783121, 1428938888), (1048979941, 600572080), (696670829, 1132840846),
+    (1829894313, 1769179632), (963949843, 875721043), (1283395939, 532166178),
+    (809769487, 1147694537), (267364855, 607944294), (2020876781, 1552976924),
+    (56309789, 683420184), (1672092085, 1060610687), (1347391875, 398850620),
+    (1705409389, 1066788577),
+)
+N_BANDS, BAND_ROWS = 4, 4
+assert N_BANDS * BAND_ROWS == len(PERMS)
+
+SHINGLE_N = 3
+_COMBINE = 8191  # token-hash combiner multiplier (shared with oracle SQL)
 
 _MAX_FAST_TOKEN = 4096
 # 31^k mod CHAR_MOD for k < _MAX_FAST_TOKEN

@@ -46,9 +46,17 @@ from __future__ import annotations
 
 import numpy as np
 
-from ..functions.text_analysis import CHAR_MOD, LANG_ORDER, LANG_STOPWORDS
 from .texthash import _MAX_FAST_TOKEN as _MAX_FAST
-from .texthash import _POW31, text_units
+from .texthash import _POW31, CHAR_MOD, text_units
+
+# tiny built-in stopword sets for the n-gram/stopword language heuristic
+LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
+    "en": ("the", "and", "of", "to", "in", "is", "a", "that", "for", "it"),
+    "de": ("der", "die", "und", "das", "ist", "von", "zu", "mit", "den", "ein"),
+    "fr": ("le", "la", "et", "les", "des", "un", "une", "est", "du", "que"),
+    "es": ("el", "la", "de", "que", "y", "los", "en", "un", "una", "es"),
+}
+LANG_ORDER = ("en", "de", "fr", "es")  # deterministic argmax tiebreak
 
 _POW31_CHUNK = int(pow(31, _MAX_FAST, CHAR_MOD))  # 31^4096 mod P
 

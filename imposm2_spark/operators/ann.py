@@ -4,9 +4,11 @@ Graft additions for training-data pipelines (no imposm2 analog; the spatial
 cousin is J5 kNN — same candidate-generation-then-exact-verify shape).
 
   * cosine_topk_brute — exact top-k per query: broadcast the (small) query
-    set, score the full corpus, window top-k. THE baseline; also the verify
-    oracle for the approximate path. Scales linearly in |corpus| x |queries|
-    with zero shuffle on the corpus side (queries broadcast).
+    matrix, score the full corpus in one matmul kernel per Arrow batch
+    (_topk_arrow, shared with the persisted-IVF search), window top-k.
+    The exact reference the approximate paths are recall-tested against.
+    Scales linearly in |corpus| x |queries| with zero shuffle on the corpus
+    side.
   * signature/bucketed LSH (random hyperplanes) — the 10^12-row scale path:
     corpus is bucketed once by signature; each query probes its own bucket
     plus hamming-1 neighbors, so the join touches a tiny corpus slice.
@@ -14,9 +16,12 @@ cousin is J5 kNN — same candidate-generation-then-exact-verify shape).
   * embedding_neardup_window — exact cosine near-dup pairs over a bounded
     candidate window (the verify kernel standalone, SQL-oracle-checked).
 
-Float determinism: vectors are cast float32 -> float64 (exact) and all sums
-run in array order via zip_with/aggregate, so the DuckDB oracle (list_reduce
-in the same order) reproduces similarities bit-for-bit; ranks are ints.
+Float determinism: vectors are cast float32 -> float64 (exact). The
+expression paths (LSH, in-memory IVF, near-dup) sum in array order via
+zip_with/aggregate, so the DuckDB oracle (list_reduce in the same order)
+reproduces their similarities bit-for-bit. The brute/indexed kernel sums
+each row over the fixed dim, so its sims are batch-invariant and can differ
+from the fold only in the last bit; its output is ranks, which are ints.
 
 Hyperplanes are NOT runtime-random: they derive from a fixed integer LCG
 (seeded by plane/dim index) so signatures are stable across runs/sessions —
@@ -82,19 +87,12 @@ def _stack_f64(emb: pd.Series, dim: int) -> np.ndarray:
     return mat.astype(np.float64)
 
 
-def _check_score(score: str) -> None:
-    """Validate up front, in the public entry points — before centroid
-    loads, probe UDFs, or query collects run any cluster work."""
-    if score not in ("hof", "arrow"):
-        raise ValueError(f"score must be 'hof' or 'arrow', got {score!r}")
-
-
 def _sim_col() -> F.Column:
     """The per-candidate HOF similarity expression over the conventional
     column names (_q, _v, _qn, _nn): interpreted zip_with/aggregate fold in
     array order — bit-identical to the DuckDB oracle's list_reduce (the
-    driver rows depend on this). The arrow engine scores in-kernel
-    (_topk_arrow) and never reaches this expression."""
+    driver rows depend on this). Brute and persisted-IVF search score in
+    _topk_arrow instead."""
     return F.try_divide(
         _dot(F.col("_q"), F.col("_v")), F.sqrt(F.col("_qn") * F.col("_nn"))
     )
@@ -110,7 +108,7 @@ def _topk_arrow(
     probes_by_qid: dict | None = None,
     list_col: str = "_list",
 ) -> DataFrame:
-    """score='arrow' engine shared by brute and indexed search: broadcast the
+    """The scoring kernel of brute and indexed search: broadcast the
     query matrix, mapInPandas over the corpus, ONE matmul per Arrow batch,
     emit only per-batch top-(k+1) candidates (plus boundary ties), then the
     usual global _rank_topk.
@@ -146,7 +144,7 @@ def _topk_arrow(
 
     probes_by_qid (indexed search): {qid: set(list_ids)} — a (row, query)
     pair is scored only when the row's `list_col` is in the query's probe
-    set, reproducing the HOF path's equi-join semantics exactly."""
+    set, reproducing the probe-list equi-join of cosine_topk_ivf exactly."""
     spark = corpus.sparkSession
     qids = np.asarray([r[0] for r in q_rows], dtype=np.int64)
     # NULL elements inside a query vector -> NaN (a bare float64 asarray
@@ -266,36 +264,17 @@ def cosine_topk_brute(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id: str = "qid",
-    score: str = "hof",
 ) -> DataFrame:
     """Exact cosine top-k: (qid, vec_id, rank); self-matches excluded.
 
-    score='hof' (default): norms are precomputed per side (O(n)), not inside
-    the pair expression (O(n*q)); the sim formula dot/sqrt(qn*nn) folds in
-    the same sequential order as the DuckDB oracle, so values stay
-    bit-identical. score='arrow': the matmul mapInPandas engine (_topk_arrow
-    — the 10^12-scale configuration; ranks property- AND oracle-tested equal
-    to hof on the driver fixture via the ann_cosine_topk variant row)."""
-    _check_score(score)
-    if score == "arrow":
-        # NULL query vectors have no direction (module docstring): the HOF
-        # path nulls their sims out; here they simply never enter the matrix
-        q_rows = [
-            r for r in queries.select(id_col, vec_col).collect()
-            if r[1] is not None
-        ]
-        return _topk_arrow(corpus, q_rows, k, id_col, vec_col, query_id)
-    c = corpus.select(
-        F.col(id_col),
-        _as_double(F.col(vec_col)).alias("_v"),
-    ).withColumn("_nn", _norm2(F.col("_v")))
-    q = queries.select(
-        F.col(id_col).alias(query_id), _as_double(F.col(vec_col)).alias("_q")
-    ).withColumn("_qn", _norm2(F.col("_q")))
-    cand = c.join(F.broadcast(q), F.col(id_col) != F.col(query_id)).withColumn(
-        "_sim", _sim_col()
-    )
-    return _rank_topk(cand, k, id_col, query_id)
+    Ranks are oracle-tested against the DuckDB fold (ann_cosine_topk) and
+    against the HOF cross-join twin in tests/hof_twins.py."""
+    # NULL query vectors have no direction (module docstring): they never
+    # enter the query matrix, so they emit nothing
+    q_rows = [
+        r for r in queries.select(id_col, vec_col).collect() if r[1] is not None
+    ]
+    return _topk_arrow(corpus, q_rows, k, id_col, vec_col, query_id)
 
 
 # ---------------------------------------------------------------------------
@@ -787,71 +766,47 @@ def cosine_topk_ivf_indexed(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id: str = "qid",
-    score: str = "hof",
 ) -> DataFrame:
     """Search a persisted IVF index with partition pruning: the union of the
     query batch's probe lists becomes a static IN filter on the partition
     column, so the parquet scan touches only those directories
-    (tests/test_plans.py asserts the PartitionFilters in the plan). The
-    probe-list pull is one bounded collect (queries are the small side by
-    contract — they are broadcast into the join anyway)."""
-    _check_score(score)
+    (tests/test_ann_dedup.py asserts the PartitionFilters in the plan), and
+    _topk_arrow scores each row only against the queries that probe its
+    list. The probe-list pull is one bounded collect (queries are the small
+    side by contract — they are broadcast into the kernel anyway)."""
     centroids = _load_centroids(spark, path)
     probe = _make_probe_udf(centroids, nprobe)
-    q_assigned = (
+    rows = (
         queries.select(
             F.col(id_col).alias(query_id),
             _as_double(F.col(vec_col)).alias("_q"),
             probe(F.col(vec_col)).alias("_probes"),
         )
-        .withColumn("_qn", _norm2(F.col("_q")))
-        .select(query_id, "_q", "_qn", F.explode("_probes").alias("_list"))
+        # NULL query vectors never enter the query matrix (as in brute)
+        .where(F.col("_q").isNotNull())
+        .select(query_id, "_q", F.explode("_probes").alias("_list"))
+        .collect()
     )
-    # queries are the small side by contract (they broadcast into the join),
-    # so one bounded collect materializes them: the probe UDF runs exactly
-    # once and the pruning filter is derived from the same rows that join
-    rows = q_assigned.collect()
     probe_lists = sorted({r["_list"] for r in rows})
-    if score == "arrow":
-        # same pruned scan + probe semantics, scored by the matmul engine:
-        # each (row, query) pair is eligible only when the row's list is in
-        # the query's probe set — identical to the equi-join's semantics
-        probes_by_qid: dict[int, set] = {}
-        q_vec: dict[int, list] = {}
-        for r in rows:
-            probes_by_qid.setdefault(int(r[query_id]), set()).add(int(r["_list"]))
-            q_vec[int(r[query_id])] = r["_q"]
-        pruned = (
-            spark.read.parquet(path)
-            .where(F.col("_list").isin(probe_lists))
-            .select(F.col(id_col), _as_double(F.col(vec_col)).alias("_v"), "_list")
-        )
-        return _topk_arrow(
-            pruned,
-            [(q, q_vec[q]) for q in sorted(q_vec)],
-            k,
-            id_col,
-            "_v",
-            query_id,
-            probes_by_qid=probes_by_qid,
-        )
-    q_local = spark.createDataFrame(rows, q_assigned.schema)
-    c = (
+    probes_by_qid: dict[int, set] = {}
+    q_vec: dict[int, list] = {}
+    for r in rows:
+        probes_by_qid.setdefault(int(r[query_id]), set()).add(int(r["_list"]))
+        q_vec[int(r[query_id])] = r["_q"]
+    pruned = (
         spark.read.parquet(path)
         .where(F.col("_list").isin(probe_lists))
-        .select(
-            F.col(id_col),
-            _as_double(F.col(vec_col)).alias("_v"),
-            "_list",
-        )
-        .withColumn("_nn", _norm2(F.col("_v")))
+        .select(F.col(id_col), _as_double(F.col(vec_col)).alias("_v"), "_list")
     )
-    cand = (
-        c.join(F.broadcast(q_local), "_list")
-        .where(F.col(id_col) != F.col(query_id))
-        .withColumn("_sim", _sim_col())
+    return _topk_arrow(
+        pruned,
+        [(q, q_vec[q]) for q in sorted(q_vec)],
+        k,
+        id_col,
+        "_v",
+        query_id,
+        probes_by_qid=probes_by_qid,
     )
-    return _rank_topk(cand, k, id_col, query_id)
 
 
 def embedding_neardup_window(

@@ -16,9 +16,9 @@ inserted-way anti-join P4, SURVEY.md §2.2). Four tiers:
                    exposed standalone).
 
 All hashing is integer (rolling 31-polynomial mod 1e9+7, fixed permutation
-constants below). Signature, shingle and SimHash scans and the LSH pair
-verify run the batched NumPy kernels in kernels/texthash.py, bit-identical
-to the DuckDB oracle twins in plans.registry.
+constants; both live in kernels/texthash.py). Signature, shingle and SimHash
+scans and the LSH pair verify run the batched NumPy kernels there,
+bit-identical to the DuckDB oracle twins in plans.registry.
 
 Scale notes (10^12 docs):
   * the LSH buckets shuffle on (band_idx, band_key); hot buckets (boiler-
@@ -37,25 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text_analysis import CHAR_MOD, char_hash
-
-# fixed MinHash permutation constants: h_j(x) = (a_j * x + b_j) mod P
-# (random.Random(421), a forced odd; frozen here as literals — regenerating
-# them would silently re-key every stored signature)
-MINHASH_P = 2_147_483_647
-PERMS: tuple[tuple[int, int], ...] = (
-    (1405398811, 1318097825), (1312766851, 546384608), (1859270843, 1895728960),
-    (1060783121, 1428938888), (1048979941, 600572080), (696670829, 1132840846),
-    (1829894313, 1769179632), (963949843, 875721043), (1283395939, 532166178),
-    (809769487, 1147694537), (267364855, 607944294), (2020876781, 1552976924),
-    (56309789, 683420184), (1672092085, 1060610687), (1347391875, 398850620),
-    (1705409389, 1066788577),
-)
-N_BANDS, BAND_ROWS = 4, 4
-assert N_BANDS * BAND_ROWS == len(PERMS)
-
-SHINGLE_N = 3
-_COMBINE = 8191  # token-hash combiner multiplier (shared with oracle SQL)
+from ..functions.text_analysis import char_hash
+from ..kernels.texthash import _COMBINE, CHAR_MOD, N_BANDS, PERMS, SHINGLE_N
 
 
 def token_hashes(text: F.Column) -> F.Column:

@@ -878,7 +878,7 @@ def q_polygon_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 # Training-data pipeline operators (dedup / similarity / text analysis /
 # multimodal) — first-class graft components; oracles generated from the SAME
-# Python constants as the engine (functions.text_analysis, operators.dedup)
+# Python constants as the engine (functions.text_analysis, kernels.texthash)
 # so the two sides cannot drift.
 # ===========================================================================
 from ..functions.text_analysis import (  # noqa: E402
@@ -887,7 +887,7 @@ from ..functions.text_analysis import (  # noqa: E402
     LANG_ORDER,
     LANG_STOPWORDS,
 )
-from ..operators.dedup import _COMBINE, MINHASH_P, PERMS  # noqa: E402
+from ..kernels.texthash import _COMBINE, MINHASH_P, PERMS  # noqa: E402
 from ..operators.bloom import BLOOM_A, BLOOM_B  # noqa: E402
 from ..functions.text_analysis import CHAR_MOD  # noqa: E402
 
@@ -1324,26 +1324,20 @@ SELECT 'arrow' AS engine, * FROM scored
 def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T31 hashed-feature linear classifier scoring (the CCNet/DCLM/FineWeb
     quality-gate shape): unigram+bigram bag, frozen integer milli-weights,
-    BIGINT logit + keep flag. Runs BOTH scoring engines against the one
-    oracle (the T6 dual-engine discipline): 'inline' = zero-shuffle
-    literal-map codegen scan (plan-locked), 'arrow' = batched mapInPandas
-    dict-lookup kernel (the 10^12-doc configuration, 3.1x at 8M docs).
-    inline == join plan and inline == arrow are pytest-pinned in
+    BIGINT logit + keep flag, scored once by the dict-weights mapInPandas
+    kernel. The frozen oracle text labels its one scoring 'inline' and
+    'arrow', so the row emits the one result under both labels. dict plan
+    == DataFrame-weights join plan is pytest-pinned in
     tests/test_classify.py."""
     from ..functions.classify import score_quality
 
     docs = load_spread(spark, sf_dir, "documents").select("doc_id", "text")
-    parts = [
-        score_quality(
-            docs,
-            _CLS_WEIGHTS,
-            bias_milli=_CLS_BIAS,
-            threshold_milli=_CLS_THRESHOLD,
-            engine=eng,
-        ).select(F.lit(eng).alias("engine"), "*")
-        for eng in ("inline", "arrow")
-    ]
-    return parts[0].unionByName(parts[1])
+    scored = score_quality(
+        docs, _CLS_WEIGHTS, bias_milli=_CLS_BIAS, threshold_milli=_CLS_THRESHOLD
+    )
+    return scored.select(
+        F.explode(F.array(F.lit("inline"), F.lit("arrow"))).alias("engine"), "*"
+    )
 
 
 # T25 PII scrubbing under the hard driver oracle (r5 — the r4 verdict's #1
@@ -1775,23 +1769,19 @@ SELECT 'arrow' AS score, qid, vec_id, rank FROM r
 """,
 )
 def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T6 both scoring kernels in one driver row (r5): the interpreted-HOF
-    path (bit-identical to the oracle's list_reduce fold) and the batched
-    Arrow einsum kernel (the 10^12-scale configuration, operators/ann.py::
-    _topk_arrow) must BOTH reproduce the exact brute ranks — the oracle
-    side is one ranking emitted under both labels, so any arrow/hof rank
-    divergence on the fixture hash-fails the row."""
+    """T6 exact brute ranks from the batched Arrow matmul kernel
+    (operators/ann.py::_topk_arrow), evaluated once. The frozen oracle text
+    is one ranking labelled 'hof' and 'arrow', so the row emits the one
+    result under both labels; any rank divergence from the oracle's
+    list_reduce fold hash-fails the row."""
     from ..operators.ann import cosine_topk_brute
 
     emb = load_spread(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") < 10)
-    hof = cosine_topk_brute(emb, q, k=5).select(
-        F.lit("hof").alias("score"), "qid", "vec_id", "rank"
+    return cosine_topk_brute(emb, q, k=5).select(
+        F.explode(F.array(F.lit("hof"), F.lit("arrow"))).alias("score"),
+        "qid", "vec_id", "rank",
     )
-    arrow = cosine_topk_brute(emb, q, k=5, score="arrow").select(
-        F.lit("arrow").alias("score"), "qid", "vec_id", "rank"
-    )
-    return hof.unionByName(arrow)
 
 
 # The LSH signature is fully deterministic (LCG hyperplanes + sequential-order

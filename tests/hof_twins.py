@@ -12,6 +12,10 @@
 * staged_enrich: the spine's enrich as two separate row-loop pandas UDF
   projections over extract_text_bytes then geotag_pair, the reference for
   the one whole-batch crossing of plans.pipeline.
+* cosine_topk_brute_hof / cosine_topk_ivf_indexed_hof: exact and
+  persisted-IVF cosine top-k as broadcast joins scored by the sequential
+  zip_with/aggregate fold (bit-identical to the DuckDB oracle's
+  list_reduce), the reference for operators.ann's matmul kernel.
 
 A kernel or fused path is correct when it matches these row for row. They
 are not library code — no operator calls them.
@@ -26,20 +30,32 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from imposm2_spark.functions.geotag import geotag_pair
-from imposm2_spark.functions.text_analysis import BPE_TOKEN_RE, CHAR_MOD
+from imposm2_spark.functions.text_analysis import BPE_TOKEN_RE
 from imposm2_spark.functions.textx import extract_text_bytes
+from imposm2_spark.kernels.texthash import (
+    _COMBINE,
+    BAND_ROWS,
+    CHAR_MOD,
+    MINHASH_P,
+    N_BANDS,
+    PERMS,
+    SHINGLE_N,
+)
+from imposm2_spark.operators.ann import (
+    N_PROBE,
+    _as_double,
+    _load_centroids,
+    _make_probe_udf,
+    _norm2,
+    _rank_topk,
+    _sim_col,
+)
 from imposm2_spark.operators.curation import (
     DUP_TOKEN_CHAR_FRAC_MAX,
     DUP_TOKEN_FRAC_MAX,
     TOP_BIGRAM_CHAR_FRAC_MAX,
 )
 from imposm2_spark.operators.dedup import (
-    _COMBINE,
-    BAND_ROWS,
-    MINHASH_P,
-    N_BANDS,
-    PERMS,
-    SHINGLE_N,
     jaccard,
     minhash_signatures,
     shingle_hashes,
@@ -403,3 +419,62 @@ def staged_enrich(docs: DataFrame) -> DataFrame:
         .select("*", F.col("_geo.lon").alias("lon"), F.col("_geo.lat").alias("lat"))
         .drop("_geo")
     )
+
+
+def cosine_topk_brute_hof(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    query_id: str = "qid",
+) -> DataFrame:
+    """(qid, vec_id, rank): the queries broadcast-joined to every other
+    corpus row, norms precomputed per side, the sim folded in array order."""
+    c = corpus.select(
+        F.col(id_col), _as_double(F.col(vec_col)).alias("_v")
+    ).withColumn("_nn", _norm2(F.col("_v")))
+    q = queries.select(
+        F.col(id_col).alias(query_id), _as_double(F.col(vec_col)).alias("_q")
+    ).withColumn("_qn", _norm2(F.col("_q")))
+    cand = c.join(F.broadcast(q), F.col(id_col) != F.col(query_id)).withColumn(
+        "_sim", _sim_col()
+    )
+    return _rank_topk(cand, k, id_col, query_id)
+
+
+def cosine_topk_ivf_indexed_hof(
+    spark,
+    path: str,
+    queries: DataFrame,
+    k: int,
+    nprobe: int = N_PROBE,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    query_id: str = "qid",
+) -> DataFrame:
+    """(qid, vec_id, rank) over a persisted IVF index: each query equi-joins
+    the rows of its nprobe probe lists, read through the same pruned scan."""
+    probe = _make_probe_udf(_load_centroids(spark, path), nprobe)
+    q = (
+        queries.select(
+            F.col(id_col).alias(query_id),
+            _as_double(F.col(vec_col)).alias("_q"),
+            probe(F.col(vec_col)).alias("_probes"),
+        )
+        .withColumn("_qn", _norm2(F.col("_q")))
+        .select(query_id, "_q", "_qn", F.explode("_probes").alias("_list"))
+    )
+    rows = q.collect()
+    c = (
+        spark.read.parquet(path)
+        .where(F.col("_list").isin(sorted({r["_list"] for r in rows})))
+        .select(F.col(id_col), _as_double(F.col(vec_col)).alias("_v"), "_list")
+        .withColumn("_nn", _norm2(F.col("_v")))
+    )
+    cand = (
+        c.join(F.broadcast(spark.createDataFrame(rows, q.schema)), "_list")
+        .where(F.col(id_col) != F.col(query_id))
+        .withColumn("_sim", _sim_col())
+    )
+    return _rank_topk(cand, k, id_col, query_id)

@@ -705,25 +705,28 @@ def test_verify_ivf_index_detects_divergence(spark, tmp_path):
 
 
 def test_ann_arrow_score_matches_hof(spark):
-    """score='arrow' (the matmul mapInPandas engine, the 10^12-scale
-    configuration) must produce the same ranks as the oracle-parallel HOF
-    path on the planted fixture — the brute path here; the indexed path in
-    test_ann_arrow_indexed_matches_hof."""
+    """The matmul mapInPandas kernel must produce the same ranks as the
+    oracle-parallel HOF cross-join twin on the planted fixture — the brute
+    path here; the indexed path in test_ann_arrow_indexed_matches_hof."""
+    from hof_twins import cosine_topk_brute_hof
+
     from imposm2_spark.operators.ann import cosine_topk_brute
 
     emb = _emb_df(spark)
     queries = emb.where(F.col("vec_id") < 16)
     hof = {(r.qid, r.vec_id, r.rank)
-           for r in cosine_topk_brute(emb, queries, k=3).collect()}
+           for r in cosine_topk_brute_hof(emb, queries, k=3).collect()}
     arrow = {(r.qid, r.vec_id, r.rank)
-             for r in cosine_topk_brute(emb, queries, k=3, score="arrow").collect()}
+             for r in cosine_topk_brute(emb, queries, k=3).collect()}
     assert arrow == hof
 
 
 def test_ann_arrow_indexed_matches_hof(spark, tmp_path):
-    """Indexed search: arrow engine reproduces the HOF join's ranks at BOTH
-    nprobe < n_lists (probe-set masking must replicate the equi-join
+    """Indexed search: the kernel reproduces the HOF equi-join twin's ranks
+    at BOTH nprobe < n_lists (probe-set masking must replicate the equi-join
     semantics) and nprobe == n_lists (exact)."""
+    from hof_twins import cosine_topk_ivf_indexed_hof
+
     from imposm2_spark.operators.ann import (
         N_LISTS,
         cosine_topk_ivf_indexed,
@@ -736,12 +739,11 @@ def test_ann_arrow_indexed_matches_hof(spark, tmp_path):
     queries = emb.where(F.col("vec_id") < 16)
     for nprobe in (4, N_LISTS):
         hof = {(r.qid, r.vec_id, r.rank)
-               for r in cosine_topk_ivf_indexed(
+               for r in cosine_topk_ivf_indexed_hof(
                    spark, path, queries, k=3, nprobe=nprobe).collect()}
         arrow = {(r.qid, r.vec_id, r.rank)
                  for r in cosine_topk_ivf_indexed(
-                     spark, path, queries, k=3, nprobe=nprobe,
-                     score="arrow").collect()}
+                     spark, path, queries, k=3, nprobe=nprobe).collect()}
         assert arrow == hof, nprobe
 
 
@@ -759,7 +761,7 @@ def test_ann_arrow_tie_break_survives_batch_cut(spark):
         corpus = corpus.unionByName(r)
     corpus = corpus.repartition(16)
     queries = base.where(F.col("vec_id") < 2)
-    got = cosine_topk_brute(corpus, queries, k=5, score="arrow").collect()
+    got = cosine_topk_brute(corpus, queries, k=5).collect()
     by_q = {}
     for r in got:
         by_q.setdefault(r.qid, []).append((r.rank, r.vec_id))
@@ -770,9 +772,11 @@ def test_ann_arrow_tie_break_survives_batch_cut(spark):
 
 
 def test_ann_arrow_score_null_and_zero_vectors(spark):
-    """Arrow kernel NULL semantics must match the HOF path: zero-norm and
+    """Arrow kernel NULL semantics must match the HOF twin: zero-norm and
     NULL vectors yield NULL sims (never NaN — Spark sorts NaN above every
     real value, so a NaN would steal rank 1) and are excluded from top-k."""
+    from hof_twins import cosine_topk_brute_hof
+
     from imposm2_spark.operators.ann import cosine_topk_brute
 
     schema = T.StructType(
@@ -792,30 +796,14 @@ def test_ann_arrow_score_null_and_zero_vectors(spark):
     ]
     emb = spark.createDataFrame(rows, schema)
     queries = emb.where(F.col("vec_id") == 0)
-    for score in ("hof", "arrow"):
-        got = cosine_topk_brute(emb, queries, k=10, score=score).collect()
+    for fn in (cosine_topk_brute_hof, cosine_topk_brute):
+        got = fn(emb, queries, k=10).collect()
         ids = [r.vec_id for r in sorted(got, key=lambda r: r.rank)]
-        assert ids == [1, 4], (score, got)
-    # a null-element QUERY vector emits nothing on either engine
-    nullq = emb.where(F.col("vec_id") == 5)
-    for score in ("hof", "arrow"):
-        assert cosine_topk_brute(emb, nullq, k=3, score=score).count() == 0, score
-
-
-def test_ann_score_rejects_unknown_method(spark, tmp_path):
-    from imposm2_spark.operators.ann import (
-        cosine_topk_brute,
-        cosine_topk_ivf_indexed,
-        write_ivf_index,
-    )
-
-    emb = _emb_df(spark, n=4)
-    with pytest.raises(ValueError, match="score"):
-        cosine_topk_brute(emb, emb, k=1, score="simd").collect()
-    # the indexed path validates BEFORE loading centroids or collecting
-    # queries — no index needs to exist for the error to fire
-    with pytest.raises(ValueError, match="score"):
-        cosine_topk_ivf_indexed(spark, str(tmp_path / "nope"), emb, k=1, score="simd")
+        assert ids == [1, 4], (fn.__name__, got)
+    # a NULL or null-element QUERY vector emits nothing on either side
+    nullq = emb.where(F.col("vec_id").isin(3, 5))
+    for fn in (cosine_topk_brute_hof, cosine_topk_brute):
+        assert fn(emb, nullq, k=3).count() == 0, fn.__name__
 
 
 def test_ann_arrow_composes_in_self_diff_plans(spark, tmp_path):
@@ -841,10 +829,8 @@ def test_ann_arrow_composes_in_self_diff_plans(spark, tmp_path):
     write_ivf_index(emb, path)
     corpus = spark.read.parquet(path)
     queries = corpus.where(F.col("vec_id") < 3)
-    br = cosine_topk_brute(corpus, queries, k=5, score="arrow")
-    ivf = cosine_topk_ivf_indexed(
-        spark, path, queries, k=5, nprobe=N_LISTS, score="arrow"
-    )
+    br = cosine_topk_brute(corpus, queries, k=5)
+    ivf = cosine_topk_ivf_indexed(spark, path, queries, k=5, nprobe=N_LISTS)
     # each side alone is sane
     assert br.count() == 15 and ivf.count() == 15
     # the duplicated-plan shapes that the Spark bug corrupts
@@ -892,14 +878,16 @@ def test_ann_index_paths_total_on_null_vectors(spark, tmp_path):
     path = str(tmp_path / "ivf_dirty")
     write_ivf_index(corpus.where(F.col("vec_id") != 9002), path)
     append_ivf_index(spark, path, corpus.where(F.col("vec_id") == 9002))
-    queries = emb.where(F.col("vec_id") < 4)
+    # dirty QUERY vectors are total too: they emit no rows
+    queries = emb.where(F.col("vec_id") < 4).unionByName(dirty)
     for res in (
         cosine_topk_ivf_indexed(spark, path, queries, k=3, nprobe=N_LISTS),
         cosine_topk_lsh(corpus, queries, k=3),
-        cosine_topk_brute(corpus, queries, k=3, score="arrow"),
+        cosine_topk_brute(corpus, queries, k=3),
     ):
         rows = res.collect()
         assert rows and all(r.vec_id not in (9001, 9002) for r in rows)
+        assert all(r.qid not in (9001, 9002) for r in rows)
 
 
 def test_ivf_sidecar_survives_crash_window_rename(spark, tmp_path):

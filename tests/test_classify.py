@@ -1,9 +1,9 @@
-"""T31 quality-classifier scoring: hand-computed logits, inline == join,
-plan locks, and the vocabulary-size plan switch."""
+"""T31 quality-classifier scoring: hand-computed logits, the dict-weights
+kernel == the DataFrame-weights join plan (differential-fuzzed, non-ASCII
+and non-space whitespace included), and both plans' locks."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from imposm2_spark.functions.classify import grams_expr, score_quality
@@ -41,20 +41,16 @@ def test_hand_computed_logits(spark):
     ]
 
 
-def test_inline_equals_join_plan(spark):
-    docs = _docs(spark)
-    inline = _rows(score_quality(docs, W, bias_milli=-50))
-    # force the broadcast-join plan by shrinking the inline cap
-    join = _rows(score_quality(docs, W, bias_milli=-50, max_inline_weights=2))
-    assert inline == join
+def _wdf(spark, weights=W):
+    """The same weights as a DataFrame: selects the broadcast-join plan."""
+    return spark.createDataFrame(
+        sorted(weights.items()), "gram string, weight_milli long"
+    )
 
 
 def test_weights_dataframe_input(spark):
     docs = _docs(spark)
-    wdf = spark.createDataFrame(
-        sorted(W.items()), "gram string, weight_milli long"
-    )
-    assert _rows(score_quality(docs, wdf, bias_milli=-50)) == _rows(
+    assert _rows(score_quality(docs, _wdf(spark), bias_milli=-50)) == _rows(
         score_quality(docs, W, bias_milli=-50)
     )
 
@@ -75,17 +71,15 @@ def test_threshold_boundary(spark):
     assert got[1] is True and got[5] is False
 
 
-def test_inline_plan_is_exchange_free_jvm_only(spark):
+def test_dict_plan_is_one_map_in_pandas_no_exchange(spark):
     df = score_quality(_docs(spark), W)
-    p = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    p = df._jdf.queryExecution().executedPlan().toString()
+    assert p.count("MapInPandas") == 1, p
     assert "Exchange" not in p
-    assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
 
 
 def test_join_plan_broadcasts_weights_no_corpus_shuffle(spark):
-    df = score_quality(_docs(spark), W, max_inline_weights=2)
+    df = score_quality(_docs(spark), _wdf(spark))
     p = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
@@ -108,25 +102,33 @@ def test_null_text_scores_bias_only(spark):
     assert (r.n_grams, r.logit_milli, r.keep) == (0, -5, False)
 
 
-def test_arrow_engine_equals_inline(spark):
-    got_i = _rows(score_quality(_docs(spark), W, bias_milli=-50))
-    got_a = _rows(score_quality(_docs(spark), W, bias_milli=-50, engine="arrow"))
-    assert got_i == got_a
-
-
 def test_arrow_engine_fuzz_corpus_and_random(spark):
     import random
 
     rng = random.Random(7)
-    vocab = list(W) + ["zz", "q q", "the fast", "x"]
+    vocab = list(W) + ["zz", "q q", "the fast", "x", "Straße", "İstanbul", "ΟΔΟΣ"]
     rows = [
         (i, " ".join(rng.choice(vocab) for _ in range(rng.randrange(0, 30))))
         for i in range(200)
     ] + [(900, None), (901, ""), (902, "  \t the   fast \n dup dup ")]
+    # Spark's trim strips only ' ': no-break space, em space and the
+    # \x1c-\x1f separators stay part of the edge token
+    rows += [
+        (910 + i, t)
+        for i, t in enumerate([
+            "\xa0the fast", "the fast\xa0", "\u2003the fast", "\x1cthe fast",
+            "the fast\x1f", " \xa0 the fast \xa0 ", "Straße İstanbul ΟΔΟΣ",
+        ])
+    ]
+    # Python and Java both lowercase İ to i + U+0307 and final Σ to ς
+    weights = {
+        **W, "straße": 30, "i\u0307stanbul": 60, "οδος": 70,
+        "straße_i\u0307stanbul": 5,
+    }
     docs = spark.createDataFrame(rows, SCHEMA)
-    a = _rows(score_quality(docs, W, bias_milli=3, threshold_milli=100))
+    a = _rows(score_quality(docs, weights, bias_milli=3, threshold_milli=100))
     b = _rows(
-        score_quality(docs, W, bias_milli=3, threshold_milli=100, engine="arrow")
+        score_quality(docs, _wdf(spark, weights), bias_milli=3, threshold_milli=100)
     )
     assert a == b
     # and on the real sf corpus
@@ -135,13 +137,6 @@ def test_arrow_engine_fuzz_corpus_and_random(spark):
     corpus = load(spark, "/root/testdata/sf0.001", "documents").select(
         "doc_id", "text"
     )
-    ca = _rows(score_quality(corpus, W))
-    cb = _rows(score_quality(corpus, W, engine="arrow"))
-    assert ca == cb
-
-
-def test_unknown_engine_raises(spark):
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="unknown engine"):
-        score_quality(_docs(spark), W, engine="nope")
+    assert _rows(score_quality(corpus, W)) == _rows(
+        score_quality(corpus, _wdf(spark))
+    )

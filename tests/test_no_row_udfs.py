@@ -38,14 +38,14 @@ def test_python_boundaries_are_arrow_batched():
     assert found >= {"pandas_udf", "applyInPandas", "mapInPandas", "mapInArrow"}
 
 
-# the quality classifier's inline/arrow pair is a declared contract of the
-# quality query; every other operator has one implementation
-ENGINE_PARAM_ALLOWED = {("functions/classify.py", "score_quality")}
+# parameter names that select between implementations of one operator
+FORK_PARAMS = {"engine", "score"}
 
 
 def test_no_engine_forks():
-    """No function in the package takes an `engine` parameter: an operator
-    has ONE implementation, and reference formulations live in tests/."""
+    """No function in the package takes an `engine` or `score` parameter:
+    an operator has ONE implementation, and reference formulations live in
+    tests/."""
     offenders = []
     for py in PKG.rglob("*.py"):
         rel = py.relative_to(PKG).as_posix()
@@ -53,10 +53,10 @@ def test_no_engine_forks():
             if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 continue
             a = node.args
-            names = [x.arg for x in a.posonlyargs + a.args + a.kwonlyargs]
-            if "engine" in names and (rel, node.name) not in ENGINE_PARAM_ALLOWED:
-                offenders.append(f"{rel}:{node.lineno}: def {node.name}")
-    assert not offenders, "engine= forks found:\n" + "\n".join(offenders)
+            names = {x.arg for x in a.posonlyargs + a.args + a.kwonlyargs}
+            for name in sorted(names & FORK_PARAMS):
+                offenders.append(f"{rel}:{node.lineno}: def {node.name}({name}=)")
+    assert not offenders, "engine forks found:\n" + "\n".join(offenders)
 
 
 def test_no_module_cache_holders():

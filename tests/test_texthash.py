@@ -10,6 +10,10 @@ separators, non-ASCII codepoints, and tokens past the fast-path length cap.
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -39,6 +43,22 @@ ADVERSARIAL = [
 def _frame(spark, extra_rows=()):
     rows = [(i, t) for i, t in enumerate(list(ADVERSARIAL) + list(extra_rows))]
     return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def test_text_kernels_import_without_pyspark():
+    """The text kernels and their constants load with numpy and pyarrow
+    only; the expression modules import the constants from them. Run in a
+    subprocess: this process has pyspark loaded already."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "import sys, imposm2_spark.kernels.texthash, "
+         "imposm2_spark.kernels.textstats; "
+         "print(sorted(m for m in sys.modules if m.split('.')[0] == 'pyspark'))"],
+        capture_output=True, text=True, timeout=120, check=True, cwd=repo,
+        env={**os.environ, "PYTHONPATH": repo},
+    )
+    assert out.stdout.strip() == "[]"
 
 
 def test_token_hashes_bit_identical(spark):
