@@ -299,17 +299,19 @@ def simhash_clusters(
     )
 
 
+# pair tables up to this many rows are labelled on the driver (_cc_driver)
+DRIVER_MAX_EDGES = 1_000_000
+# pointer-doubling rounds before the loop gives up (diameter ~2^MAX_ROUNDS)
+MAX_ROUNDS = 25
+
+
 def dedup_connected_components(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_iterations: int = 25,
-    use_reliable_checkpoint: bool | None = None,
-    driver_max_edges: int | None = 1_000_000,
+    pairs: DataFrame, a_col: str = "doc_a", b_col: str = "doc_b"
 ) -> DataFrame:
     """Near-dup CLUSTERS from a verified pair table: (doc_id, cluster_id)
     where cluster_id = the smallest doc id reachable through the pair graph
-    (connected components).
+    (connected components). Pairs with a NULL endpoint are no edge. The
+    output's id type is the input's on either path.
 
     Min-label propagation WITH pointer doubling — a bounded driver-side plan
     loop; data never reaches the driver. Each round does (a) neighbor-min
@@ -324,61 +326,50 @@ def dedup_connected_components(
     orders of magnitude smaller than the corpus. Exact (oracle: recursive
     CTE transitive closure in plans.registry::dedup_minhash_clusters).
 
-    Raises RuntimeError if `max_iterations` rounds exhaust before the
-    fixpoint — silently returning under-converged (wrong) cluster ids would
-    under-dedup downstream curation. With doubling, hitting the default cap
-    means a component diameter around 2^25.
+    Raises RuntimeError if `MAX_ROUNDS` rounds exhaust before the fixpoint —
+    silently returning under-converged (wrong) cluster ids would under-dedup
+    downstream curation. With doubling, that means a component diameter
+    around 2^25.
 
-    driver_max_edges (optimization r6, guide §1.2 "the distributed
-    algorithm" + §3.1 "broadcast the side that fits"): near-dup pair graphs
-    are orders of magnitude smaller than the corpus (they hold DUP nodes
-    only), and the iterative plan loop pays ~2 jobs x O(seconds) of fixed
-    latency per doubling round regardless of size. When the pair table fits
-    `driver_max_edges` rows (ONE bounded limit(cap+1) Arrow collect — the
-    pip_join max_broadcast_polygons contract; ~16 bytes/edge, so the
-    default 10^6 cap is ~mid-MB of driver memory), labels are computed with
-    NumPy over the collected edges (_cc_driver) and come back as one Arrow
-    frame — identical output (min reachable id per node, pytest-pinned
-    equal to the loop), zero iterative rounds. Larger graphs take the loop below
-    unchanged; pass None to force the loop.
+    Small integral graphs skip the loop (optimization r6, guide §1.2 "the
+    distributed algorithm" + §3.1 "broadcast the side that fits"): near-dup
+    pair graphs hold DUP nodes only, and the loop pays ~2 jobs x O(seconds)
+    of fixed latency per doubling round regardless of size. When the pair
+    table fits `DRIVER_MAX_EDGES` rows (ONE bounded limit(cap+1) Arrow
+    collect — the pip_join max_broadcast_polygons contract; ~16 bytes/edge,
+    so ~mid-MB of driver memory), labels are computed with NumPy over the
+    collected edges (_cc_driver) — identical output, pytest-pinned equal to
+    the loop, zero iterative rounds. Larger or non-integral graphs take the
+    loop.
 
-    use_reliable_checkpoint: per-round state normally lives in
-    localCheckpoint blocks — fast, but lost with an executor, which fails
-    the whole job on a long run. None (default) sniffs the SparkContext: if
-    a checkpoint dir is set (production clusters:
-    `sc.setCheckpointDir("hdfs://.../ckpt")`), rounds use reliable
-    `.checkpoint()` to that dir and survive executor loss; otherwise
-    localCheckpoint. True requires a checkpoint dir (ValueError if unset);
-    False forces localCheckpoint either way. Results are identical across
-    modes (pytest-gated).
+    Round state lives in checkpoints: reliable `.checkpoint()` files when
+    the SparkContext has a checkpoint dir (production clusters:
+    `sc.setCheckpointDir("hdfs://.../ckpt")`; they survive executor loss and
+    superseded rounds are deleted), else `localCheckpoint` blocks (fast, but
+    lost with an executor). Labels are identical either way (pytest-gated).
     """
     from pyspark.sql.types import IntegerType, LongType, ShortType
 
-    integral = all(
-        isinstance(pairs.schema[c].dataType, (LongType, IntegerType, ShortType))
-        for c in (a_col, b_col)
-    )
-    if integral and driver_max_edges is not None and driver_max_edges > 0:
+    # read before the NULL filter: a filtered frame is never cached itself,
+    # but it reads through the caller's cache
+    caller_cached = pairs.is_cached
+    pairs = pairs.where(F.col(a_col).isNotNull() & F.col(b_col).isNotNull())
+    widths = [ShortType, IntegerType, LongType]
+    types = [type(pairs.schema[c].dataType) for c in (a_col, b_col)]
+    if all(t in widths for t in types):
         # bounded probe-and-collect in ONE action: evaluates the (possibly
         # expensive) pair lineage exactly once on the fast path; if the
         # extra row comes back the graph is big and the loop re-evaluates —
         # the rare path by construction (dup graphs are corpus-tiny).
-        head = pairs.select(a_col, b_col).limit(driver_max_edges + 1).toArrow()
-        if head.num_rows <= driver_max_edges:
-            return _cc_driver(pairs.sparkSession, head)
-    sc = pairs.sparkSession.sparkContext
-    ckpt_dir = sc.getCheckpointDir()
-    if use_reliable_checkpoint is None:
-        use_reliable_checkpoint = ckpt_dir is not None
-    elif use_reliable_checkpoint and ckpt_dir is None:
-        raise ValueError(
-            "use_reliable_checkpoint=True requires "
-            "spark.sparkContext.setCheckpointDir(...) so round state has "
-            "somewhere durable to live"
-        )
+        head = pairs.select(a_col, b_col).limit(DRIVER_MAX_EDGES + 1).toArrow()
+        if head.num_rows <= DRIVER_MAX_EDGES:
+            # the loop's ids take the wider endpoint type (its edge union)
+            id_type = max(types, key=widths.index)()
+            return _cc_driver(pairs.sparkSession, head, id_type)
+    reliable = pairs.sparkSession.sparkContext.getCheckpointDir() is not None
 
     def _round_checkpoint(df: DataFrame) -> DataFrame:
-        if use_reliable_checkpoint:
+        if reliable:
             return df.checkpoint(eager=True)
         return df.localCheckpoint(eager=True)
 
@@ -387,7 +378,6 @@ def dedup_connected_components(
     # materialize. If the CALLER already cached pairs, leave their cache
     # alone (review r5: persist() on a cached frame is a no-op but
     # unpersist() is not — the old unconditional pair clobbered it)
-    caller_cached = pairs.is_cached
     if not caller_cached:
         pairs = pairs.persist()
     edges = (
@@ -406,7 +396,7 @@ def dedup_connected_components(
     if not caller_cached:
         pairs.unpersist()
     converged = False
-    for it in range(max_iterations):
+    for it in range(MAX_ROUNDS):
         nbr_min = (
             edges.join(labels, edges["src"] == labels["id"])
             .groupBy("dst")
@@ -444,7 +434,7 @@ def dedup_connected_components(
         # the logical plan, and Catalyst's tree walk OOMs around round 10.
         # An eager checkpoint materializes the round AND cuts the plan to a
         # LogicalRDD; _round_checkpoint picks local vs reliable per the
-        # use_reliable_checkpoint contract above.
+        # checkpoint-dir rule above.
         new_labels = (
             stepped.join(hop, stepped["_l1"] == hop["_hid"], "left")
             .select(
@@ -456,7 +446,7 @@ def dedup_connected_components(
         new_labels = _round_checkpoint(new_labels)
         changed = new_labels.where(F.col("label") != F.col("_prev")).count()
         labels.unpersist()
-        if not use_reliable_checkpoint:
+        if not reliable:
             # local-checkpoint blocks need the explicit rdd release
             _release_local_checkpoint(labels)
         else:
@@ -473,20 +463,20 @@ def dedup_connected_components(
     if not converged:
         labels.unpersist()
         raise RuntimeError(
-            f"dedup_connected_components did not converge in {max_iterations} "
+            f"dedup_connected_components did not converge in {MAX_ROUNDS} "
             "rounds (component diameter ~2^rounds with pointer doubling); "
-            "raise max_iterations rather than consuming under-merged clusters"
+            "raise MAX_ROUNDS rather than consuming under-merged clusters"
         )
     return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 
-def _cc_driver(spark, edges) -> DataFrame:
+def _cc_driver(spark, edges, id_type) -> DataFrame:
     """Exact connected components of a bounded, collected Arrow edge table
-    (two integer columns) — the small-graph engine behind
-    dedup_connected_components(driver_max_edges=...). Returns
-    (doc_id, cluster_id) for every node appearing in the edges, cluster_id =
-    the smallest id reachable through the pair graph — byte-identical to the
-    distributed loop's contract (pytest-pinned).
+    (two non-NULL integer columns) — the small-graph engine behind
+    dedup_connected_components. Returns (doc_id, cluster_id) of type
+    `id_type` for every node appearing in the edges, cluster_id = the
+    smallest id reachable through the pair graph — identical to the
+    distributed loop's output (pytest-pinned).
 
     Whole-array min-label hooking: nodes are numbered in id order and every
     node points at a smaller-or-equal number, so following pointers ends at
@@ -496,6 +486,7 @@ def _cc_driver(spark, edges) -> DataFrame:
     its root; it stops when no edge joins two roots."""
     import numpy as np
     import pandas as pd
+    from pyspark.sql.types import StructField, StructType
 
     ends = [edges.column(i).to_numpy().astype(np.int64) for i in (0, 1)]
     nodes, idx = np.unique(np.concatenate(ends), return_inverse=True)
@@ -514,7 +505,7 @@ def _cc_driver(spark, edges) -> DataFrame:
             label = jumped
     return spark.createDataFrame(
         pd.DataFrame({"doc_id": nodes, "cluster_id": nodes[label]}),
-        "doc_id long, cluster_id long",
+        StructType([StructField("doc_id", id_type), StructField("cluster_id", id_type)]),
     )
 
 

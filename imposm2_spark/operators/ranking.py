@@ -19,11 +19,9 @@ MATCHING postings, never to the corpus):
     broadcast-semi-joined against it BEFORE the (doc, term) hash
     aggregation, so the big agg only ever sees matching tokens (the
     "postings" for the query), a tiny fraction of the corpus;
-  * document length (dl) is the one full-corpus statistic BM25 needs. It
-    is a single map-side-combinable `groupBy(doc).count()` — and because
-    it is query-INDEPENDENT, callers running many queries should
-    materialize it once and pass it via `doc_lengths=` (the second corpus
-    scan disappears; the per-query cost is then postings-only);
+  * document length (dl) is the one full-corpus statistic BM25 needs. The
+    join plan computes it with `doc_lengths()`, a single map-side-combinable
+    `groupBy(doc).count()`; the in-row plan folds it into its one scan;
   * N and avgdl: a 1-row agg, broadcast. avgdl is derived as ONE IEEE
     division `sum_dl / n_docs` from the exact BIGINT sum — never a
     float-accumulated AVG, whose summation order differs between engines
@@ -80,10 +78,8 @@ def doc_lengths(
     docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """Per-document token count `(id_col, dl)` — the query-independent
-    corpus statistic. One scan, one map-side-combinable hash agg. Callers
-    serving many BM25 queries should materialize this ONCE (write it as a
-    table / cache it) and pass it to `bm25_rank(doc_lengths=...)`; every
-    query after that touches only its own postings."""
+    corpus statistic. One scan, one map-side-combinable hash agg; the
+    postings-join plan of `bm25_rank` joins it onto the postings."""
     toks = docs.select(
         F.col(id_col),
         F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("term"),
@@ -203,7 +199,6 @@ def bm25_rank(
     top_k: int = 10,
     term_dp: int = 9,
     score_dp: int = 6,
-    doc_lengths_df: DataFrame | None = None,
     max_inline_terms: int = MAX_INLINE_TERMS,
 ) -> DataFrame:
     """Global BM25 top-k of `docs` against `query_terms` (a 1-column
@@ -229,12 +224,10 @@ def bm25_rank(
     frozen arithmetic, same round-then-DECIMAL sum (term order fixed).
     Set max_inline_terms=0 to force the join plan (plan tests do).
 
-    `doc_lengths_df`: optional precomputed `doc_lengths()` output for the
-    join path. When given, `docs` is scanned exactly once (postings only);
-    when None it is derived here with a second scan. N (corpus size) always
-    counts ALL of `docs` — zero-token documents still dilute idf, matching
-    the oracle. (The inline path needs no external dl: the same scan that
-    scores computes it in-row.)
+    The join plan derives dl with `doc_lengths()` in a second scan of
+    `docs`. N (corpus size) always counts ALL of `docs` — zero-token
+    documents still dilute idf, matching the oracle. (The inline path needs
+    no external dl: the same scan that scores computes it in-row.)
     """
     if max_inline_terms > 0:
         tcol = query_terms.columns[0]
@@ -266,11 +259,7 @@ def bm25_rank(
         .groupBy(id_col, "term")
         .agg(F.count("*").alias("tf"))
     )
-    dl = (
-        doc_lengths_df.select(F.col(id_col), F.col("dl"))
-        if doc_lengths_df is not None
-        else doc_lengths(docs, id_col=id_col, text_col=text_col)
-    )
+    dl = doc_lengths(docs, id_col=id_col, text_col=text_col)
 
     # 1-row corpus stats; avgdl = ONE division over the exact BIGINT sum
     stats = F.broadcast(

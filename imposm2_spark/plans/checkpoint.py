@@ -10,12 +10,14 @@ Model (idiomatic Spark, two commit levels):
     each task writes part-<n> into a _temporary dir and the committer renames
     only successful tasks — a crashed stage leaves no committed partial state
     we could mistake for output (we also require _SUCCESS).
-  * ACROSS stages, this module adds durable commit: the stage writes to
-    `<root>/<stage>.__tmp__`, then one atomic directory rename publishes it,
-    then `_manifest.json` records lineage + per-partition metrics. On restart,
-    a stage whose manifest exists with a matching input fingerprint is SKIPPED
-    (read back from parquet); everything else recomputes. Leftover tmp dirs
-    from crashes are discarded.
+  * ACROSS stages, this module adds one durable-commit protocol: the stage
+    writes to `<root>/<stage>.__tmp__`, one atomic directory rename
+    publishes it, then the fsync'd `_manifest.json` records lineage +
+    per-partition metrics and commits the stage. On restart, a stage whose
+    manifest exists with a matching input fingerprint is SKIPPED (read back
+    from parquet); everything else recomputes. Leftover tmp dirs from
+    crashes are discarded. The root is a local POSIX path: the I/O is plain
+    `os`/`shutil`.
 
 Manifest contents (the lineage record):
   stage_id, engine_version, input_fingerprint (caller-supplied — upstream
@@ -31,7 +33,6 @@ consumers. Fingerprints make re-runs idempotent per (stage, input) pair.
 
 from __future__ import annotations
 
-import contextlib
 import hashlib
 import json
 import os
@@ -87,159 +88,40 @@ class StageResult:
 class CheckpointManager:
     """Orchestrates resumable stages under one checkpoint root.
 
-    Two durable-commit strategies behind one seam (r5, r4 verdict stretch):
-
-      * commit="rename" (default): write `<stage>.__tmp__`, one atomic
-        DIRECTORY rename publishes it. Correct on a driver-visible POSIX
-        filesystem (local disk, NFS mount); this layer's I/O is plain
-        `os`/`shutil`, so an `hdfs://`/`s3://` URI root is NOT supported —
-        object stores additionally lack atomic dir rename, which is what
-        commit="snapshot"'s pointer model exists for.
-      * commit="snapshot": the Iceberg model on plain parquet. Every attempt
-        writes into a fresh IMMUTABLE `<stage>/snap-<fp>-aNNN/` dir that is
-        NEVER renamed; the commit is one tiny pointer write
-        (`<stage>/_current.json` -> snapshot name) — the only atomicity
-        primitive needed is single-object PUT-replace, which S3 gives
-        (last-writer-wins), exactly Iceberg's version-hint/snapshot-commit
-        role. Crashed attempts leave orphan snap dirs that never need
-        cleanup before retry (names are unique per attempt); `vacuum()`
-        GCs everything the pointer doesn't reference. Readers that resolved
-        the pointer earlier keep reading their immutable snapshot across a
-        re-publish — same isolation story as sources.catalog.Deploy.
+    One durable-commit protocol: a stage writes `<stage>.__tmp__`, one
+    atomic DIRECTORY rename publishes it, and the fsync'd `_manifest.json`
+    written inside it is the commit point a restart checks. The layer's I/O
+    is plain `os`/`shutil`, so the root is a driver-visible local POSIX
+    path (local disk, NFS mount); an `hdfs://`/`s3://` URI root is not
+    supported.
     """
 
     root: str
-    commit: str = "rename"
     results: dict[str, StageResult] = field(default_factory=dict)
 
-    def __post_init__(self):
-        if self.commit not in ("rename", "snapshot"):
-            raise ValueError(f"unknown commit strategy {self.commit!r}")
-
-    def _dir(self, stage_id: str) -> str:
-        return os.path.join(self.root, stage_id)
-
-    def _pointer_path(self, stage_id: str) -> str:
-        return os.path.join(self._dir(stage_id), "_current.json")
-
-    def _current_snapshot(self, stage_id: str) -> str | None:
-        try:
-            with open(self._pointer_path(stage_id)) as f:
-                return json.load(f).get("snapshot")
-        except (FileNotFoundError, json.JSONDecodeError):
-            return None
-
     def data_dir(self, stage_id: str) -> str:
-        """The directory holding the stage's COMMITTED parquet (resolves the
-        snapshot pointer under commit="snapshot")."""
-        if self.commit == "snapshot":
-            snap = self._current_snapshot(stage_id)
-            if snap is None:
-                raise KeyError(f"stage {stage_id!r} has no committed snapshot")
-            return os.path.join(self._dir(stage_id), snap)
-        return self._dir(stage_id)
-
-    def _manifest_path(self, stage_id: str) -> str:
-        if self.commit == "snapshot":
-            return os.path.join(self.data_dir(stage_id), MANIFEST)
-        return os.path.join(self._dir(stage_id), MANIFEST)
+        """The directory holding the stage's committed parquet."""
+        return os.path.join(self.root, stage_id)
 
     def manifest(self, stage_id: str) -> dict | None:
         try:
-            with open(self._manifest_path(stage_id)) as f:
+            with open(os.path.join(self.data_dir(stage_id), MANIFEST)) as f:
                 return json.load(f)
-        except (FileNotFoundError, json.JSONDecodeError, KeyError):
-            return None
-
-    def _completed(self, stage_id: str, input_fingerprint: str) -> tuple[dict, str] | None:
-        """The validated (manifest, data_dir) pair when the stage is committed
-        for this fingerprint, else None — returned as a pair so the skip path
-        serves exactly what was validated (no re-read, no TOCTOU seam).
-
-        The snapshot pointer is resolved exactly ONCE (review r5: going
-        through self.manifest() + self.data_dir() read it twice, so a
-        concurrent re-publish between the two reads could validate snap A's
-        manifest but hand back snap B's data dir — different inputs under a
-        matching fingerprint record)."""
-        if self.commit == "snapshot":
-            snap = self._current_snapshot(stage_id)
-            if snap is None:
-                return None
-            data_dir = os.path.join(self._dir(stage_id), snap)
-        else:
-            data_dir = self._dir(stage_id)
-        try:
-            with open(os.path.join(data_dir, MANIFEST)) as f:
-                m = json.load(f)
         except (FileNotFoundError, json.JSONDecodeError):
             return None
+
+    def _completed(self, stage_id: str, input_fingerprint: str) -> dict | None:
+        """The stage's manifest when it is committed for this fingerprint
+        under this engine version with a `_SUCCESS` marker, else None."""
+        m = self.manifest(stage_id)
         if (
             m
             and m.get("input_fingerprint") == input_fingerprint
             and m.get("engine_version") == ENGINE_VERSION
-            and os.path.exists(os.path.join(data_dir, "_SUCCESS"))
+            and os.path.exists(os.path.join(self.data_dir(stage_id), "_SUCCESS"))
         ):
-            return m, data_dir
+            return m
         return None
-
-    def _next_snapshot_name(self, stage_id: str, fp: str) -> str:
-        """Unique immutable attempt dir: snap-<fp>-aNNN, NNN monotone from a
-        listing — deterministic, no runtime randomness (lineage §2.9)."""
-        sdir = self._dir(stage_id)
-        os.makedirs(sdir, exist_ok=True)
-        import re as _re
-
-        attempts = [
-            int(m.group(1))
-            for name in os.listdir(sdir)
-            if (m := _re.fullmatch(r"snap-[0-9a-f]+-a(\d+)", name))
-        ]
-        return f"snap-{fp}-a{max(attempts, default=0) + 1:03d}"
-
-    def vacuum(self, stage_id: str) -> list[str]:
-        """snapshot mode: delete every snap dir the pointer does not
-        reference (crashed attempts, superseded snapshots), plus `.cur_*`
-        pointer temps orphaned by a process kill inside the commit window
-        (a failed commit unlinks its own temp; a SIGKILL cannot). Safe
-        while the CURRENT snapshot has open readers; unsafe only for
-        readers pinned to a superseded snapshot, or run concurrently with
-        an in-flight commit on the SAME stage (same single-writer contract
-        as commit itself) — retention policy is the caller's."""
-        if self.commit != "snapshot":
-            return []
-        sdir = self._dir(stage_id)
-        # A MISSING pointer means nothing was ever committed — every snap dir
-        # is a crashed attempt and GC-able. A PRESENT-but-unreadable pointer
-        # (e.g. truncated by power loss) is different: the snapshot it named
-        # is still committed data, and treating it as "no pointer" would
-        # rmtree the current snapshot. Refuse loudly instead.
-        ptr = self._pointer_path(stage_id)
-        if os.path.exists(ptr):
-            try:
-                with open(ptr) as f:
-                    cur = json.load(f).get("snapshot")
-            except (OSError, json.JSONDecodeError) as e:
-                raise RuntimeError(
-                    f"vacuum: pointer {ptr} exists but cannot be parsed ({e});"
-                    " refusing to GC — repair or remove the pointer first"
-                ) from e
-            if cur is None:
-                raise RuntimeError(
-                    f"vacuum: pointer {ptr} parses but names no snapshot;"
-                    " refusing to GC — repair or remove the pointer first"
-                )
-        else:
-            cur = None
-        removed = []
-        for name in os.listdir(sdir) if os.path.isdir(sdir) else []:
-            if name.startswith("snap-") and name != cur:
-                shutil.rmtree(os.path.join(sdir, name))
-                removed.append(name)
-            elif name.startswith(".cur_"):
-                with contextlib.suppress(OSError):
-                    os.unlink(os.path.join(sdir, name))
-                    removed.append(name)
-        return removed
 
     def _parent_digest(self, stage_id: str, parent: str) -> str:
         """The parent's manifest digest: in-process result first, on-disk
@@ -255,7 +137,7 @@ class CheckpointManager:
         raise KeyError(
             f"stage {stage_id!r} declares parent {parent!r}, but that stage"
             " has neither run in this process nor committed a manifest under"
-            f" {self._dir(parent)} — run the parent first"
+            f" {self.data_dir(parent)} — run the parent first"
         )
 
     def stage(
@@ -278,37 +160,28 @@ class CheckpointManager:
         )
         fp = fingerprint_of(input_fingerprint, parent_digest)
 
-        done = self._completed(stage_id, fp)
-        if done is not None:
-            m, final_dir = done
+        final_dir = self.data_dir(stage_id)
+        m = self._completed(stage_id, fp)
+        if m is not None:
             self.results[stage_id] = StageResult(stage_id, final_dir, True, m)
             return spark.read.parquet(final_dir)
 
         t0 = time.perf_counter()
-        if self.commit == "snapshot":
-            # immutable attempt dir + pointer commit: NO directory rename —
-            # crashed prior attempts are simply never pointed at, so there
-            # is nothing to discard before retrying (vacuum() GCs orphans)
-            snap = self._next_snapshot_name(stage_id, fp)
-            final_dir = os.path.join(self._dir(stage_id), snap)
-            build().write.mode("overwrite").parquet(final_dir)
-        else:
-            final_dir = self._dir(stage_id)
-            tmp_dir = final_dir + TMP_SUFFIX
-            # crashed/partial prior TMP attempts: discard, never trust. The
-            # committed final_dir, by contrast, is GOOD data (tasks commit
-            # atomically + we required _SUCCESS) that merely has a stale
-            # fingerprint — keep it readable for the whole rebuild and delete
-            # it only between the successful tmp write and the rename, so a
-            # failed build() never destroys the last committed checkpoint
-            # (review r5: the old delete-up-front left a no-data window the
-            # length of the rebuild).
-            if os.path.exists(tmp_dir):
-                shutil.rmtree(tmp_dir)
-            build().write.mode("overwrite").parquet(tmp_dir)
-            if os.path.exists(final_dir):
-                shutil.rmtree(final_dir)
-            os.rename(tmp_dir, final_dir)  # atomic publish (same filesystem)
+        tmp_dir = final_dir + TMP_SUFFIX
+        # crashed/partial prior TMP attempts: discard, never trust. The
+        # committed final_dir, by contrast, is GOOD data (tasks commit
+        # atomically + we required _SUCCESS) that merely has a stale
+        # fingerprint — keep it readable for the whole rebuild and delete
+        # it only between the successful tmp write and the rename, so a
+        # failed build() never destroys the last committed checkpoint
+        # (review r5: the old delete-up-front left a no-data window the
+        # length of the rebuild).
+        if os.path.exists(tmp_dir):
+            shutil.rmtree(tmp_dir)
+        build().write.mode("overwrite").parquet(tmp_dir)
+        if os.path.exists(final_dir):
+            shutil.rmtree(final_dir)
+        os.rename(tmp_dir, final_dir)  # atomic publish (same filesystem)
         wall_s = round(time.perf_counter() - t0, 3)
 
         parts = _partition_stats(final_dir)
@@ -324,25 +197,13 @@ class CheckpointManager:
             "total_bytes": sum(p["bytes"] for p in parts),
             "digest": fingerprint_of(fp, *[f"{p['file']}:{p['rows']}:{p['bytes']}" for p in parts]),
         }
-        # manifest lands INSIDE the data dir (immutable with its snapshot);
-        # in snapshot mode the pointer write BELOW is the commit point — a
-        # fully-written snapshot stays invisible until the pointer flips.
-        # Both writes go through the SHARED fsync'd atomic writer (review
-        # r5: the unsynced copies here could survive a power loss as
-        # zero-length JSON — for the pointer, exactly the corrupt-pointer
-        # state vacuum refuses on). A failed commit unlinks its own temp; a
-        # process KILL in the window can leave one — vacuum() sweeps ".cur_".
+        # the manifest is the commit point a restart checks; it goes through
+        # the shared fsync'd atomic writer (review r5: an unsynced copy could
+        # survive a power loss as zero-length JSON). A failed write unlinks
+        # its own temp and the next run recomputes the stage.
         atomic_write_json(
             os.path.join(final_dir, MANIFEST), manifest, prefix="._mtmp_", indent=1
         )
-        if self.commit == "snapshot":
-            # single small-object replace: os.replace locally; on an object
-            # store this maps to one PUT of _current.json (last-writer-wins)
-            atomic_write_json(
-                self._pointer_path(stage_id),
-                {"snapshot": os.path.basename(final_dir)},
-                prefix=".cur_",
-            )
         self.results[stage_id] = StageResult(stage_id, final_dir, False, manifest)
         return spark.read.parquet(final_dir)
 

@@ -37,10 +37,8 @@ def atomic_write_json(path: str, obj, *, prefix: str = ".tmp_", indent: int | No
     Without the fsyncs, ext4 delayed allocation can journal the rename before
     the data blocks land — power loss then leaves a ZERO-LENGTH pointer file
     (the hazard Deploy.publish documents). Shared by Deploy.publish and the
-    checkpoint manager's snapshot-pointer/manifest commits (review r5: the
-    checkpoint copy had drifted and omitted both fsyncs). A failed write
-    unlinks its own temp; a SIGKILL inside the window can leave one — give
-    sweepable prefixes to callers that GC (checkpoint vacuum uses ".cur_")."""
+    checkpoint manager's manifest commit (review r5: the checkpoint copy had
+    drifted and omitted both fsyncs). A failed write unlinks its own temp."""
     import contextlib
 
     d = os.path.dirname(path) or "."
@@ -125,8 +123,7 @@ class Deploy:
         blocks land). The read-modify-write of the shared map is serialized
         through an flock'd sidecar, so two publishers (one stream_updates
         loop per table against one deploy root) cannot lose each other's
-        update. On rename-less object stores, use the checkpoint manager's
-        snapshot-pointer model instead (plans/checkpoint.py)."""
+        update."""
         import fcntl
 
         lock_path = os.path.join(self.root, ".publish.lock")

@@ -289,26 +289,26 @@ def test_dedup_connected_components_vs_union_find(spark):
     assert got[15] == 10 and got[7] == 7 and got[99] == 7
 
 
-def test_dedup_connected_components_deep_chain_converges(spark):
+def test_dedup_connected_components_deep_chain_converges(spark, monkeypatch):
     """A diameter-40 chain (chained boilerplate is exactly how near-dup graphs
     grow long paths) must produce correct labels well inside the round cap:
     pointer doubling makes rounds O(log diameter), and the operator must
     RAISE — never return silently wrong clusters — if the cap is hit."""
     import pytest as _pytest
 
+    from imposm2_spark.operators import dedup
     from imposm2_spark.operators.dedup import dedup_connected_components
 
+    monkeypatch.setattr(dedup, "DRIVER_MAX_EDGES", 0)  # force the loop
     pairs = [(i, i + 1) for i in range(100, 140)]  # one chain, diameter 40
     df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
-    got = {
-        r.doc_id: r.cluster_id
-        for r in dedup_connected_components(df, driver_max_edges=None).collect()
-    }
+    got = {r.doc_id: r.cluster_id for r in dedup_connected_components(df).collect()}
     assert got == {i: 100 for i in range(100, 141)}
 
     # under-capped run fails LOUDLY instead of emitting under-merged labels
+    monkeypatch.setattr(dedup, "MAX_ROUNDS", 2)
     with _pytest.raises(RuntimeError, match="did not converge"):
-        dedup_connected_components(df, max_iterations=2, driver_max_edges=None)
+        dedup_connected_components(df)
 
 
 def test_multimodal_features_batch_invariance(spark):
@@ -357,35 +357,28 @@ def test_decode_media_dispatch():
         decode_media(b"\x89PNG", "png")
 
 
-def test_cc_reliable_checkpoint_mode(spark, tmp_path):
-    """r4: production checkpoint option. With a checkpoint dir set, the CC
-    loop auto-switches to reliable .checkpoint() (executor-loss-safe) and
-    produces identical clusters; True without a dir raises; False forces
-    localCheckpoint under a dir. Checkpoint files actually land in the dir."""
+def test_cc_reliable_checkpoint_mode(spark, tmp_path, monkeypatch):
+    """r4: production checkpoint rule. With a checkpoint dir set, the CC
+    loop uses reliable .checkpoint() (executor-loss-safe) and produces
+    identical clusters. Checkpoint files actually land in the dir."""
     import os
 
+    from imposm2_spark.operators import dedup
     from imposm2_spark.operators.dedup import dedup_connected_components
 
+    monkeypatch.setattr(dedup, "DRIVER_MAX_EDGES", 0)  # force the loop
     pairs = [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 23)]
     df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
-    base = {
-        r.doc_id: r.cluster_id
-        for r in dedup_connected_components(df, driver_max_edges=None).collect()
-    }
-
-    with pytest.raises(ValueError, match="setCheckpointDir"):
-        dedup_connected_components(df, use_reliable_checkpoint=True, driver_max_edges=None)
+    base = {r.doc_id: r.cluster_id for r in dedup_connected_components(df).collect()}
 
     ckpt = str(tmp_path / "cc_ckpt")
     sc = spark.sparkContext
     try:
         sc.setCheckpointDir(ckpt)
-        # None sniffs the dir -> reliable mode
-        auto = {
-            r.doc_id: r.cluster_id
-            for r in dedup_connected_components(df, driver_max_edges=None).collect()
+        reliable = {
+            r.doc_id: r.cluster_id for r in dedup_connected_components(df).collect()
         }
-        assert auto == base
+        assert reliable == base
         assert any(os.scandir(ckpt))  # checkpoint files actually written
         # superseded round checkpoints are DELETED (review r4): only the
         # final round's rdd-* dir may remain, not one per round
@@ -394,13 +387,6 @@ def test_cc_reliable_checkpoint_mode(spark, tmp_path):
             if d.startswith("rdd-")
         ]
         assert len(rdd_dirs) <= 1, rdd_dirs
-        forced_local = {
-            r.doc_id: r.cluster_id
-            for r in dedup_connected_components(
-                df, use_reliable_checkpoint=False, driver_max_edges=None
-            ).collect()
-        }
-        assert forced_local == base
     finally:
         # unset so the session-scoped fixture doesn't leak reliable mode into
         # later tests (Scala setCheckpointDir(null) clears it)
@@ -969,30 +955,38 @@ def test_substring_block_metrics_null_and_empty_text(spark):
         assert out[i]["keep"] is True
 
 
-def test_cc_driver_fallback_equals_loop(spark):
+def test_cc_driver_fallback_equals_loop(spark, monkeypatch):
     """r6 optimization: the bounded driver union-find path must produce
-    byte-identical labels to the distributed pointer-doubling loop on the
-    same graph (chain + triangle + pair + reversed-min edge + self-ish
-    dense cluster), and the over-cap probe must fall back to the loop."""
+    identical labels AND schema to the distributed pointer-doubling loop on
+    every input, and the over-cap probe must fall back to the loop. Inputs:
+    chain + triangle + pair + reversed-min edge + dense cluster (long and
+    int ids), and pairs with a NULL endpoint, which are no edge."""
+    from imposm2_spark.operators import dedup
     from imposm2_spark.operators.dedup import dedup_connected_components
 
-    pairs = (
+    graph = (
         [(i, i + 1) for i in range(100, 140)]
         + [(30, 31), (31, 32), (30, 32), (50, 51), (99, 7)]
         + [(200 + i, 200 + j) for i in range(6) for j in range(i + 1, 6)]
     )
-    df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
-    fast = {
-        r.doc_id: r.cluster_id for r in dedup_connected_components(df).collect()
-    }
-    loop = {
-        r.doc_id: r.cluster_id
-        for r in dedup_connected_components(df, driver_max_edges=None).collect()
-    }
-    assert fast == loop
-    # over-cap: probe comes back too big -> identical labels via the loop
-    capped = {
-        r.doc_id: r.cluster_id
-        for r in dedup_connected_components(df, driver_max_edges=3).collect()
-    }
-    assert capped == loop
+    nulls = [(1, 2), (2, None), (None, 11), (5, 6)]
+    inputs = [
+        (graph, "doc_a long, doc_b long"),
+        (graph, "doc_a int, doc_b int"),
+        (nulls, "doc_a long, doc_b long"),
+    ]
+
+    def run(df, cap):
+        with monkeypatch.context() as m:
+            m.setattr(dedup, "DRIVER_MAX_EDGES", cap)
+            out = dedup_connected_components(df)
+            return out.schema, sorted(map(tuple, out.collect()))
+
+    for rows, schema in inputs:
+        df = spark.createDataFrame(rows, schema)
+        fast = run(df, dedup.DRIVER_MAX_EDGES)
+        loop = run(df, 0)
+        assert fast == loop, schema
+        # over-cap: probe comes back too big -> identical labels via the loop
+        assert run(df, 3) == loop, schema
+    assert loop[1] == [(1, 1), (2, 1), (5, 5), (6, 5)]

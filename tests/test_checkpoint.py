@@ -241,149 +241,34 @@ def test_spine_resumable_invalidates_on_polygon_change(spark, tmp_path):
     assert got_a != got_b  # the two polygon sets genuinely differ
 
 
-def _run_snapshot_pipeline(spark, root, calls, fp="v1"):
-    mgr = CheckpointManager(root, commit="snapshot")
-
-    def s1():
-        calls.append("s1")
-        return spark.range(50).select(
-            F.col("id"), (F.col("id") * 7).alias("v")
-        ).repartition(3)
-
-    df1 = mgr.stage(spark, "stage1", s1, input_fingerprint=fp)
-
-    def s2():
-        calls.append("s2")
-        return df1.groupBy((F.col("id") % 4).alias("k")).agg(F.sum("v").alias("s"))
-
-    df2 = mgr.stage(spark, "stage2", s2, parents=("stage1",))
-    return mgr, df2
-
-
-def test_snapshot_commit_never_renames_directories(spark, root, monkeypatch):
-    """r5 stretch (r4 verdict ask #9): commit="snapshot" must publish via
-    immutable attempt dirs + a single pointer-object replace and NEVER call
-    a directory rename at this layer — the primitive object stores lack.
-    os.rename is poisoned for the whole run; os.replace (single small file,
-    maps to one PUT) stays allowed."""
-    from imposm2_spark.plans import checkpoint as cp
-
-    def no_rename(*a, **k):
-        raise AssertionError("snapshot commit must not rename directories")
-
-    monkeypatch.setattr(cp.os, "rename", no_rename)
-    calls = []
-    mgr, df2 = _run_snapshot_pipeline(spark, root, calls)
-    assert calls == ["s1", "s2"]
-    assert df2.count() == 4
-    # committed layout: snap dir + pointer, no bare parquet in the stage dir
-    sdir = os.path.join(root, "stage1")
-    assert os.path.exists(os.path.join(sdir, "_current.json"))
-    snaps = [n for n in os.listdir(sdir) if n.startswith("snap-")]
-    assert len(snaps) == 1
-    assert os.path.exists(os.path.join(sdir, snaps[0], MANIFEST))
-
-
-def test_snapshot_restart_skips_and_invalidates(spark, root):
-    calls = []
-    _run_snapshot_pipeline(spark, root, calls)
-    calls2 = []
-    mgr, df2 = _run_snapshot_pipeline(spark, root, calls2)
-    assert calls2 == []  # both stages resolved through the pointer
-    assert df2.count() == 4
-    # input change -> full recompute into NEW snapshots; old ones remain
-    calls3 = []
-    mgr3, _ = _run_snapshot_pipeline(spark, root, calls3, fp="v2")
-    assert calls3 == ["s1", "s2"]
-    sdir = os.path.join(root, "stage1")
-    assert len([n for n in os.listdir(sdir) if n.startswith("snap-")]) == 2
-
-
-def test_snapshot_reader_isolation_and_vacuum(spark, root):
-    """An open reader pinned to the pre-republish snapshot keeps reading it
-    (immutable dirs); vacuum() removes only what the pointer doesn't
-    reference."""
-    calls = []
-    mgr, _ = _run_snapshot_pipeline(spark, root, calls)
-    reader = spark.read.parquet(mgr.data_dir("stage1"))
-    assert reader.count() == 50
-
-    calls2 = []
-    mgr2, _ = _run_snapshot_pipeline(spark, root, calls2, fp="v2")
-    assert reader.count() == 50  # old snapshot untouched by the re-publish
-
-    sdir = os.path.join(root, "stage1")
-    removed = mgr2.vacuum("stage1")
-    assert len(removed) == 1 and removed[0].startswith("snap-")
-    left = [n for n in os.listdir(sdir) if n.startswith("snap-")]
-    assert len(left) == 1
-    assert spark.read.parquet(mgr2.data_dir("stage1")).count() == 50
-
-
-def test_snapshot_crashed_attempt_is_invisible_and_vacuumable(spark, root):
-    """A fully-written but UNPOINTED snapshot (crash between data write and
-    pointer flip) is invisible to resume — the next run recomputes into a
-    fresh attempt dir without deleting anything first — and vacuum GCs it."""
-    calls = []
-    _run_snapshot_pipeline(spark, root, calls)
-    sdir = os.path.join(root, "stage1")
-    # simulate a crashed attempt: copy the committed snap under a new name,
-    # leaving the pointer at the original
-    (committed,) = [n for n in os.listdir(sdir) if n.startswith("snap-")]
-    orphan = committed[:-3] + f"{int(committed[-3:]) + 1:03d}"
-    shutil.copytree(os.path.join(sdir, committed), os.path.join(sdir, orphan))
-
-    calls2 = []
-    mgr2, df2 = _run_snapshot_pipeline(spark, root, calls2)
-    assert calls2 == []  # pointer still resolves the committed snapshot
-    assert df2.count() == 4
-    removed = mgr2.vacuum("stage1")
-    assert removed == [orphan]
-
-
-def test_vacuum_sweeps_orphaned_pointer_temps(spark, root):
-    """Review r5: a SIGKILL inside the pointer-commit window leaves a
-    `.cur_*` temp in the stage dir (a FAILED commit unlinks its own; a kill
-    cannot) — vacuum must GC those alongside unpointed snapshots, or a
-    long-lived crashing deployment accumulates unbounded litter."""
-    calls = []
-    mgr, _ = _run_snapshot_pipeline(spark, root, calls)
-    sdir = os.path.join(root, "stage1")
-    orphan = os.path.join(sdir, ".cur_orphan123")
-    with open(orphan, "w") as f:
-        f.write("{}")
-    removed = mgr.vacuum("stage1")
-    assert ".cur_orphan123" in removed
-    assert not os.path.exists(orphan)
-    # the pointer and its committed snapshot are untouched
-    assert os.path.exists(os.path.join(sdir, "_current.json"))
-    assert [n for n in os.listdir(sdir) if n.startswith("snap-")]
-
-
 def test_failed_pointer_commit_unlinks_its_temp(spark, root, monkeypatch):
-    """Review r5: when the pointer PUT itself fails (object-store error),
-    the commit raises AND removes its `.cur_*` staging temp — the stage dir
-    must not accumulate one temp per failed commit attempt."""
-    import pytest
-
-    mgr = CheckpointManager(root, commit="snapshot")
+    """The manifest write is a stage's commit point: when its os.replace
+    fails, the call raises AND removes its `._mtmp_*` staging temp (the
+    stage dir must not accumulate one temp per failed commit attempt), and
+    the next run recomputes the stage rather than serve uncommitted data."""
     real_replace = os.replace
 
     def poisoned(src, dst):
-        if os.path.basename(dst) == "_current.json":
-            raise OSError("simulated pointer PUT failure")
+        if os.path.basename(dst) == MANIFEST:
+            raise OSError("simulated manifest commit failure")
         return real_replace(src, dst)
 
-    monkeypatch.setattr(os, "replace", poisoned)
-    with pytest.raises(OSError, match="simulated pointer PUT failure"):
-        mgr.stage(
-            spark,
-            "stage1",
-            lambda: spark.range(5).select(F.col("id")),
-            input_fingerprint="v1",
-        )
+    calls = []
+
+    def build():
+        calls.append("s1")
+        return spark.range(5).select(F.col("id"))
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", poisoned)
+        with pytest.raises(OSError, match="simulated manifest commit failure"):
+            CheckpointManager(root).stage(spark, "stage1", build, input_fingerprint="v1")
     sdir = os.path.join(root, "stage1")
-    assert not [n for n in os.listdir(sdir) if n.startswith(".cur_")]
+    assert not [n for n in os.listdir(sdir) if n.startswith("._mtmp_")]
+    mgr = CheckpointManager(root)
+    assert mgr.manifest("stage1") is None
+    assert mgr.stage(spark, "stage1", build, input_fingerprint="v1").count() == 5
+    assert calls == ["s1", "s1"] and not mgr.results["stage1"].skipped
 
 
 def test_failed_rebuild_keeps_previous_committed_output(spark, root):
@@ -416,27 +301,6 @@ def test_failed_rebuild_keeps_previous_committed_output(spark, root):
         lambda: spark.range(7).select(F.col("id")), input_fingerprint="v2",
     )
     assert df.count() == 7
-
-
-def test_vacuum_refuses_on_corrupt_pointer(spark, root):
-    """Review r5: a pointer file that EXISTS but cannot be parsed (truncated
-    by power loss) must stop vacuum — treating it as 'no pointer' would
-    rmtree the committed current snapshot it referenced."""
-    calls = []
-    mgr, _ = _run_snapshot_pipeline(spark, root, calls)
-    sdir = os.path.join(root, "stage1")
-    snaps_before = sorted(n for n in os.listdir(sdir) if n.startswith("snap-"))
-    with open(os.path.join(sdir, "_current.json"), "w") as f:
-        f.write('{"snapsh')  # truncated mid-write
-    with pytest.raises(RuntimeError, match="refusing to GC"):
-        mgr.vacuum("stage1")
-    assert sorted(n for n in os.listdir(sdir) if n.startswith("snap-")) == snaps_before
-    # a parseable pointer that names no snapshot is equally refused
-    with open(os.path.join(sdir, "_current.json"), "w") as f:
-        f.write("{}")
-    with pytest.raises(RuntimeError, match="names no snapshot"):
-        mgr.vacuum("stage1")
-    assert sorted(n for n in os.listdir(sdir) if n.startswith("snap-")) == snaps_before
 
 
 def test_parent_digest_cross_process_and_missing(spark, root):

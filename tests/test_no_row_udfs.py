@@ -38,18 +38,26 @@ def test_python_boundaries_are_arrow_batched():
     assert found >= {"pandas_udf", "applyInPandas", "mapInPandas", "mapInArrow"}
 
 
-# parameter names that select between implementations of one operator
-FORK_PARAMS = {"engine", "score"}
+# parameter and field names that select between implementations of one
+# operator
+FORK_PARAMS = {"engine", "score", "commit"}
 
 
 def test_no_engine_forks():
-    """No function in the package takes an `engine` or `score` parameter:
-    an operator has ONE implementation, and reference formulations live in
-    tests/."""
+    """No function in the package takes an `engine`, `score` or `commit`
+    parameter, and no class declares such a field (a dataclass field is a
+    constructor parameter): an operator has ONE implementation, and
+    reference formulations live in tests/."""
     offenders = []
     for py in PKG.rglob("*.py"):
         rel = py.relative_to(PKG).as_posix()
         for node in ast.walk(ast.parse(py.read_text())):
+            if isinstance(node, ast.ClassDef):
+                for f in node.body:
+                    if (isinstance(f, ast.AnnAssign) and isinstance(f.target, ast.Name)
+                            and f.target.id in FORK_PARAMS):
+                        offenders.append(f"{rel}:{f.lineno}: class {node.name}.{f.target.id}")
+                continue
             if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 continue
             a = node.args
