@@ -2,6 +2,7 @@
 
 Reference analog: imposm2's hot paths were Cython (imposm/cache/kc.pyx) and
 Shapely/GEOS (imposm/geom.py, imposm/multipolygon.py). This engine has neither;
-every kernel here is pure NumPy over Arrow batches, called from pandas UDFs /
-applyInPandas — never per-row Python in the Spark hot path.
+every kernel here is pure NumPy over Arrow batches, called from Arrow UDFs,
+mapInArrow and applyInArrow — never per-row Python in the Spark hot path.
+Geometry columns reach them as (N,2) float64 views (wkb.coords_rows).
 """

@@ -32,7 +32,7 @@ freezing):
     the holed area). A tile fully inside a hole nets exactly 0 and is
     dropped along with empty clips.
 
-Everything is NumPy over a polygon's rings inside ONE pandas_udf row —
+Everything is NumPy over a polygon's rings inside ONE Arrow UDF row —
 rings cross into Python once per polygon, never once per (polygon, tile).
 """
 

@@ -33,7 +33,7 @@ Algorithm (pure NumPy, no GEOS — deterministic by construction):
    rotational-successor rule (interior on the left: shells come out CCW,
    holes CW), then nest holes into their smallest containing shell.
 
-Everything is per-relation-group work inside applyInPandas — inputs are small,
+Everything is per-relation-group work inside applyInArrow — inputs are small,
 so the O(E^2) split/distance steps are vectorized batch work, not a scale
 concern (the groups are bounded by assemble.MAX_MEMBERS_PER_GROUP upstream).
 """

@@ -9,7 +9,7 @@ rings sorted by |area| desc, nested by containment into shells and holes
 Tag inheritance: imposm/multipolygon.py::RelationBuilderBase.handle_tags — a
 relation with no own interesting tags inherits the (largest) outer way's tags.
 
-These run per relation group inside groupBy(rel_id).applyInPandas; each group is
+These run per relation group inside groupBy(rel_id).applyInArrow; each group is
 small, so plain Python/NumPy loops here are batch-level, not row-level, work.
 """
 
@@ -42,7 +42,7 @@ def merge_fragments(
     Returns (closed_rings, open_chains, dropped_invalid). This is the
     associative half of merge_rings (O10b): a chain emitted for a subset of
     the members is itself a valid input way for a later merge level, so
-    mega-relations can be hash-chunked into bounded applyInPandas groups and
+    mega-relations can be hash-chunked into bounded applyInArrow groups and
     hierarchically merged — the result is identical to a single-level merge
     whenever every stitch point joins exactly two fragments (the only case in
     which single-level merge_rings is itself order-invariant).
@@ -203,7 +203,7 @@ def build_multipolygon(merge: MergeResult) -> MultiPolygon:
                 # test (e.g. a ring poking through a concave shell's notch,
                 # classified as that shell's hole, containing a third ring
                 # that sits in the notch). Salvage the ring as its own shell
-                # — this kernel runs inside applyInPandas, where raising
+                # — this kernel runs inside applyInArrow, where raising
                 # would kill the whole stage for one malformed relation; the
                 # `union` builder is the documented repair path for these.
                 shells.append([geom.ensure_orientation(ring, ccw=True)])
@@ -234,7 +234,7 @@ def build_multipolygon_union(merge: MergeResult) -> MultiPolygon:
     the repair path for pathological nesting, not the bulk default;
     `contains` stays the default exactly as in the reference.
 
-    Robustness: this runs inside applyInPandas, where one raising group kills
+    Robustness: this runs inside applyInArrow, where one raising group kills
     the whole stage — an arrangement too degenerate to trace (snapping
     collapsed a needed vertex) falls back to the `contains` nesting for THAT
     relation instead of raising."""
@@ -269,7 +269,7 @@ def inherit_tags(
     if interesting or not outer_ways:
         return dict(rel_tags)
     # tie-break equal areas by the tag dict's sorted items, NOT input order:
-    # outer_ways arrives in unordered applyInPandas group order, so a plain
+    # outer_ways arrives in unordered applyInArrow group order, so a plain
     # max() over a symmetric two-shell relation would flip the inherited
     # tags run to run (review r5 — violates the order-invariance rule)
     area, tags = max(

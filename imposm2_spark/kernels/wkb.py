@@ -5,7 +5,8 @@ Reference analog: imposm2 shipped geometries to PostGIS as WKB via Shapely/GEOS
 for the OGC well-known-binary spec (public standard), covering exactly the types
 the engine materializes: Point(1), LineString(2), Polygon(3), MultiPolygon(6).
 
-Used only at materialization boundaries; kernels operate on nested float64 arrays.
+Used only at materialization boundaries; kernels operate on (N,2) float64 arrays,
+which coords_rows reads out of the Arrow coordinate columns.
 """
 
 from __future__ import annotations
@@ -13,6 +14,7 @@ from __future__ import annotations
 import struct
 
 import numpy as np
+import pyarrow as pa
 
 WKB_POINT = 1
 WKB_LINESTRING = 2
@@ -103,13 +105,22 @@ def _parse_rings(buf: bytes, off: int) -> tuple[list[np.ndarray], int]:
     return rings, off
 
 
-def nested_to_rings(nested) -> list[np.ndarray]:
-    """Robust to Arrow's object-dtype nested arrays (ndarray-of-ndarray).
-    NULL rings (None) are no rings: [] contains no point and covers no tile."""
-    out = []
-    for r in nested if nested is not None else ():
-        arr = np.asarray(r)
-        if arr.dtype == object:
-            arr = np.vstack([np.asarray(p, dtype=np.float64) for p in r])
-        out.append(np.asarray(arr, dtype=np.float64).reshape(-1, 2))
-    return out
+def coords_rows(col: pa.Array | pa.ChunkedArray) -> list:
+    """Per row of an Arrow list<list<double>> column (a point list): its
+    (N,2) float64 view over the column's flat values buffer; per row of a
+    list<list<list<double>>> column (rings): the list of its rings' views;
+    one more list level per deeper nesting. A NULL row reads as [] (no
+    point, no ring), a NULL double as NaN. The views are read-only."""
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    off = col.offsets.to_numpy()
+    start, end = off[:-1], off[1:]
+    if col.null_count:
+        end = np.where(col.is_null().to_numpy(zero_copy_only=False), start, end)
+    child = col.values
+    if pa.types.is_list(child.type.value_type):
+        items = coords_rows(child)
+        return [items[a:b] for a, b in zip(start.tolist(), end.tolist())]
+    pts = child.offsets.to_numpy()
+    flat = child.values.to_numpy(zero_copy_only=False)
+    return [flat[pts[a] : pts[b]].reshape(-1, 2) for a, b in zip(start.tolist(), end.tolist())]

@@ -9,15 +9,19 @@ Reference analogs:
   A2-A4/G4 ring merge + multipolygon build + tag inheritance:
       imposm/multipolygon.py::{merge_rings, ContainsRelationBuilder,
       RelationBuilderBase.handle_tags} — per-relation NumPy kernel inside
-      groupBy(rel_id).applyInPandas (kernels.rings).
+      groupBy(rel_id).applyInArrow (kernels.rings).
   P4  inserted-way suppression: member ways whose tags the relation subsumes
       are emitted as an id list and anti-joined from the way pass.
   G2/G3 linestring/polygon-from-way: kernels.geom validity rules.
 
-Scale notes (SURVEY.md O10b): AQE cannot split a single applyInPandas group; a
+Geometry crosses into Python as Arrow batches (mapInArrow, applyInArrow):
+kernels.wkb.coords_rows reads a coordinate column as (N,2) float64 views, and
+rings and chains come back as nested Arrow lists.
+
+Scale notes (SURVEY.md O10b): AQE cannot split a single applyInArrow group; a
 mega-relation (10^5 members) is pre-split in assemble_relations: members are
 hash-chunked at `MAX_MEMBERS_PER_GROUP`, each chunk partially merged
-(kernels.rings.merge_fragments), and a second narrow applyInPandas stitches the
+(kernels.rings.merge_fragments), and a second narrow applyInArrow stitches the
 cross-chunk chains — ring merge is associative because stitching only depends
 on endpoint connectivity. Mega-ways in J1 are handled by the shuffle join
 itself (AQE skew).
@@ -25,20 +29,24 @@ itself (AQE skew).
 
 from __future__ import annotations
 
-import pickle
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..kernels import geom, rings as kr
 from ..kernels.wkb import (
+    coords_rows,
     linestring_wkb,
     multipolygon_wkb,
     point_wkb,
     polygon_wkb,
 )
+
+_TAGS = pa.map_(pa.string(), pa.string())
+_RINGS = pa.list_(pa.list_(pa.list_(pa.float64())))
 
 
 # --------------------------------------------------------------------------
@@ -82,18 +90,14 @@ _LINESTRING_SCHEMA = (
 
 def way_linestrings(assembled: DataFrame) -> DataFrame:
     """G2: >=2 points; WKB at the materialization boundary."""
-    valid = assembled.where(F.size("coords") >= 2)
+    valid = assembled.where(F.size("coords") >= 2).select("id", "tags", "coords")
 
     def _batch(it):
-        for pdf in it:
-            pdf = pdf.copy()
-            pdf["wkb"] = [
-                linestring_wkb(np.asarray([list(p) for p in c], dtype=np.float64))
-                for c in pdf["coords"]
-            ]
-            yield pdf
+        for b in it:
+            wkb = [linestring_wkb(c) for c in coords_rows(b.column("coords"))]
+            yield b.append_column("wkb", pa.array(wkb, pa.binary()))
 
-    return valid.mapInPandas(_batch, schema=_LINESTRING_SCHEMA)
+    return valid.mapInArrow(_batch, schema=_LINESTRING_SCHEMA)
 
 
 _POLYGON_SCHEMA = (
@@ -118,28 +122,30 @@ def way_polygons(assembled: DataFrame, repair: bool = False) -> DataFrame:
     )
 
     def _batch(it):
-        for pdf in it:
-            out_rows = []
-            for rid, tags, coords in zip(pdf["id"], pdf["tags"], pdf["coords"]):
+        for b in it:
+            keep, rings, areas, wkbs = [], [], [], []
+            for i, coords in enumerate(coords_rows(b.column("coords"))):
                 parts = _polygon_parts(coords, repair)
                 if parts is None:
                     continue
                 rings_out, area, wkb = parts
-                out_rows.append(
-                    {
-                        "id": rid,
-                        "tags": tags,
-                        "rings": [r.tolist() for r in rings_out],
-                        "area": area,
-                        "wkb": wkb,
-                    }
-                )
-            yield pd.DataFrame(
-                out_rows,
-                columns=["id", "tags", "rings", "area", "wkb"],
+                keep.append(i)
+                rings.append([r.tolist() for r in rings_out])
+                areas.append(area)
+                wkbs.append(wkb)
+            keep = pa.array(keep, pa.int64())
+            yield pa.RecordBatch.from_arrays(
+                [
+                    b.column("id").take(keep),
+                    b.column("tags").take(keep),
+                    pa.array(rings, _RINGS),
+                    pa.array(areas, pa.float64()),
+                    pa.array(wkbs, pa.binary()),
+                ],
+                names=["id", "tags", "rings", "area", "wkb"],
             )
 
-    return closed.mapInPandas(_batch, schema=_POLYGON_SCHEMA)
+    return closed.mapInArrow(_batch, schema=_POLYGON_SCHEMA)
 
 
 def _polygon_parts(coords, repair: bool):
@@ -148,8 +154,7 @@ def _polygon_parts(coords, repair: bool):
     (rings_out, area, wkb) or None (row dropped)."""
     from ..kernels import overlay
 
-    ring = np.asarray([list(p) for p in coords], dtype=np.float64)
-    ring = geom.dedup_consecutive(ring)
+    ring = geom.dedup_consecutive(np.asarray(coords, dtype=np.float64))
     valid = geom.ring_is_valid(ring)
     plain = valid and (
         not repair or overlay.ring_is_simple(geom.ensure_closed(ring))
@@ -180,19 +185,21 @@ def _polygon_parts(coords, repair: bool):
 def with_point_wkb(df: DataFrame) -> DataFrame:
     """G1: append a point-WKB column derived from lon/lat, preserving every
     input column. Callers must route/filter FIRST: Catalyst cannot push a
-    semi-join or filter through mapInPandas, so whatever reaches this stage
-    pays the Python/Arrow boundary row-for-row."""
+    semi-join or filter through mapInArrow, so whatever reaches this stage
+    pays the Python/Arrow boundary row-for-row. A NULL lon/lat reads as NaN."""
     from pyspark.sql.types import BinaryType, StructField, StructType
 
     out_schema = StructType(df.schema.fields + [StructField("wkb", BinaryType())])
 
     def _batch(it):
-        for pdf in it:
-            pdf = pdf.copy()
-            pdf["wkb"] = [point_wkb(x, y) for x, y in zip(pdf["lon"], pdf["lat"])]
-            yield pdf
+        for b in it:
+            lon, lat = (
+                b.column(c).to_numpy(zero_copy_only=False).tolist() for c in ("lon", "lat")
+            )
+            wkb = [point_wkb(x, y) for x, y in zip(lon, lat)]
+            yield b.append_column("wkb", pa.array(wkb, pa.binary()))
 
-    return df.mapInPandas(_batch, schema=out_schema)
+    return df.mapInArrow(_batch, schema=out_schema)
 
 
 def node_points(nodes: DataFrame) -> DataFrame:
@@ -203,17 +210,14 @@ def node_points(nodes: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------------
 # J2 + A2-A4: relation multipolygon assembly
 # --------------------------------------------------------------------------
-_REL_OUT_SCHEMA = (
-    "rel_id long, tags map<string,string>, "
-    "polygons array<array<array<array<double>>>>, area double, wkb binary, "
-    "n_rings int, dropped_unclosed int, dropped_invalid int, "
-    "inserted_ways array<long>"
+_REL_OUT = pa.schema(
+    [
+        ("rel_id", pa.int64()), ("tags", _TAGS), ("polygons", pa.list_(_RINGS)),
+        ("area", pa.float64()), ("wkb", pa.binary()), ("n_rings", pa.int32()),
+        ("dropped_unclosed", pa.int32()), ("dropped_invalid", pa.int32()),
+        ("inserted_ways", pa.list_(pa.int64())),
+    ]
 )
-
-_REL_OUT_COLUMNS = [
-    "rel_id", "tags", "polygons", "area", "wkb", "n_rings",
-    "dropped_unclosed", "dropped_invalid", "inserted_ways",
-]
 
 
 def _finalize_relation(
@@ -222,9 +226,10 @@ def _finalize_relation(
     merge: kr.MergeResult,
     ways_meta: list[tuple[int, dict, float | None, bytes | None]],
     builder: str = "contains",
-) -> pd.DataFrame:
+) -> pa.Table:
     """Shared tail of both assembly paths: nest rings, inherit tags (A4),
-    decide way suppression (P4), emit the output row.
+    decide way suppression (P4), emit the output row (none when nothing
+    was built).
 
     ways_meta: (way_id, way_tags, outer_area, ring_key) — area/key are the
     way's own shoelace area and canonical-ring bytes if it is a closed
@@ -246,7 +251,7 @@ def _finalize_relation(
     else:
         mp = kr.build_multipolygon(merge)
     if not mp.polygons:
-        return pd.DataFrame(columns=_REL_OUT_COLUMNS)
+        return _REL_OUT.empty_table()
 
     shell_keys = {
         geom.canonical_ring(poly[0], ccw=True).tobytes() for poly in mp.polygons
@@ -258,7 +263,7 @@ def _finalize_relation(
     inserted = [wid for wid, wtags, _, _ in ways_meta
                 if kr.way_tags_subsumed(wtags, final_tags)]
     n_rings = sum(len(p) for p in mp.polygons)
-    return pd.DataFrame(
+    return pa.Table.from_pylist(
         [
             {
                 "rel_id": rel_id,
@@ -271,7 +276,8 @@ def _finalize_relation(
                 "dropped_invalid": mp.dropped_invalid,
                 "inserted_ways": inserted,
             }
-        ]
+        ],
+        schema=_REL_OUT,
     )
 
 
@@ -296,127 +302,98 @@ def _way_meta(
     return (int(way_id), dict(way_tags or {}), outer_area, ring_key)
 
 
-def _make_assemble_kernel(builder: str):
-    def _assemble_relation_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        """Kernel for one relation group (rows = resolved member ways)."""
-        rel_id = int(pdf["rel_id"].iloc[0])
-        rel_tags = dict(pdf["rel_tags"].iloc[0] or {})
-
-        pdf = pdf.sort_values("way_id")
-        coords_list = [
-            np.asarray([list(p) for p in c], dtype=np.float64) for c in pdf["coords"]
-        ]
-        ways_meta = [
-            _way_meta(wid, wtags, c)
-            for wid, wtags, c in zip(pdf["way_id"], pdf["way_tags"], coords_list)
-        ]
-        merge = kr.merge_rings(coords_list)
-        return _finalize_relation(rel_id, rel_tags, merge, ways_meta, builder)
-
-    return _assemble_relation_group
+def _group_relation(table: pa.Table) -> tuple[int, dict]:
+    """(rel_id, rel_tags) of a relation group's first row."""
+    return table["rel_id"][0].as_py(), dict(table["rel_tags"][0].as_py() or ())
 
 
-# O10b: AQE cannot split a single applyInPandas group, so a mega-relation
+def _member_ways(table: pa.Table):
+    """The group's member ways sorted by way id: their coords as (N,2)
+    arrays, and their _way_meta tuples."""
+    table = table.sort_by("way_id")
+    coords_list = coords_rows(table["coords"])
+    ways_meta = [
+        _way_meta(wid, wtags, c)
+        for wid, wtags, c in zip(
+            table["way_id"].to_pylist(), table["way_tags"].to_pylist(), coords_list
+        )
+    ]
+    return coords_list, ways_meta
+
+
+def _assemble_relation_group(table: pa.Table, builder: str) -> pa.Table:
+    """Kernel for one relation group (rows = resolved member ways)."""
+    rel_id, rel_tags = _group_relation(table)
+    coords_list, ways_meta = _member_ways(table)
+    merge = kr.merge_rings(coords_list)
+    return _finalize_relation(rel_id, rel_tags, merge, ways_meta, builder)
+
+
+# O10b: AQE cannot split a single applyInArrow group, so a mega-relation
 # (10^5+ members) must be pre-split upstream. Groups wider than this are
 # hash-chunked on way_id, partially merged per chunk (kernels.rings.
 # merge_fragments — associative: a stitched chain is itself a valid input
-# way for the next level), then finalized in a second, narrow applyInPandas
+# way for the next level), then finalized in a second, narrow applyInArrow
 # whose rows are chunk summaries + per-way metadata (no coords), bounding
 # executor memory by max_members x way size instead of relation size.
 MAX_MEMBERS_PER_GROUP = 4096
 
-# rings/chains travel as PICKLED BINARY, not array<array<array<double>>>:
-# the Arrow->pandas deserializer (pyarrow 16.1 / applyInPandas) SEGFAULTS on
-# a triple-nested list column whose batch holds only empty/NULL values —
-# exactly what a chunk whose rings all closed produces (chains = []).
-# Reproduced minimally: [(1, [], None-row)] through an identity
-# applyInPandas kills the worker; one non-empty value per batch masks it,
-# which is why the mega-relation identity test (always-open chains) passed.
-_PARTIAL_SCHEMA = (
-    "rel_id long, rel_tags map<string,string>, chunk int, kind string, "
-    "rings binary, chains binary, "
-    "dropped_invalid int, way_id long, way_tags map<string,string>, "
-    "outer_area double, ring_key binary"
+# one 'geom' row per chunk (closed rings, open chains, invalid count) and
+# one 'meta' row per member way; the other kind's columns are NULL
+_PARTIAL = pa.schema(
+    [
+        ("rel_id", pa.int64()), ("rel_tags", _TAGS), ("chunk", pa.int32()),
+        ("kind", pa.string()), ("rings", _RINGS), ("chains", _RINGS),
+        ("dropped_invalid", pa.int32()), ("way_id", pa.int64()),
+        ("way_tags", _TAGS), ("outer_area", pa.float64()), ("ring_key", pa.binary()),
+    ]
 )
 
 
-def _partial_merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
+def _partial_merge_group(table: pa.Table) -> pa.Table:
     """Stage-A kernel for one (rel_id, chunk): emits ONE 'geom' row (closed
     rings + open chains + invalid count) and one 'meta' row per member way
     (tags + own closed area — what A4/P4 need, without the coords)."""
-    rel_id = int(pdf["rel_id"].iloc[0])
-    rel_tags = dict(pdf["rel_tags"].iloc[0] or {})
-    chunk = int(pdf["_chunk"].iloc[0])
-
-    pdf = pdf.sort_values("way_id")
-    coords_list = [
-        np.asarray([list(p) for p in c], dtype=np.float64) for c in pdf["coords"]
-    ]
+    rel_id, rel_tags = _group_relation(table)
+    head = {"rel_id": rel_id, "rel_tags": rel_tags, "chunk": table["_chunk"][0].as_py()}
+    coords_list, ways_meta = _member_ways(table)
     closed, chains, dropped_invalid = kr.merge_fragments(coords_list)
     rows = [
         {
-            "rel_id": rel_id, "rel_tags": rel_tags, "chunk": chunk,
-            "kind": "geom",
-            "rings": pickle.dumps([np.asarray(r) for r in closed], protocol=4),
-            "chains": pickle.dumps([np.asarray(c) for c in chains], protocol=4),
+            **head, "kind": "geom",
+            "rings": [r.tolist() for r in closed],
+            "chains": [c.tolist() for c in chains],
             "dropped_invalid": dropped_invalid,
-            "way_id": None, "way_tags": None, "outer_area": None,
-            "ring_key": None,
         }
     ]
-    for wid, wtags, c in zip(pdf["way_id"], pdf["way_tags"], coords_list):
-        mid, mtags, marea, mkey = _way_meta(wid, wtags, c)
+    for mid, mtags, marea, mkey in ways_meta:
         rows.append(
             {
-                "rel_id": rel_id, "rel_tags": rel_tags, "chunk": chunk,
-                "kind": "meta", "rings": None, "chains": None,
-                "dropped_invalid": None,
-                "way_id": mid, "way_tags": mtags, "outer_area": marea,
-                "ring_key": mkey,
+                **head, "kind": "meta", "way_id": mid, "way_tags": mtags,
+                "outer_area": marea, "ring_key": mkey,
             }
         )
-    return pd.DataFrame(rows)
+    return pa.Table.from_pylist(rows, schema=_PARTIAL)
 
 
-def _make_finalize_chunked_kernel(builder: str):
-    def _finalize_chunked_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _finalize_chunked_group_impl(pdf, builder)
-
-    return _finalize_chunked_group
-
-
-def _finalize_chunked_group_impl(pdf: pd.DataFrame, builder: str) -> pd.DataFrame:
+def _finalize_chunked_group(table: pa.Table, builder: str) -> pa.Table:
     """Stage-B kernel: stitch cross-chunk chains, validity-filter, nest, and
     emit the same row the single-stage kernel would."""
-    rel_id = int(pdf["rel_id"].iloc[0])
-    rel_tags = dict(pdf["rel_tags"].iloc[0] or {})
+    rel_id, rel_tags = _group_relation(table)
 
-    geoms = pdf[pdf["kind"] == "geom"].sort_values("chunk")
+    geoms = table.filter(pc.equal(table["kind"], "geom")).sort_by("chunk")
     ways_input: list[np.ndarray] = []
-    chunk_invalid = 0
-    for inv, rings_b, chains_b in zip(
-        geoms["dropped_invalid"], geoms["rings"], geoms["chains"]
-    ):
-        chunk_invalid += int(inv)
-        for r in pickle.loads(bytes(rings_b)):
-            ways_input.append(np.asarray(r, dtype=np.float64))
-        for c in pickle.loads(bytes(chains_b)):
-            ways_input.append(np.asarray(c, dtype=np.float64))
+    for rings, chains in zip(coords_rows(geoms["rings"]), coords_rows(geoms["chains"])):
+        ways_input += rings + chains
 
     merge = kr.merge_rings(ways_input)
-    merge.dropped_invalid += chunk_invalid
+    merge.dropped_invalid += sum(geoms["dropped_invalid"].to_pylist())
 
-    meta = pdf[pdf["kind"] == "meta"].sort_values("way_id")
+    meta = table.filter(pc.equal(table["kind"], "meta")).sort_by("way_id")
     ways_meta = [
-        (
-            int(wid),
-            dict(wtags or {}),
-            None if pd.isna(area) else float(area),
-            None if key is None else bytes(key),
-        )
+        (wid, dict(wtags or ()), area, key)
         for wid, wtags, area, key in zip(
-            meta["way_id"], meta["way_tags"], meta["outer_area"],
-            meta["ring_key"],
+            *(meta[c].to_pylist() for c in ("way_id", "way_tags", "outer_area", "ring_key"))
         )
     ]
     return _finalize_relation(rel_id, rel_tags, merge, ways_meta, builder)
@@ -428,7 +405,7 @@ def assemble_relations(
     max_members: int = MAX_MEMBERS_PER_GROUP,
     relation_builder: str = "contains",
 ) -> DataFrame:
-    """J2 + A2-A4: -> one row per buildable relation (see _REL_OUT_SCHEMA).
+    """J2 + A2-A4: -> one row per buildable relation (see _REL_OUT).
 
     relations: (id, tags, members ARRAY<STRUCT<ref, type, role>>)
     assembled_ways: output of assemble_ways.
@@ -471,11 +448,14 @@ def assemble_relations(
         "inner",
     ).select("rel_id", "rel_tags", "_n", "way_id", "way_tags", "coords")
 
+    out_schema = from_arrow_schema(_REL_OUT)
     small_out = (
         resolved.where(F.col("_n") <= max_members)
         .drop("_n")
         .groupBy("rel_id")
-        .applyInPandas(_make_assemble_kernel(relation_builder), schema=_REL_OUT_SCHEMA)
+        .applyInArrow(
+            lambda t: _assemble_relation_group(t, relation_builder), schema=out_schema
+        )
     )
 
     chunked = resolved.where(F.col("_n") > max_members).withColumn(
@@ -491,11 +471,11 @@ def assemble_relations(
             F.ceil(F.col("_n") / F.lit(max_members)),
         ).cast("int"),
     )
-    partial = chunked.groupBy("rel_id", "_chunk").applyInPandas(
-        _partial_merge_group, schema=_PARTIAL_SCHEMA
+    partial = chunked.groupBy("rel_id", "_chunk").applyInArrow(
+        _partial_merge_group, schema=from_arrow_schema(_PARTIAL)
     )
-    big_out = partial.groupBy("rel_id").applyInPandas(
-        _make_finalize_chunked_kernel(relation_builder), schema=_REL_OUT_SCHEMA
+    big_out = partial.groupBy("rel_id").applyInArrow(
+        lambda t: _finalize_chunked_group(t, relation_builder), schema=out_schema
     )
     return small_out.unionByName(big_out)
 

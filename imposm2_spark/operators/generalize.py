@@ -15,43 +15,28 @@ from __future__ import annotations
 from dataclasses import dataclass
 from functools import reduce
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..kernels import geom, simplify
-from ..kernels.wkb import multipolygon_wkb, nested_to_rings
+from ..kernels.wkb import coords_rows, multipolygon_wkb
 
 _POLY_T = T.ArrayType(T.ArrayType(T.ArrayType(T.ArrayType(T.DoubleType()))))
 
 
-def simplify_polygons_udf(tolerance: float):
-    """polygons ARRAY^4<DOUBLE> -> simplified polygons (or NULL if everything
-    collapsed). Shell collapse drops the whole polygon incl. holes."""
-
-    @F.pandas_udf(_POLY_T)
-    def _udf(polygons: pd.Series) -> pd.Series:
-        def one(polys):
-            if polys is None:  # NULL geometry row: pass through, don't crash
-                return None
-            out = []
-            for rings_nested in polys:
-                rings = nested_to_rings(rings_nested)
-                shell = simplify.simplify_ring(rings[0], tolerance)
-                if shell is None:
-                    continue
-                new_rings = [shell.tolist()]
-                for hole in rings[1:]:
-                    h = simplify.simplify_ring(hole, tolerance)
-                    if h is not None:
-                        new_rings.append(h.tolist())
-                out.append(new_rings)
-            return out or None
-
-        return polygons.map(one)
-
-    return _udf
+def _simplify_polygons(polys, tolerance: float) -> list:
+    """Simplified [shell, hole, ...] per polygon: a collapsed shell drops
+    its polygon incl. holes, a collapsed hole only itself."""
+    out = []
+    for rings in polys:
+        shell = simplify.simplify_ring(rings[0], tolerance)
+        if shell is None:
+            continue
+        holes = (simplify.simplify_ring(h, tolerance) for h in rings[1:])
+        out.append([shell] + [h for h in holes if h is not None])
+    return out
 
 
 def generalized_table(
@@ -61,60 +46,54 @@ def generalized_table(
     polygons_col: str = "polygons",
 ) -> DataFrame:
     """The GeneralizedTable CTAS: filter -> simplify -> recompute area/wkb,
-    dropping features whose geometry collapsed at this tolerance.
+    dropping features whose geometry collapsed at this tolerance. One Arrow
+    crossing reads the geometry once and emits the surviving rows with
+    their simplified polygons, area and wkb.
 
     NULL geometry rows (union_view NULL-padding, nullable parquet read-back)
-    are dropped BEFORE the UDF (review r5): besides being the semantics a
-    generalized table wants, an Arrow batch whose deep-nested geometry
-    column is ALL NULL crashes the pyarrow deserializer outright (the r3
-    codec gotcha), so the guard must be a codegen filter ahead of the
-    Python boundary, not (only) a None-check inside it."""
+    are dropped by a filter ahead of the crossing (review r5): a generalized
+    table holds no feature without a geometry."""
     df = origin.where(F.col(polygons_col).isNotNull())
     if where is not None:
         df = df.where(where)
-    df = df.withColumn(polygons_col, simplify_polygons_udf(tolerance)(F.col(polygons_col)))
-    df = df.where(F.col(polygons_col).isNotNull())
+    cols = [c for c in df.columns if c not in ("area", "wkb")]
+    out_schema = T.StructType(
+        [T.StructField(c, _POLY_T) if c == polygons_col else df.schema[c] for c in cols]
+        + [T.StructField("area", T.DoubleType()), T.StructField("wkb", T.BinaryType())]
+    )
 
-    @F.pandas_udf(T.DoubleType())
-    def _area(polygons: pd.Series) -> pd.Series:
-        def one(polys):
-            # NULL-safe: Catalyst may evaluate projection UDFs before the
-            # isNotNull filter they syntactically follow (collapsed stages)
-            if polys is None:
-                return None
-            return geom.polygons_area(
-                [nested_to_rings(rings_nested) for rings_nested in polys]
+    def _batch(it):
+        for b in it:
+            keep, kept = [], []
+            for i, polys in enumerate(coords_rows(b.column(polygons_col))):
+                out = _simplify_polygons(polys, tolerance)
+                if out:
+                    keep.append(i)
+                    kept.append(out)
+            keep = pa.array(keep, pa.int64())
+            simplified = pa.array(
+                [[[r.tolist() for r in p] for p in polys] for polys in kept],
+                b.schema.field(polygons_col).type,
+            )
+            yield pa.RecordBatch.from_arrays(
+                [simplified if c == polygons_col else b.column(c).take(keep) for c in cols]
+                + [
+                    pa.array([geom.polygons_area(p) for p in kept], pa.float64()),
+                    pa.array([multipolygon_wkb(p) for p in kept], pa.binary()),
+                ],
+                names=cols + ["area", "wkb"],
             )
 
-        return polygons.map(one)
-
-    @F.pandas_udf(T.BinaryType())
-    def _wkb(polygons: pd.Series) -> pd.Series:
-        return polygons.map(
-            lambda polys: None if polys is None
-            else multipolygon_wkb([nested_to_rings(p) for p in polys])
-        )
-
-    cols = [c for c in df.columns if c not in ("area", "wkb")]
-    return df.select(
-        *cols,
-        _area(F.col(polygons_col)).alias("area"),
-        _wkb(F.col(polygons_col)).alias("wkb"),
-    )
+    return df.select(*cols).mapInArrow(_batch, out_schema)
 
 
 def simplify_lines_udf(tolerance: float):
-    @F.pandas_udf(T.ArrayType(T.ArrayType(T.DoubleType())))
-    def _udf(coords: pd.Series) -> pd.Series:
-        import numpy as np
-
-        def one(pts):
-            if pts is None:  # NULL geometry row: pass through, don't crash
-                return None
-            arr = np.asarray([list(p) for p in pts], dtype=np.float64)
-            return simplify.simplify_line(arr, tolerance).tolist()
-
-        return coords.map(one)
+    @F.arrow_udf(T.ArrayType(T.ArrayType(T.DoubleType())))
+    def _udf(coords: pa.Array) -> pa.Array:
+        return pa.array(
+            [simplify.simplify_line(c, tolerance).tolist() for c in coords_rows(coords)],
+            coords.type,
+        )
 
     return _udf
 

@@ -25,7 +25,7 @@ collects an attribute group anywhere:
      (operators.dedup.dedup_connected_components — O(log diameter) rounds,
      label frame is 2 longs per PAIRED segment only, not the corpus);
   4. one rollup agg per component (count, min id, exact DECIMAL length sum),
-     or — geometry variant — one applyInPandas per component stitching
+     or — geometry variant — one applyInArrow per component stitching
      coords with the associative kernels.rings.merge_fragments.
 
 At 10^12 segments every stage is an equi-shuffle on bounded keys; the pair
@@ -47,9 +47,15 @@ tests/test_lines.py.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
+from ..kernels import geom as kgeom
+from ..kernels import rings as krings
+from ..kernels.wkb import coords_rows
 from .dedup import dedup_connected_components
 
 __all__ = ["merge_lines", "merge_line_geometries", "stitch_pairs"]
@@ -205,12 +211,6 @@ def merge_line_geometries(
     kernels.geom.canonical_ring (smallest vertex first, CCW) — so shuffling
     or reversing input segments yields byte-identical output (pytest-pinned).
     """
-    import numpy as np
-    import pandas as pd
-
-    from ..kernels import geom as kgeom
-    from ..kernels import rings as krings
-
     pairs = stitch_pairs(
         segments,
         id_col=id_col,
@@ -226,47 +226,40 @@ def merge_line_geometries(
         *[F.col(c) for c in group_cols],
         F.col("_comp").alias("merged_id"),
         F.col(id_col).alias("_seg"),
-        F.col(xs_col).alias("_xs"),
-        F.col(ys_col).alias("_ys"),
+        F.zip_with(xs_col, ys_col, lambda x, y: F.array(x, y)).alias("_pts"),
     )
 
     gcols = list(group_cols)
-    schema_prefix = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}"
-        for f in with_comp.schema
-        if f.name in gcols
+    coord_list = T.ArrayType(T.DoubleType())
+    out_schema = T.StructType(
+        [with_comp.schema[c] for c in gcols]
+        + [
+            T.StructField("merged_id", T.LongType()),
+            T.StructField("n_segments", T.LongType()),
+            T.StructField("closed", T.BooleanType()),
+            T.StructField("xs", coord_list),
+            T.StructField("ys", coord_list),
+        ]
     )
-    out_schema = (
-        f"{schema_prefix}, merged_id long, n_segments long, closed boolean, "
-        "xs array<double>, ys array<double>"
-    )
+    arrow_schema = to_arrow_schema(out_schema)
 
-    def _stitch(key, pdf):
-        if len(pdf) > max_component_segments:
+    def _stitch(key, table):
+        key = tuple(k.as_py() for k in key)
+        if len(table) > max_component_segments:
             raise ValueError(
-                f"merged-line component {key} has {len(pdf)} segments, over "
+                f"merged-line component {key} has {len(table)} segments, over "
                 f"max_component_segments={max_component_segments}; chunk the "
                 "stitch hierarchically (merge_fragments is associative) or "
                 "raise the cap explicitly"
             )
-        ways = [
-            np.column_stack(
-                [np.asarray(x, dtype=np.float64), np.asarray(y, dtype=np.float64)]
-            )
-            for x, y in zip(pdf["_xs"], pdf["_ys"])
-        ]
-        closed, chains, dropped = krings.merge_fragments(ways)
+        closed, chains, dropped = krings.merge_fragments(coords_rows(table["_pts"]))
         pieces = len(closed) + len(chains)
         if pieces == 0 and dropped:
             # every fragment degenerate (<2 distinct points): no valid
             # linestring to emit (G2 semantics). The ROLLUP path still
             # counts such components — geometry is geometry, rollups are
             # bookkeeping (tests pin both behaviors)
-            # object dtype: an empty float64 ndarray column fails Arrow's
-            # list<double> conversion; empty object columns convert to any
-            return pd.DataFrame({c: pd.Series([], dtype=object) for c in
-                                 gcols + ["merged_id", "n_segments",
-                                          "closed", "xs", "ys"]})
+            return arrow_schema.empty_table()
         # degree-2 components stitch to exactly one piece; quantum-level
         # float jitter (keys matched, raw coords differ) could leave more —
         # surface that loudly instead of emitting a broken geometry
@@ -283,14 +276,13 @@ def merge_line_geometries(
             chain = chains[0]
             fwd = (chain[0, 0], chain[0, 1]) <= (chain[-1, 0], chain[-1, 1])
             arr, is_closed = (chain if fwd else chain[::-1]), False
-        row = {c: [pdf[c].iloc[0]] for c in gcols}
+        row = {c: table[c].slice(0, 1) for c in gcols + ["merged_id"]}
         row.update(
-            merged_id=[pdf["merged_id"].iloc[0]],
-            n_segments=[len(pdf)],
+            n_segments=[len(table)],
             closed=[is_closed],
             xs=[arr[:, 0].tolist()],
             ys=[arr[:, 1].tolist()],
         )
-        return pd.DataFrame(row)
+        return pa.Table.from_pydict(row, schema=arrow_schema)
 
-    return with_comp.groupBy(*gcols, "merged_id").applyInPandas(_stitch, out_schema)
+    return with_comp.groupBy(*gcols, "merged_id").applyInArrow(_stitch, out_schema)

@@ -15,15 +15,16 @@ intersection test on tile corners).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from ..functions.spatial import tile_x, tile_y
 from ..kernels import cells as kcells
 from ..kernels import geom
-from ..kernels.wkb import nested_to_rings
+from ..kernels.wkb import coords_rows
 
 
 def assign_point_tiles(
@@ -57,6 +58,7 @@ def assign_point_tiles(
 _TILE_ARRAY = T.ArrayType(
     T.StructType(
         [
+            T.StructField("z", T.IntegerType()),
             T.StructField("x", T.LongType()),
             T.StructField("y", T.LongType()),
         ]
@@ -127,17 +129,18 @@ def _edge_hits(xs: np.ndarray, ys: np.ndarray, ring_arrays, z: int) -> np.ndarra
 
 
 def _covering_tiles_kernel(
-    rings_nested, z: int, refine: str = "center",
+    ring_arrays, z: int, refine: str = "center",
     max_cells: int | None = None,
 ) -> list[dict]:
-    """refine="center" (frozen default, FIXTURES golden): keep tiles whose
+    """The (z, x, y) tiles covering one polygon given as its rings.
+
+    refine="center" (frozen default, FIXTURES golden): keep tiles whose
     center is inside OR that contain a ring vertex — a sliver crossing a
     tile mid-edge (no center, no vertex) is missed. refine="exact" (r4
     opt-in, SURVEY App. B #6 upgrade path) additionally keeps tiles any ring
     edge intersects, which together with center-in (tile wholly interior)
     and vertex-in (polygon wholly inside tile) is the exact intersection set
     for closed rings (boundary-touching tiles included)."""
-    ring_arrays = nested_to_rings(rings_nested)
     if not ring_arrays:
         return []  # NULL or empty rings: no area, no tiles
     lon_min, lat_min, lon_max, lat_max = geom.rings_bbox(ring_arrays)
@@ -162,32 +165,32 @@ def _covering_tiles_kernel(
     if refine == "exact":
         keep |= _edge_hits(xs, ys, ring_arrays, z)
     return [
-        {"x": int(x), "y": int(y)}
+        {"z": z, "x": int(x), "y": int(y)}
         for x, y in zip(xs[keep].tolist(), ys[keep].tolist())
     ]
 
 
 def covering_tiles_udf(
-    z: int, refine: str = "center", max_cells: int | None = None
+    zooms: list[int], refine: str = "center", max_cells: int | None = None
 ):
-    @F.pandas_udf(_TILE_ARRAY)
-    def _udf(rings: pd.Series) -> pd.Series:
-        return rings.map(
-            lambda r: _covering_tiles_kernel(r, z, refine, max_cells=max_cells)
+    """arrow_udf: rings -> the covering tiles at every zoom of `zooms`; the
+    rings are decoded once per batch for all zooms."""
+    tile_type = to_arrow_type(_TILE_ARRAY)
+
+    @F.arrow_udf(_TILE_ARRAY)
+    def _udf(rings: pa.Array) -> pa.Array:
+        return pa.array(
+            [
+                [t for z in zooms for t in _covering_tiles_kernel(r, z, refine, max_cells)]
+                for r in coords_rows(rings)
+            ],
+            tile_type,
         )
 
     return _udf
 
 
 MAX_COVER_CELLS = 1 << 20  # per-polygon covering-grid bound (review r5)
-
-
-def with_rings(polygons: DataFrame) -> DataFrame:
-    """The polygon rows holding at least one ring. A NULL or [] rings row
-    covers and cuts nothing, and an Arrow batch of only such rows crashes
-    the Python worker (pyarrow 16.1 reading an all-empty triple-nested
-    list column), so the ring UDFs never see one."""
-    return polygons.where(F.size("rings") > 0)
 
 
 def assign_polygon_tiles(
@@ -201,26 +204,15 @@ def assign_polygon_tiles(
     _covering_tiles_kernel. `max_cells_per_polygon` mirrors pip_join's
     max_broadcast_polygons contract: one continent-scale polygon at a deep
     zoom would densify millions of cells inside a single UDF row, so the
-    kernel fails loudly at the bound instead of stalling an executor."""
+    kernel fails loudly at the bound instead of stalling an executor.
+    A NULL or [] rings row covers no tile. One Arrow crossing serves every
+    zoom."""
     if not zooms:
         raise ValueError("assign_polygon_tiles: zooms must be non-empty")
-    polygons = with_rings(polygons)
-    outs = []
-    for z in zooms:
-        tiles = polygons.select(
-            "polygon_id",
-            F.lit(z).alias("z"),
-            F.explode(
-                covering_tiles_udf(z, refine, max_cells=max_cells_per_polygon)(
-                    F.col("rings")
-                )
-            ).alias("_t"),
-        ).select("polygon_id", "z", F.col("_t.x").alias("x"), F.col("_t.y").alias("y"))
-        outs.append(tiles)
-    result = outs[0]
-    for t in outs[1:]:
-        result = result.unionByName(t)
-    return result
+    cover = covering_tiles_udf(list(zooms), refine, max_cells=max_cells_per_polygon)
+    return polygons.select("polygon_id", F.explode(cover(F.col("rings"))).alias("_t")).select(
+        "polygon_id", F.col("_t.z").alias("z"), F.col("_t.x").alias("x"), F.col("_t.y").alias("y")
+    )
 
 
 def raster_patch_join(
@@ -303,11 +295,9 @@ _CLIP_ARRAY = T.ArrayType(
             T.StructField("n_pts", T.IntegerType()),
             T.StructField("area", T.DoubleType()),
             # tile-local ring coords, FLATTENED (x0,y0,x1,y1,...) with ring
-            # sizes alongside: a deliberately 2-level encoding. The natural
-            # array<array<array<double>>> shape trips the pyarrow 16.1
-            # empty-batch segfault (verify recipe r3 gotcha) and costs 3
-            # levels of offset buffers; flat + sizes is the Arrow-friendly
-            # columnar form and reconstructs with one np.split.
+            # sizes alongside: the columnar form, one offset level instead
+            # of the three of array<array<array<double>>>, and a reader
+            # rebuilds the rings with one np.split.
             T.StructField("ring_sizes", T.ArrayType(T.IntegerType())),
             T.StructField("rings_flat", T.ArrayType(T.DoubleType())),
         ]
@@ -316,15 +306,16 @@ _CLIP_ARRAY = T.ArrayType(
 
 
 def clip_tiles_udf(z: int, max_cells: int | None = None):
-    """pandas_udf: rings -> array of per-tile clip structs at zoom z.
+    """arrow_udf: rings -> array of per-tile clip structs at zoom z.
 
     Rings cross into Python ONCE per polygon; the tile fan-out (covering
     tiles -> SH clip per tile) happens inside the kernel, so the shuffle
     never carries ring payload duplicated per tile."""
     from ..kernels import clip as kclip
 
-    def _one(rings_nested) -> list[dict]:
-        ring_arrays = nested_to_rings(rings_nested)
+    clip_type = to_arrow_type(_CLIP_ARRAY)
+
+    def _one(ring_arrays) -> list[dict]:
         if not ring_arrays:
             return []  # NULL or empty rings: nothing to cut
         # candidates = the bbox tile grid directly — the SH cut itself
@@ -358,9 +349,9 @@ def clip_tiles_udf(z: int, max_cells: int | None = None):
             )
         return out
 
-    @F.pandas_udf(_CLIP_ARRAY)
-    def _udf(rings: pd.Series) -> pd.Series:
-        return rings.map(_one)
+    @F.arrow_udf(_CLIP_ARRAY)
+    def _udf(rings: pa.Array) -> pa.Array:
+        return pa.array([_one(r) for r in coords_rows(rings)], clip_type)
 
     return _udf
 
@@ -379,8 +370,9 @@ def clip_polygons_to_tiles(
     Scale shape: identical to assign_polygon_tiles — one Arrow batch per
     polygon partition, fan-out inside the kernel, explode after; no join,
     no shuffle beyond the input's layout. `max_cells_per_polygon` bounds
-    the per-polygon covering grid with the same loud-failure contract."""
-    tiles = with_rings(polygons).select(
+    the per-polygon covering grid with the same loud-failure contract.
+    A NULL or [] rings row cuts no tile."""
+    tiles = polygons.select(
         "polygon_id",
         F.lit(z).alias("z"),
         F.explode(
@@ -411,17 +403,16 @@ _CLIPLINE_ARRAY = T.ArrayType(
 
 
 def clip_line_tiles_udf(z: int):
-    """pandas_udf: polyline pts -> array of per-tile line-cut structs.
+    """arrow_udf: polyline pts -> array of per-tile line-cut structs.
 
     Candidate tiles come from PER-SEGMENT bbox ranges (tight and linear in
     the polyline length — a diagonal line's whole-bbox grid would be
     quadratic), then each candidate gets the exact Liang-Barsky cut."""
     from ..kernels import clip as kclip
 
-    def _one(pts_nested) -> list[dict]:
-        pts = np.asarray(
-            [np.asarray(p, dtype=np.float64) for p in pts_nested]
-        ).reshape(-1, 2)
+    clipline_type = to_arrow_type(_CLIPLINE_ARRAY)
+
+    def _one(pts) -> list[dict]:
         if len(pts) < 2:
             return []
         proj = kclip.project_ring(pts, z)
@@ -451,9 +442,9 @@ def clip_line_tiles_udf(z: int):
             )
         return out
 
-    @F.pandas_udf(_CLIPLINE_ARRAY)
-    def _udf(pts: pd.Series) -> pd.Series:
-        return pts.map(_one)
+    @F.arrow_udf(_CLIPLINE_ARRAY)
+    def _udf(pts: pa.Array) -> pa.Array:
+        return pa.array([_one(p) for p in coords_rows(pts)], clipline_type)
 
     return _udf
 
@@ -463,7 +454,8 @@ def clip_lines_to_tiles(lines: DataFrame, z: int) -> DataFrame:
     cut at the tile boundary (kernels/clip.py line spec: Liang-Barsky per
     segment, run stitching across continuous segments, tile-local coords,
     euclidean length in tile units). Same scale shape as the polygon cut:
-    points cross into Python once per line, fan-out inside the kernel."""
+    points cross into Python once per line, fan-out inside the kernel.
+    A NULL or [] pts row cuts no tile."""
     tiles = lines.select(
         "line_id",
         F.lit(z).alias("z"),

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
@@ -656,7 +657,7 @@ def q_mapping_route(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_relation_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3 BOTH relation builders in one driver row (r5 fold of
     `relation_multipolygon_assembly` + `relation_multipolygon_union`; same
-    fixtures, now the full shared _REL_OUT_SCHEMA column set for each):
+    fixtures, now the full shared _REL_OUT column set for each):
 
     - variant='contains' (reference default): MP-01..08 fixture — nesting by
       ring containment, unclosed-member drop (rel 5), multi-outer split
@@ -2284,19 +2285,19 @@ def q_mapping_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register("wkb_roundtrip_landusages", oracle=golden.WKB_ROUNDTRIP_LANDUSAGES)
 def q_wkb_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
     from pyspark.sql import types as T
 
     from ..operators import defaultmapping as dm
     from ..plans.import_pipeline import import_tables
 
-    def _decoded_area(wkb):
+    @F.arrow_udf(T.DoubleType())
+    def decoded_area(wkb: pa.Array) -> pa.Array:
         from ..kernels import geom
         from ..kernels.wkb import parse_wkb
 
         out = []
-        for buf in wkb:
-            gtype, payload = parse_wkb(bytes(buf))
+        for buf in wkb.to_pylist():
+            gtype, payload = parse_wkb(buf)
             polys = payload if gtype == 6 else [payload]  # 6=MultiPolygon, 3=Polygon
             total = 0.0
             for rings in polys:
@@ -2304,9 +2305,7 @@ def q_wkb_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                     a = abs(geom.ring_signed_area(ring))
                     total += a if i == 0 else -a
             out.append(total)
-        return pd.Series(out)
-
-    decoded_area = F.pandas_udf(_decoded_area, T.DoubleType())
+        return pa.array(out, pa.float64())
 
     nodes, ways, relations = fixtures.osm_dfs(spark)
     out = import_tables(spark, nodes, ways, relations, [dm.LANDUSAGES])

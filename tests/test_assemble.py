@@ -143,7 +143,9 @@ def test_mega_relation_chunked_path_identical(spark):
     """O10b: a synthetic 4k-member relation (one giant outer ring split into
     2-point segments + a segmented hole + one separate closed shell) produces
     byte-identical output through the chunked two-stage path (max_members
-    forces ~16 chunks) and the single-stage path."""
+    forces ~16 chunks) and the single-stage path. So does a relation of
+    closed member rings only, whose chunks carry no open chain (chains = [])
+    and sit alone in one-row Arrow batches."""
     n = 4000
     theta = np.linspace(0.0, 2 * np.pi, n, endpoint=False)
     outer = np.c_[10.0 * np.cos(theta), 10.0 * np.sin(theta)]
@@ -175,7 +177,7 @@ def test_mega_relation_chunked_path_identical(spark):
         ),
     )
 
-    def run(max_members):
+    def run(max_members, rels=rels, aw=aw):
         out = assemble_relations(rels, aw, max_members=max_members).collect()
         assert len(out) == 1
         r = out[0]
@@ -192,6 +194,36 @@ def test_mega_relation_chunked_path_identical(spark):
     expected_area = 0.5 * n * 100.0 * np.sin(2 * np.pi / n) - 16.0 + 1.0
     assert abs(single[1] - expected_area) < 1e-6
     assert single[3] == 0 and single[4] == 0  # nothing dropped
+
+    # four shells with a hole each, every member way closed; distinct sizes
+    # keep the area-sorted nesting free of ties
+    def square(x0, y0, side):
+        return [[x0, y0], [x0 + side, y0], [x0 + side, y0 + side],
+                [x0, y0 + side], [x0, y0]]
+
+    closed_rows = []
+    for k in range(4):
+        x0 = 100.0 + 20.0 * k
+        closed_rows.append((20000 + 2 * k, {}, square(x0, 0.0, 8.0 + k)))
+        closed_rows.append((20001 + 2 * k, {}, square(x0 + 2.0, 2.0, 2.0 + 0.5 * k)))
+    aw2 = spark.createDataFrame(
+        closed_rows, schema="id long, tags map<string,string>, coords array<array<double>>"
+    )
+    rels2 = spark.createDataFrame(
+        [(78, {"type": "multipolygon", "landuse": "meadow"},
+          [{"ref": r[0], "type": "way", "role": ""} for r in closed_rows])],
+        schema=rels.schema,
+    )
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    orig = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        single2 = run(10**9, rels2, aw2)
+        chunked2 = run(2, rels2, aw2)
+    finally:
+        spark.conf.set(key, orig)
+    assert single2 == chunked2
+    assert single2[2] == 8 and single2[3] == 0 and single2[4] == 0
 
 
 def test_assembly_partition_invariance(spark):
@@ -249,37 +281,45 @@ def test_repair_fallback_never_drops_valid_rings(monkeypatch):
     assert _polygon_parts(bowtie, repair=True) is None
 
 
+def _relation_group(rel_id, way_ids, way_tags, coords):
+    """One relation group as the assembly kernel receives it from applyInArrow."""
+    import pyarrow as pa
+
+    tags = pa.map_(pa.string(), pa.string())
+    n = len(way_ids)
+    return pa.table(
+        {
+            "rel_id": pa.array([rel_id] * n, pa.int64()),
+            "rel_tags": pa.array([{"type": "multipolygon"}] * n, tags),
+            "way_id": pa.array(way_ids, pa.int64()),
+            "way_tags": pa.array(way_tags, tags),
+            "coords": pa.array(coords, pa.list_(pa.list_(pa.float64()))),
+        }
+    )
+
+
 def test_a4_fragmented_outer_does_not_inherit_hole_tags():
     """A4 candidacy is decided against the BUILT shells: with the outer
     boundary stitched from open fragments, the only closed member way is the
     tagged lake (a hole) — the relation must NOT inherit the hole's tags,
     and P4 must NOT suppress the lake way (pre-fix: the polygon turned into
     water and the lake vanished)."""
-    import pandas as pd
+    from imposm2_spark.operators.assemble import _assemble_relation_group
 
-    from imposm2_spark.operators.assemble import _make_assemble_kernel
-
-    pdf = pd.DataFrame(
-        {
-            "rel_id": [9001] * 3,
-            "rel_tags": [{"type": "multipolygon"}] * 3,
-            "way_id": [901, 902, 903],
-            "way_tags": [
-                {"landuse": "forest"},
-                {"landuse": "forest"},
-                {"natural": "water"},
-            ],
-            "coords": [
-                [[0.0, 0.0], [10.0, 0.0], [10.0, 10.0]],          # open fragment
-                [[10.0, 10.0], [0.0, 10.0], [0.0, 0.0]],           # open fragment
-                [[2.0, 2.0], [4.0, 2.0], [4.0, 4.0], [2.0, 4.0], [2.0, 2.0]],
-            ],
-        }
+    group = _relation_group(
+        9001,
+        [901, 902, 903],
+        [{"landuse": "forest"}, {"landuse": "forest"}, {"natural": "water"}],
+        [
+            [[0.0, 0.0], [10.0, 0.0], [10.0, 10.0]],          # open fragment
+            [[10.0, 10.0], [0.0, 10.0], [0.0, 0.0]],           # open fragment
+            [[2.0, 2.0], [4.0, 2.0], [4.0, 4.0], [2.0, 4.0], [2.0, 2.0]],
+        ],
     )
-    out = _make_assemble_kernel("contains")(pdf)
+    out = _assemble_relation_group(group, "contains").to_pylist()
     assert len(out) == 1
-    row = out.iloc[0]
-    assert row["tags"].get("natural") != "water", row["tags"]
+    row = out[0]
+    assert dict(row["tags"]).get("natural") != "water", row["tags"]
     assert 903 not in list(row["inserted_ways"])
     assert row["n_rings"] == 2  # shell + hole still assembled
 
@@ -287,25 +327,19 @@ def test_a4_fragmented_outer_does_not_inherit_hole_tags():
 def test_a4_closed_outer_still_inherits():
     """Positive control for the shell-aware candidacy: a closed tagged outer
     ring (a shell of the result) still donates its tags (MP-06 semantics)."""
-    import pandas as pd
+    from imposm2_spark.operators.assemble import _assemble_relation_group
 
-    from imposm2_spark.operators.assemble import _make_assemble_kernel
-
-    pdf = pd.DataFrame(
-        {
-            "rel_id": [9002] * 2,
-            "rel_tags": [{"type": "multipolygon"}] * 2,
-            "way_id": [911, 912],
-            "way_tags": [{"landuse": "forest"}, {"natural": "water"}],
-            "coords": [
-                [[0.0, 0.0], [10.0, 0.0], [10.0, 10.0], [0.0, 10.0], [0.0, 0.0]],
-                [[2.0, 2.0], [4.0, 2.0], [4.0, 4.0], [2.0, 4.0], [2.0, 2.0]],
-            ],
-        }
+    group = _relation_group(
+        9002,
+        [911, 912],
+        [{"landuse": "forest"}, {"natural": "water"}],
+        [
+            [[0.0, 0.0], [10.0, 0.0], [10.0, 10.0], [0.0, 10.0], [0.0, 0.0]],
+            [[2.0, 2.0], [4.0, 2.0], [4.0, 4.0], [2.0, 4.0], [2.0, 2.0]],
+        ],
     )
-    out = _make_assemble_kernel("contains")(pdf)
-    row = out.iloc[0]
-    assert row["tags"]["landuse"] == "forest"
+    row = _assemble_relation_group(group, "contains").to_pylist()[0]
+    assert dict(row["tags"])["landuse"] == "forest"
     assert 911 in list(row["inserted_ways"])      # subsumed by inherited tags
     assert 912 not in list(row["inserted_ways"])  # distinct water tag survives
 
@@ -315,25 +349,20 @@ def test_a4_closed_outer_with_duplicate_vertex_inherits():
     canonicalized AFTER geom.dedup_consecutive — a closed member way with a
     repeated consecutive vertex (common in raw OSM) never matched its own
     shell, silently skipping A4 tag inheritance and P4 suppression."""
-    import pandas as pd
+    from imposm2_spark.operators.assemble import _assemble_relation_group
 
-    from imposm2_spark.operators.assemble import _make_assemble_kernel
-
-    pdf = pd.DataFrame(
-        {
-            "rel_id": [9003],
-            "rel_tags": [{"type": "multipolygon"}],
-            "way_id": [921],
-            "way_tags": [{"landuse": "forest"}],
-            "coords": [
-                # duplicate vertex at positions 1-2
-                [[0.0, 0.0], [10.0, 0.0], [10.0, 0.0], [10.0, 10.0],
-                 [0.0, 10.0], [0.0, 0.0]],
-            ],
-        }
+    group = _relation_group(
+        9003,
+        [921],
+        [{"landuse": "forest"}],
+        [
+            # duplicate vertex at positions 1-2
+            [[0.0, 0.0], [10.0, 0.0], [10.0, 0.0], [10.0, 10.0],
+             [0.0, 10.0], [0.0, 0.0]],
+        ],
     )
-    out = _make_assemble_kernel("contains")(pdf)
+    out = _assemble_relation_group(group, "contains").to_pylist()
     assert len(out) == 1
-    row = out.iloc[0]
-    assert row["tags"].get("landuse") == "forest", row["tags"]
+    row = out[0]
+    assert dict(row["tags"]).get("landuse") == "forest", row["tags"]
     assert 921 in list(row["inserted_ways"])

@@ -344,13 +344,12 @@ def test_null_and_empty_rings_emit_no_tiles(spark):
 @pytest.mark.spark
 def test_ringless_polygons_alone_in_a_batch(spark):
     """At one row per Arrow batch, a NULL or [] rings row fills a batch on
-    its own; pyarrow cannot read such a batch of the triple-nested rings
-    column and the Python worker crashes. The ring operators (tile cover,
-    clip, the pip shuffle path's refine) drop those rows before the UDF, so
-    the output equals the output without them."""
+    its own. The ring operators (tile cover, clip, the pip shuffle path's
+    refine) read such a row as no ring, and the line cut reads a NULL or []
+    polyline as no point, so the output equals the output without them."""
     from imposm2_spark.operators.pip import pip_join
     from imposm2_spark.operators.tiles import (
-        assign_polygon_tiles, clip_polygons_to_tiles,
+        assign_polygon_tiles, clip_lines_to_tiles, clip_polygons_to_tiles,
     )
     from imposm2_spark.sources import fixtures
 
@@ -361,6 +360,12 @@ def test_ringless_polygons_alone_in_a_batch(spark):
         schema=fixtures.POLYGONS_ADMIN_SCHEMA,
     )
     with_bad = polys.unionByName(bad).coalesce(1)
+    lines = fixtures.lines_roads_df(spark, 3)
+    bad_lines = spark.createDataFrame(
+        [(98, "null_pts", None), (99, "empty_pts", [])],
+        schema=fixtures.LINES_ROADS_SCHEMA,
+    )
+    lines_with_bad = lines.unionByName(bad_lines).coalesce(1)
     ring = polys.first()["rings"][0]
     lon = sum(p[0] for p in ring[:-1]) / (len(ring) - 1)
     lat = sum(p[1] for p in ring[:-1]) / (len(ring) - 1)
@@ -369,13 +374,14 @@ def test_ringless_polygons_alone_in_a_batch(spark):
     old = spark.conf.get(key)
     spark.conf.set(key, "1")
     try:
-        for op in (
-            lambda df: assign_polygon_tiles(df, [8]),
-            lambda df: clip_polygons_to_tiles(df, 8),
-            lambda df: pip_join(points, df, keep_point_cols=["pid"],
-                                broadcast_polygons=False),
+        for op, good, mixed in (
+            (lambda df: assign_polygon_tiles(df, [8]), polys, with_bad),
+            (lambda df: clip_polygons_to_tiles(df, 8), polys, with_bad),
+            (lambda df: pip_join(points, df, keep_point_cols=["pid"],
+                                 broadcast_polygons=False), polys, with_bad),
+            (lambda df: clip_lines_to_tiles(df, 8), lines, lines_with_bad),
         ):
-            want = sorted(map(tuple, op(polys).collect()))
-            assert sorted(map(tuple, op(with_bad).collect())) == want and want
+            want = sorted(map(tuple, op(good).collect()))
+            assert sorted(map(tuple, op(mixed).collect())) == want and want
     finally:
         spark.conf.set(key, old)

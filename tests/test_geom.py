@@ -134,9 +134,23 @@ def test_wkb_roundtrip():
 
 
 def test_nested_roundtrip():
-    nested = [SQ.tolist(), HOLE.tolist()]
-    back = wkb.nested_to_rings(nested)
-    assert np.array_equal(back[0], SQ) and np.array_equal(back[1], HOLE)
+    """coords_rows reads rings and point lists out of Arrow as (N,2)
+    float64 views: NULL rows as [], NULL doubles as NaN, sliced arrays at
+    their own offset, and one more list level per deeper nesting."""
+    import pyarrow as pa
+
+    rings = pa.array([None, [SQ.tolist(), HOLE.tolist()], [], [[[1.0, None]]]])
+    back = wkb.coords_rows(rings)
+    assert back[0] == [] and back[2] == []
+    assert np.array_equal(back[1][0], SQ) and np.array_equal(back[1][1], HOLE)
+    assert back[1][0].dtype == np.float64 and back[1][0].shape == SQ.shape
+    assert np.isnan(back[3][0][0, 1])
+    sliced = wkb.coords_rows(rings.slice(1, 2))
+    assert len(sliced) == 2 and np.array_equal(sliced[0][1], HOLE) and sliced[1] == []
+    lines = wkb.coords_rows(pa.array([SQ.tolist(), None]))
+    assert np.array_equal(lines[0], SQ) and lines[1].shape == (0, 2)
+    polys = wkb.coords_rows(pa.chunked_array([pa.array([[[SQ.tolist()], [HOLE.tolist()]]])]))
+    assert np.array_equal(polys[0][1][0], HOLE)
 
 
 @settings(max_examples=100, deadline=None)

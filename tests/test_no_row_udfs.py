@@ -1,7 +1,8 @@
 """North-rule enforcement (SURVEY.md §2.10): NO per-row Python UDFs anywhere.
 
 Engine Python boundaries must be Arrow-batched (@pandas_udf, applyInPandas,
-mapInPandas, mapInArrow). A row-at-a-time `F.udf(...)` / `@udf` in the
+mapInPandas, mapInArrow, applyInArrow, arrow_udf); geometry crosses in the
+Arrow forms only. A row-at-a-time `F.udf(...)` / `@udf` in the
 engine is a 10-100x regression at 100 TB — this test greps the package
 source so one can't slip in silently.
 """
@@ -28,14 +29,46 @@ def test_no_row_at_a_time_udfs():
 
 def test_python_boundaries_are_arrow_batched():
     # every Python-boundary construct used must be one of the Arrow forms
-    allowed = ("pandas_udf", "applyInPandas", "mapInPandas", "mapInArrow")
+    allowed = (
+        "pandas_udf", "applyInPandas", "mapInPandas", "mapInArrow",
+        "applyInArrow", "arrow_udf",
+    )
     found = set()
     for py in PKG.rglob("*.py"):
         src = py.read_text()
         for form in allowed:
             if form in src:
                 found.add(form)
-    assert found >= {"pandas_udf", "applyInPandas", "mapInPandas", "mapInArrow"}
+    assert found >= set(allowed)
+
+
+GEOMETRY_MODULES = [
+    *(f"operators/{m}.py" for m in ("assemble", "generalize", "tiles", "pip", "lines")),
+    *(p.relative_to(PKG).as_posix() for p in sorted((PKG / "kernels").glob("*.py"))),
+]
+PANDAS_CROSSINGS = {"pandas_udf", "mapInPandas", "applyInPandas"}
+
+
+def test_geometry_crosses_in_arrow_only():
+    """The geometry operators and the kernels import neither pandas nor
+    pickle and use no pandas crossing: coordinates reach Python as Arrow
+    (kernels.wkb.coords_rows), in one form, with no pickled side channel."""
+    offenders = []
+    for rel in GEOMETRY_MODULES:
+        for node in ast.walk(ast.parse((PKG / rel).read_text())):
+            if isinstance(node, ast.Import):
+                mods = {a.name.split(".")[0] for a in node.names}
+            elif isinstance(node, ast.ImportFrom) and node.level == 0:
+                mods = {node.module.split(".")[0]}
+            else:
+                mods = set()
+            for m in sorted(mods & {"pandas", "pickle"}):
+                offenders.append(f"{rel}:{node.lineno}: imports {m}")
+            name = (node.attr if isinstance(node, ast.Attribute)
+                    else node.id if isinstance(node, ast.Name) else None)
+            if name in PANDAS_CROSSINGS:
+                offenders.append(f"{rel}:{node.lineno}: {name}")
+    assert not offenders, "pandas in the geometry path:\n" + "\n".join(offenders)
 
 
 # parameter and field names that select between implementations of one

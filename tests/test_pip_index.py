@@ -115,8 +115,7 @@ def test_locate_edge_cases_pinned(frames):
 
 
 def test_locate_empty_batch_and_empty_index():
-    rows = _polygons_pdf().to_dict("records")
-    index = PolygonIndex.from_rows(rows, LEVEL)
+    index = PolygonIndex.from_table(pa.Table.from_pandas(_polygons_pdf()), LEVEL)
     row, pid = index.locate(np.empty(0), np.empty(0))
     assert len(row) == 0 and len(pid) == 0
     assert index.located_ids(np.empty(0), np.empty(0), pa.int64()).to_pylist() == []
@@ -129,8 +128,7 @@ def test_locate_returns_pairs_by_row():
     """locate's pairs are grouped by row, and located_ids regroups them
     into a ListArray (NULL coordinates, as an Arrow UDF hands them over,
     match nothing)."""
-    rows = _polygons_pdf().to_dict("records")
-    index = PolygonIndex.from_rows(rows, LEVEL)
+    index = PolygonIndex.from_table(pa.Table.from_pandas(_polygons_pdf()), LEVEL)
     lon = np.r_[23.2, 40.0, 30.5, np.nan]
     lat = np.r_[23.2, 40.0, 30.5, 0.0]
     row, pid = index.locate(lon, lat)

@@ -243,18 +243,18 @@ def test_relation_size_routing_pushes_below_resolve_join(spark):
 def test_node_pass_routes_before_wkb(spark):
     """G1 scale shape: the point-WKB Arrow stage runs AFTER tag routing, so
     its input is the routed subset (~10^8 of 10^11 nodes at planet scale) —
-    Catalyst cannot push a filter/semi-join through mapInPandas. In the plan
-    tree the routing BroadcastHashJoin must sit BELOW MapInPandas (children
-    print after parents); the old shape had MapInPandas directly over the
-    scan with the routing join above it."""
+    Catalyst cannot push a filter/semi-join through mapInArrow. In the plan
+    tree the routing BroadcastHashJoin must sit BELOW MapInArrow (children
+    print after parents); the old shape had the Python stage directly over
+    the scan with the routing join above it."""
     from imposm2_spark.operators import defaultmapping as dm
     from imposm2_spark.plans.import_pipeline import import_tables
 
     nodes, ways, relations = fixtures.osm_dfs(spark)
     out = import_tables(spark, nodes, ways, relations, [dm.PLACES])
     p = plan_of(out["places"], mode="simple")
-    assert "MapInPandas" in p
-    below = p.split("MapInPandas", 1)[1]
+    assert "MapInArrow" in p
+    below = p.split("MapInArrow", 1)[1]
     assert "BroadcastHashJoin" in below  # route's spec join feeds the stage
 
 
