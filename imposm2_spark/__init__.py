@@ -8,7 +8,8 @@ point-in-polygon joins, kNN, raster<->vector tile assignment, and the large-scal
 training-data ops (dedup, similarity search, text analysis).
 
 Design rules (see SURVEY.md):
-- DataFrame/Catalyst first; pandas/Arrow UDFs only for geometry kernels.
+- DataFrame/Catalyst first; Python only behind Arrow-batched crossings
+  (mapInArrow, applyInArrow, arrow_udf).
 - No per-row Python UDFs anywhere (enforced by tests/test_no_row_udfs.py).
 - All kernels NumPy-vectorized over Arrow batches.
 """

@@ -14,7 +14,7 @@ the scoring pass value-for-value.
 
 One arithmetic, two plans chosen by the type of `weights`:
 
-  * dict weights: a batched mapInPandas kernel (`_score_arrow`) — C-level
+  * dict weights: a batched mapInArrow kernel (`_score_arrow`) — C-level
     dict lookups per gram over whole Arrow batches, zero shuffles, the
     10^12-doc configuration. Its tokenization (trim spaces, lower, ASCII
     \\s+ split) matches the JVM expression `grams_expr` and is
@@ -77,7 +77,7 @@ def score_quality(
 ) -> DataFrame:
     """Score every document: (id cols..., n_grams, logit_milli, keep).
 
-    weights: {gram: milli-weight} dict (the mapInPandas kernel) or a
+    weights: {gram: milli-weight} dict (the mapInArrow kernel) or a
     DataFrame(gram string, weight_milli long) (the broadcast-join plan).
     logit_milli = bias + sum(matched weights), BIGINT; keep = logit_milli
     >= threshold_milli. Repeated grams count once per occurrence (bag
@@ -94,27 +94,22 @@ def score_quality(
 def _score_arrow(docs, weights, id_cols, text_col, bias_milli, threshold_milli):
     import re
 
-    id_schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}"
-        for f in docs.schema
-        if f.name in id_cols
-    )
+    cols = [f.name for f in docs.schema if f.name in id_cols]
+    id_schema = ", ".join(f"`{c}` {docs.schema[c].dataType.simpleString()}" for c in cols)
     out_schema = f"{id_schema}, n_grams long, logit_milli long, keep boolean"
     w = dict(weights)
     bias, thr = int(bias_milli), int(threshold_milli)
     # ASCII split mirrors the JVM regex (Java \s is ASCII-only; Python's
     # default is unicode-aware — re.ASCII pins them equal)
     ws_re = re.compile(r"\s+", re.ASCII)
-    cols = list(id_cols)
 
     def score_batches(batches):
-        import pandas as pd
+        import pyarrow as pa
 
         get = w.get
-        for pdf in batches:
-            texts = pdf[text_col]
+        for rb in batches:
             n_grams, logits = [], []
-            for t in texts:
+            for t in rb.column(len(cols)).to_pylist():
                 # strip(" "): Spark's trim (the join plan) removes only
                 # spaces; a bare strip() also eats U+00A0, U+2003, \x1c-\x1f
                 toks = [x for x in ws_re.split((t or "").strip(" ").lower()) if x]
@@ -127,13 +122,13 @@ def _score_arrow(docs, weights, id_cols, text_col, bias_milli, threshold_milli):
                     n += n - 1
                 n_grams.append(n)
                 logits.append(s + bias)
-            out = pdf[cols].copy()
-            out["n_grams"] = pd.Series(n_grams, dtype="int64", index=pdf.index)
-            out["logit_milli"] = pd.Series(logits, dtype="int64", index=pdf.index)
-            out["keep"] = out["logit_milli"] >= thr
-            yield out
+            yield pa.RecordBatch.from_arrays(
+                [*rb.columns[: len(cols)], pa.array(n_grams, pa.int64()),
+                 pa.array(logits, pa.int64()), pa.array([x >= thr for x in logits])],
+                names=[*cols, "n_grams", "logit_milli", "keep"],
+            )
 
-    return docs.mapInPandas(score_batches, out_schema)
+    return docs.select(*cols, text_col).mapInArrow(score_batches, out_schema)
 
 
 def _score_join(docs, wdf, id_cols, text_col, bias_milli, threshold_milli):

@@ -57,8 +57,7 @@ def geotag_pair(url: str | None, html: bytes | None) -> tuple[float, float]:
             lat = float(m.group(1))
             lon = float(m.group(2))
             return lon, lat
-    # isinstance, not `is not None`: pandas may surface a missing string as
-    # NaN rather than None depending on the Arrow conversion path
+    # any non-str url (None) reads as the empty url
     u = url if isinstance(url, str) else ""
     return fallback_lon(u), fallback_lat(u)
 

@@ -2,7 +2,7 @@
 
 Graft addition for training-data pipelines. Images/audio/video travel as
 `binary` columns with a typed metadata struct; decode / feature-extract /
-resize / frame-sample run as Arrow-batched functions over mapInPandas.
+resize / frame-sample run as Arrow-batched functions over mapInArrow.
 
 Decode is REAL for the two uncompressed formats the engine's own codecs
 cover (kernels.codecs: 24-bit BMP -> RGB pixels, PCM-16 WAV -> samples) and
@@ -24,10 +24,10 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..kernels import codecs
 
@@ -118,11 +118,12 @@ def synth_media(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     opaque bytes for video rows (no video codec in this container) — with
     the typed metadata struct."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    schema = to_arrow_schema(MEDIA_SCHEMA)
+
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
             rows = []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                mid = int(mid)
+            for mid, text in zip(rb.column(0).to_pylist(), rb.column(1).to_pylist()):
                 tb = (text or "").encode("utf-8")
                 w = (mid % 7 + 1) * 8
                 h = (mid % 5 + 1) * 8
@@ -144,9 +145,9 @@ def synth_media(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
                         },
                     }
                 )
-            yield pd.DataFrame(rows, columns=["media_id", "payload", "meta"])
+            yield pa.RecordBatch.from_pylist(rows, schema=schema)
 
-    return docs.select(id_col, text_col).mapInPandas(gen, schema=MEDIA_SCHEMA)
+    return docs.select(id_col, text_col).mapInArrow(gen, schema=MEDIA_SCHEMA)
 
 
 def _features_one(payload: bytes, codec: str) -> tuple[list[float], bool]:
@@ -168,47 +169,53 @@ def _features_one(payload: bytes, codec: str) -> tuple[list[float], bool]:
 
 
 def media_features(media: DataFrame) -> DataFrame:
-    """mapInPandas decode + feature extraction; payload dropped at the UDF
+    """mapInArrow decode + feature extraction; payload dropped at the UDF
     boundary so only 16 doubles/row (+ a decode_ok flag) shuffle downstream."""
+    schema = to_arrow_schema(FEATURES_SCHEMA)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
             # a NULL meta struct (dirty external media table) must not kill
             # the stage (review r5): unknown codec -> byte-histogram
             # fallback with decode_ok=False, null kind/n_bytes — the same
             # totality contract as corrupt payloads
-            metas = list(pdf["meta"])
+            metas = [m or {} for m in rb.column(2).to_pylist()]
             decoded = [
-                _features_one(p, m["codec"] if m is not None else None)
-                for p, m in zip(pdf["payload"], metas)
+                _features_one(p, m.get("codec"))
+                for p, m in zip(rb.column(1).to_pylist(), metas)
             ]
-            yield pd.DataFrame(
+            yield pa.RecordBatch.from_pydict(
                 {
-                    "media_id": pdf["media_id"],
-                    "kind": [m["kind"] if m is not None else None for m in metas],
-                    "n_bytes": [m["n_bytes"] if m is not None else None for m in metas],
+                    "media_id": rb.column(0),
+                    "kind": [m.get("kind") for m in metas],
+                    "n_bytes": [m.get("n_bytes") for m in metas],
                     "features": [f for f, _ in decoded],
                     "decode_ok": [ok for _, ok in decoded],
-                }
+                },
+                schema=schema,
             )
 
-    return media.mapInPandas(gen, schema=FEATURES_SCHEMA)
+    return media.select("media_id", "payload", "meta").mapInArrow(gen, schema=FEATURES_SCHEMA)
 
 
 def frame_sample(media: DataFrame, frame_bytes: int = 64, every: int = 2) -> DataFrame:
     """Deterministic frame sampler: split payload into `frame_bytes` chunks,
     keep every `every`-th chunk — the video-sampling plumbing shape."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    schema = to_arrow_schema(FRAMES_SCHEMA)
+
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
             ids, idxs, frames = [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
+            for mid, payload in zip(rb.column(0).to_pylist(), rb.column(1).to_pylist()):
                 payload = payload or b""
                 n = (len(payload) + frame_bytes - 1) // frame_bytes
                 for i in range(0, n, every):
                     ids.append(mid)
                     idxs.append(i)
                     frames.append(payload[i * frame_bytes : (i + 1) * frame_bytes])
-            yield pd.DataFrame({"media_id": ids, "frame_idx": idxs, "frame": frames})
+            yield pa.RecordBatch.from_pydict(
+                {"media_id": ids, "frame_idx": idxs, "frame": frames}, schema=schema
+            )
 
-    return media.mapInPandas(gen, schema=FRAMES_SCHEMA)
+    return media.select("media_id", "payload").mapInArrow(gen, schema=FRAMES_SCHEMA)

@@ -17,6 +17,7 @@ fingerprint/dedup roles (stability matters, not linguistics), documented here.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -148,7 +149,7 @@ def quality_score(text: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# r6 stats kernel (guide §4.2): one Arrow-batched pandas UDF computes the
+# r6 stats kernel (guide §4.2): one arrow_udf computes the
 # INTEGER features (kernels/textstats.py) the scoring scan needs; the float
 # ratios / blend / rounding / lang argmax then evaluate through the SAME
 # shared expression builders as the HOF chain (quality_expr / lang_expr /
@@ -163,8 +164,6 @@ def doc_stats_udf():
     expression chain). Marked non-deterministic so a filter on a derived
     column cannot duplicate the evaluation below the pushed-down predicate
     (guide §4.4)."""
-    import pandas as pd
-    import pyarrow as pa
     from pyspark.sql import types as T
 
     from ..kernels import textstats as ts
@@ -172,20 +171,15 @@ def doc_stats_udf():
     schema = T.StructType(
         [T.StructField(c, T.LongType()) for c in ts.STAT_COLS]
     )
-    n_cols = len(ts.STAT_COLS)
 
-    def _stats(texts):  # pd.Series -> pd.DataFrame (struct); hints omitted —
-        # the explicit returnType drives the scalar-struct path (the hint
-        # checker rejects the Series->DataFrame spelling on Spark 4.1)
-        # the batch as Arrow (NaN / None -> NULL), which the kernel reads in place
-        nulls, cols = ts.batch_stats(pa.Array.from_pandas(texts, type=pa.string()))
-        df = pd.DataFrame({c: cols[c] for c in ts.STAT_COLS})
-        if nulls.any():
-            df = df.astype("Int64")
-            df.loc[nulls, :] = pd.NA
-        return df
+    def _stats(texts: pa.Array) -> pa.Array:
+        # the kernel reads the Arrow batch in place
+        nulls, cols = ts.batch_stats(texts)
+        return pa.StructArray.from_arrays(
+            [pa.array(cols[c], mask=nulls) for c in ts.STAT_COLS], names=list(ts.STAT_COLS)
+        )
 
-    return F.pandas_udf(_stats, schema).asNondeterministic()
+    return F.arrow_udf(_stats, schema).asNondeterministic()
 
 
 def stats_ratio_features(s: Column) -> dict[str, Column]:

@@ -158,8 +158,16 @@ def build_multipolygon(merge: MergeResult) -> MultiPolygon:
     Rings sorted by |area| desc; a ring contained in an odd number of larger
     rings is a hole of its smallest containing shell, else a shell — the same
     asymptotic trick as the reference's area-sorted prepared-contains tests.
+    Equal areas order by the ring's lexicographically smallest vertex (as
+    build_multipolygon_union orders its output), so the output does not
+    depend on the order the rings arrive in (chunked vs single-stage path).
     """
-    rings = sorted(merge.rings, key=lambda r: -abs(geom.ring_signed_area(r)))
+
+    def order(r: np.ndarray) -> tuple[float, float, float]:
+        x, y = r[np.lexsort((r[:, 1], r[:, 0]))[0]]
+        return (-abs(geom.ring_signed_area(r)), float(x), float(y))
+
+    rings = sorted(merge.rings, key=order)
     shells: list[list[np.ndarray]] = []  # polygon ring lists
     placed: list[np.ndarray] = []  # all rings placed so far (area desc)
     placed_bbox: list[tuple[float, float, float, float]] = []

@@ -142,7 +142,7 @@ def _token_hashes(units: np.ndarray, bounds: np.ndarray) -> tuple[np.ndarray, np
 def token_hashes_doc(text: str | None) -> np.ndarray:
     """int64 token-hash array for ONE document (twin of token_hashes).
 
-    None (or any non-str, e.g. a pandas NaN) -> empty array (the Catalyst
+    None (or any non-str) -> empty array (the Catalyst
     chain yields NULL, and every consumer filters/guards those rows;
     callers mask None docs separately)."""
     if not isinstance(text, str):
@@ -250,7 +250,7 @@ def value_buffer(arr: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
 
 def text_units(texts) -> Units:
     """The Units of a string batch: an Arrow string array, or a sequence
-    whose non-str items (None, pandas' NaN) are NULL. Units pass through.
+    whose non-str items are NULL. Units pass through.
 
     An all-ASCII batch is read in place, with no decode; otherwise the UTF-8
     buffer decodes once, and a document's codepoint bound is the number of

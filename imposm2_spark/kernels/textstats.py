@@ -21,8 +21,7 @@ the Catalyst chain on adversarial inputs):
     the trimmed text starts/ends with one of the other five (see doc_stats).
     Control chars inside the trimmed span that are not one of those six
     stay INSIDE tokens.
-  * NULL text: any non-str value (None, or NaN where pandas surfaces a
-    missing string that way) is a NULL row.
+  * NULL text: any non-str value is a NULL row.
   * the batch kernel reads units, one per codepoint (texthash.text_units):
     the UTF-8 bytes of an all-ASCII batch, else the UTF-32 decode. Every
     class test, stopword pack and fingerprint term reads a unit's value,

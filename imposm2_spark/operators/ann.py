@@ -41,7 +41,8 @@ fixture change doesn't rediscover it as a hash mismatch.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -67,24 +68,25 @@ def _as_double(col: F.Column) -> F.Column:
     return col.cast("array<double>")
 
 
-def _stack_f64(emb: pd.Series, dim: int) -> np.ndarray:
-    """Arrow batch of vectors -> float64 matrix, total on dirty data (review
-    r5, runtime-confirmed crashes): a NULL vector becomes a NaN row and a
-    NULL element becomes a NaN entry instead of np.stack/astype raising and
-    killing the task. Consumers behave deterministically on NaN rows —
-    assign -> argmax over all-False comparisons = list 0, probes -> stable
-    argsort = the first nprobe lists, lsh_signature -> (NaN > 0) = all-zero
-    bits — and every SEARCH path already excludes such rows via NULL/-inf
-    sims, so totality here never changes a result."""
-    vals = emb.to_numpy()
-    # `dim` comes from the consumer (centroid/plane width), NOT the batch: a
-    # batch containing ONLY null vectors has no row to infer a width from,
-    # and a wrong fallback width breaks the downstream matmul shape
-    filled = [v if v is not None else [np.nan] * dim for v in vals]
-    mat = np.stack(filled)
-    if mat.dtype == object:
-        mat = np.where(pd.isna(mat), np.nan, mat)
-    return mat.astype(np.float64)
+def _stack_f64(emb: pa.Array | pa.ChunkedArray, dim: int) -> np.ndarray:
+    """Arrow list<float|double> column -> (n, dim) float64 matrix, total on
+    dirty data: a NULL vector becomes a NaN row and a NULL element a NaN
+    entry. Consumers behave deterministically on NaN rows — assign ->
+    argmax over all-False comparisons = list 0, probes -> stable argsort =
+    the first nprobe lists, lsh_signature -> (NaN > 0) = all-zero bits, the
+    top-k kernel -> -inf sims, never emitted — so totality never changes a
+    search result. `dim` comes from the consumer (centroid/plane/query
+    width), NOT the batch: a batch of ONLY null vectors has no row to infer
+    a width from."""
+    if isinstance(emb, pa.ChunkedArray):
+        emb = emb.combine_chunks()
+    if pc.any(pc.not_equal(pc.list_value_length(emb), dim)).as_py():
+        raise ValueError(f"vectors of a width other than {dim}")
+    mat = np.full((len(emb), dim), np.nan)
+    valid = emb.is_valid().to_numpy(zero_copy_only=False)
+    # flatten() honours the slice offset and skips NULL rows' child slots
+    mat[valid] = emb.flatten().to_numpy(zero_copy_only=False).reshape(valid.sum(), dim)
+    return mat
 
 
 def _sim_col() -> F.Column:
@@ -100,7 +102,7 @@ def _sim_col() -> F.Column:
 
 def _topk_arrow(
     corpus: DataFrame,
-    q_rows: list,
+    queries: pa.Table,
     k: int,
     id_col: str,
     vec_col: str,
@@ -109,11 +111,11 @@ def _topk_arrow(
     list_col: str = "_list",
 ) -> DataFrame:
     """The scoring kernel of brute and indexed search: broadcast the
-    query matrix, mapInPandas over the corpus, ONE matmul per Arrow batch,
-    emit only per-batch top-(k+1) candidates (plus boundary ties), then the
-    usual global _rank_topk.
+    query matrix (`queries`: query id, vector), mapInArrow over the corpus,
+    ONE matmul per Arrow batch, emit only per-batch top-(k+1) candidates
+    (plus boundary ties), then the usual global _rank_topk.
 
-    Why this shape and not a per-candidate pandas UDF: scoring 50M candidate
+    Why this shape and not a per-candidate Arrow UDF: scoring 50M candidate
     ROWS through Arrow ships both 64-float vectors per row (~51 GB at the XL
     rehearsal) and measured 2x SLOWER than the interpreted HOF join. Here
     each corpus vector crosses the Python boundary exactly once and the
@@ -131,29 +133,27 @@ def _topk_arrow(
     sequential summation).
 
     Self-matches are excluded INSIDE the kernel (sim -inf when corpus id ==
-    query id), NOT as a `vec_id != qid` Filter above the mapInPandas. The
+    query id), NOT as a `vec_id != qid` Filter above the mapInArrow. The
     filter form is the trigger shape for a Spark 4.1.2 correctness bug:
-    when a frame whose lineage is Filter-on-window-partition-key over
-    mapInPandas appears more than twice in ONE plan (e.g. the symmetric
-    X.exceptAll(Y).unionAll(Y.exceptAll(X)) diff idiom), cross-branch
-    exchange reuse resolves one copy to an EMPTY side and the diff reports
-    every row as mismatched; filters on non-partition-key columns don't
-    trigger it (minimal no-engine-code repro in
-    tests/test_ann_dedup.py::test_ann_arrow_composes_in_self_diff_plans;
+    when a frame whose lineage is Filter-on-window-partition-key over a
+    Python map (found over mapInPandas) appears more than twice in ONE plan
+    (e.g. the symmetric X.exceptAll(Y).unionAll(Y.exceptAll(X)) diff
+    idiom), cross-branch exchange reuse resolves one copy to an EMPTY side
+    and the diff reports every row as mismatched; filters on
+    non-partition-key columns don't trigger it (minimal no-engine-code repro
+    in tests/test_ann_dedup.py::test_ann_arrow_composes_in_self_diff_plans;
     verified against separate-action evaluation, which is always correct).
 
     probes_by_qid (indexed search): {qid: set(list_ids)} — a (row, query)
     pair is scored only when the row's `list_col` is in the query's probe
     set, reproducing the probe-list equi-join of cosine_topk_ivf exactly."""
     spark = corpus.sparkSession
-    qids = np.asarray([r[0] for r in q_rows], dtype=np.int64)
-    # NULL elements inside a query vector -> NaN (a bare float64 asarray
-    # raises on None): the NaN sweep in gen() turns every sim of that query
-    # into -inf, so it emits nothing — matching the HOF twin's null fold
-    Q = np.asarray(
-        [[np.nan if x is None else x for x in r[1]] for r in q_rows],
-        dtype=np.float64,
-    )
+    qids = queries.column(0).cast(pa.int64()).to_numpy()
+    # a NULL element inside a query vector is NaN: the NaN sweep in gen()
+    # turns every sim of that query into -inf, so it emits nothing —
+    # matching the HOF twin's null fold
+    qvecs = queries.column(1)
+    Q = _stack_f64(qvecs, pc.max(pc.list_value_length(qvecs)).as_py() or 0)
     qn2 = (Q * Q).sum(axis=1)
     q_mask_by_list: dict | None = None
     if probes_by_qid is not None:
@@ -178,23 +178,11 @@ def _topk_arrow(
         m = len(qids_)
         if m == 0:
             return
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            valid = pdf[vec_col].notna().to_numpy()
-            if not valid.any():
-                continue
-            vids = pdf.loc[valid, id_col].to_numpy(dtype=np.int64)
-            V = np.stack(pdf.loc[valid, vec_col].to_numpy())
-            if V.dtype == object:
-                # a NULL ELEMENT inside a vector (distinct from a NULL
-                # vector, filtered above) leaves an object array and a bare
-                # astype raises, failing the whole task where the HOF twin
-                # quietly excludes the pair (null fold -> null sim). Map the
-                # missing elements to NaN; the NaN sweep below turns the
-                # row's sims into -inf so it never emits — same outcome.
-                V = np.where(pd.isna(V), np.nan, V)
-            V = V.astype(np.float64)
+        for rb in batches:
+            vids = rb.column(0).cast(pa.int64()).to_numpy()
+            # NULL vectors (NaN rows) and NULL elements (NaN entries) end
+            # with NaN sims, which the NaN sweep below turns into -inf
+            V = _stack_f64(rb.column(1), Q_.shape[1])
             nn2 = (V * V).sum(axis=1)
             denom2 = nn2[:, None] * qn2_[None, :]
             # NOT one dgemm (V @ Q.T): BLAS tiles the reduction by matrix
@@ -219,7 +207,7 @@ def _topk_arrow(
             # triggers the Spark 4.1.2 duplicated-plan reuse bug)
             sims[vids[:, None] == qids_[None, :]] = -np.inf
             if masks is not None:
-                lists = pdf.loc[valid, list_col].to_numpy()
+                lists = rb.column(2).to_numpy()
                 allow = np.stack([masks[int(l)] for l in lists])
                 sims[~allow] = -np.inf
             n = sims.shape[0]
@@ -231,15 +219,13 @@ def _topk_arrow(
             rows_i, cols_j = np.nonzero(emit)
             if len(rows_i) == 0:
                 continue
-            yield pd.DataFrame(
-                {
-                    query_id: qids_[cols_j],
-                    id_col: vids[rows_i],
-                    "_sim": sims[rows_i, cols_j],
-                }
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(qids_[cols_j]), pa.array(vids[rows_i]),
+                 pa.array(sims[rows_i, cols_j])],
+                names=[query_id, id_col, "_sim"],
             )
 
-    cand = corpus.select(*cols).mapInPandas(gen, out_schema)
+    cand = corpus.select(*cols).mapInArrow(gen, out_schema)
     return _rank_topk(cand, k, id_col, query_id)
 
 
@@ -271,10 +257,8 @@ def cosine_topk_brute(
     against the HOF cross-join twin in tests/hof_twins.py."""
     # NULL query vectors have no direction (module docstring): they never
     # enter the query matrix, so they emit nothing
-    q_rows = [
-        r for r in queries.select(id_col, vec_col).collect() if r[1] is not None
-    ]
-    return _topk_arrow(corpus, q_rows, k, id_col, vec_col, query_id)
+    q = queries.select(id_col, vec_col).where(F.col(vec_col).isNotNull()).toArrow()
+    return _topk_arrow(corpus, q, k, id_col, vec_col, query_id)
 
 
 # ---------------------------------------------------------------------------
@@ -290,8 +274,8 @@ def _hyperplanes(n_planes: int = N_PLANES, dim: int = EMB_DIM) -> np.ndarray:
     return signs.reshape(n_planes, dim)
 
 
-@F.pandas_udf(T.IntegerType())
-def lsh_signature(emb: pd.Series) -> pd.Series:
+@F.arrow_udf(T.IntegerType())
+def lsh_signature(emb: pa.Array) -> pa.Array:
     """Random-hyperplane signature: bit j = [dot(v, plane_j) > 0].
 
     The projection accumulates SEQUENTIALLY over dims (d=0,1,...) instead of
@@ -308,7 +292,7 @@ def lsh_signature(emb: pd.Series) -> pd.Series:
     sig = np.zeros(len(emb), dtype=np.int64)
     for j in range(planes.shape[0]):
         sig = sig * 2 + bits[:, j]
-    return pd.Series(sig.astype(np.int32))
+    return pa.array(sig.astype(np.int32))
 
 
 def _probe_signatures(sig: F.Column, n_planes: int = N_PLANES) -> F.Column:
@@ -444,12 +428,12 @@ def _normed(centroids: np.ndarray) -> np.ndarray:
 def _make_assign_udf(centroids: np.ndarray):
     cn = _normed(np.asarray(centroids, dtype=np.float64))
 
-    @F.pandas_udf(T.IntegerType())
-    def assign(emb: pd.Series) -> pd.Series:
+    @F.arrow_udf(T.IntegerType())
+    def assign(emb: pa.Array) -> pa.Array:
         mat = _stack_f64(emb, cn.shape[1])  # NaN rows -> list 0 deterministically
         norms = np.linalg.norm(mat, axis=1, keepdims=True)
         sims = (mat / np.where(norms == 0, 1.0, norms)) @ cn.T
-        return pd.Series(np.argmax(sims, axis=1).astype(np.int32))
+        return pa.array(np.argmax(sims, axis=1).astype(np.int32))
 
     return assign
 
@@ -457,13 +441,14 @@ def _make_assign_udf(centroids: np.ndarray):
 def _make_probe_udf(centroids: np.ndarray, nprobe: int):
     cn = _normed(np.asarray(centroids, dtype=np.float64))
 
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def probes(emb: pd.Series) -> pd.Series:
+    @F.arrow_udf(T.ArrayType(T.IntegerType()))
+    def probes(emb: pa.Array) -> pa.Array:
         mat = _stack_f64(emb, cn.shape[1])  # NaN rows probe the first nprobe lists
         norms = np.linalg.norm(mat, axis=1, keepdims=True)
         sims = (mat / np.where(norms == 0, 1.0, norms)) @ cn.T
         order = np.argsort(-sims, axis=1, kind="stable")[:, :nprobe]
-        return pd.Series([row.astype(np.int32).tolist() for row in order])
+        offsets = np.arange(len(order) + 1, dtype=np.int32) * order.shape[1]
+        return pa.ListArray.from_arrays(offsets, order.ravel().astype(np.int32))
 
     return probes
 
@@ -776,7 +761,7 @@ def cosine_topk_ivf_indexed(
     side by contract — they are broadcast into the kernel anyway)."""
     centroids = _load_centroids(spark, path)
     probe = _make_probe_udf(centroids, nprobe)
-    rows = (
+    q = (
         queries.select(
             F.col(id_col).alias(query_id),
             _as_double(F.col(vec_col)).alias("_q"),
@@ -784,15 +769,16 @@ def cosine_topk_ivf_indexed(
         )
         # NULL query vectors never enter the query matrix (as in brute)
         .where(F.col("_q").isNotNull())
-        .select(query_id, "_q", F.explode("_probes").alias("_list"))
-        .collect()
+        .toArrow()
     )
-    probe_lists = sorted({r["_list"] for r in rows})
     probes_by_qid: dict[int, set] = {}
-    q_vec: dict[int, list] = {}
-    for r in rows:
-        probes_by_qid.setdefault(int(r[query_id]), set()).add(int(r["_list"]))
-        q_vec[int(r[query_id])] = r["_q"]
+    last: dict[int, int] = {}  # a repeated query id keeps its last vector
+    for i, (qid, lists) in enumerate(
+        zip(q.column(0).to_pylist(), q.column(2).to_pylist())
+    ):
+        probes_by_qid.setdefault(qid, set()).update(lists)
+        last[qid] = i
+    probe_lists = sorted(set().union(*probes_by_qid.values()))
     pruned = (
         spark.read.parquet(path)
         .where(F.col("_list").isin(probe_lists))
@@ -800,7 +786,7 @@ def cosine_topk_ivf_indexed(
     )
     return _topk_arrow(
         pruned,
-        [(q, q_vec[q]) for q in sorted(q_vec)],
+        q.take([last[qid] for qid in sorted(last)]),
         k,
         id_col,
         "_v",

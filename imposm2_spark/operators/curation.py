@@ -19,7 +19,7 @@ three standard corpus-preparation steps between "curated documents" and
   * pack_sequences — greedy first-fit-in-order packing of documents into
     fixed token-budget training sequences. Sequential by construction, so it
     parallelizes BY SHARD: rows are hash-sharded, each shard packs
-    independently inside one applyInPandas group (a tight NumPy loop over the
+    independently inside one applyInArrow group (a tight NumPy loop over the
     group — batch-level work). seq ids are (shard, seq_in_shard) pairs, which
     is exactly how a 1000-executor run would emit them.
 
@@ -30,7 +30,7 @@ fold), bit-identical to the DuckDB oracle twins in plans.registry.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -50,31 +50,27 @@ def _ngram_rows_kernel(
     """Exploded (id, _g) rows of per-doc DISTINCT n-gram hashes via the
     NumPy texthash kernel — bit-identical to the oracle's interpreted
     n-gram fold (tests/test_texthash.py) at a fraction of its cost."""
-    import numpy as np
-    import pandas as pd
-
     from ..kernels import texthash as tx
 
     def gen(batches):
-        for pdf in batches:
+        for rb in batches:
             ids, grams = [], []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
-                if not isinstance(t, str):
+            for i, t in zip(rb.column(0).to_pylist(), rb.column(1).to_pylist()):
+                if t is None:
                     continue
                 g = np.unique(
                     tx.ngram_hashes_from_tokens(tx.token_hashes_doc(t), n)
                 )
                 if len(g):
-                    ids.append(np.full(len(g), int(i), dtype=np.int64))
+                    ids.append(np.full(len(g), i, dtype=np.int64))
                     grams.append(g)
             if ids:
-                yield pd.DataFrame(
-                    {id_col: np.concatenate(ids), "_g": np.concatenate(grams)}
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(np.concatenate(ids)), pa.array(np.concatenate(grams))],
+                    names=[id_col, "_g"],
                 )
 
-    return df.select(id_col, text_col).mapInPandas(
-        gen, f"{id_col} long, _g long"
-    )
+    return df.select(id_col, text_col).mapInArrow(gen, f"{id_col} long, _g long")
 
 
 def contamination_hits(
@@ -151,19 +147,20 @@ def pack_sequences(
     counted per shard.
 
     The greedy scan is inherently sequential, so parallelism comes from
-    sharding — each applyInPandas group runs one tight NumPy loop. At 10^12
+    sharding — each applyInArrow group runs one tight NumPy loop. At 10^12
     docs, n_shards is sized to executor count; group size stays bounded at
     |corpus|/n_shards rows of (id, n_tok) only — no text shuffles."""
     toks = docs.select(
         F.pmod(F.col(id_col), F.lit(n_shards)).cast("int").alias("shard"),
-        F.col(id_col).alias("doc_id"),
-        token_count_ws(F.col(text_col)).alias("n_tok"),
+        F.col(id_col).cast("long").alias("doc_id"),
+        # NULL text has no tokens, like empty text
+        F.coalesce(token_count_ws(F.col(text_col)), F.lit(0).cast("long")).alias("n_tok"),
     )
 
-    def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id").reset_index(drop=True)
-        n_tok = pdf["n_tok"].to_numpy()
-        seq = np.empty(len(pdf), dtype=np.int64)
+    def _pack(table: pa.Table) -> pa.Table:
+        table = table.sort_by("doc_id")
+        n_tok = table.column("n_tok").to_numpy()
+        seq = np.empty(table.num_rows, dtype=np.int64)
         acc = 0
         cur = -1
         for i, t in enumerate(n_tok):
@@ -173,10 +170,9 @@ def pack_sequences(
             else:
                 acc += int(t)
             seq[i] = cur
-        pdf["seq_id"] = seq
-        return pdf[["shard", "doc_id", "n_tok", "seq_id"]]
+        return table.append_column("seq_id", pa.array(seq))
 
-    return toks.groupBy("shard").applyInPandas(_pack, _PACK_SCHEMA)
+    return toks.groupBy("shard").applyInArrow(_pack, _PACK_SCHEMA)
 
 
 # Gopher-style repetition thresholds (public spec: Rae et al. 2021, "Scaling
@@ -209,7 +205,7 @@ def repetition_metrics(
     Tokens are split on single spaces. A pure-HOF formulation of the same
     rows is the differential twin in tests/hof_twins.py.
 
-    Scale shape: one Arrow-batched mapInPandas over (id, text) — still ZERO
+    Scale shape: one mapInArrow over (id, text) — still ZERO
     shuffles/joins/aggregations (plan-locked). The r4 HOF shape was already
     exchange-free but its per-doc constant (array_sort over the gram array +
     interpreted higher-order folds) held the heaviest curation scan to
@@ -230,15 +226,15 @@ def repetition_metrics(
         from collections import Counter
         from itertools import islice
 
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            n_tok = np.empty(len(pdf), dtype=np.int64)
-            dist = np.empty(len(pdf), dtype=np.int64)
-            dchars = np.empty(len(pdf), dtype=np.int64)
-            top_cnt = np.zeros(len(pdf), dtype=np.int64)
-            top_len = np.zeros(len(pdf), dtype=np.int64)
-            n_chars = np.empty(len(pdf), dtype=np.int64)
-            for i, text in enumerate(pdf[text_col]):
+        for rb in batches:
+            n = rb.num_rows
+            n_tok = np.empty(n, dtype=np.int64)
+            dist = np.empty(n, dtype=np.int64)
+            dchars = np.empty(n, dtype=np.int64)
+            top_cnt = np.zeros(n, dtype=np.int64)
+            top_len = np.zeros(n, dtype=np.int64)
+            n_chars = np.empty(n, dtype=np.int64)
+            for i, text in enumerate(rb.column(1).to_pylist()):
                 text = text or ""
                 toks = text.split(" ")  # == F.split(text, ' '): keeps empties
                 n_chars[i] = len(text)
@@ -259,19 +255,14 @@ def repetition_metrics(
                     )
                     top_cnt[i] = bc
                     top_len[i] = len(bg)
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "n_tokens": n_tok,
-                    "_distinct": dist,
-                    "_dchars": dchars,
-                    "_top_cnt": top_cnt,
-                    "_top_len": top_len,
-                    "_n_chars": n_chars,
-                }
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(0).cast(pa.int64()),
+                 *map(pa.array, (n_tok, dist, dchars, top_cnt, top_len, n_chars))],
+                names=[id_col, "n_tokens", "_distinct", "_dchars", "_top_cnt",
+                       "_top_len", "_n_chars"],
             )
 
-    mid = docs.select(id_col, text_col).mapInPandas(_kernel, raw)
+    mid = docs.select(id_col, text_col).mapInArrow(_kernel, raw)
     dup_frac = F.round(
         F.lit(1.0) - F.col("_distinct") / F.col("n_tokens"), 6
     )

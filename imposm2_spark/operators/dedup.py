@@ -278,20 +278,23 @@ def simhash_clusters(
     (parity pytest incl. NULL rows). The groupBy shuffles (simhash, partial
     agg)."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     from ..kernels import texthash as tx
 
     def gen(batches):
-        for pdf in batches:
+        for rb in batches:
             fps = np.fromiter(
-                (tx.simhash_from_tokens(tx.token_hashes_doc(t)) for t in pdf[text_col]),
+                (tx.simhash_from_tokens(tx.token_hashes_doc(t))
+                 for t in rb.column(1).to_pylist()),
                 dtype=np.int64,
-                count=len(pdf),
+                count=rb.num_rows,
             )
-            yield pd.DataFrame({id_col: pdf[id_col].to_numpy(), "simhash": fps})
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(0).cast(pa.int64()), pa.array(fps)], names=[id_col, "simhash"]
+            )
 
-    fp = docs.select(id_col, text_col).mapInPandas(gen, f"{id_col} long, simhash long")
+    fp = docs.select(id_col, text_col).mapInArrow(gen, f"{id_col} long, simhash long")
     return (
         fp.groupBy("simhash")
         .agg(F.count("*").alias("n_docs"), F.min(id_col).alias("keeper_id"))
@@ -485,7 +488,8 @@ def _cc_driver(spark, edges, id_type) -> DataFrame:
     then jumps pointers (label <- label[label]) until each node points at
     its root; it stops when no edge joins two roots."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
     from pyspark.sql.types import StructField, StructType
 
     ends = [edges.column(i).to_numpy().astype(np.int64) for i in (0, 1)]
@@ -503,8 +507,10 @@ def _cc_driver(spark, edges, id_type) -> DataFrame:
             if (jumped == label).all():
                 break
             label = jumped
+    arrow_type = to_arrow_type(id_type)
     return spark.createDataFrame(
-        pd.DataFrame({"doc_id": nodes, "cluster_id": nodes[label]}),
+        pa.table({"doc_id": pa.array(nodes, arrow_type),
+                  "cluster_id": pa.array(nodes[label], arrow_type)}),
         StructType([StructField("doc_id", id_type), StructField("cluster_id", id_type)]),
     )
 

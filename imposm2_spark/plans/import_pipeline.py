@@ -38,33 +38,26 @@ def import_tables(
     ways: DataFrame,
     relations: DataFrame,
     specs: list[M.TableSpec],
-    tag_whitelist: bool = True,
-    relation_builder: str = "contains",
-    repair_rings: bool = False,
 ) -> dict[str, DataFrame]:
     """-> {table_name: DataFrame with id, mapped field columns, geometry cols}.
 
-    tag_whitelist (S3, default on): tags whose keys no spec references are
-    map_filter'ed away at the head of the pipeline (imposm2's parse-time
-    tag_filter) — full tag maps never shuffle through J1/J2, and P4
-    suppression sees exactly the tags the configured mapping would keep
-    (a way whose only distinct tag is unmapped IS suppressed, as in the
-    reference).
-
-    relation_builder: A3 strategy, 'contains' (reference default) or 'union'
-    (imposm --relation-builder flag analog; kernels.overlay).
-    repair_rings (G5, default off): self-intersecting way rings are rebuilt
-    under the even-odd rule instead of dropped (way pass only; relation ring
-    validity is the merge kernel's)."""
+    Tags whose keys no spec references are map_filter'ed away at the head of
+    the pipeline (S3, imposm2's parse-time tag_filter) — full tag maps never
+    shuffle through J1/J2, and P4 suppression sees exactly the tags the
+    configured mapping would keep (a way whose only distinct tag is unmapped
+    IS suppressed, as in the reference). Relations nest with the `contains`
+    builder (the reference default) and self-intersecting way rings are
+    dropped; the operators keep the `union` builder
+    (assemble_relations(relation_builder=)) and ring repair
+    (way_polygons(repair=))."""
     # the intra-pipeline caches feed the returned LAZY table frames, so they
     # outlive this call: the next call releases them (session.cache_scope)
     hold = cache_scope("import_tables")
 
-    if tag_whitelist:
-        keys = M.spec_tag_keys(specs)
-        nodes = M.prune_tags(nodes, keys)
-        ways = M.prune_tags(ways, keys)
-        relations = M.prune_tags(relations, keys)
+    keys = M.spec_tag_keys(specs)
+    nodes = M.prune_tags(nodes, keys)
+    ways = M.prune_tags(ways, keys)
+    relations = M.prune_tags(relations, keys)
 
     point_specs = [s for s in specs if s.geom_type == M.GEOM_POINT]
     line_specs = [s for s in specs if s.geom_type == M.GEOM_LINESTRING]
@@ -78,7 +71,7 @@ def import_tables(
         # the Arrow stage sees only the routed subset (at planet scale ~10^8
         # of 10^11 nodes) and the id-join disappears entirely. Running
         # node_points over `nodes` up front would put a Python stage on the
-        # full table — Catalyst cannot push the routing through mapInPandas.
+        # full table — Catalyst cannot push the routing through mapInArrow.
         routed_nodes = M.route(nodes, point_specs, spark)
         # cache below the per-table fan-out: every point spec consumes this
         # frame, and without the cache each table's branch re-runs the Arrow
@@ -101,9 +94,7 @@ def import_tables(
     aw = hold(assemble_ways(pruned_ways, nodes.select("id", "lon", "lat")))
 
     # ---- relation pass (before way pass, by dependency) ----
-    rel_out = hold(assemble_relations(
-        interesting_rels, aw, relation_builder=relation_builder
-    ))
+    rel_out = hold(assemble_relations(interesting_rels, aw))
     if poly_specs:
         rel_elements = rel_out.select(
             F.col("rel_id").alias("id"), "tags", "polygons", "area", "wkb"
@@ -127,7 +118,7 @@ def import_tables(
             out[s.name] = M.apply_fields(routed_lines, s)
     if poly_specs:
         # shared by every polygon spec — cache so the Arrow stage runs once
-        polys = hold(way_polygons(surviving, repair=repair_rings).select(
+        polys = hold(way_polygons(surviving).select(
             "id", "rings", "area", "wkb"
         ))
         routed_polys = routed_ways.join(polys, "id")

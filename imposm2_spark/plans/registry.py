@@ -1325,7 +1325,7 @@ SELECT 'arrow' AS engine, * FROM scored
 def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T31 hashed-feature linear classifier scoring (the CCNet/DCLM/FineWeb
     quality-gate shape): unigram+bigram bag, frozen integer milli-weights,
-    BIGINT logit + keep flag, scored once by the dict-weights mapInPandas
+    BIGINT logit + keep flag, scored once by the dict-weights mapInArrow
     kernel. The frozen oracle text labels its one scoring 'inline' and
     'arrow', so the row emits the one result under both labels. dict plan
     == DataFrame-weights join plan is pytest-pinned in

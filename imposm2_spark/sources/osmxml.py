@@ -5,7 +5,7 @@ incremental `iterparse` piped to worker processes (imposm.parser xml —
 SURVEY §2.1 S2). Spark re-expression: XML is NOT block-splittable (unlike
 PBF blobs), so the parallel unit is the FILE — the standard many-extracts
 layout (Geofabrikt-style regional files, or `.osm.xml.{bz2,gz}` shards).
-One file streams through stdlib `iterparse` inside `mapInPandas` with
+One file streams through stdlib `iterparse` inside `mapInArrow` with
 `elem.clear()` after every element, so memory stays bounded at any file
 size; rows batch out through Arrow in `batch_rows` chunks.
 
@@ -22,8 +22,10 @@ import bz2
 import gzip
 import xml.etree.ElementTree as ET
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .fixtures import OSM_NODES_SCHEMA, OSM_RELATIONS_SCHEMA, OSM_WAYS_SCHEMA
 
@@ -97,36 +99,33 @@ def read_osm_xml(
         paths = [paths]
     if not paths:
         raise ValueError("no input files")
-    pdf = spark.createDataFrame([(p,) for p in paths], "path string").repartition(
+    files = spark.createDataFrame([(p,) for p in paths], "path string").repartition(
         len(paths)
     )
 
-    def _scan(kind: str, cols: tuple[str, ...]):
+    def _scan(kind: str, ddl: str):
         want = kind[:-1]  # nodes -> node, ways -> way, relations -> relation
+        schema = to_arrow_schema(T.StructType.fromDDL(ddl))
 
         def fn(batches):
             for b in batches:
-                for path in b["path"]:
-                    buf: list[tuple] = []
+                for path in b.column(0).to_pylist():
+                    buf: list[dict] = []
                     for tag, rec in _iter_elements(path):
                         if tag != want:
                             continue
-                        buf.append(tuple(rec[c] for c in cols))
+                        buf.append(rec)
                         if len(buf) >= batch_rows:
-                            yield pd.DataFrame(buf, columns=cols)
+                            yield pa.RecordBatch.from_pylist(buf, schema=schema)
                             buf = []
-                    yield pd.DataFrame(buf, columns=cols)
+                    yield pa.RecordBatch.from_pylist(buf, schema=schema)
 
-        return fn
+        return files.mapInArrow(fn, ddl)
 
     return {
-        "nodes": pdf.mapInPandas(
-            _scan("nodes", ("id", "lon", "lat", "tags")), OSM_NODES_SCHEMA
-        ),
-        "ways": pdf.mapInPandas(_scan("ways", ("id", "refs", "tags")), OSM_WAYS_SCHEMA),
-        "relations": pdf.mapInPandas(
-            _scan("relations", ("id", "members", "tags")), OSM_RELATIONS_SCHEMA
-        ),
+        "nodes": _scan("nodes", OSM_NODES_SCHEMA),
+        "ways": _scan("ways", OSM_WAYS_SCHEMA),
+        "relations": _scan("relations", OSM_RELATIONS_SCHEMA),
     }
 
 

@@ -9,7 +9,7 @@ for Spark's execution model:
      headers only (4-byte lengths + BlobHeaders — ~0.01% of the bytes) and
      yields (offset, length) per OSMData blob. Blobs are self-contained by
      spec, so this is the complete parallelization index.
-  2. CLUSTER: the ranges become a DataFrame; `mapInPandas` opens the file
+  2. CLUSTER: the ranges become a DataFrame; `mapInArrow` opens the file
      per partition, seeks each range, and runs the pure-Python wire decoder
      (`kernels.pbf.decode_blob`) — per-blob work is bounded (spec caps
      blobs at 32 MB / ~8k elements), Arrow carries the decoded columns out.
@@ -24,8 +24,10 @@ schemas the import pipeline consumes (sources.fixtures.OSM_*_SCHEMA), so
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..kernels import pbf as kpbf
 from .fixtures import OSM_NODES_SCHEMA, OSM_RELATIONS_SCHEMA, OSM_WAYS_SCHEMA
@@ -57,41 +59,35 @@ def read_pbf(
     n_parts = max(1, min(len(ranges) // blobs_per_task, 2048))
     rdf = spark.createDataFrame(ranges, "off long, len long").repartition(n_parts)
 
-    def _decode(kind: str):
+    def _decode(kind: str, ddl: str):
+        schema = to_arrow_schema(T.StructType.fromDDL(ddl))
+
+        def rows(blob):
+            nodes, ways, rels = kpbf.decode_blob(blob)
+            if kind == "nodes":
+                return [{"id": n.id, "lon": n.lon, "lat": n.lat, "tags": n.tags} for n in nodes]
+            if kind == "ways":
+                return [{"id": w.id, "refs": w.refs, "tags": w.tags} for w in ways]
+            return [
+                {"id": r.id,
+                 "members": [{"ref": m, "type": t, "role": role} for t, m, role in r.members],
+                 "tags": r.tags}
+                for r in rels
+            ]
+
         def fn(batches):
             with open(path, "rb") as f:
-                for pdf in batches:
-                    rows: list[tuple] = []
-                    for off, ln in zip(pdf["off"], pdf["len"]):
-                        f.seek(int(off))
-                        nodes, ways, rels = kpbf.decode_blob(f.read(int(ln)))
-                        if kind == "nodes":
-                            rows += [(n.id, n.lon, n.lat, n.tags) for n in nodes]
-                        elif kind == "ways":
-                            rows += [(w.id, w.refs, w.tags) for w in ways]
-                        else:
-                            rows += [
-                                (
-                                    r.id,
-                                    [
-                                        {"ref": m, "type": t, "role": role}
-                                        for t, m, role in r.members
-                                    ],
-                                    r.tags,
-                                )
-                                for r in rels
-                            ]
-                    cols = {
-                        "nodes": ("id", "lon", "lat", "tags"),
-                        "ways": ("id", "refs", "tags"),
-                        "relations": ("id", "members", "tags"),
-                    }[kind]
-                    yield pd.DataFrame(rows, columns=cols)
+                for rb in batches:
+                    out: list[dict] = []
+                    for off, ln in zip(rb.column(0).to_pylist(), rb.column(1).to_pylist()):
+                        f.seek(off)
+                        out += rows(f.read(ln))
+                    yield pa.RecordBatch.from_pylist(out, schema=schema)
 
-        return fn
+        return rdf.mapInArrow(fn, ddl)
 
     return {
-        "nodes": rdf.mapInPandas(_decode("nodes"), OSM_NODES_SCHEMA),
-        "ways": rdf.mapInPandas(_decode("ways"), OSM_WAYS_SCHEMA),
-        "relations": rdf.mapInPandas(_decode("relations"), OSM_RELATIONS_SCHEMA),
+        "nodes": _decode("nodes", OSM_NODES_SCHEMA),
+        "ways": _decode("ways", OSM_WAYS_SCHEMA),
+        "relations": _decode("relations", OSM_RELATIONS_SCHEMA),
     }

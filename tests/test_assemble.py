@@ -226,6 +226,34 @@ def test_mega_relation_chunked_path_identical(spark):
     assert single2[2] == 8 and single2[3] == 0 and single2[4] == 0
 
 
+def test_equal_area_shells_chunked_path_identical(spark):
+    """Eight disjoint shells of EQUAL area: the nesting sort cannot order
+    them by area, so the tie-break (smallest vertex) must make the chunked
+    path (rings in chunk order) emit the same polygon order and WKB as the
+    single-stage path (rings in way-id order)."""
+    def square(x0):
+        return [[x0, 0.0], [x0 + 8.0, 0.0], [x0 + 8.0, 8.0], [x0, 8.0], [x0, 0.0]]
+
+    rows = [(30000 + k, {}, square(100.0 + 20.0 * k)) for k in range(8)]
+    aw = spark.createDataFrame(
+        rows, schema="id long, tags map<string,string>, coords array<array<double>>"
+    )
+    rels = spark.createDataFrame(
+        [(79, {"type": "multipolygon", "landuse": "meadow"},
+          [{"ref": r[0], "type": "way", "role": ""} for r in rows])],
+        schema="id long, tags map<string,string>, "
+        "members array<struct<ref:long,type:string,role:string>>",
+    )
+
+    def run(max_members):
+        (r,) = assemble_relations(rels, aw, max_members=max_members).collect()
+        return r.n_rings, str(r.polygons), bytes(r.wkb)
+
+    single, chunked = run(10**9), run(2)
+    assert single == chunked
+    assert single[0] == 8
+
+
 def test_assembly_partition_invariance(spark):
     """Identical relation output under different shuffle partitioning and
     input row order (FIXTURES invariance requirement)."""

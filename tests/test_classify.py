@@ -71,10 +71,10 @@ def test_threshold_boundary(spark):
     assert got[1] is True and got[5] is False
 
 
-def test_dict_plan_is_one_map_in_pandas_no_exchange(spark):
+def test_dict_plan_is_one_map_in_arrow_no_exchange(spark):
     df = score_quality(_docs(spark), W)
     p = df._jdf.queryExecution().executedPlan().toString()
-    assert p.count("MapInPandas") == 1, p
+    assert p.count("MapInArrow") == 1, p
     assert "Exchange" not in p
 
 

@@ -159,12 +159,13 @@ def test_media_features_corrupt_payload_falls_back(spark):
 def test_media_features_null_meta_falls_back(spark):
     """Review r5: a NULL meta struct (dirty external media table) must take
     the byte-histogram fallback with decode_ok=False and null kind/n_bytes
-    — not TypeError the whole stage."""
+    — not TypeError the whole stage. A NULL payload reads as an empty one."""
     from imposm2_spark.functions.multimodal import media_features
 
     rows = [
         (1, b"\x00\x01\x02\x03", ("bmp", "image", 4)),
         (2, b"\x00\x01", None),
+        (3, None, ("bmp", "image", 0)),  # NULL payload: an empty one
     ]
     df = spark.createDataFrame(
         rows,
@@ -175,3 +176,5 @@ def test_media_features_null_meta_falls_back(spark):
     assert feats[2].decode_ok is False
     assert feats[2].kind is None and feats[2].n_bytes is None
     assert len(feats[2].features) == 16
+    assert feats[3].decode_ok is False and feats[3].kind == "image"
+    assert feats[3].features == [0.0] * 16

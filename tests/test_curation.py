@@ -140,11 +140,13 @@ class TestPackSequences:
                 (0, " ".join(["a"] * 10)),
                 (4, " ".join(["b"] * 999)),  # over budget alone
                 (8, " ".join(["c"] * 10)),
+                (12, None),  # NULL text: no tokens, joins the open sequence
             ],
-            ["doc_id", "text"],
+            "doc_id long, text string",
         )
-        out = {r.doc_id: r.seq_id for r in pack_sequences(docs, budget=100, n_shards=4).collect()}
-        assert out == {0: 0, 4: 1, 8: 2}
+        rows = pack_sequences(docs, budget=100, n_shards=4).collect()
+        assert {r.doc_id: r.seq_id for r in rows} == {0: 0, 4: 1, 8: 2, 12: 2}
+        assert {r.doc_id: r.n_tok for r in rows}[12] == 0
 
 
 class TestRepetitionMetrics:
@@ -318,7 +320,7 @@ def test_mix_sources_accepts_integer_weights(spark):
 
 
 def test_repetition_arrow_kernel_matches_hof_twin(spark):
-    """r5: repetition_metrics moved to an Arrow mapInPandas kernel; the
+    """r5: repetition_metrics moved to an Arrow-batched kernel (now mapInArrow); the
     retired pure-HOF formulation stays as the differential twin and must
     match row-for-row — including the tie-break-by-gram-STRING cases where
     token-tuple ordering would differ ('ab c' vs 'a bc'), empty text,

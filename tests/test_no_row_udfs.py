@@ -1,8 +1,8 @@
 """North-rule enforcement (SURVEY.md §2.10): NO per-row Python UDFs anywhere.
 
-Engine Python boundaries must be Arrow-batched (@pandas_udf, applyInPandas,
-mapInPandas, mapInArrow, applyInArrow, arrow_udf); geometry crosses in the
-Arrow forms only. A row-at-a-time `F.udf(...)` / `@udf` in the
+Engine Python boundaries must be Arrow-batched (mapInArrow, applyInArrow,
+arrow_udf; applyInPandasWithState for the stateful stream dedup only). A
+row-at-a-time `F.udf(...)` / `@udf` in the
 engine is a 10-100x regression at 100 TB — this test greps the package
 source so one can't slip in silently.
 """
@@ -27,48 +27,74 @@ def test_no_row_at_a_time_udfs():
     assert not offenders, "row-at-a-time Python UDFs found:\n" + "\n".join(offenders)
 
 
+# PySpark's Python-boundary constructs: the Arrow forms the package uses, and
+# the pandas forms it may not (applyInPandasWithState has no Arrow form the
+# stateful stream dedup could use)
+ARROW_CROSSINGS = {"mapInArrow", "applyInArrow", "arrow_udf"}
+PANDAS_CROSSINGS = {"pandas_udf", "mapInPandas", "applyInPandas", "applyInPandasWithState"}
+ALLOWED_PANDAS_CROSSINGS = {("streaming/stateful.py", "applyInPandasWithState")}
+# stateful.py for applyInPandasWithState, the driver-side fixture builders,
+# and the worker daemon, which imports pandas before it freezes its heap
+PANDAS_MODULES = {"streaming/stateful.py", "sources/fixtures.py", "worker_daemon.py"}
+
+
+def _imported_modules(node) -> set[str]:
+    if isinstance(node, ast.Import):
+        return {a.name.split(".")[0] for a in node.names}
+    if isinstance(node, ast.ImportFrom) and node.level == 0:
+        return {node.module.split(".")[0]}
+    return set()
+
+
+def _names(node) -> set[str]:
+    """The names a node references: an attribute, a name, or the names a
+    from-import binds."""
+    if isinstance(node, ast.Attribute):
+        return {node.attr}
+    if isinstance(node, ast.Name):
+        return {node.id}
+    if isinstance(node, ast.ImportFrom):
+        return {a.name for a in node.names}
+    return set()
+
+
 def test_python_boundaries_are_arrow_batched():
-    # every Python-boundary construct used must be one of the Arrow forms
-    allowed = (
-        "pandas_udf", "applyInPandas", "mapInPandas", "mapInArrow",
-        "applyInArrow", "arrow_udf",
-    )
-    found = set()
+    """Every Python crossing in the package is mapInArrow, applyInArrow or
+    arrow_udf (the one exception: applyInPandasWithState in
+    streaming/stateful.py), and only PANDAS_MODULES import pandas: Python
+    reads whole Arrow batches, in one form, with no pandas conversion."""
+    offenders, arrow_forms = [], set()
     for py in PKG.rglob("*.py"):
-        src = py.read_text()
-        for form in allowed:
-            if form in src:
-                found.add(form)
-    assert found >= set(allowed)
+        rel = py.relative_to(PKG).as_posix()
+        for node in ast.walk(ast.parse(py.read_text())):
+            if "pandas" in _imported_modules(node) and rel not in PANDAS_MODULES:
+                offenders.append(f"{rel}:{node.lineno}: imports pandas")
+            names = _names(node)
+            arrow_forms |= names & ARROW_CROSSINGS
+            for name in sorted(names & PANDAS_CROSSINGS):
+                if (rel, name) not in ALLOWED_PANDAS_CROSSINGS:
+                    offenders.append(f"{rel}:{node.lineno}: {name}")
+    assert not offenders, "pandas at the Python boundary:\n" + "\n".join(offenders)
+    assert arrow_forms == ARROW_CROSSINGS
 
 
 GEOMETRY_MODULES = [
     *(f"operators/{m}.py" for m in ("assemble", "generalize", "tiles", "pip", "lines")),
     *(p.relative_to(PKG).as_posix() for p in sorted((PKG / "kernels").glob("*.py"))),
 ]
-PANDAS_CROSSINGS = {"pandas_udf", "mapInPandas", "applyInPandas"}
 
 
 def test_geometry_crosses_in_arrow_only():
-    """The geometry operators and the kernels import neither pandas nor
-    pickle and use no pandas crossing: coordinates reach Python as Arrow
-    (kernels.wkb.coords_rows), in one form, with no pickled side channel."""
-    offenders = []
-    for rel in GEOMETRY_MODULES:
-        for node in ast.walk(ast.parse((PKG / rel).read_text())):
-            if isinstance(node, ast.Import):
-                mods = {a.name.split(".")[0] for a in node.names}
-            elif isinstance(node, ast.ImportFrom) and node.level == 0:
-                mods = {node.module.split(".")[0]}
-            else:
-                mods = set()
-            for m in sorted(mods & {"pandas", "pickle"}):
-                offenders.append(f"{rel}:{node.lineno}: imports {m}")
-            name = (node.attr if isinstance(node, ast.Attribute)
-                    else node.id if isinstance(node, ast.Name) else None)
-            if name in PANDAS_CROSSINGS:
-                offenders.append(f"{rel}:{node.lineno}: {name}")
-    assert not offenders, "pandas in the geometry path:\n" + "\n".join(offenders)
+    """The geometry operators and the kernels import no pickle: coordinates
+    reach Python as Arrow (kernels.wkb.coords_rows), with no pickled side
+    channel."""
+    offenders = [
+        f"{rel}:{node.lineno}: imports pickle"
+        for rel in GEOMETRY_MODULES
+        for node in ast.walk(ast.parse((PKG / rel).read_text()))
+        if "pickle" in _imported_modules(node)
+    ]
+    assert not offenders, "pickle in the geometry path:\n" + "\n".join(offenders)
 
 
 # parameter and field names that select between implementations of one
@@ -201,10 +227,7 @@ def test_one_document_enrich_path():
                     callers[name].add(f"{rel}::{getattr(top, 'name', '<module>')}")
     assert callers == {k: {"plans/pipeline.py::_enrich"} for k in kernels}, callers
     for rel in ("functions/textx.py", "functions/geotag.py"):
-        imported = set()
-        for node in ast.walk(ast.parse((PKG / rel).read_text())):
-            if isinstance(node, ast.Import):
-                imported |= {a.name.split(".")[0] for a in node.names}
-            elif isinstance(node, ast.ImportFrom) and node.level == 0:
-                imported.add(node.module.split(".")[0])
+        imported = set().union(
+            *map(_imported_modules, ast.walk(ast.parse((PKG / rel).read_text())))
+        )
         assert not imported & {"pandas", "pyspark"}, (rel, imported)

@@ -186,8 +186,8 @@ def test_batch_stats_same_on_byte_and_codepoint_views():
 
 
 def test_batch_stats_nan_in_batch():
-    """pandas can surface a missing string as NaN instead of None: a NaN
-    row is a NULL row and must not fail the rest of the batch."""
+    """A list batch's non-str item (NaN here) is a NULL row and must not
+    fail the rest of the batch."""
     texts = ["a b c", float("nan"), None, "the der"]
     nulls, cols = ts.batch_stats(texts)
     assert nulls.tolist() == [False, True, True, False]
@@ -197,53 +197,40 @@ def test_batch_stats_nan_in_batch():
         assert cols[c][[0, 3]].tolist() == ref_cols[c][[0, 3]].tolist(), c
 
 
-def test_arrow_text_kernels_nan_in_batch(spark, monkeypatch):
-    """Every mapInPandas text kernel treats a NaN text like NULL: capture
-    each kernel's batch function and feed it a batch holding NaN, None and
-    real text side by side. The mapInArrow kernels (Arrow strings have no
-    NaN) drop a NULL text: a batch holding one yields what the batch
-    without it yields."""
-    import pandas as pd
+def test_arrow_text_kernels_null_in_batch(spark, monkeypatch):
+    """Every mapInArrow text kernel reads a NULL text in a batch without
+    disturbing its neighbours: capture each kernel's batch function and feed
+    it a batch holding NULL and real text side by side. The NULL row yields
+    no row, or (simhash) the fingerprint 0 of an empty token list; the other
+    rows are what the batch without it yields."""
     import pyarrow as pa
 
     from imposm2_spark.operators import curation, dedup
 
     docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
     frame_cls = type(docs)
-    captured = {"mapInPandas": [], "mapInArrow": []}
+    captured = []
+    real = frame_cls.mapInArrow
 
-    def capturing(method):
-        real = getattr(frame_cls, method)
+    def capture(self, func, schema, *args, **kwargs):
+        captured.append(func)
+        return real(self, func, schema, *args, **kwargs)
 
-        def capture(self, func, schema, *args, **kwargs):
-            captured[method].append(func)
-            return real(self, func, schema, *args, **kwargs)
-
-        monkeypatch.setattr(frame_cls, method, capture)
-
-    capturing("mapInPandas")
-    capturing("mapInArrow")
+    monkeypatch.setattr(frame_cls, "mapInArrow", capture)
     dedup.minhash_signatures(docs)
     dedup.shingle_frame(docs)
     dedup.simhash_clusters(docs)
     curation._ngram_rows_kernel(docs, 3, "doc_id", "text")
-    assert len(captured["mapInPandas"]) == 2 and len(captured["mapInArrow"]) == 2
+    assert len(captured) == 4
 
-    def run(gen, missing):
-        pdf = pd.DataFrame(
-            {"doc_id": [1, 2, 3], "text": ["one two three four", missing, "x y z w"]}
-        )
-        return [str(out.to_dict("list")) for out in gen(iter([pdf]))]
-
-    for gen in captured["mapInPandas"]:
-        assert run(gen, float("nan")) == run(gen, None)
-
-    def run_arrow(gen, ids, texts):
+    def run(gen, ids, texts):
         rb = pa.RecordBatch.from_arrays(
             [pa.array(ids, pa.int64()), pa.array(texts, pa.string())], names=["doc_id", "text"]
         )
-        return [out.to_pylist() for out in gen(iter([rb]))]
+        return [row for out in gen(iter([rb])) for row in out.to_pylist()]
 
-    for gen in captured["mapInArrow"]:
-        with_null = run_arrow(gen, [1, 2, 3], ["one two three four", None, "x y z w"])
-        assert with_null and with_null == run_arrow(gen, [1, 3], ["one two three four", "x y z w"])
+    for gen in captured:
+        rows = run(gen, [1, 2, 3], ["one two three four", None, "x y z w"])
+        kept = [r for r in rows if r["doc_id"] != 2]
+        assert kept and kept == run(gen, [1, 3], ["one two three four", "x y z w"])
+        assert all(r == {"doc_id": 2, "simhash": 0} for r in rows if r["doc_id"] == 2)
