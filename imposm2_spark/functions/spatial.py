@@ -54,6 +54,18 @@ def cell_from_xy_col(x: Column, y: Column, level: int) -> Column:
     )
 
 
+def finite_lonlat(lon: Column, lat: Column) -> Column:
+    """True iff both coordinates are non-NULL and finite (no NaN, no inf)."""
+    return (
+        lon.isNotNull()
+        & lat.isNotNull()
+        & ~F.isnan(lon)
+        & ~F.isnan(lat)
+        & (F.abs(lon) != F.lit(float("inf")))
+        & (F.abs(lat) != F.lit(float("inf")))
+    )
+
+
 def cell_encode_col(lon: Column, lat: Column, level: int) -> Column:
     """lon/lat -> Morton cell id at `level`; NULL/non-finite -> -1 (INVALID_CELL).
 
@@ -65,14 +77,7 @@ def cell_encode_col(lon: Column, lat: Column, level: int) -> Column:
     copies of the tile math (32 Math.tan calls, ~350 KB of generated code)."""
     if not 0 <= level <= MAX_LEVEL:
         raise ValueError(f"level must be in [0, {MAX_LEVEL}], got {level}")
-    ok = (
-        lon.isNotNull()
-        & lat.isNotNull()
-        & ~F.isnan(lon)
-        & ~F.isnan(lat)
-        & (F.abs(lon) != F.lit(float("inf")))
-        & (F.abs(lat) != F.lit(float("inf")))
-    )
+    ok = finite_lonlat(lon, lat)
     safe_lon = F.when(ok, lon).otherwise(F.lit(0.0))
     safe_lat = F.when(ok, lat).otherwise(F.lit(0.0))
     cell = cell_from_xy_col(tile_x(safe_lon, level), tile_y(safe_lat, level), level)

@@ -20,21 +20,9 @@ groupBy over the combined stream, independent of match fan-out. Right rows at
 equal (key, ts) are resolved deterministically: the greatest `tiebreak` value
 wins in both directions.
 
-Skew: with `bucket_us=None` the window partitions by the join key, so one
-pathologically hot key (say, 1% of 10^12 events on a single key) serializes
-into one task — the same bound any per-key-ordered semantics has. Passing
-`bucket_us` (a time-bucket width in microseconds) breaks that bound: both
-sides are additionally keyed by `floor(event_micros / bucket_us)`, the window
-runs per (key, bucket) — so a hot key's rows spread over as many tasks as it
-spans buckets — and left rows whose bucket holds no at-or-before right row
-are resolved by a second, tiny union+window pass over ONE representative
-right row per (key, bucket) (the bucket's nearest-to-boundary right), carried
-across buckets in the match direction. Output is IDENTICAL to the unbucketed
-operator for every bucket width — including null keys and null timestamps —
-(property-tested in tests/test_asof.py); the price is two extra passes over
-the union (the probe distinct and the representative row_number window, both
-exchanging on (key, bucket)), one window over the tiny carried frame (≤ one
-row per key×bucket per side), and a null-safe join-back.
+Skew: the window partitions by the join key, so one pathologically hot key
+(say, 1% of 10^12 events on a single key) serializes into one task — the
+same bound any per-key-ordered semantics has.
 
 Semantics are pinned against a brute-force window-SQL oracle (DuckDB) in the
 driver row `asof_join_clicks_views` and against an in-test pandas brute force
@@ -62,7 +50,6 @@ def asof_join(
     tolerance_us: int | None = None,
     tiebreak: str | None = None,
     suffix: str = "_r",
-    bucket_us: int | None = None,
 ) -> DataFrame:
     """Join each left row to the nearest right row on the same key.
 
@@ -76,12 +63,6 @@ def asof_join(
     tolerance_us: if set, matches farther than this many microseconds from the
     left timestamp are nulled out (the left row is still emitted — this is a
     LEFT join; unmatched rows carry null right columns).
-
-    bucket_us: if set, partitions the ordering window by (key, time bucket of
-    this width in microseconds) instead of key alone — the hot-key skew
-    mitigation (module docstring). Result is identical for any width; pick a
-    width that splits the hottest key into roughly cluster-parallelism many
-    buckets (e.g. a day of events per bucket).
 
     tiebreak: right column deciding ties among right rows sharing (key, ts);
     the greatest value wins. Defaults to a deterministic hash of the right
@@ -100,13 +81,10 @@ def asof_join(
         if k not in left.columns or k not in right.columns:
             raise ValueError(f"join key {k!r} missing from one side")
 
-    if bucket_us is not None and (not isinstance(bucket_us, int) or bucket_us <= 0):
-        raise ValueError(f"bucket_us must be a positive int, got {bucket_us!r}")
-
     # "__rts" is the matched-timestamp field INSIDE the __r/__m struct: a
     # right payload column with that name would duplicate the struct field
     # and make the `__m.__rts` reads ambiguous deep in execution.
-    reserved = {"__ts", "__side", "__tie", "__r", "__l", "__m", "__bkt", "__fside", "__c", "__rn", "__rts"}
+    reserved = {"__ts", "__side", "__tie", "__r", "__l", "__m", "__rts"}
     clash = reserved.intersection(left.columns).union(
         reserved.intersection(right.columns)
     )
@@ -172,119 +150,31 @@ def asof_join(
     both = l_tagged.unionByName(r_tagged)
 
     backward = direction == "backward"
-    part_cols = [F.col(k) for k in keys]
-    if bucket_us is not None:
-        # Epoch-anchored micros of the event time, typed to whichever
-        # timestamp flavor the union resolved. The bucket map must be
-        # MONOTONE w.r.t. the window's __ts ordering: for instant-typed
-        # (TIMESTAMP) events that order is instant order, and wall-clock
-        # micros are NOT monotone across a DST fall-back — an earlier right
-        # row could land in a LATER bucket than its left and silently miss
-        # the match — so bucket on unix micros. TIMESTAMP_NTZ orders in
-        # wall-clock space, where wall micros (timestamp_diff from the
-        # epoch; unix_micros rejects NTZ) are the monotone choice.
-        ts_type = both.schema["__ts"].dataType
-        if isinstance(ts_type, TimestampType):
-            micros = F.unix_micros(F.col("__ts"))
-        else:
-            epoch = F.lit("1970-01-01 00:00:00").cast(ts_type)
-            micros = F.timestamp_diff("MICROSECOND", epoch, F.col("__ts"))
-        # floor() rounds toward -inf, so pre-epoch timestamps bucket
-        # consistently too.
-        both = both.withColumn("__bkt", F.floor(micros / F.lit(int(bucket_us))))
-        part_cols = part_cols + [F.col("__bkt")]
-
     ts_order = F.col("__ts").asc() if backward else F.col("__ts").desc()
     # At equal __ts the right row (side 0) sorts before the left row, so the
     # inclusive match sees it; among equal-ts rights, ascending __tie makes
     # last() pick the greatest tiebreak. Nulls-first keeps left rows' null
     # __tie from sorting after right rows.
     w = (
-        W.partitionBy(*part_cols)
+        W.partitionBy(*[F.col(k) for k in keys])
         .orderBy(ts_order, F.col("__side").asc(), F.col("__tie").asc_nulls_first())
         .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
     matched = F.last("__r", ignorenulls=True).over(w)
     out = both.withColumn("__m", matched).where(F.col("__side") == 1)
 
-    if bucket_us is not None:
-        # Cross-bucket fix-up: a left row whose bucket holds no at-or-before
-        # (resp. at-or-after) right row takes the nearest-to-boundary right of
-        # the nearest non-empty bucket in the match direction. One
-        # representative per (key, bucket) — the greatest-(ts, tie) right for
-        # backward, the least-ts/greatest-tie right for forward (the same row
-        # the unbucketed window would pick) — then the module's own
-        # union+window trick one level up: probe rows (buckets that need a
-        # carry) sort BEFORE representatives within their own bucket, so
-        # last(ignorenulls) over the bucket ordering sees strictly
-        # earlier/later buckets only. The carried frame is ≤ one row per
-        # key×bucket on each side — tiny next to the data.
-        rep_order = (
-            [F.col("__ts").desc(), F.col("__tie").desc_nulls_last()]
-            if backward
-            else [F.col("__ts").asc(), F.col("__tie").desc_nulls_last()]
-        )
-        w_rep = W.partitionBy(*part_cols).orderBy(*rep_order)
-        reps = (
-            both.where(F.col("__side") == 0)
-            .withColumn("__rn", F.row_number().over(w_rep))
-            .where(F.col("__rn") == 1)
-            .select(*keys, "__bkt", F.lit(1).alias("__fside"), "__r")
-        )
-        # probe EVERY left (key, bucket) — not just the ones whose in-bucket
-        # match was null. That would read `out` (the fully-windowed frame)
-        # twice, re-running the main sort+window over all the data; probing
-        # from the pre-window union is one cheap distinct, and carried values
-        # for buckets that already matched in-bucket are simply ignored by
-        # the coalesce below.
-        probes = (
-            both.where(F.col("__side") == 1)
-            .select(*keys, "__bkt")
-            .distinct()
-            .withColumn("__fside", F.lit(0))
-            .withColumn("__r", F.lit(None).cast(r_type))
-        )
-        # A null __bkt (null LEFT event time — null-ts rights are dropped
-        # pre-union) may pick up a carry under the forward ordering, but the
-        # null-left-ts guard below nulls the match on both paths, so the
-        # identical-output contract holds without special-casing here.
-        bkt_order = F.col("__bkt").asc() if backward else F.col("__bkt").desc()
-        w_carry = (
-            W.partitionBy(*[F.col(k) for k in keys])
-            .orderBy(bkt_order, F.col("__fside").asc())
-            .rowsBetween(W.unboundedPreceding, W.currentRow)
-        )
-        carried = (
-            probes.unionByName(reps)
-            .withColumn("__c", F.last("__r", ignorenulls=True).over(w_carry))
-            .where(F.col("__fside") == 0)
-            .select(*keys, "__bkt", "__c")
-        )
-        # Null-SAFE equality on the join-back: window partitionBy groups null
-        # keys (and the null bucket) together, so plain `=` would silently
-        # drop every carried match for null-keyed or null-ts rows and break
-        # the identical-output contract.
-        o, c = out.alias("__o"), carried.alias("__cf")
-        cond = F.lit(True)
-        for k in [*keys, "__bkt"]:
-            cond = cond & F.col(f"__o.{k}").eqNullSafe(F.col(f"__cf.{k}"))
-        out = o.join(c, on=cond, how="left").select(
-            "__o.*", F.col("__cf.__c").alias("__c")
-        ).withColumn("__m", F.coalesce(F.col("__m"), F.col("__c")))
-
     # A null LEFT timestamp likewise matches nothing (the comparison is
     # unknown for every right row) — but under the forward ordering (desc,
     # NULLS LAST) a null-ts left row sorts after every right row and would
     # otherwise adopt the earliest one. The row is still emitted, unmatched
-    # (LEFT-join contract). Applied after the bucketed coalesce so both
-    # paths stay output-identical.
+    # (LEFT-join contract).
     out = out.withColumn(
         "__m", F.when(F.col("__ts").isNotNull(), F.col("__m"))
     )
 
     if tolerance_us is not None:
         # The lag must be measured in the SAME space the match order lives
-        # in (the bucketing rationale above): timestamp_diff subtracts
+        # in (instant order for TIMESTAMP): timestamp_diff subtracts
         # wall-clock datetimes, so across a DST fall-back it reports a
         # 45-minute instant gap as -15 minutes (measured) — wrongly
         # accepting/rejecting DST-straddling matches for instant-typed

@@ -335,7 +335,8 @@ def _assemble_relation_group(table: pa.Table, builder: str) -> pa.Table:
 # merge_fragments — associative: a stitched chain is itself a valid input
 # way for the next level), then finalized in a second, narrow applyInArrow
 # whose rows are chunk summaries + per-way metadata (no coords), bounding
-# executor memory by max_members x way size instead of relation size.
+# executor memory by MAX_MEMBERS_PER_GROUP x way size instead of relation
+# size. Read at call time.
 MAX_MEMBERS_PER_GROUP = 4096
 
 # one 'geom' row per chunk (closed rings, open chains, invalid count) and
@@ -402,7 +403,6 @@ def _finalize_chunked_group(table: pa.Table, builder: str) -> pa.Table:
 def assemble_relations(
     relations: DataFrame,
     assembled_ways: DataFrame,
-    max_members: int = MAX_MEMBERS_PER_GROUP,
     relation_builder: str = "contains",
 ) -> DataFrame:
     """J2 + A2-A4: -> one row per buildable relation (see _REL_OUT).
@@ -410,8 +410,8 @@ def assemble_relations(
     relations: (id, tags, members ARRAY<STRUCT<ref, type, role>>)
     assembled_ways: output of assemble_ways.
 
-    Relations with more than `max_members` resolved way members take the
-    chunked two-stage path (O10b, see MAX_MEMBERS_PER_GROUP above); output is
+    Relations with more than MAX_MEMBERS_PER_GROUP resolved way members take
+    the chunked two-stage path (O10b, see the constant above); output is
     identical to the single-stage path (tests/test_assemble.py proves it on a
     synthetic 10^4-member relation).
 
@@ -450,7 +450,7 @@ def assemble_relations(
 
     out_schema = from_arrow_schema(_REL_OUT)
     small_out = (
-        resolved.where(F.col("_n") <= max_members)
+        resolved.where(F.col("_n") <= MAX_MEMBERS_PER_GROUP)
         .drop("_n")
         .groupBy("rel_id")
         .applyInArrow(
@@ -458,7 +458,7 @@ def assemble_relations(
         )
     )
 
-    chunked = resolved.where(F.col("_n") > max_members).withColumn(
+    chunked = resolved.where(F.col("_n") > MAX_MEMBERS_PER_GROUP).withColumn(
         "_chunk",
         # hash the way id before the modulo (review r5): raw pmod collapses
         # stride/residue-aligned id sequences (bulk imports, way splitters)
@@ -468,7 +468,7 @@ def assemble_relations(
         # test) — same pattern as knn/pip salting.
         F.pmod(
             F.xxhash64(F.col("way_id")),
-            F.ceil(F.col("_n") / F.lit(max_members)),
+            F.ceil(F.col("_n") / F.lit(MAX_MEMBERS_PER_GROUP)),
         ).cast("int"),
     )
     partial = chunked.groupBy("rel_id", "_chunk").applyInArrow(

@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text_analysis import CHAR_MOD, char_hash
 
-__all__ = ["bloom_build", "bloom_probe", "bloom_probe_inrow", "bloom_positions"]
+__all__ = ["bloom_build", "bloom_probe", "bloom_positions"]
 
 # independent LCG mixes of the base hash -> k bit positions. Small
 # multipliers keep h*A well under 2^63 (h < CHAR_MOD ~ 1e9) in BOTH engines.
@@ -112,7 +112,7 @@ def bloom_probe(
     """
     # explode_OUTER: a null text yields a null position array; plain explode
     # would drop the document from the verdict entirely instead of scoring
-    # it maybe_member=false (row preservation pinned vs the in-row probe)
+    # it maybe_member=false (row preservation pytest-pinned)
     pos = F.explode_outer(bloom_positions(F.col(text_col), n_bits, k)).alias("pos")
     posed = candidates.select(F.col(id_col), pos)
     word, mask = _word_mask(F.col("pos"))
@@ -134,43 +134,3 @@ def bloom_probe(
         .agg((F.min("_hit") == F.lit(1)).alias("maybe_member"))
     )
 
-
-def bloom_probe_inrow(
-    candidates: DataFrame,
-    bloom: DataFrame,
-    *,
-    text_col: str = "text",
-    n_bits: int = DEFAULT_N_BITS,
-    k: int = 3,
-    out_col: str = "maybe_member",
-) -> DataFrame:
-    """STATELESS probe: k broadcast lookups per row, no explode, no agg —
-    the streaming formulation (a continuous crawl probing the last
-    published filter is a plain stream-static broadcast join; the agg form
-    of `bloom_probe` would become a stateful streaming aggregation).
-
-    Returns `candidates` with `out_col` appended — all input columns pass
-    through, so this also composes mid-pipeline in batch plans. Verdict is
-    identical to `bloom_probe` (pytest-pinned).
-    """
-    out = candidates.withColumn("_bpos", bloom_positions(F.col(text_col), n_bits, k))
-    verdict = None
-    for i in range(k):
-        pos = F.element_at("_bpos", i + 1)
-        out = out.withColumn(f"_bw{i}", (pos / 32).cast("long")).withColumn(
-            f"_bm{i}",
-            F.expr(
-                f"shiftleft(CAST(1 AS BIGINT), CAST(element_at(_bpos, {i + 1}) % 32 AS INT))"
-            ),
-        )
-        side = F.broadcast(
-            bloom.select(F.col("word").alias(f"_bw{i}"), F.col("bits").alias(f"_bb{i}"))
-        )
-        out = out.join(side, f"_bw{i}", "left")
-        hit = F.col(f"_bb{i}").isNotNull() & (
-            F.col(f"_bb{i}").bitwiseAND(F.col(f"_bm{i}")) == F.col(f"_bm{i}")
-        )
-        verdict = hit if verdict is None else (verdict & hit)
-    return out.withColumn(out_col, verdict).drop(
-        "_bpos", *[c for i in range(k) for c in (f"_bw{i}", f"_bm{i}", f"_bb{i}")]
-    )

@@ -339,7 +339,7 @@ def dedup_connected_components(
     pair graphs hold DUP nodes only, and the loop pays ~2 jobs x O(seconds)
     of fixed latency per doubling round regardless of size. When the pair
     table fits `DRIVER_MAX_EDGES` rows (ONE bounded limit(cap+1) Arrow
-    collect — the pip_join max_broadcast_polygons contract; ~16 bytes/edge,
+    collect — the pip_join MAX_BROADCAST_POLYGONS contract; ~16 bytes/edge,
     so ~mid-MB of driver memory), labels are computed with NumPy over the
     collected edges (_cc_driver) — identical output, pytest-pinned equal to
     the loop, zero iterative rounds. Larger or non-integral graphs take the

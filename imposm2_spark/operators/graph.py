@@ -21,16 +21,16 @@ is BIGINT with floor division, so results are bit-identical regardless of
 partitioning, core count, or aggregation order — a property float PageRank
 cannot give (IEEE addition is not associative, so a plain SUM(double) can
 differ between runs, between Spark and an oracle, and between cluster
-sizes). Ranks are integer "nano-ranks" in units of 1/`scale`:
-rank_n = scale means rank 1.0 in the classic uniform-start formulation
-(total initial mass = n_nodes * scale).
+sizes). Ranks are integer "nano-ranks" in units of 1/SCALE:
+rank_n = SCALE means rank 1.0 in the classic uniform-start formulation
+(total initial mass = n_nodes * SCALE).
 
 Update rule (engine spec, frozen — the DuckDB oracle in plans.registry
 mirrors it operator-for-operator):
 
-    r0(v)   = scale
-    base    = (scale * (damping_den - damping_num)) div damping_den
-    contrib(u) = (r(u) * damping_num) div (damping_den * outdeg(u))
+    r0(v)   = SCALE
+    base    = (SCALE * (DAMPING_DEN - DAMPING_NUM)) div DAMPING_DEN
+    contrib(u) = (r(u) * DAMPING_NUM) div (DAMPING_DEN * outdeg(u))
     r+1(v)  = base + sum over in-edges (u,v) of contrib(u)
 
 with `div` = floor division on BIGINT (operands are non-negative, so
@@ -40,11 +40,12 @@ the standard "no dangling redistribution" variant; document-level quality
 weighting only needs the relative ordering, which this preserves.
 
 Overflow bound: every rank is bounded by the total mass
-n_nodes * scale, so contributions fit int64 while
-n_nodes * scale * damping_num < 2^63 — at the default scale=10^9 and
-damping 17/20 that allows ~5*10^8 nodes (hosts, not pages; the web is
-~10^8 registrable domains). For larger host graphs pass scale=10^6
-(~5*10^11 nodes) — precision stays ample because ranks are relative.
+n_nodes * SCALE, so contributions fit int64 while
+n_nodes * SCALE * DAMPING_NUM < 2^63 — at SCALE=10^9 and damping 17/20
+that allows ~5*10^8 nodes (hosts, not pages; the web is ~10^8 registrable
+domains). Larger host graphs need SCALE=10^6 (~5*10^11 nodes) — precision
+stays ample because ranks are relative — and a new oracle row, since the
+DuckDB twin freezes these three constants.
 """
 
 from __future__ import annotations
@@ -52,16 +53,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# The frozen update rule's constants (module docstring); read at call time.
+DAMPING_NUM = 17
+DAMPING_DEN = 20
+SCALE = 10**9
+
 
 def pagerank(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     iterations: int = 3,
-    damping_num: int = 17,
-    damping_den: int = 20,
-    scale: int = 10**9,
-    tol_n: int | None = None,
 ) -> DataFrame:
     """Integer PageRank over a directed edge list → (node, rank_n).
 
@@ -75,16 +77,6 @@ def pagerank(
     and partition-invariant by construction (integer rank math only;
     pytest-gated).
 
-    tol_n (r6, VERDICT r5 ask #7 — deterministic early termination): when
-    set, the loop stops as soon as max |Δrank_n| over all nodes is <= tol_n
-    (computed in the SAME BIGINT nano-rank space as the update rule, so the
-    stopping decision is partition/engine-invariant like the ranks
-    themselves). `iterations` becomes the CAP instead of a blind constant —
-    deep host graphs converge in however many rounds they need, shallow
-    ones stop paying for guessed extra rounds. Costs one extra equi-join +
-    1-row aggregate per round, only when opted in; default None keeps the
-    fixed-iteration plan (and the frozen driver oracle) bit-identical.
-
     Plan shape per round: broadcast-or-shuffle equi-join of the (node,
     rank) frame onto the degree-annotated edge list + one hash agg keyed
     by dst (partial_sum combines map-side), then a left join back onto
@@ -96,12 +88,6 @@ def pagerank(
     """
     if iterations < 0:
         raise ValueError(f"iterations must be >= 0, got {iterations}")
-    if not (0 < damping_num < damping_den):
-        raise ValueError(
-            f"need 0 < damping_num < damping_den, got {damping_num}/{damping_den}"
-        )
-    if tol_n is not None and (not isinstance(tol_n, int) or tol_n < 0):
-        raise ValueError(f"tol_n must be a non-negative int or None, got {tol_n!r}")
 
     e = (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
@@ -121,8 +107,8 @@ def pagerank(
     edges_deg = e.join(outdeg, "src").persist()
     edges_deg.count()  # materialize before the loop so rounds reuse, not recompute
 
-    base = (scale * (damping_den - damping_num)) // damping_den
-    ranks = nodes.select("node", F.lit(int(scale)).cast("long").alias("rank_n"))
+    base = (SCALE * (DAMPING_DEN - DAMPING_NUM)) // DAMPING_DEN
+    ranks = nodes.select("node", F.lit(SCALE).cast("long").alias("rank_n"))
 
     from .dedup import _release_local_checkpoint
 
@@ -134,14 +120,13 @@ def pagerank(
                 .select(
                     "dst",
                     F.expr(
-                        f"(rank_n * CAST({damping_num} AS BIGINT))"
-                        f" div (CAST({damping_den} AS BIGINT) * outdeg)"
+                        f"(rank_n * CAST({DAMPING_NUM} AS BIGINT))"
+                        f" div (CAST({DAMPING_DEN} AS BIGINT) * outdeg)"
                     ).alias("contrib"),
                 )
                 .groupBy("dst")
                 .agg(F.sum("contrib").alias("inflow"))
             )
-            prev = ranks
             ranks = (
                 nodes.join(contrib, nodes["node"] == contrib["dst"], "left")
                 .select(
@@ -153,25 +138,12 @@ def pagerank(
                 )
                 .localCheckpoint(eager=True)
             )
-            converged = False
-            if tol_n is not None:
-                old = prev.select(
-                    F.col("node").alias("_n"), F.col("rank_n").alias("_old")
-                )
-                row = (
-                    ranks.join(old, ranks["node"] == old["_n"])
-                    .agg(F.max(F.abs(F.col("rank_n") - F.col("_old"))).alias("d"))
-                    .collect()[0]
-                )
-                converged = row["d"] is not None and row["d"] <= tol_n
             # free the SUPERSEDED round's checkpoint blocks (the CC loop's
             # storage discipline); the final round's frame backs the
             # returned DataFrame and is kept
             if prev_ck is not None:
                 _release_local_checkpoint(prev_ck)
             prev_ck = ranks
-            if converged:
-                break
         return ranks
     finally:
         edges_deg.unpersist()

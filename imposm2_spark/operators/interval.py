@@ -19,14 +19,10 @@ lives in a single bucket, and the interval covers that bucket at most once
 needed — the classic one-pass property of one-sided-replication interval
 partitioning.
 
-Long-interval skew: an interval spanning S buckets replicates S times. Rows
-spanning more than `long_span_buckets` are split off BEFORE the explode and
-joined via an explicit broadcast range join instead (long intervals — the
-"whole-month maintenance window" tail — are assumed rare; Spark's broadcast
-size guard is the loud failure if they are not, mirroring the documented
-catalog-collect contract in operators/tiles.py). Both paths stay lazy; output
-is the union and is property-tested identical to the unbucketed brute force
-for every (bucket_us, long_span_buckets) choice (tests/test_interval.py).
+Long-interval skew: an interval spanning S buckets replicates S times, so
+pick `bucket_us` near the typical interval length. Output is property-tested
+identical to the unbucketed brute force for every bucket width
+(tests/test_interval.py).
 
 Null semantics follow SQL comparisons, exactly like the DuckDB oracle: a
 point with a null timestamp or an interval with a null endpoint satisfies no
@@ -62,7 +58,7 @@ def _micros(col: Column, col_type, instant: bool) -> Column:
     # double-typed `/`: provably exact for |micros| < 2^53 (year ~2255) — an
     # integer quotient m/w is at least 1/w from any other integer, and the
     # division's rounding error is < (m/w)*2^-53, so a floor flip needs
-    # m > 2^53. Same bound as operators/asof.py's bucketing.
+    # m > 2^53.
     if instant:
         return F.unix_micros(col.cast("timestamp"))
     epoch = F.lit("1970-01-01 00:00:00").cast(col_type)
@@ -78,7 +74,6 @@ def interval_join(
     end: str = "end",
     bucket_us: int = 3_600_000_000,
     suffix: str = "_i",
-    long_span_buckets: int | None = None,
 ) -> DataFrame:
     """Inner-join each point to every same-key interval containing it.
 
@@ -92,16 +87,6 @@ def interval_join(
     length so most intervals explode to ~2 buckets. Too narrow inflates the
     interval-side replication; too wide degrades the refine filter's
     selectivity (more same-bucket non-matches scanned per task).
-
-    long_span_buckets: intervals spanning more than this many buckets bypass
-    the explode and broadcast-range-join instead. Default None: everything
-    explodes, one pass over the points. Enabling the split adds a SECOND full
-    scan of the point side for the broadcast branch — the 8M-point XL A/B
-    (BENCH_XL_r05.json, from `git show 1d3b96c:scripts/bench_interval_xl.py`)
-    measured that a net loss (2.48s vs 2.03s) unless the long tail's explode
-    factor outweighs the extra scan, so opt in only for genuinely open-ended
-    interval tails. The long side is assumed small;
-    Spark's broadcast size limit is the deliberate loud failure if not.
 
     Returns all point columns (keys first), then every non-key interval
     column suffixed with `suffix`.
@@ -124,12 +109,6 @@ def interval_join(
             raise ValueError(f"interval bound column {c!r} cannot also be a join key")
     if not isinstance(bucket_us, int) or bucket_us <= 0:
         raise ValueError(f"bucket_us must be a positive int, got {bucket_us!r}")
-    if long_span_buckets is not None and (
-        not isinstance(long_span_buckets, int) or long_span_buckets <= 0
-    ):
-        raise ValueError(
-            f"long_span_buckets must be a positive int or None, got {long_span_buckets!r}"
-        )
 
     reserved = {"__bkt", "__b0", "__b1"}
     clash = reserved.intersection(points.columns).union(
@@ -178,33 +157,12 @@ def interval_join(
     )
     i_proj = [F.col(c).alias(f"{c}{suffix}") for c in ipay_cols]
 
-    def _pairs(iv_side: DataFrame, broadcast_long: bool) -> DataFrame:
-        if broadcast_long:
-            # Rare long intervals: no explode — an explicit broadcast join on
-            # the keys with the range refine. Stays a BroadcastHashJoin (the
-            # equi-keys carry it); the replication the explode would have
-            # done S times is done zero times at the cost of scanning every
-            # same-key point.
-            iv = F.broadcast(iv_side.select(*keys, *i_proj))
-            return pts.drop("__bkt").join(iv, on=keys, how="inner").where(between)
-        iv = iv_side.select(
-            *keys,
-            F.explode(F.sequence(F.col("__b0"), F.col("__b1"))).alias("__bkt"),
-            *i_proj,
-        )
-        return (
-            pts.join(iv, on=[*keys, "__bkt"], how="inner")
-            .where(between)
-            .drop("__bkt")
-        )
-
-    if long_span_buckets is None:
-        out = _pairs(ivs, broadcast_long=False)
-    else:
-        span_ok = (F.col("__b1") - F.col("__b0")) < F.lit(int(long_span_buckets))
-        out = _pairs(ivs.where(span_ok), broadcast_long=False).unionByName(
-            _pairs(ivs.where(~span_ok), broadcast_long=True)
-        )
+    iv = ivs.select(
+        *keys,
+        F.explode(F.sequence(F.col("__b0"), F.col("__b1"))).alias("__bkt"),
+        *i_proj,
+    )
+    out = pts.join(iv, on=[*keys, "__bkt"], how="inner").where(between).drop("__bkt")
     return out.select(
         *[F.col(c) for c in points.columns],
         *[F.col(f"{c}{suffix}") for c in ipay_cols],

@@ -26,7 +26,7 @@ Scale shape (10^12 points, 10^6..10^8 sites):
   * every round is one shuffle (or broadcast) equi-join on cell id + one
     window top-k partitioned by point id — AQE handles moderate skew; dense
     site cells can additionally be salted upstream like pip_join.
-  * the loop is a *driver-side plan loop* (bounded, default 3 rounds) — data
+  * the loop is a *driver-side plan loop* (bounded, 3 rounds) — data
     never reaches the driver; per-round frontier counts come from isEmpty().
   * unresolved stragglers (points in site deserts) fall back to a broadcast
     brute-force pass, exact by construction.
@@ -44,6 +44,10 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 PI = 3.141592653589793
+# Chebyshev ring radii of the expansion rounds, in cells of `level`; points
+# still unsatisfied after the last one take the brute fallback. Read at call
+# time.
+RINGS = (1, 2, 4)
 
 
 def merc_x(lon: F.Column) -> F.Column:
@@ -104,7 +108,6 @@ def knn_join(
     sites: DataFrame,
     k: int,
     level: int = 6,
-    rings: tuple[int, ...] = (1, 2, 4),
     point_id: str = "doc_id",
     site_id: str = "site_id",
     point_lonlat: tuple[str, str] = ("lon", "lat"),
@@ -200,7 +203,7 @@ def knn_join(
     remaining = p.persist()
     accepted: list[DataFrame] = []
     frontier_empty = False
-    for r in rings:
+    for r in RINGS:
         # explode the (2r+1)^2 neighborhood of each unsatisfied point — JVM-only
         nbrs = remaining.select(
             "*",

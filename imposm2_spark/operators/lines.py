@@ -190,6 +190,7 @@ def merge_lines(
 # a mega-relation (operators/assemble.py O10b). Fail loudly rather than OOM;
 # merge_fragments is associative, so a hierarchical chunked stitch (the O10b
 # pattern) is the documented escape hatch if real data ever trips this.
+# Read at call time.
 MAX_COMPONENT_SEGMENTS = 100_000
 
 
@@ -201,7 +202,6 @@ def merge_line_geometries(
     xs_col: str = "xs",
     ys_col: str = "ys",
     quantum: float = DEFAULT_QUANTUM,
-    max_component_segments: int = MAX_COMPONENT_SEGMENTS,
 ) -> DataFrame:
     """Stitched geometry per component: (group cols..., merged_id,
     n_segments, closed, xs, ys) with the merged coordinate chain.
@@ -242,15 +242,15 @@ def merge_line_geometries(
         ]
     )
     arrow_schema = to_arrow_schema(out_schema)
+    max_component_segments = MAX_COMPONENT_SEGMENTS
 
     def _stitch(key, table):
         key = tuple(k.as_py() for k in key)
         if len(table) > max_component_segments:
             raise ValueError(
                 f"merged-line component {key} has {len(table)} segments, over "
-                f"max_component_segments={max_component_segments}; chunk the "
-                "stitch hierarchically (merge_fragments is associative) or "
-                "raise the cap explicitly"
+                f"MAX_COMPONENT_SEGMENTS={max_component_segments}; chunk the "
+                "stitch hierarchically (merge_fragments is associative)"
             )
         closed, chains, dropped = krings.merge_fragments(coords_rows(table["_pts"]))
         pieces = len(closed) + len(chains)

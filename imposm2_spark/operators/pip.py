@@ -13,7 +13,7 @@ Two phases, both paths:
      once.
 
 Broadcast path (the common case: polygon count << point count). The polygon
-side is pulled to the driver once, capped at `max_broadcast_polygons`, and
+side is pulled to the driver once, capped at MAX_BROADCAST_POLYGONS, and
 built into a PolygonIndex: the sorted covering cells with their polygons,
 and the rings by polygon. It ships once per executor as a Spark broadcast.
 The physical plan is scan -> ONE ArrowEvalPython over (lon, lat) -> explode:
@@ -51,31 +51,28 @@ from ..kernels.wkb import coords_rows
 
 DEFAULT_CELL_LEVEL = 12
 # driver-side cap on the polygon pull of the broadcast path; over it, the
-# join (and the spine) degrade to the shuffle path
+# join (and the spine) degrade to the shuffle path. Read at call time.
 MAX_BROADCAST_POLYGONS = 100_000
 
 # auto-salt gate: below this many rows in the hottest cell, salting is a
-# no-op-to-harmful (fixed overhead, nothing to spread) and stays off
+# no-op-to-harmful (fixed overhead, nothing to spread) and stays off; the
+# factor never exceeds the cap. Both read at call time.
 AUTO_SALT_HOT_MIN = 4096
 AUTO_SALT_CAP = 32
 
 
-def auto_salt_factor(
-    keyed: "DataFrame",
-    key_cols: list,
-    hot_min: int = AUTO_SALT_HOT_MIN,
-    cap: int = AUTO_SALT_CAP,
-) -> int | None:
+def auto_salt_factor(keyed: "DataFrame", key_cols: list) -> int | None:
     """O10a self-gating fan-out (r6, VERDICT r5 ask #2): derive the salt
     factor from the OBSERVED key histogram instead of a blind constant that
     can invert under load. One bounded aggregate over the keyed side
     (max/total per key — a map-side-combined count, never payloads):
 
-      * gate OFF (None) when the hottest key holds < `hot_min` rows or no
-        more than ~2 ideal task shares — nothing worth spreading;
+      * gate OFF (None) when the hottest key holds < AUTO_SALT_HOT_MIN rows
+        or no more than ~2 ideal task shares — nothing worth spreading;
       * otherwise the smallest power of 2 that brings the hot key's share
-        down to one ideal task share, capped at `cap` (salting multiplies
-        probe/replica work linearly, so unbounded fan-out is its own skew).
+        down to one ideal task share, capped at AUTO_SALT_CAP (salting
+        multiplies probe/replica work linearly, so unbounded fan-out is its
+        own skew).
 
     Deterministic given the data; output rows are identical for every salt
     choice by the salting construction (pytest-pinned).
@@ -90,10 +87,10 @@ def auto_salt_factor(
     total = int(row["total"] or 0)
     par = keyed.sparkSession.sparkContext.defaultParallelism
     target = max(1, total // max(par, 1))
-    if hot < hot_min or hot <= 2 * target:
+    if hot < AUTO_SALT_HOT_MIN or hot <= 2 * target:
         return None
     k = 1
-    while k < cap and hot // k > target:
+    while k < AUTO_SALT_CAP and hot // k > target:
         k *= 2
     return k
 
@@ -161,23 +158,18 @@ class PolygonIndex:
         return pa.ListArray.from_arrays(pa.array(offsets), pa.array(pid, id_type))
 
 
-def polygon_index(
-    polygons: DataFrame, cell_level: int, max_broadcast_polygons: int
-) -> PolygonIndex | None:
+def polygon_index(polygons: DataFrame, cell_level: int) -> PolygonIndex | None:
     """PolygonIndex of `polygons`, or None when it has more than
-    `max_broadcast_polygons` rows.
+    MAX_BROADCAST_POLYGONS rows.
 
     EAGER: collects limit(cap+1) rows as Arrow in ONE action, so driver memory is
     bounded by the cap; the extra row signals the polygon side is too big.
     (A toLocalIterator stream was measured 2.3x slower end-to-end from its
     sequential per-partition jobs; a separate count-probe action costs a
     full extra scan.)"""
-    table = (
-        polygons.select("polygon_id", "rings", "cells")
-        .limit(max_broadcast_polygons + 1)
-        .toArrow()
-    )
-    if table.num_rows > max_broadcast_polygons:
+    cap = MAX_BROADCAST_POLYGONS
+    table = polygons.select("polygon_id", "rings", "cells").limit(cap + 1).toArrow()
+    if table.num_rows > cap:
         return None
     return PolygonIndex.from_table(table, cell_level)
 
@@ -227,7 +219,6 @@ def pip_join(
     broadcast_polygons: bool = True,
     salt_factor: int | str | None = None,
     keep_point_cols: list[str] | None = None,
-    max_broadcast_polygons: int = MAX_BROADCAST_POLYGONS,
 ) -> DataFrame:
     """Inner spatial join: one output row per (point, containing polygon).
 
@@ -240,7 +231,7 @@ def pip_join(
 
     broadcast_polygons=True EAGERLY pulls the polygon side to the driver at
     plan-construction time (polygon_index: one capped action) and locates
-    points in one Arrow crossing. If the pull exceeds `max_broadcast_polygons`
+    points in one Arrow crossing. If the pull exceeds MAX_BROADCAST_POLYGONS
     the join degrades to the co-locating shuffle path instead of OOMing the
     driver. `salt_factor` (int, or 'auto' for a measured factor) applies to
     the shuffle path only.
@@ -253,11 +244,7 @@ def pip_join(
             f"salt_factor must be an int, None, or 'auto', got {salt_factor!r}"
         )
 
-    index = (
-        polygon_index(polygons, cell_level, max_broadcast_polygons)
-        if broadcast_polygons
-        else None
-    )
+    index = polygon_index(polygons, cell_level) if broadcast_polygons else None
     if index is not None:
         # the broadcast lives as long as a frame whose UDF closure holds it
         # can be evaluated; Python GC + Spark's ContextCleaner reclaim it

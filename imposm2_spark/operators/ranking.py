@@ -66,7 +66,7 @@ B = 0.75
 # limit(cap+1) in ONE action (pip_join's bounded-collect contract); at or
 # under the cap the zero-shuffle in-row plan runs, above it the operator
 # falls back to the postings-join plan — never an error, never an unbounded
-# driver pull.
+# driver pull. Read at call time; 0 forces the join plan.
 MAX_INLINE_TERMS = 64
 
 # DECIMAL(28,9): 19 integral digits of headroom — a doc matching 10^4 query
@@ -199,7 +199,6 @@ def bm25_rank(
     top_k: int = 10,
     term_dp: int = 9,
     score_dp: int = 6,
-    max_inline_terms: int = MAX_INLINE_TERMS,
 ) -> DataFrame:
     """Global BM25 top-k of `docs` against `query_terms` (a 1-column
     DataFrame of distinct terms, small BY CONTRACT — it is broadcast).
@@ -210,7 +209,7 @@ def bm25_rank(
     term never appear (BM25 gives them score 0; emitting 10^12 zero rows
     would be the anti-pattern).
 
-    Execution: when the term set fits `max_inline_terms` (pulled with a
+    Execution: when the term set fits MAX_INLINE_TERMS (pulled with a
     bounded limit(cap+1) collect), the ZERO-SHUFFLE in-row plan runs —
     per-doc (dl, tf...) folded in one bound HOF pass, corpus stats in one
     1-row agg, no explode, no (doc, term) exchange; measured 2.0x over the
@@ -222,22 +221,22 @@ def bm25_rank(
     scan-bound). Larger term sets fall
     back to the postings-join plan below. Results are identical: same
     frozen arithmetic, same round-then-DECIMAL sum (term order fixed).
-    Set max_inline_terms=0 to force the join plan (plan tests do).
+    MAX_INLINE_TERMS=0 forces the join plan (plan tests monkeypatch it).
 
     The join plan derives dl with `doc_lengths()` in a second scan of
     `docs`. N (corpus size) always counts ALL of `docs` — zero-token
     documents still dilute idf, matching the oracle. (The inline path needs
     no external dl: the same scan that scores computes it in-row.)
     """
-    if max_inline_terms > 0:
+    if MAX_INLINE_TERMS > 0:
         tcol = query_terms.columns[0]
         pulled = (
             query_terms.select(F.col(tcol).alias("term"))
             .distinct()
-            .limit(max_inline_terms + 1)
+            .limit(MAX_INLINE_TERMS + 1)
             .collect()
         )
-        if len(pulled) <= max_inline_terms:
+        if len(pulled) <= MAX_INLINE_TERMS:
             terms = sorted(r["term"] for r in pulled if r["term"] is not None)
             if terms:  # 0 terms: fall through — the join plan's schema is
                 # the canonical empty result (same dtypes as non-empty runs)

@@ -21,10 +21,15 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_type
 
-from ..functions.spatial import tile_x, tile_y
+from ..functions.spatial import finite_lonlat, tile_x, tile_y
 from ..kernels import cells as kcells
 from ..kernels import geom
 from ..kernels.wkb import coords_rows
+
+# Driver-side bounds, read at call time: the per-polygon covering grid
+# (review r5) and the raster patch catalog pull.
+MAX_COVER_CELLS = 1 << 20
+MAX_PATCHES = 100_000
 
 
 def assign_point_tiles(
@@ -170,12 +175,12 @@ def _covering_tiles_kernel(
     ]
 
 
-def covering_tiles_udf(
-    zooms: list[int], refine: str = "center", max_cells: int | None = None
-):
+def covering_tiles_udf(zooms: list[int], refine: str = "center"):
     """arrow_udf: rings -> the covering tiles at every zoom of `zooms`; the
-    rings are decoded once per batch for all zooms."""
+    rings are decoded once per batch for all zooms. Each polygon's grid is
+    bounded by MAX_COVER_CELLS, read when the UDF is built."""
     tile_type = to_arrow_type(_TILE_ARRAY)
+    max_cells = MAX_COVER_CELLS
 
     @F.arrow_udf(_TILE_ARRAY)
     def _udf(rings: pa.Array) -> pa.Array:
@@ -190,26 +195,22 @@ def covering_tiles_udf(
     return _udf
 
 
-MAX_COVER_CELLS = 1 << 20  # per-polygon covering-grid bound (review r5)
-
-
 def assign_polygon_tiles(
-    polygons: DataFrame, zooms: list[int], refine: str = "center",
-    max_cells_per_polygon: int | None = MAX_COVER_CELLS,
+    polygons: DataFrame, zooms: list[int], refine: str = "center"
 ) -> DataFrame:
     """(polygon_id, rings) -> one row per (polygon_id, z, x, y) covering tile.
 
     refine="exact" additionally assigns tiles that a ring edge crosses
     mid-tile (sliver polygons); default preserves the frozen goldens — see
-    _covering_tiles_kernel. `max_cells_per_polygon` mirrors pip_join's
-    max_broadcast_polygons contract: one continent-scale polygon at a deep
+    _covering_tiles_kernel. MAX_COVER_CELLS mirrors pip_join's
+    MAX_BROADCAST_POLYGONS contract: one continent-scale polygon at a deep
     zoom would densify millions of cells inside a single UDF row, so the
     kernel fails loudly at the bound instead of stalling an executor.
     A NULL or [] rings row covers no tile. One Arrow crossing serves every
     zoom."""
     if not zooms:
         raise ValueError("assign_polygon_tiles: zooms must be non-empty")
-    cover = covering_tiles_udf(list(zooms), refine, max_cells=max_cells_per_polygon)
+    cover = covering_tiles_udf(list(zooms), refine)
     return polygons.select("polygon_id", F.explode(cover(F.col("rings"))).alias("_t")).select(
         "polygon_id", F.col("_t.z").alias("z"), F.col("_t.x").alias("x"), F.col("_t.y").alias("y")
     )
@@ -222,7 +223,6 @@ def raster_patch_join(
     lon: str = "lon",
     lat: str = "lat",
     point_cols: list[str] | None = None,
-    max_patches: int = 100_000,
 ) -> DataFrame:
     """J6 raster side: assign points to raster patches (tile rectangles).
 
@@ -238,27 +238,23 @@ def raster_patch_join(
     so one LONG key disambiguates levels. Per patch the blocks are disjoint,
     so a point matches each containing patch exactly once. Patch metadata is
     driver-side (raster catalogs are small; documented assumption) — and the
-    pull is CAPPED (r5, mirroring pip_join's max_broadcast_polygons
-    contract): limit(cap+1) in ONE action; if the extra row comes back the
-    catalog is not "small" and the call fails LOUDLY naming `max_patches`
-    instead of silently stalling the driver in the Python Morton-block loop.
-    Unlike pip_join there is no shuffle fallback to degrade to — the block
-    decomposition is inherently per-patch — so over-cap is an error, not a
-    mode switch; split the catalog or raise the cap explicitly.
+    pull is CAPPED at MAX_PATCHES (r5, mirroring pip_join's
+    MAX_BROADCAST_POLYGONS contract): limit(cap+1) in ONE action; if the
+    extra row comes back the catalog is not "small" and the call fails
+    LOUDLY instead of silently stalling the driver in the Python
+    Morton-block loop. Unlike pip_join there is no shuffle fallback to
+    degrade to — the block decomposition is inherently per-patch — so
+    over-cap is an error, not a mode switch; split the catalog.
     """
     from ..functions.spatial import cell_encode_col, cell_parent_col
 
-    rows = (
-        patches.select("patch_id", "x0", "x1", "y0", "y1")
-        .limit(max_patches + 1)
-        .collect()
-    )
-    if len(rows) > max_patches:
+    cap = MAX_PATCHES
+    rows = patches.select("patch_id", "x0", "x1", "y0", "y1").limit(cap + 1).collect()
+    if len(rows) > cap:
         raise ValueError(
-            f"raster_patch_join: patch catalog exceeds max_patches="
-            f"{max_patches}; the Morton-block decomposition runs driver-side "
-            "over the catalog. Split the catalog into bounded chunks and "
-            "union the results, or pass a larger max_patches deliberately."
+            f"raster_patch_join: patch catalog exceeds {cap} patches; the "
+            "Morton-block decomposition runs driver-side over the catalog. "
+            "Split the catalog into bounded chunks and union the results."
         )
     pairs: list[tuple[int, int]] = []
     levels: set[int] = set()
@@ -305,15 +301,17 @@ _CLIP_ARRAY = T.ArrayType(
 )
 
 
-def clip_tiles_udf(z: int, max_cells: int | None = None):
+def clip_tiles_udf(z: int):
     """arrow_udf: rings -> array of per-tile clip structs at zoom z.
 
     Rings cross into Python ONCE per polygon; the tile fan-out (covering
     tiles -> SH clip per tile) happens inside the kernel, so the shuffle
-    never carries ring payload duplicated per tile."""
+    never carries ring payload duplicated per tile. Each polygon's grid is
+    bounded by MAX_COVER_CELLS, read when the UDF is built."""
     from ..kernels import clip as kclip
 
     clip_type = to_arrow_type(_CLIP_ARRAY)
+    max_cells = MAX_COVER_CELLS
 
     def _one(ring_arrays) -> list[dict]:
         if not ring_arrays:
@@ -356,10 +354,7 @@ def clip_tiles_udf(z: int, max_cells: int | None = None):
     return _udf
 
 
-def clip_polygons_to_tiles(
-    polygons: DataFrame, z: int,
-    max_cells_per_polygon: int | None = MAX_COVER_CELLS,
-) -> DataFrame:
+def clip_polygons_to_tiles(polygons: DataFrame, z: int) -> DataFrame:
     """(polygon_id, rings) -> one row per (polygon_id, z, x, y) with the
     polygon∩tile geometry cut at the tile boundary (kernels/clip.py spec:
     vertex-wise mercator projection, SH against the tile square, tile-local
@@ -369,15 +364,13 @@ def clip_polygons_to_tiles(
 
     Scale shape: identical to assign_polygon_tiles — one Arrow batch per
     polygon partition, fan-out inside the kernel, explode after; no join,
-    no shuffle beyond the input's layout. `max_cells_per_polygon` bounds
-    the per-polygon covering grid with the same loud-failure contract.
+    no shuffle beyond the input's layout. MAX_COVER_CELLS bounds the
+    per-polygon covering grid with the same loud-failure contract.
     A NULL or [] rings row cuts no tile."""
     tiles = polygons.select(
         "polygon_id",
         F.lit(z).alias("z"),
-        F.explode(
-            clip_tiles_udf(z, max_cells=max_cells_per_polygon)(F.col("rings"))
-        ).alias("_t"),
+        F.explode(clip_tiles_udf(z)(F.col("rings"))).alias("_t"),
     )
     return tiles.select(
         "polygon_id", "z",
@@ -477,7 +470,6 @@ def expire_tiles(
     lines: DataFrame | None = None,
     lon: str = "lon",
     lat: str = "lat",
-    max_cells_per_polygon: int | None = MAX_COVER_CELLS,
 ) -> DataFrame:
     """Tile-expiry list after an update: the DISTINCT z/x/y tiles touched by
     changed features, the set a renderer must re-render after `apply_diff`.
@@ -488,6 +480,9 @@ def expire_tiles(
     rows of a diff (creates + modifies + the pre-image of deletes — a
     deleted feature's old tiles need re-rendering too).
 
+    A point with a NULL or non-finite coordinate expires no tile, just as a
+    NULL rings or pts row expires none.
+
     Scale shape: points are pure codegen tile math; polygons expire their
     exact covering set (a changed polygon invalidates every tile it
     intersects); lines expire tiles with a nonzero-length cut. Each side
@@ -497,16 +492,13 @@ def expire_tiles(
     parts = []
     if points is not None:
         parts.append(
-            points.select(
+            points.where(finite_lonlat(F.col(lon), F.col(lat))).select(
                 tile_x(F.col(lon), z).alias("x"), tile_y(F.col(lat), z).alias("y")
             )
         )
     if polygons is not None:
         parts.append(
-            assign_polygon_tiles(
-                polygons, [z], refine="exact",
-                max_cells_per_polygon=max_cells_per_polygon,
-            ).select("x", "y")
+            assign_polygon_tiles(polygons, [z], refine="exact").select("x", "y")
         )
     if lines is not None:
         parts.append(

@@ -107,7 +107,6 @@ def located_points(
     polygons: DataFrame,
     cell_level: int,
     keep_cols: tuple[str, ...] = (),
-    salt_factor: int | None = None,
 ) -> DataFrame:
     """(keep_cols..., lon, lat, n_chars, polygon_id): one row per document
     and containing polygon — the spine's enrich + point-in-polygon layer.
@@ -115,17 +114,16 @@ def located_points(
     Polygon side within pip's MAX_BROADCAST_POLYGONS (pulled eagerly, one
     capped action): extract + geotag + locate run in one Arrow crossing and
     the ids explode JVM-side. Over the cap: the same enrich without the
-    locate, then pip_join's shuffle path (`salt_factor` applies there only).
+    locate, then pip_join's unsalted shuffle path.
     Rows are identical either way (pytest-pinned). `keep_cols` are input
     columns carried through unchanged (e.g. url, warc_ts)."""
-    index = pip.polygon_index(polygons, cell_level, pip.MAX_BROADCAST_POLYGONS)
+    index = pip.polygon_index(polygons, cell_level)
     if index is None:
         return pip_join(
             _enrich(docs, keep_cols),
             polygons,
             cell_level=cell_level,
             broadcast_polygons=False,
-            salt_factor=salt_factor,
         )
     located = _enrich(docs, keep_cols, index, polygons.schema["polygon_id"].dataType)
     return located.select(
@@ -138,7 +136,6 @@ def spine(
     polygons: DataFrame,
     zooms: tuple[int, ...] = DEFAULT_ZOOMS,
     cell_level: int = 12,
-    salt_factor: int | None = None,
 ) -> DataFrame:
     """Full M1 flow -> per-tile (z, x, y, n_docs, n_polygons, sum_chars).
 
@@ -148,7 +145,7 @@ def spine(
     silently stops measuring it. The enrich + locate layer is
     located_points (one Arrow crossing under the broadcast cap).
     """
-    joined = located_points(docs, polygons, cell_level, salt_factor=salt_factor)
+    joined = located_points(docs, polygons, cell_level)
     tiled = assign_point_tiles(joined, list(zooms))
     return tiled.groupBy("z", "x", "y").agg(
         F.count("*").alias("n_docs"),

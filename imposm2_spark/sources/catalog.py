@@ -66,13 +66,14 @@ def write_spatial(
     lon: str | None = "lon",
     lat: str | None = "lat",
     cell_level: int = 8,
-    partitions: int | None = None,
 ) -> None:
     """S9: range-partition + sort by Morton cell before writing, so spatially
-    adjacent rows land in the same files (the CLUSTER-on-GiST analog)."""
+    adjacent rows land in the same files (the CLUSTER-on-GiST analog): one
+    range partition per spark.sql.shuffle.partitions, each file sorted by
+    cell, no two files sharing a cell."""
     if lon and lat and lon in df.columns and lat in df.columns:
         df = df.withColumn("_cell", cell_encode_col(F.col(lon), F.col(lat), cell_level))
-        n = partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
+        n = df.sparkSession.conf.get("spark.sql.shuffle.partitions")
         df = (
             df.repartitionByRange(int(n), "_cell")
             .sortWithinPartitions("_cell")

@@ -10,8 +10,8 @@ built on Structured Streaming file sources instead of OSM diff files:
     in the batch spine's one Arrow crossing (plans.pipeline._enrich; the
     sink keeps `text_extracted`), parquet append sink. Exactly-once per
     input file via the streaming checkpoint (file-source tracking +
-    idempotent sink commit); `availableNow` drains the backlog and stops, so
-    batch backfills and continuous tailing share one code path.
+    idempotent sink commit); each run drains the backlog with `availableNow`
+    and stops, so a scheduler re-running it picks up new files.
   * `stream_spine` / `stream_curated_spine` — the batch spine's enrich +
     locate layer (plans.pipeline.located_points: one Arrow crossing under the
     broadcast cap) feeding watermarked windowed tile stats.
@@ -57,7 +57,7 @@ def read_document_stream(
     never infer schemas in engine paths).
 
     `max_files_per_trigger` bounds each micro-batch; the default suits a
-    tailing ingest. A large availableNow BACKFILL (10^5 landing files) wants
+    minutely landing backlog. A large BACKFILL (10^5 landing files) wants
     a much wider batch — or None to let availableNow size batches itself —
     rather than paying checkpoint-commit + planning overhead per 8 files
     (review r5: this was hard-coded)."""
@@ -84,29 +84,25 @@ def stream_ingest(
     output_dir: str,
     checkpoint_dir: str,
     cell_level: int = 12,
-    transform: Callable[[DataFrame], DataFrame] | None = None,
-    available_now: bool = True,
     max_files_per_trigger: int | None = 8,
 ) -> StreamingQuery:
     """Start the incremental ingest; returns the StreamingQuery handle.
 
-    `available_now=True` processes the current backlog then finishes (backfill
-    mode); False leaves the query tailing the directory (continuous mode).
+    The query processes the current backlog (availableNow) then finishes.
     `max_files_per_trigger` reaches the source reader (review r5: it was
     unplumbed, pinning every query to 8 files/micro-batch); pass None on a
-    large availableNow backfill to let the trigger size batches itself.
+    large backfill to let the trigger size batches itself.
     """
     src = read_document_stream(spark, landing_dir, max_files_per_trigger)
-    enriched = (transform or (lambda df: enrich(df, cell_level)))(src)
-    writer = (
-        enriched.writeStream.format("parquet")
+    return (
+        enrich(src, cell_level)
+        .writeStream.format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_spine(

@@ -1,12 +1,12 @@
-"""§2.9 + S6b + S8: the continuous-update loop — minutely-diff deployment
-on Structured Streaming over the S8 atomic swap.
+"""§2.9 + S6b + S8: the diff-update loop — minutely-diff deployment on
+Structured Streaming over the S8 atomic swap, one availableNow drain per run.
 
 Reference analog: imposm2 itself has none — diff/replication arrived in
 imposm3 (SURVEY.md §2.9); imposm2's consistency story is re-import + swap
 (S8). This loop supplies the successor workflow on the same S8 swap:
 download an OSC change file, apply create/modify/delete to the live
-tables, keep readers consistent throughout. Here: a file-source stream of versioned diff
-records is drained in micro-batches; each batch folds into the deployed
+tables, keep readers consistent throughout. Here: a file-source stream of
+versioned diff records is drained in micro-batches; each batch folds into the deployed
 table via `operators.merge.apply_diff` (tombstones retained, see below) and
 is published as a new version through `sources.catalog.Deploy`'s atomic
 pointer swap — readers resolving through CURRENT never observe a partial
@@ -58,10 +58,10 @@ def stream_updates(
     table: str,
     key: str,
     checkpoint_dir: str,
-    available_now: bool = True,
     allowed_ops: tuple[str, ...] = ("create", "modify", TOMBSTONE_OP),
 ) -> StreamingQuery:
-    """Drain the diff stream into versioned publishes of `table`.
+    """Drain the diff stream's backlog (availableNow) into versioned
+    publishes of `table`, then stop; a scheduler re-runs it for new diffs.
 
     Each micro-batch: read the CURRENT version (tombstones included, so
     deletes stay authoritative across batches) -> apply_diff -> stage the
@@ -93,9 +93,9 @@ def stream_updates(
     # no outputMode: Spark ignores it under foreachBatch (delivery semantics
     # live entirely in _apply), so setting one would only suggest update-mode
     # state semantics this query does not have
-    writer = diffs.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
+    return (
+        diffs.writeStream.foreachBatch(_apply)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

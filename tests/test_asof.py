@@ -199,110 +199,6 @@ def test_asof_string_tiebreak_stays_deterministic(spark):
     assert [r["tag_r"] for r in j.collect()] == ["zeta"]
 
 
-# --- bucket_us hot-key mitigation: output must be IDENTICAL for any width ---
-
-
-@pytest.mark.parametrize("direction", ["backward", "forward"])
-@pytest.mark.parametrize("bucket_min", [1, 7, 10**7])
-def test_asof_bucketed_identical_to_unbucketed(spark, direction, bucket_min):
-    # widths straddle the fixture: 1 min (every row its own bucket), 7 min
-    # (boundary-crossing carries), 10^7 min (one bucket -> fix-up no-ops)
-    bucket_us = int(bucket_min * 60 * 1e6)
-    for tol in (None, int(170 * 60 * 1e6), int(170 * 60 * 1e6) - 1):
-        got = _spark_result(spark, direction, tolerance_us=tol)
-        left = _mk(spark, LEFT, "key long, ts timestamp, lid long")
-        right = _mk(spark, RIGHT, "key long, ts timestamp, rid long")
-        jb = asof_join(
-            left, right, on="key", direction=direction,
-            tolerance_us=tol, tiebreak="rid", bucket_us=bucket_us,
-        )
-        got_b = {
-            r["lid"]: (r["rid_r"], r["ts_r"]) if r["rid_r"] is not None else None
-            for r in jb.collect()
-        }
-        assert got_b == got, f"bucketed != unbucketed at {bucket_min=} {tol=}"
-
-
-@pytest.mark.parametrize("direction", ["backward", "forward"])
-def test_asof_bucketed_hot_key(spark, direction):
-    # one key carrying everything -- the profile bucket_us exists for. LCG
-    # timestamps; right rows sparse so many buckets need a cross-bucket carry.
-    state, lrows, rrows = 12345, [], []
-    for i in range(400):
-        state = (state * 1103515245 + 12345) % (2**31)
-        m = state % 5000
-        if i % 4 == 0:
-            rrows.append((7, _ts(m), 1000 + i))
-        else:
-            lrows.append((7, _ts(m), i))
-    left = _mk(spark, lrows, "key long, ts timestamp, lid long")
-    right = _mk(spark, rrows, "key long, ts timestamp, rid long")
-    base = asof_join(left, right, on="key", direction=direction, tiebreak="rid")
-    want = sorted(map(tuple, base.collect()))
-    for bucket_min in (13, 251):
-        jb = asof_join(
-            left, right, on="key", direction=direction, tiebreak="rid",
-            bucket_us=int(bucket_min * 60 * 1e6),
-        )
-        assert sorted(map(tuple, jb.collect())) == want, f"{bucket_min=}"
-
-
-def test_asof_bucketed_plan_partitions_by_bucket(spark):
-    left = _mk(spark, LEFT, "key long, ts timestamp, lid long")
-    right = _mk(spark, RIGHT, "key long, ts timestamp, rid long")
-    j = asof_join(left, right, on="key", tiebreak="rid", bucket_us=60_000_000)
-    p = j._sc._jvm.PythonSQLUtils.explainString(j._jdf.queryExecution(), "formatted")
-    # the hot-key window must hash on (key, __bkt), and the fix-up must not
-    # introduce a nested-loop/cartesian anywhere
-    assert re.search(r"hashpartitioning\(key#\d+L, __bkt#\d+L", p), p
-    assert "NestedLoop" not in p and "CartesianProduct" not in p
-
-
-def test_asof_bucketed_rejects_bad_width(spark):
-    left = _mk(spark, [(1, _ts(0), 1)], "key long, ts timestamp, lid long")
-    right = _mk(spark, [(1, _ts(0), 2)], "key long, ts timestamp, rid long")
-    with pytest.raises(ValueError, match="bucket_us"):
-        asof_join(left, right, on="key", bucket_us=0)
-    with pytest.raises(ValueError, match="bucket_us"):
-        asof_join(left, right, on="key", bucket_us=1.5)
-
-
-@pytest.mark.parametrize("direction", ["backward", "forward"])
-def test_asof_bucketed_null_ts_and_null_key_parity(spark, direction):
-    # the inputs where the identical-output contract is easiest to break:
-    # null event times (null bucket) and null join keys (window partitionBy
-    # groups nulls; a null-UNSAFE fix-up join would drop their carries)
-    lrows = [
-        (1, None, 300),          # null ts, real key
-        (None, _ts(20), 301),    # null key, real ts
-        (None, None, 302),       # both null
-        (1, _ts(40), 303),       # real row needing a cross-bucket carry
-    ]
-    rrows = [
-        (1, _ts(5), 30),
-        (1, _ts(25), 31),
-        (None, _ts(10), 32),     # right under the null key
-        (1, None, 33),           # null-ts right (most-distant fallback)
-    ]
-    left = _mk(spark, lrows, "key long, ts timestamp, lid long")
-    right = _mk(spark, rrows, "key long, ts timestamp, rid long")
-    nonesort = lambda rows: sorted(  # noqa: E731 — None-tolerant tuple sort
-        map(tuple, rows), key=lambda t: tuple((v is None, v) for v in t)
-    )
-    for tol in (None, int(30 * 60 * 1e6)):
-        base = asof_join(
-            left, right, on="key", direction=direction, tiebreak="rid", tolerance_us=tol
-        )
-        want = nonesort(base.collect())
-        for bucket_min in (1, 7, 10**7):
-            jb = asof_join(
-                left, right, on="key", direction=direction, tiebreak="rid",
-                tolerance_us=tol, bucket_us=int(bucket_min * 60 * 1e6),
-            )
-            got = nonesort(jb.collect())
-            assert got == want, f"{direction=} {tol=} {bucket_min=}"
-
-
 @pytest.mark.parametrize("direction", ["backward", "forward"])
 def test_asof_null_timestamps_never_match(spark, direction):
     """Contract (SQL comparison semantics, same as DuckDB ASOF JOIN): a
@@ -323,24 +219,20 @@ def test_asof_null_timestamps_never_match(spark, direction):
     ]
     left = _mk(spark, lrows, "key long, ts timestamp, lid long")
     right = _mk(spark, rrows, "key long, ts timestamp, rid long")
-    for bucket_us in (None, int(60 * 1e6)):
-        got = {
-            r["lid"]: (r["rid_r"], r["ts_r"])
-            for r in asof_join(
-                left, right, on="key", direction=direction,
-                tiebreak="rid", bucket_us=bucket_us,
-            ).collect()
-        }
-        assert got == {400: (None, None), 401: (None, None)}, (direction, bucket_us, got)
+    got = {
+        r["lid"]: (r["rid_r"], r["ts_r"])
+        for r in asof_join(
+            left, right, on="key", direction=direction, tiebreak="rid"
+        ).collect()
+    }
+    assert got == {400: (None, None), 401: (None, None)}, (direction, got)
 
 
 def test_dst_fallback_instant_buckets(spark):
-    """Regression (shared with interval_join): the bucket map must be
-    monotone w.r.t. the window's __ts order. For TIMESTAMP events under a
-    DST session zone, wall-clock micros are non-monotone across the
-    fall-back, so a right row EARLIER in instant time bucketed LATER than
-    its left row and the backward match was silently lost (null instead of
-    the true nearest right)."""
+    """For TIMESTAMP events under a DST session zone the match order is
+    instant order: across the fall-back a right row EARLIER in instant time
+    but LATER in wall-clock time is still the backward match (the interval
+    join's twin test pins its bucket map on the same instants)."""
     utc = dt.timezone.utc
 
     def instant(h, m):  # 2024-11-03: US fall-back, 02:00 PDT -> 01:00 PST
@@ -354,15 +246,13 @@ def test_dst_fallback_instant_buckets(spark):
         # LATER in wall-clock time.
         left = _mk(spark, [(1, instant(9, 15), 500)], "key long, ts timestamp, lid long")
         right = _mk(spark, [(1, instant(8, 30), 50)], "key long, ts timestamp, rid long")
-        for bucket_us in (None, 15 * 60 * 1_000_000, 60 * 60 * 1_000_000):
-            got = {
-                r["lid"]: r["rid_r"]
-                for r in asof_join(
-                    left, right, on="key", direction="backward",
-                    tiebreak="rid", bucket_us=bucket_us,
-                ).collect()
-            }
-            assert got == {500: 50}, (bucket_us, got)
+        got = {
+            r["lid"]: r["rid_r"]
+            for r in asof_join(
+                left, right, on="key", direction="backward", tiebreak="rid"
+            ).collect()
+        }
+        assert got == {500: 50}, got
     finally:
         spark.conf.set("spark.sql.session.timeZone", old)
 

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from imposm2_spark.kernels import geom, wkb
+from imposm2_spark.operators import assemble
 from imposm2_spark.operators.assemble import (
     assemble_relations,
     assemble_ways,
@@ -139,11 +140,11 @@ def test_node_points_wkb(assembled, spark):
     assert (t, x, y) == (wkb.WKB_POINT, 20.0, 20.0)
 
 
-def test_mega_relation_chunked_path_identical(spark):
+def test_mega_relation_chunked_path_identical(spark, monkeypatch):
     """O10b: a synthetic 4k-member relation (one giant outer ring split into
     2-point segments + a segmented hole + one separate closed shell) produces
-    byte-identical output through the chunked two-stage path (max_members
-    forces ~16 chunks) and the single-stage path. So does a relation of
+    byte-identical output through the chunked two-stage path (a 256-member
+    MAX_MEMBERS_PER_GROUP forces ~16 chunks) and the single-stage path. So does a relation of
     closed member rings only, whose chunks carry no open chain (chains = [])
     and sit alone in one-row Arrow batches."""
     n = 4000
@@ -178,7 +179,8 @@ def test_mega_relation_chunked_path_identical(spark):
     )
 
     def run(max_members, rels=rels, aw=aw):
-        out = assemble_relations(rels, aw, max_members=max_members).collect()
+        monkeypatch.setattr(assemble, "MAX_MEMBERS_PER_GROUP", max_members)
+        out = assemble_relations(rels, aw).collect()
         assert len(out) == 1
         r = out[0]
         return (
@@ -226,7 +228,7 @@ def test_mega_relation_chunked_path_identical(spark):
     assert single2[2] == 8 and single2[3] == 0 and single2[4] == 0
 
 
-def test_equal_area_shells_chunked_path_identical(spark):
+def test_equal_area_shells_chunked_path_identical(spark, monkeypatch):
     """Eight disjoint shells of EQUAL area: the nesting sort cannot order
     them by area, so the tie-break (smallest vertex) must make the chunked
     path (rings in chunk order) emit the same polygon order and WKB as the
@@ -246,7 +248,8 @@ def test_equal_area_shells_chunked_path_identical(spark):
     )
 
     def run(max_members):
-        (r,) = assemble_relations(rels, aw, max_members=max_members).collect()
+        monkeypatch.setattr(assemble, "MAX_MEMBERS_PER_GROUP", max_members)
+        (r,) = assemble_relations(rels, aw).collect()
         return r.n_rings, str(r.polygons), bytes(r.wkb)
 
     single, chunked = run(10**9), run(2)

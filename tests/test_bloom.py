@@ -29,13 +29,14 @@ def test_no_false_negatives_and_definitive_negatives(spark):
     hist_rows = _corpus(300, "hist")
     hist = _texts(spark, hist_rows)
     bloom = bloom_build(hist)
-    # probe = exact copies of history (must ALL flag) + fresh docs
+    # probe = exact copies of history (must ALL flag) + fresh docs + a
+    # null text (kept, scored a definitive non-member)
     copies = _texts(spark, hist_rows, start=10_000)
     fresh = _texts(spark, _corpus(300, "fresh"), start=20_000)
-    got = {
-        r.doc_id: r.maybe_member
-        for r in bloom_probe(copies.unionByName(fresh), bloom).collect()
-    }
+    null = spark.createDataFrame([(30_000, None)], "doc_id long, text string")
+    cand = copies.unionByName(fresh).unionByName(null)
+    got = {r.doc_id: r.maybe_member for r in bloom_probe(cand, bloom).collect()}
+    assert len(got) == 601 and got[30_000] is False
     assert all(got[10_000 + i] for i in range(300))  # zero false negatives
     # false positives among fresh docs stay under 3x the classic bound
     n, m, k = 300, 1 << 17, 3
@@ -85,54 +86,6 @@ def test_empty_history_probe_all_negative(spark):
     probe = _texts(spark, _corpus(10, "p"))
     got = bloom_probe(probe, bloom).collect()
     assert len(got) == 10 and not any(r.maybe_member for r in got)
-
-
-def test_inrow_probe_matches_agg_probe_incl_null_text(spark):
-    from imposm2_spark.operators.bloom import bloom_probe_inrow
-
-    hist = _texts(spark, _corpus(200, "hist"))
-    bloom = bloom_build(hist)
-    probe = _texts(spark, _corpus(100, "hist"))  # copies -> all flag
-    fresh = _texts(spark, _corpus(100, "fresh"), start=5000)
-    nulls = spark.createDataFrame([(9000, None)], "doc_id long, text string")
-    cand = probe.unionByName(fresh).unionByName(nulls)
-    agg = {r.doc_id: r.maybe_member for r in bloom_probe(cand, bloom).collect()}
-    inrow = {
-        r.doc_id: r.maybe_member
-        for r in bloom_probe_inrow(cand, bloom).select(
-            "doc_id", "maybe_member"
-        ).collect()
-    }
-    assert agg == inrow and len(agg) == 201
-    assert agg[9000] is False  # null text scores definitive non-member
-
-
-def test_inrow_probe_is_stream_safe(spark, tmp_path):
-    # the stateless formulation runs as a plain stream-static broadcast
-    # join — no stateful agg, exactly-once via availableNow file source
-    from imposm2_spark.operators.bloom import bloom_probe_inrow
-
-    hist_rows = _corpus(50, "h")
-    bloom = bloom_build(_texts(spark, hist_rows))
-    landing = str(tmp_path / "landing")
-    out = str(tmp_path / "out")
-    _texts(spark, hist_rows[:20]).unionByName(
-        _texts(spark, _corpus(20, "new"), start=700)
-    ).coalesce(1).write.parquet(landing)
-    src = spark.readStream.schema("doc_id long, text string").parquet(landing)
-    q = (
-        bloom_probe_inrow(src, bloom)
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {r.doc_id: r.maybe_member for r in spark.read.parquet(out).collect()}
-    assert len(got) == 40
-    assert all(got[i] for i in range(20))          # history copies flag
-    assert sum(got[700 + i] for i in range(20)) <= 2  # fresh mostly clean
 
 
 def test_duplicate_candidate_ids_stay_positive(spark):

@@ -249,6 +249,23 @@ def test_expire_tiles_unions_all_feature_kinds(spark):
 
 
 @pytest.mark.spark
+def test_expire_tiles_skips_null_and_non_finite_points(spark):
+    """A changed point without a finite position expires no tile, as a NULL
+    rings or pts row does not: (NULL, NULL) used to expire (255, 0) at z=8
+    (least/greatest skip the NULL), (NaN, NaN) (0, 0) and lon=+inf (255, y)."""
+    from imposm2_spark.operators.tiles import expire_tiles
+
+    inf, nan = float("inf"), float("nan")
+    pts = spark.createDataFrame(
+        [(1, None, None), (2, nan, nan), (3, inf, 10.0), (4, 10.0, -inf),
+         (5, None, 10.0), (6, 0.6, 0.6)],
+        "doc_id long, lon double, lat double",
+    )
+    rows = {tuple(r) for r in expire_tiles(8, points=pts).collect()}
+    assert rows == {(8, 128, 127)}
+
+
+@pytest.mark.spark
 def test_expire_tiles_requires_a_feature_frame(spark):
     from imposm2_spark.operators.tiles import expire_tiles
 

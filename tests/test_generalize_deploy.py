@@ -131,10 +131,29 @@ def test_write_spatial_orders_by_cell(spark, tmp_path):
     from imposm2_spark.sources.catalog import write_spatial
 
     path = str(tmp_path / "spatial")
-    write_spatial(df, path, partitions=4)
+    write_spatial(df, path)
     back = spark.read.parquet(path)
     assert back.count() == 500
     assert {r.id for r in back.collect()} == set(range(500))
+
+    # S9 layout: part files in partition order, each sorted by its level-8
+    # Morton cell, and no cell range shared between two files
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from imposm2_spark.kernels.cells import cell_encode
+
+    ranges = []
+    for f in sorted(glob.glob(f"{path}/part-*.parquet")):
+        t = pq.read_table(f)
+        if t.num_rows == 0:
+            continue
+        cells = cell_encode(t["lon"].to_numpy(), t["lat"].to_numpy(), 8)
+        assert (np.diff(cells) >= 0).all(), f
+        ranges.append((cells[0], cells[-1]))
+    assert len(ranges) > 1
+    assert all(hi < lo for (_, hi), (lo, _) in zip(ranges, ranges[1:])), ranges
 
 
 def test_remove_backups_numeric_version_order(spark, tmp_path):

@@ -119,27 +119,3 @@ def test_bad_params_raise(spark):
     df = spark.createDataFrame([(1, 2)], "src long, dst long")
     with pytest.raises(ValueError):
         graph.pagerank(df, iterations=-1)
-    with pytest.raises(ValueError):
-        graph.pagerank(df, damping_num=20, damping_den=20)
-
-
-def test_tol_early_termination_matches_full_run(spark):
-    """r6 (VERDICT r5 ask #7): with tol_n set, the loop stops at the integer
-    fixpoint and the result equals the fixed-iteration run that goes past
-    it; deltas are monotone-ish toward 0 in the BIGINT space, so a
-    converged graph returns identical ranks at a much lower round count."""
-    edges = [(1, 2), (2, 1), (3, 1), (4, 1), (5, 2)]
-    # 50 fixed rounds is far past the integer fixpoint for this tiny graph
-    full = spark_pagerank(spark, edges, iterations=50)
-    early = spark_pagerank(spark, edges, iterations=50, tol_n=0)
-    assert early == full
-    # tol_n must not change a NON-converged run's semantics: cap still rules
-    assert spark_pagerank(spark, edges, iterations=2, tol_n=0) == py_pagerank(
-        edges, 2
-    )
-
-
-def test_tol_validation(spark):
-    df = spark.createDataFrame([(1, 2)], "src long, dst long")
-    with pytest.raises(ValueError, match="tol_n"):
-        graph.pagerank(df, tol_n=-1)

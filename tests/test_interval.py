@@ -3,10 +3,9 @@
 SURVEY.md J10. The bucketed explode+equi-join is pinned against an in-test
 pandas-free brute force on a deterministic matrix (boundary inclusivity at
 both endpoints, overlapping intervals, multi-bucket spans, null timestamps /
-endpoints / keys, inverted intervals) for several bucket widths AND with the
-long-interval broadcast path forced — every configuration must be
-pair-identical. The driver row `interval_join_clicks_errors` additionally
-pins it against a DuckDB BETWEEN-join oracle at sf0.01.
+endpoints / keys, inverted intervals) for several bucket widths — every
+width must be pair-identical. The driver row `interval_join_clicks_errors`
+additionally pins it against a DuckDB BETWEEN-join oracle at sf0.01.
 """
 
 import datetime as dt
@@ -42,7 +41,7 @@ INTERVALS = [
     (1, _ts(119), _ts(121), 202),  # covers 102 only
     (2, _ts(0), _ts(100), 203),    # covers 104, 105
     (2, _ts(80), _ts(95), 204),    # covers 105 (overlap with 203)
-    (2, _ts(-600), _ts(2000), 205),  # huge span: exercises multi-bucket/long path; covers 104, 105
+    (2, _ts(-600), _ts(2000), 205),  # huge span: exercises the multi-bucket explode; covers 104, 105
     (1, _ts(50), _ts(40), 206),    # inverted: matches nothing
     (1, None, _ts(40), 207),       # null start: matches nothing
     (1, _ts(0), None, 208),        # null end: matches nothing
@@ -75,20 +74,18 @@ BUCKET_MIN = 60_000_000  # one minute in microseconds
 
 
 @pytest.mark.parametrize(
-    "bucket_us,long_span",
+    "bucket_us",
     [
-        (30 * BUCKET_MIN, 256),   # typical width, long path unused by most rows
-        (5 * BUCKET_MIN, 256),    # narrow: every interval spans several buckets
-        (10_000 * BUCKET_MIN, 256),  # huge: everything lands in one bucket
-        (30 * BUCKET_MIN, 1),     # force (nearly) everything down the broadcast path
-        (30 * BUCKET_MIN, None),  # long path disabled: interval 205 explodes fully
+        30 * BUCKET_MIN,      # typical width: interval 205 explodes to 87 buckets
+        5 * BUCKET_MIN,       # narrow: every interval spans several buckets
+        10_000 * BUCKET_MIN,  # huge: everything lands in one bucket
     ],
 )
-def test_brute_parity_all_configs(spark, bucket_us, long_span):
+def test_brute_parity_all_configs(spark, bucket_us):
     p, i = _frames(spark)
     got = interval_join(
         p, i, on="user_id", point_ts="ts", start="start", end="end",
-        bucket_us=bucket_us, long_span_buckets=long_span,
+        bucket_us=bucket_us,
     )
     rows = got.collect()
     pairs = [(r["point_id"], r["interval_id_i"]) for r in rows]
@@ -124,8 +121,6 @@ def test_validation_errors(spark):
         interval_join(p, i.withColumnRenamed("start", "s2"), on="user_id", start="user_id")
     with pytest.raises(ValueError, match="bucket_us"):
         interval_join(p, i, on="user_id", bucket_us=0)
-    with pytest.raises(ValueError, match="long_span_buckets"):
-        interval_join(p, i, on="user_id", long_span_buckets=0)
     with pytest.raises(ValueError, match="reserved"):
         interval_join(p.withColumn("__bkt", p.point_id), i, on="user_id")
     with pytest.raises(ValueError, match="collide"):

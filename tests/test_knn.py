@@ -7,6 +7,7 @@ neighbor to PostGIS `<->`); semantics defined in operators/knn.py docstring.
 import pytest
 from pyspark.sql import functions as F
 
+from imposm2_spark.operators import knn
 from imposm2_spark.operators.knn import knn_join, knn_join_brute
 
 pytestmark = pytest.mark.spark
@@ -40,16 +41,17 @@ def test_kring_equals_brute(spark):
         assert kring == brute, f"level={level}"
 
 
-def test_desert_points_use_fallback(spark):
+def test_desert_points_use_fallback(spark, monkeypatch):
     # all sites clustered near (0, 0); points near (150, 70) never satisfy the
     # ring bound at level 8 within rings (1, 2) -> exercised fallback is exact
+    monkeypatch.setattr(knn, "RINGS", (1, 2))
     pts = spark.range(20).select(
         F.col("id").alias("doc_id"),
         (F.lit(150.0) + F.col("id") * 0.01).alias("lon"),
         (F.lit(70.0) + F.col("id") * 0.01).alias("lat"),
     )
     sites = _sites(spark, n=10, spread=2.0)
-    got = _as_set(knn_join(pts, sites, k=3, level=8, rings=(1, 2)))
+    got = _as_set(knn_join(pts, sites, k=3, level=8))
     want = _as_set(knn_join_brute(pts, sites, k=3))
     assert got == want
     assert len(got) == 20 * 3
@@ -94,7 +96,7 @@ def test_salted_shuffle_equals_brute(spark):
     assert unsalted == brute
 
 
-def test_knn_cache_lifecycle(spark):
+def test_knn_cache_lifecycle(spark, monkeypatch):
     """r5 contract (r4 verdict ask #6): knn_join is eager by design, returns
     a persisted, already-materialized frame, and releases every per-round
     intermediate cache before returning — after the caller's
@@ -122,7 +124,8 @@ def test_knn_cache_lifecycle(spark):
         (F.lit(70.0) + F.col("id") * 0.01).alias("lat"),
     )
     before = persistent_ids()
-    res = knn_join(pts, _sites(spark, n=10, spread=2.0), k=3, level=8, rings=(1, 2))
+    monkeypatch.setattr(knn, "RINGS", (1, 2))
+    res = knn_join(pts, _sites(spark, n=10, spread=2.0), k=3, level=8)
     assert res.is_cached
     res.unpersist()
     assert persistent_ids() <= before
@@ -152,20 +155,19 @@ def test_registry_knn_query_releases_predecessor_cache(spark):
     assert len(grew2) <= max(len(grew1), 1)
 
 
-def test_knn_fallback_respects_broadcast_flag(spark):
+def test_knn_fallback_respects_broadcast_flag(spark, monkeypatch):
     """Review r5: the straggler fallback force-broadcast the site table even
     under broadcast_sites=False (chosen precisely when the site side is too
     big to broadcast). Both settings must produce brute-identical results on
     a site-desert fixture that forces the fallback."""
-    from imposm2_spark.operators.knn import knn_join, knn_join_brute
-
     points = spark.createDataFrame([(1, 0.0, 0.0), (2, 0.1, 0.1)],
                                    "doc_id long, lon double, lat double")
     # sites far outside every ring at level 6 -> fallback path runs
     sites = spark.createDataFrame([(10, 140.0, -30.0), (11, 150.0, -35.0)],
                                   "site_id long, slon double, slat double")
     brute = {tuple(r) for r in knn_join_brute(points, sites, k=1).collect()}
+    monkeypatch.setattr(knn, "RINGS", (1,))
     for bcast in (True, False):
         got = {tuple(r) for r in knn_join(
-            points, sites, k=1, rings=(1,), broadcast_sites=bcast).collect()}
+            points, sites, k=1, broadcast_sites=bcast).collect()}
         assert got == brute, bcast

@@ -11,6 +11,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from imposm2_spark.operators import lines
 from imposm2_spark.operators.lines import (
     merge_line_geometries,
     merge_lines,
@@ -107,11 +108,10 @@ def test_shared_both_endpoints_single_pair(spark):
     assert len(geo) == 1 and geo[0].closed
 
 
-def test_component_cap_raises(spark):
-    with pytest.raises(Exception, match="max_component_segments"):
-        merge_line_geometries(
-            _df(spark, MAIN), max_component_segments=1
-        ).collect()
+def test_component_cap_raises(spark, monkeypatch):
+    monkeypatch.setattr(lines, "MAX_COMPONENT_SEGMENTS", 1)
+    with pytest.raises(Exception, match="MAX_COMPONENT_SEGMENTS"):
+        merge_line_geometries(_df(spark, MAIN)).collect()
 
 
 def test_quantum_match_raw_mismatch_raises(spark):

@@ -126,6 +126,52 @@ def test_no_engine_forks():
     assert not offenders, "engine forks found:\n" + "\n".join(offenders)
 
 
+# Parameters that selected a second code path or set a limit no caller
+# outside the tests sets; each limit is a module constant read at call time.
+REMOVED_PARAMS = {
+    "operators.asof.asof_join": {"bucket_us"},
+    "operators.interval.interval_join": {"long_span_buckets"},
+    "operators.graph.pagerank": {"tol_n", "damping_num", "damping_den", "scale"},
+    "streaming.ingest.stream_ingest": {"transform", "available_now"},
+    "streaming.updates.stream_updates": {"available_now"},
+    "plans.pipeline.spine": {"salt_factor"},
+    "plans.pipeline.located_points": {"salt_factor"},
+    "operators.pip.pip_join": {"max_broadcast_polygons"},
+    "operators.pip.polygon_index": {"max_broadcast_polygons"},
+    "operators.pip.auto_salt_factor": {"hot_min", "cap"},
+    "operators.assemble.assemble_relations": {"max_members"},
+    "operators.ranking.bm25_rank": {"max_inline_terms"},
+    "operators.tiles.raster_patch_join": {"max_patches"},
+    "operators.tiles.assign_polygon_tiles": {"max_cells_per_polygon"},
+    "operators.tiles.clip_polygons_to_tiles": {"max_cells_per_polygon"},
+    "operators.tiles.expire_tiles": {"max_cells_per_polygon"},
+    "operators.tiles.covering_tiles_udf": {"max_cells"},
+    "operators.tiles.clip_tiles_udf": {"max_cells"},
+    "operators.lines.merge_line_geometries": {"max_component_segments"},
+    "sources.catalog.write_spatial": {"partitions"},
+    "operators.knn.knn_join": {"rings"},
+}
+
+
+def test_no_test_only_paths_or_limits():
+    """The second paths and limits only tests selected stay deleted: none of
+    the signatures above takes its removed parameters, and the Bloom probe
+    has one form."""
+    import importlib
+    import inspect
+
+    offenders = []
+    for qual, removed in REMOVED_PARAMS.items():
+        mod, name = qual.rsplit(".", 1)
+        fn = getattr(importlib.import_module(f"imposm2_spark.{mod}"), name)
+        for p in sorted(removed & set(inspect.signature(fn).parameters)):
+            offenders.append(f"{qual}({p}=)")
+    bloom = importlib.import_module("imposm2_spark.operators.bloom")
+    if hasattr(bloom, "bloom_probe_inrow"):
+        offenders.append("operators.bloom.bloom_probe_inrow")
+    assert not offenders, "test-only paths or limits found:\n" + "\n".join(offenders)
+
+
 def test_no_module_cache_holders():
     """Frames that outlive their call are held through session.cache_scope
     only: no module-level `list[DataFrame]` holder, and no

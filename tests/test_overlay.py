@@ -324,11 +324,12 @@ class TestUnionBuilderSpark:
         assert [tuple(r) for r in contains] == [tuple(r) for r in union]
         assert contains[0]["area"] == pytest.approx(96.0)
 
-    def test_union_builder_chunked_path_identity(self, spark):
+    def test_union_builder_chunked_path_identity(self, spark, monkeypatch):
         """O10b x A3-union composition: forcing the two-stage chunked path
-        (max_members=1) must produce byte-identical rows to the single-stage
+        (MAX_MEMBERS_PER_GROUP=1) must produce byte-identical rows to the single-stage
         path under the union builder, on the fixture that exercises overlap
         and ring merging (UR-1..4)."""
+        from imposm2_spark.operators import assemble
         from imposm2_spark.operators.assemble import assemble_relations, assemble_ways
         from imposm2_spark.sources import fixtures
 
@@ -340,9 +341,10 @@ class TestUnionBuilderSpark:
                 relations, aw, relation_builder="union"
             ).select(*cols).collect()
         )
+        monkeypatch.setattr(assemble, "MAX_MEMBERS_PER_GROUP", 1)
         chunked = sorted(
             tuple(r) for r in assemble_relations(
-                relations, aw, max_members=1, relation_builder="union"
+                relations, aw, relation_builder="union"
             ).select(*cols).collect()
         )
         assert single == chunked and len(single) == 4

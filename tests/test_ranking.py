@@ -9,6 +9,7 @@ import math
 
 import pytest
 
+from imposm2_spark.operators import ranking
 from imposm2_spark.operators.ranking import bm25_rank, doc_lengths
 
 pytestmark = pytest.mark.spark
@@ -79,15 +80,16 @@ def test_bm25_top_k_truncates_with_deterministic_ties(spark):
     assert [r["doc_id"] for r in sorted(out, key=lambda r: r["rank"])] == [0, 1, 2]
 
 
-def test_bm25_plan_topk_and_broadcast(spark):
-    # JOIN-path plan locks (max_inline_terms=0 forces it): global top-k must
+def test_bm25_plan_topk_and_broadcast(spark, monkeypatch):
+    # JOIN-path plan locks (MAX_INLINE_TERMS=0 forces it): global top-k must
     # be TakeOrderedAndProject (per-partition heaps), never a global Sort;
     # the query-term restriction reaches the postings via broadcast BELOW
     # the (doc, term) hash agg, so the big agg only sees matching tokens.
     # The postings ⋈ dl join on the doc key is ALLOWED to be a shuffle
     # join — that is the designed 100 TB shape for large term sets.
     docs = _docs(spark)
-    out = bm25_rank(docs, _qterms(spark, "spark"), top_k=3, max_inline_terms=0)
+    monkeypatch.setattr(ranking, "MAX_INLINE_TERMS", 0)
+    out = bm25_rank(docs, _qterms(spark, "spark"), top_k=3)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan
     assert "BroadcastHashJoin" in plan
@@ -108,7 +110,7 @@ def test_bm25_inline_plan_zero_corpus_shuffle(spark):
     assert "Exchange hashpartitioning" not in plan
 
 
-def test_bm25_inline_matches_join_path(spark):
+def test_bm25_inline_matches_join_path(spark, monkeypatch):
     # a NULL-text doc has no tokens but still counts in N on both paths
     # (the inline fold used to NPE on it)
     docs = _docs(spark).unionByName(
@@ -116,11 +118,12 @@ def test_bm25_inline_matches_join_path(spark):
     )
     q = _qterms(spark, "spark", "rows", "tile", "zzz")
     inline = sorted(map(tuple, bm25_rank(docs, q).collect()))
-    joined = sorted(map(tuple, bm25_rank(docs, q, max_inline_terms=0).collect()))
-    assert inline == joined and len(inline) == 3
     # empty term set falls through to the join plan's canonical empty schema
     e1 = bm25_rank(docs, _qterms(spark))
-    e2 = bm25_rank(docs, _qterms(spark), max_inline_terms=0)
+    monkeypatch.setattr(ranking, "MAX_INLINE_TERMS", 0)
+    joined = sorted(map(tuple, bm25_rank(docs, q).collect()))
+    assert inline == joined and len(inline) == 3
+    e2 = bm25_rank(docs, _qterms(spark))
     assert e1.count() == 0 and e1.dtypes == e2.dtypes
 
 

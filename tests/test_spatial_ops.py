@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from imposm2_spark.functions import spatial
 from imposm2_spark.kernels import cells as kcells
 from imposm2_spark.kernels import geom
+from imposm2_spark.operators import pip, tiles
 from imposm2_spark.operators.pip import pip_join, pip_join_brute
 from imposm2_spark.operators.tiles import assign_point_tiles, assign_polygon_tiles
 from imposm2_spark.sources import fixtures
@@ -159,17 +160,16 @@ def test_pip_join_matches_brute_force(spark, points_df):
     assert len(fast_set) > 400  # grid + berlin points actually land
 
 
-def test_pip_join_broadcast_cap_falls_back_identically(spark, points_df):
-    """A polygon side over max_broadcast_polygons must degrade to the shuffle
+def test_pip_join_broadcast_cap_falls_back_identically(spark, points_df, monkeypatch):
+    """A polygon side over MAX_BROADCAST_POLYGONS must degrade to the shuffle
     path (no driver OOM from the eager rings pull) with identical results."""
     df, _ = points_df
     polys = fixtures.polygons_admin_df(spark)
     plain = {(r.pid, r.polygon_id) for r in pip_join(df, polys, keep_point_cols=["pid"]).collect()}
+    monkeypatch.setattr(pip, "MAX_BROADCAST_POLYGONS", 2)
     capped = {
         (r.pid, r.polygon_id)
-        for r in pip_join(
-            df, polys, keep_point_cols=["pid"], max_broadcast_polygons=2
-        ).collect()
+        for r in pip_join(df, polys, keep_point_cols=["pid"]).collect()
     }
     assert plain == capped
 
@@ -378,11 +378,11 @@ def test_covering_tiles_exact_refine_catches_slivers(spark):
     assert base <= exact_rows
 
 
-def test_raster_patch_join_catalog_cap(spark):
+def test_raster_patch_join_catalog_cap(spark, monkeypatch):
     """r5 (r4 verdict ask #5): the patch-catalog pull is capped like
     pip_join's polygon broadcast — one limit(cap+1) action, and over-cap
-    fails LOUDLY naming the parameter instead of silently stalling the
-    driver in the Python Morton-block loop. At/under cap still works."""
+    fails LOUDLY naming the cap instead of silently stalling the driver in
+    the Python Morton-block loop. At/under cap still works."""
     import pytest as _pytest
 
     from imposm2_spark.operators.tiles import raster_patch_join
@@ -395,16 +395,18 @@ def test_raster_patch_join_catalog_cap(spark):
         (F.col("id") * 10).alias("x0"), (F.col("id") * 10 + 3).alias("x1"),
         F.lit(0).alias("y0"), F.lit(3).alias("y1"),
     )
-    with _pytest.raises(ValueError, match="max_patches"):
-        raster_patch_join(pts, patches, zoom=6, max_patches=4)
-    out = raster_patch_join(pts, patches, zoom=6, max_patches=5)
+    monkeypatch.setattr(tiles, "MAX_PATCHES", 4)
+    with _pytest.raises(ValueError, match="exceeds 4 patches"):
+        raster_patch_join(pts, patches, zoom=6)
+    monkeypatch.setattr(tiles, "MAX_PATCHES", 5)
+    out = raster_patch_join(pts, patches, zoom=6)
     assert {c for c in out.columns} >= {"doc_id", "patch_id"}
     out.collect()
 
 
 def test_covering_grid_cap_and_empty_zooms(spark):
     """Review r5: the polygon covering-grid kernel is bounded like its
-    capped siblings (pip max_broadcast_polygons, raster max_patches) — one
+    capped siblings (pip MAX_BROADCAST_POLYGONS, raster MAX_PATCHES) — one
     continent-scale polygon at a deep zoom fails LOUDLY at max_cells
     instead of densifying millions of cells inside a single UDF row; and
     an empty zooms list raises on BOTH tile assigners instead of the
