@@ -56,9 +56,10 @@ def asof_join(
     direction="backward": nearest right with right_ts <= left_ts (inclusive).
     direction="forward":  nearest right with right_ts >= left_ts (inclusive).
 
-    Null timestamps follow SQL comparison semantics (DuckDB ASOF JOIN
-    behaves the same): a right row with a null timestamp never matches
-    anything; a left row with a null timestamp is emitted unmatched.
+    Null timestamps and null keys follow SQL comparison semantics (DuckDB
+    ASOF JOIN behaves the same): a right row with a null timestamp or any
+    null key never matches anything; a left row with a null timestamp or
+    any null key is emitted unmatched.
 
     tolerance_us: if set, matches farther than this many microseconds from the
     left timestamp are nulled out (the left row is still emitted — this is a
@@ -130,8 +131,15 @@ def asof_join(
     # right_ts >= left_ts (SQL comparison semantics), so such rows can never
     # match — drop them BEFORE the union. Left unfiltered, a null-ts right
     # sorts NULLS FIRST under the backward ordering and becomes every
-    # otherwise-unmatched left row's phantom match.
-    r_tagged = right.where(F.col(right_ts).isNotNull()).select(
+    # otherwise-unmatched left row's phantom match. Likewise a null key
+    # equals nothing, but the window's partitionBy groups nulls together:
+    # a right row with any null key would match the left rows with a null
+    # in the same key column. Without such rights, a null-key left row
+    # finds no match in its partition and is emitted unmatched.
+    r_valid = F.col(right_ts).isNotNull()
+    for k in keys:
+        r_valid = r_valid & F.col(k).isNotNull()
+    r_tagged = right.where(r_valid).select(
         *[F.col(k) for k in keys],
         F.col(right_ts).alias("__ts"),
         F.lit(0).alias("__side"),

@@ -1,4 +1,4 @@
-"""M6: resumable per-stage checkpoints with per-partition lineage + metrics.
+"""M6: resumable per-stage checkpoints with per-partition manifests.
 
 North-rule requirement ("resumable from per-partition checkpoints with
 lineage + metrics"); reference analog: imposm2's on-disk element caches are
@@ -12,16 +12,16 @@ Model (idiomatic Spark, two commit levels):
     we could mistake for output (we also require _SUCCESS).
   * ACROSS stages, this module adds one durable-commit protocol: the stage
     writes to `<root>/<stage>.__tmp__`, one atomic directory rename
-    publishes it, then the fsync'd `_manifest.json` records lineage +
-    per-partition metrics and commits the stage. On restart, a stage whose
+    publishes it, then the fsync'd `_manifest.json` records the stage's
+    identity and per-partition metrics and commits the stage. On restart, a stage whose
     manifest exists with a matching input fingerprint is SKIPPED (read back
     from parquet); everything else recomputes. Leftover tmp dirs from
     crashes are discarded. The root is a local POSIX path: the I/O is plain
     `os`/`shutil`.
 
-Manifest contents (the lineage record):
-  stage_id, engine_version, input_fingerprint (caller-supplied — upstream
-  snapshot id / manifest digest), parents (upstream stage ids), wall_s,
+Manifest contents:
+  stage_id, engine_version, input_fingerprint (caller-supplied: a digest
+  of everything the stage reads, e.g. an upstream snapshot id), wall_s,
   created_utc, per-partition [{file, rows, bytes}] from parquet footers
   (free — no extra pass), total rows/bytes.
 
@@ -39,22 +39,22 @@ import os
 import shutil
 import time
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sources.catalog import atomic_write_json
 
 # Bump whenever a stage's output schema or semantics change: a manifest
-# written under another version is recomputed, never reused (0.2: the spine's
-# enrich stage checkpoints (url, lon, lat, n_chars) only).
-ENGINE_VERSION = "imposm2_spark/0.2"
+# written under another version is recomputed, never reused (0.3: the spine
+# checkpoints one stage, `located` = (lon, lat, n_chars, polygon_id)).
+ENGINE_VERSION = "imposm2_spark/0.3"
 TMP_SUFFIX = ".__tmp__"
 MANIFEST = "_manifest.json"
 
 
 def fingerprint_of(*parts: str) -> str:
-    """Stable digest for input identity (paths, snapshot ids, parent digests)."""
+    """Stable digest for input identity (paths, snapshot ids, content digests)."""
     h = hashlib.sha256()
     for p in parts:
         h.update(p.encode())
@@ -77,14 +77,6 @@ def _partition_stats(stage_dir: str) -> list[dict]:
 
 
 @dataclass
-class StageResult:
-    stage_id: str
-    path: str
-    skipped: bool
-    manifest: dict
-
-
-@dataclass
 class CheckpointManager:
     """Orchestrates resumable stages under one checkpoint root.
 
@@ -97,7 +89,6 @@ class CheckpointManager:
     """
 
     root: str
-    results: dict[str, StageResult] = field(default_factory=dict)
 
     def data_dir(self, stage_id: str) -> str:
         """The directory holding the stage's committed parquet."""
@@ -123,47 +114,22 @@ class CheckpointManager:
             return m
         return None
 
-    def _parent_digest(self, stage_id: str, parent: str) -> str:
-        """The parent's manifest digest: in-process result first, on-disk
-        manifest as the cross-process fallback. A parent with NEITHER is an
-        ordering bug in the caller — silently folding an empty digest here
-        would freeze the child's fingerprint and later serve the child's
-        STALE checkpoint after the parent changed, so raise instead."""
-        if parent in self.results:
-            return self.results[parent].manifest.get("digest", "")
-        m = self.manifest(parent)
-        if m is not None:
-            return m.get("digest", "")
-        raise KeyError(
-            f"stage {stage_id!r} declares parent {parent!r}, but that stage"
-            " has neither run in this process nor committed a manifest under"
-            f" {self.data_dir(parent)} — run the parent first"
-        )
-
     def stage(
         self,
         spark: SparkSession,
         stage_id: str,
         build: Callable[[], DataFrame],
         input_fingerprint: str = "",
-        parents: tuple[str, ...] = (),
     ) -> DataFrame:
         """Run-or-skip one checkpointed stage; returns the stage's DataFrame.
 
         `build` is only invoked when the stage must (re)compute — a skipped
-        stage never constructs its plan (cheap restarts).
-        Parent digests are folded into the fingerprint so any upstream change
-        invalidates the whole downstream chain automatically.
+        stage never constructs its plan (cheap restarts). A committed stage
+        is reused only under the same `input_fingerprint`, so the caller's
+        fingerprint must cover every input `build` reads.
         """
-        parent_digest = fingerprint_of(
-            *[self._parent_digest(stage_id, p) for p in parents]
-        )
-        fp = fingerprint_of(input_fingerprint, parent_digest)
-
         final_dir = self.data_dir(stage_id)
-        m = self._completed(stage_id, fp)
-        if m is not None:
-            self.results[stage_id] = StageResult(stage_id, final_dir, True, m)
+        if self._completed(stage_id, input_fingerprint) is not None:
             return spark.read.parquet(final_dir)
 
         t0 = time.perf_counter()
@@ -188,14 +154,12 @@ class CheckpointManager:
         manifest = {
             "stage_id": stage_id,
             "engine_version": ENGINE_VERSION,
-            "input_fingerprint": fp,
-            "parents": list(parents),
+            "input_fingerprint": input_fingerprint,
             "wall_s": wall_s,
             "created_utc": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             "partitions": parts,
             "total_rows": sum(p["rows"] for p in parts),
             "total_bytes": sum(p["bytes"] for p in parts),
-            "digest": fingerprint_of(fp, *[f"{p['file']}:{p['rows']}:{p['bytes']}" for p in parts]),
         }
         # the manifest is the commit point a restart checks; it goes through
         # the shared fsync'd atomic writer (review r5: an unsynced copy could
@@ -204,36 +168,4 @@ class CheckpointManager:
         atomic_write_json(
             os.path.join(final_dir, MANIFEST), manifest, prefix="._mtmp_", indent=1
         )
-        self.results[stage_id] = StageResult(stage_id, final_dir, False, manifest)
         return spark.read.parquet(final_dir)
-
-    def lineage(self, stage_id: str) -> list[dict]:
-        """Manifest chain root->stage (lineage record for audits)."""
-        out, seen = [], set()
-
-        def walk(sid: str) -> None:
-            if sid in seen:
-                return
-            seen.add(sid)
-            m = self.manifest(sid)
-            if m is None:
-                return
-            for p in m.get("parents", []):
-                walk(p)
-            out.append(m)
-
-        walk(stage_id)
-        return out
-
-    def metrics(self) -> dict[str, dict]:
-        """Per-stage {rows, bytes, wall_s, skipped} — the run report."""
-        return {
-            sid: {
-                "rows": r.manifest.get("total_rows"),
-                "bytes": r.manifest.get("total_bytes"),
-                "wall_s": r.manifest.get("wall_s"),
-                "n_partitions": len(r.manifest.get("partitions", [])),
-                "skipped": r.skipped,
-            }
-            for sid, r in self.results.items()
-        }

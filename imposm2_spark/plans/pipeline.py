@@ -18,10 +18,9 @@ refine.
 
 _enrich is the one document-enrich crossing of the package. Its callers:
   * located_points, the enrich + locate layer (with the index under the
-    cap, without it over the cap); the spine and the streaming spines
-    (streaming.ingest) run it, the latter per micro-batch;
-  * spine_resumable, which checkpoints the crossing without the locate
-    before its pip_join stage;
+    cap, without it over the cap); the spine, spine_resumable (which
+    checkpoints exactly this layer) and the streaming spines
+    (streaming.ingest, per micro-batch) run it;
   * streaming.ingest.enrich (the stream ingest's sink keeps the extracted
     text) and streaming.ingest.stream_tile_counts (geotag only, no
     extraction).
@@ -145,8 +144,12 @@ def spine(
     silently stops measuring it. The enrich + locate layer is
     located_points (one Arrow crossing under the broadcast cap).
     """
-    joined = located_points(docs, polygons, cell_level)
-    tiled = assign_point_tiles(joined, list(zooms))
+    return _tile_counts(located_points(docs, polygons, cell_level), zooms)
+
+
+def _tile_counts(located: DataFrame, zooms: tuple[int, ...]) -> DataFrame:
+    """The spine's tile aggregate over located_points' rows."""
+    tiled = assign_point_tiles(located, list(zooms))
     return tiled.groupBy("z", "x", "y").agg(
         F.count("*").alias("n_docs"),
         F.countDistinct("polygon_id").alias("n_polygons"),
@@ -163,50 +166,31 @@ def spine_resumable(
     zooms: tuple[int, ...] = DEFAULT_ZOOMS,
     cell_level: int = 12,
 ) -> DataFrame:
-    """The spine with M6 durable stage boundaries (plans.checkpoint).
+    """The spine with one M6 durable cut (plans.checkpoint).
 
-    Stage cuts sit where recompute is expensive and the output is much
-    smaller than the input:
-      enrich   : scan + the spine's fused extract/geotag Arrow crossing
-                 (one Python node); checkpoints only (url, lon, lat,
-                 n_chars) — no html or text column is written
-      pip_join : broadcast locate or shuffle join + refine over the
-                 enrich checkpoint (join cost)
-    The final tile aggregation is cheap relative to its input and stays
-    uncheckpointed. A restart replays only missing/invalidated stages.
+    The `located` stage checkpoints exactly what located_points returns,
+    (lon, lat, n_chars, polygon_id), so it holds all the expensive work
+    (the scan, the enrich + locate crossing and, over the broadcast cap,
+    pip_join's shuffle join and refine) in rows much smaller than the
+    input; no html or text column is written. The tile aggregate reads
+    the checkpoint through the spine's own `_tile_counts`. A restart
+    with the same docs fingerprint and polygon content reuses the stage.
     """
-    from .checkpoint import CheckpointManager
+    from .checkpoint import CheckpointManager, fingerprint_of
 
-    mgr = CheckpointManager(checkpoint_root)
-    enriched = mgr.stage(
-        spark,
-        "enrich",
-        lambda: _enrich(docs, ("url",)),
-        input_fingerprint=input_fingerprint,
-    )
-    # the polygons input must invalidate the join checkpoint too: folding
-    # only the docs fingerprint + enrich digest silently reused tiles built
-    # against a DIFFERENT polygon set. Order-independent content digest via
-    # one tiny job over the (small, broadcast-side by contract) dim table.
+    # The polygons must invalidate the stage too, not only the docs:
+    # order-independent content digest via one tiny job over the (small,
+    # broadcast-side by contract) dim table.
     poly_fp_row = polygons.select(
         F.sum(F.pmod(F.xxhash64(*polygons.columns), F.lit(1 << 31))).alias("s"),
         F.count("*").alias("n"),
     ).collect()[0]
-    joined = mgr.stage(
+    located = CheckpointManager(checkpoint_root).stage(
         spark,
-        "pip_join",
-        lambda: pip_join(
-            enriched,
-            polygons,
-            cell_level=cell_level,
-            keep_point_cols=["url", "lon", "lat", "n_chars"],
+        "located",
+        lambda: located_points(docs, polygons, cell_level),
+        input_fingerprint=fingerprint_of(
+            input_fingerprint, f"polygons:{poly_fp_row['s']}:{poly_fp_row['n']}"
         ),
-        input_fingerprint=f"polygons:{poly_fp_row['s']}:{poly_fp_row['n']}",
-        parents=("enrich",),
     )
-    tiled = assign_point_tiles(joined, list(zooms))
-    return tiled.groupBy("z", "x", "y").agg(
-        F.count("*").alias("n_docs"),
-        F.countDistinct("polygon_id").alias("n_polygons"),
-        F.sum("n_chars").alias("sum_chars"),
-    )
+    return _tile_counts(located, zooms)

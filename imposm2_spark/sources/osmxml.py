@@ -7,7 +7,7 @@ PBF blobs), so the parallel unit is the FILE — the standard many-extracts
 layout (Geofabrikt-style regional files, or `.osm.xml.{bz2,gz}` shards).
 One file streams through stdlib `iterparse` inside `mapInArrow` with
 `elem.clear()` after every element, so memory stays bounded at any file
-size; rows batch out through Arrow in `batch_rows` chunks.
+size; rows batch out through Arrow in `BATCH_ROWS` chunks.
 
 A single giant planet.osm.xml therefore decodes on ONE task — that is the
 format's own limitation, and the documented answer is the PBF form
@@ -30,6 +30,10 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from .fixtures import OSM_NODES_SCHEMA, OSM_RELATIONS_SCHEMA, OSM_WAYS_SCHEMA
 
 __all__ = ["read_osm_xml", "write_osm_xml"]
+
+# rows per Arrow batch a file's scan yields (batch size only, not rows);
+# read at call time.
+BATCH_ROWS = 10_000
 
 
 def _open(path: str):
@@ -90,15 +94,14 @@ def _iter_elements(path: str):
                 del root[:]
 
 
-def read_osm_xml(
-    spark: SparkSession, paths: str | list[str], *, batch_rows: int = 10_000
-) -> dict[str, DataFrame]:
+def read_osm_xml(spark: SparkSession, paths: str | list[str]) -> dict[str, DataFrame]:
     """{'nodes', 'ways', 'relations'} DataFrames from .osm.xml[.bz2|.gz]
     file(s). Parallelism = one task per file (see module docstring)."""
     if isinstance(paths, str):
         paths = [paths]
     if not paths:
         raise ValueError("no input files")
+    batch_rows = BATCH_ROWS
     files = spark.createDataFrame([(p,) for p in paths], "path string").repartition(
         len(paths)
     )

@@ -34,10 +34,11 @@ from .fixtures import OSM_NODES_SCHEMA, OSM_RELATIONS_SCHEMA, OSM_WAYS_SCHEMA
 
 __all__ = ["read_pbf"]
 
+# OSMData blobs per scan task (partitioning only, not rows); read at call time.
+BLOBS_PER_TASK = 4
 
-def read_pbf(
-    spark: SparkSession, path: str, *, blobs_per_task: int = 4
-) -> dict[str, DataFrame]:
+
+def read_pbf(spark: SparkSession, path: str) -> dict[str, DataFrame]:
     """{'nodes': df, 'ways': df, 'relations': df} from one .osm.pbf file.
 
     Each frame is lazy, and each decodes EVERY blob when materialized (the
@@ -56,7 +57,7 @@ def read_pbf(
     ]
     if not ranges:
         raise ValueError(f"{path!r} contains no OSMData blobs")
-    n_parts = max(1, min(len(ranges) // blobs_per_task, 2048))
+    n_parts = max(1, min(len(ranges) // BLOBS_PER_TASK, 2048))
     rdf = spark.createDataFrame(ranges, "off long, len long").repartition(n_parts)
 
     def _decode(kind: str, ddl: str):

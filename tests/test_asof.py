@@ -206,26 +206,64 @@ def test_asof_null_timestamps_never_match(spark, direction):
     the backward ordering and became every otherwise-unmatched left's
     phantom match), and a null-ts left row is emitted UNMATCHED (pre-fix the
     forward ordering put it after every right row and matched it to the
-    earliest one)."""
-    lrows = [
-        (1, _ts(10), 400),   # only right for key 1 is null-ts: must be unmatched
-        (2, None, 401),      # null-ts left with real rights: must be unmatched
-    ]
-    rrows = [
-        (1, None, 40),
-        (2, _ts(5), 41),
-        (2, _ts(15), 42),
-        (2, None, 43),
-    ]
-    left = _mk(spark, lrows, "key long, ts timestamp, lid long")
-    right = _mk(spark, rrows, "key long, ts timestamp, rid long")
-    got = {
-        r["lid"]: (r["rid_r"], r["ts_r"])
-        for r in asof_join(
-            left, right, on="key", direction=direction, tiebreak="rid"
-        ).collect()
-    }
-    assert got == {400: (None, None), 401: (None, None)}, (direction, got)
+    earliest one). Null keys likewise: a left row with any null key is
+    emitted unmatched, even when a right row has a null in the same key
+    column (pre-fix the window's partitionBy grouped the nulls together and
+    matched them)."""
+    null_ts = (
+        "key",
+        "key long, ts timestamp, lid long",
+        [
+            (1, _ts(10), 400),   # only right for key 1 is null-ts: must be unmatched
+            (2, None, 401),      # null-ts left with real rights: must be unmatched
+        ],
+        "key long, ts timestamp, rid long",
+        [
+            (1, None, 40),
+            (2, _ts(5), 41),
+            (2, _ts(15), 42),
+            (2, None, 43),
+        ],
+        {400: (None, None), 401: (None, None)},
+    )
+    # The want is DuckDB 1.0.0's plain LEFT JOIN on the keys and the ts
+    # inequality, nearest match kept. Its ASOF LEFT JOIN agrees on a NULL in
+    # the first key column but matches lid 3's NULL k2 (lid 3 -> 300). Every
+    # right row has a twin 10 minutes after the left rows, so each direction
+    # has a candidate for every key.
+    null_key = (
+        ["k1", "k2"],
+        "k1 long, k2 string, ts timestamp, lid long",
+        [
+            (None, "a", _ts(10), 1),
+            (7, "a", _ts(10), 2),
+            (7, None, _ts(10), 3),  # multi-key row with one NULL component
+        ],
+        "k1 long, k2 string, ts timestamp, rid long",
+        [
+            (None, "a", _ts(5), 100),
+            (7, "a", _ts(5), 200),
+            (7, None, _ts(5), 300),
+            (None, "a", _ts(20), 101),
+            (7, "a", _ts(20), 201),
+            (7, None, _ts(20), 301),
+        ],
+        {
+            1: (None, None),
+            2: (200, _ts(5)) if direction == "backward" else (201, _ts(20)),
+            3: (None, None),
+        },
+    )
+    for on, lschema, lrows, rschema, rrows, want in (null_ts, null_key):
+        left = _mk(spark, lrows, lschema)
+        right = _mk(spark, rrows, rschema)
+        got = {
+            r["lid"]: (r["rid_r"], r["ts_r"])
+            for r in asof_join(
+                left, right, on=on, direction=direction, tiebreak="rid"
+            ).collect()
+        }
+        assert got == want, (direction, on, got)
 
 
 def test_dst_fallback_instant_buckets(spark):

@@ -1,20 +1,24 @@
 """M6 resume tests (SURVEY.md §5.2.6): skip-completed restart, invalidation,
-partial-write recovery, lineage + per-partition metrics."""
+partial-write recovery, per-partition manifests, and the resumable spine's
+one `located` stage."""
 
 import json
 import os
-import shutil
+import re
 
 import pytest
+from conftest import SF_SMOKE
 from pyspark.sql import functions as F
 
+from imposm2_spark.operators import pip
 from imposm2_spark.plans.checkpoint import (
     ENGINE_VERSION,
     MANIFEST,
     TMP_SUFFIX,
     CheckpointManager,
-    fingerprint_of,
 )
+from imposm2_spark.plans.pipeline import spine, spine_resumable
+from imposm2_spark.sources import fixtures, testdata
 
 pytestmark = pytest.mark.spark
 
@@ -25,7 +29,8 @@ def root(tmp_path):
 
 
 def _run_pipeline(spark, root, calls, fp="v1"):
-    """Two-stage pipeline; `calls` records which stage builders actually ran."""
+    """Two independent stages under one root, each under its own input
+    fingerprint; `calls` records which stage builders actually ran."""
     mgr = CheckpointManager(root)
 
     def s1():
@@ -34,13 +39,15 @@ def _run_pipeline(spark, root, calls, fp="v1"):
             F.col("id"), (F.col("id") * 3).alias("v")
         ).repartition(4)
 
-    df1 = mgr.stage(spark, "stage1", s1, input_fingerprint=fp)
+    mgr.stage(spark, "stage1", s1, input_fingerprint=fp)
 
     def s2():
         calls.append("s2")
-        return df1.groupBy((F.col("id") % 5).alias("k")).agg(F.sum("v").alias("s"))
+        return spark.range(100).groupBy((F.col("id") % 5).alias("k")).agg(
+            F.sum(F.col("id") * 3).alias("s")
+        )
 
-    df2 = mgr.stage(spark, "stage2", s2, parents=("stage1",))
+    df2 = mgr.stage(spark, "stage2", s2, input_fingerprint="w1")
     return mgr, df2
 
 
@@ -62,28 +69,21 @@ def test_restart_skips_completed_stages(spark, root):
     first_rows = sorted((r.k, r.s) for r in first.collect())
 
     calls2 = []
-    mgr2, second = _run_pipeline(spark, root, calls2)
+    _, second = _run_pipeline(spark, root, calls2)
     assert calls2 == []  # both stages skipped — builders never invoked
-    assert mgr2.results["stage1"].skipped and mgr2.results["stage2"].skipped
     assert sorted((r.k, r.s) for r in second.collect()) == first_rows
 
 
 def test_fingerprint_change_invalidates_chain(spark, root):
+    """A stage recomputes when its own input fingerprint changes, and only
+    that stage: the other stage under the same root is reused."""
     calls = []
     _run_pipeline(spark, root, calls, fp="v1")
     calls2 = []
-    _run_pipeline(spark, root, calls2, fp="v2")
-    # stage1 input changed -> recompute; stage2's parent digest changed too
-    assert calls2 == ["s1", "s2"]
-
-
-def test_downstream_only_recompute(spark, root):
-    calls = []
-    _run_pipeline(spark, root, calls)
-    shutil.rmtree(os.path.join(root, "stage2"))
-    calls2 = []
-    _run_pipeline(spark, root, calls2)
-    assert calls2 == ["s2"]  # stage1 untouched, stage2 rebuilt
+    mgr, _ = _run_pipeline(spark, root, calls2, fp="v2")
+    assert calls2 == ["s1"]
+    assert mgr.manifest("stage1")["input_fingerprint"] == "v2"
+    assert mgr.manifest("stage2")["input_fingerprint"] == "w1"
 
 
 def test_partial_write_is_discarded(spark, root):
@@ -105,7 +105,7 @@ def test_corrupt_manifest_recomputes(spark, root):
         f.write("{not json")
     calls2 = []
     _run_pipeline(spark, root, calls2)
-    assert calls2 == ["s1", "s2"]
+    assert calls2 == ["s1"]
 
 
 def test_engine_version_change_recomputes(spark, root):
@@ -122,122 +122,97 @@ def test_engine_version_change_recomputes(spark, root):
         json.dump(m, f)
     calls2 = []
     mgr2, df2 = _run_pipeline(spark, root, calls2)
-    assert calls2[0] == "s1" and not mgr2.results["stage1"].skipped
+    assert calls2 == ["s1"]
     assert mgr2.manifest("stage1")["engine_version"] == ENGINE_VERSION
     assert df2.count() == 5
 
 
-def test_lineage_and_metrics(spark, root):
-    calls = []
-    mgr, _ = _run_pipeline(spark, root, calls)
-    chain = mgr.lineage("stage2")
-    assert [m["stage_id"] for m in chain] == ["stage1", "stage2"]
-    assert chain[1]["parents"] == ["stage1"]
-    met = mgr.metrics()
-    assert met["stage1"]["rows"] == 100 and met["stage1"]["n_partitions"] == 4
-    assert met["stage2"]["skipped"] is False
-    # manifest is valid json on disk with a digest covering partition stats
-    with open(os.path.join(root, "stage2", MANIFEST)) as f:
-        m = json.load(f)
-    assert m["digest"] == fingerprint_of(
-        m["input_fingerprint"],
-        *[f"{p['file']}:{p['rows']}:{p['bytes']}" for p in m["partitions"]],
-    )
+PYTHON_NODE = re.compile(r"\w*(?:EvalPython|InPandas|InArrow)\w*")
+SPINE_KW = dict(zooms=(2,), cell_level=4)
 
 
-def test_spine_resumable_end_to_end(spark, tmp_path):
-    """Integration: the real spine resumes and matches the plain spine."""
-    from imposm2_spark.plans.pipeline import spine, spine_resumable
-    from imposm2_spark.sources import fixtures, testdata
-
-    docs = testdata.synth_documents_web(
-        testdata.load(spark, "/root/testdata/sf0.001", "documents")
-    )
-    polys = fixtures.world_octants_df(spark, cell_level=4)
-    want = sorted(
-        (r.z, r.x, r.y, r.n_docs, r.n_polygons, r.sum_chars)
-        for r in spine(docs, polys, zooms=(2,), cell_level=4).collect()
-    )
-    root = str(tmp_path / "spine_ckpt")
-    kw = dict(zooms=(2,), cell_level=4, input_fingerprint="sf0.001")
-    got1 = sorted(
-        (r.z, r.x, r.y, r.n_docs, r.n_polygons, r.sum_chars)
-        for r in spine_resumable(spark, docs, polys, root, **kw).collect()
-    )
-    assert got1 == want
-    # restart: stages skipped (manifests intact), identical output
-    from imposm2_spark.plans.checkpoint import CheckpointManager
-
-    got2 = sorted(
-        (r.z, r.x, r.y, r.n_docs, r.n_polygons, r.sum_chars)
-        for r in spine_resumable(spark, docs, polys, root, **kw).collect()
-    )
-    assert got2 == want
-    mgr = CheckpointManager(root)
-    assert mgr.manifest("enrich")["total_rows"] == 500
-    assert mgr.manifest("pip_join")["parents"] == ["enrich"]
+def _spine_inputs(spark, polygons=fixtures.world_octants_df):
+    docs = testdata.synth_documents_web(testdata.load(spark, SF_SMOKE, "documents"))
+    return docs, polygons(spark, cell_level=4)
 
 
-def test_spine_resumable_enrich_is_one_crossing_without_text(spark, tmp_path, monkeypatch):
-    """The enrich stage runs the spine's enrich crossing: exactly one
-    Python node, and the checkpoint holds no html or text column."""
-    import re
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
 
-    from conftest import SF_SMOKE
-    from imposm2_spark.plans.pipeline import spine_resumable
-    from imposm2_spark.sources import fixtures, testdata
 
+def _python_nodes(df):
+    return PYTHON_NODE.findall(df._jdf.queryExecution().executedPlan().toString())
+
+
+@pytest.fixture()
+def built(monkeypatch):
+    """stage id -> the frames its builder returned, one per invocation."""
     built = {}
     real = CheckpointManager.stage
 
     def spy(self, spark, stage_id, build, **kw):
         def capture():
-            built[stage_id] = build()
-            return built[stage_id]
+            built.setdefault(stage_id, []).append(build())
+            return built[stage_id][-1]
 
         return real(self, spark, stage_id, capture, **kw)
 
     monkeypatch.setattr(CheckpointManager, "stage", spy)
-    docs = testdata.synth_documents_web(testdata.load(spark, SF_SMOKE, "documents"))
-    polys = fixtures.world_octants_df(spark, cell_level=4)
+    return built
+
+
+def test_spine_resumable_end_to_end(spark, tmp_path, built):
+    """The resumable spine checkpoints one stage, `located`, matches the
+    plain spine, and a restart reuses the stage without building it."""
+    docs, polys = _spine_inputs(spark)
+    want = _rows(spine(docs, polys, **SPINE_KW))
     root = str(tmp_path / "spine_ckpt")
-    spine_resumable(
-        spark, docs, polys, root, "sf0.001", zooms=(2,), cell_level=4
-    ).collect()
-    plan = built["enrich"]._jdf.queryExecution().executedPlan().toString()
-    assert re.findall(r"\w*(?:EvalPython|InPandas|InArrow)\w*", plan) == [
-        "MapInArrow"
-    ]
-    cols = spark.read.parquet(CheckpointManager(root).data_dir("enrich")).columns
-    assert cols == ["url", "lon", "lat", "n_chars"]
-    assert not {"html", "text", "text_extracted"} & set(cols)
+    assert _rows(spine_resumable(spark, docs, polys, root, "sf0.001", **SPINE_KW)) == want
+    assert os.listdir(root) == ["located"] and len(built["located"]) == 1
+    # one located row per (document, polygon): each lies in one tile per zoom
+    m = CheckpointManager(root).manifest("located")
+    assert m["total_rows"] == sum(r[3] for r in want)
+
+    assert _rows(spine_resumable(spark, docs, polys, root, "sf0.001", **SPINE_KW)) == want
+    assert len(built["located"]) == 1  # the restart invoked no builder
 
 
-def test_spine_resumable_invalidates_on_polygon_change(spark, tmp_path):
-    """Review r4: the pip_join checkpoint must be invalidated when the
-    POLYGONS input changes, not only when docs/enrich change — pre-fix the
-    second run silently returned tiles built against the old polygon set."""
-    from imposm2_spark.plans.pipeline import spine, spine_resumable
-    from imposm2_spark.sources import fixtures, testdata
-
-    docs = testdata.synth_documents_web(
-        testdata.load(spark, "/root/testdata/sf0.001", "documents")
-    )
-    polys_a = fixtures.world_octants_df(spark, cell_level=4)
-    polys_b = fixtures.polygons_admin_df(spark, cell_level=4)
+def test_spine_resumable_over_cap_matches_spine(spark, tmp_path, monkeypatch, built):
+    """Over pip.MAX_BROADCAST_POLYGONS the stage is located_points' shuffle
+    path (enrich crossing, then pip_join's refine) and the rows still equal
+    the spine's with the cap as shipped."""
+    docs, polys = _spine_inputs(spark)
+    want = _rows(spine(docs, polys, **SPINE_KW))
+    monkeypatch.setattr(pip, "MAX_BROADCAST_POLYGONS", 0)
     root = str(tmp_path / "spine_ckpt")
-    kw = dict(zooms=(2,), cell_level=4, input_fingerprint="sf0.001")
+    assert _rows(spine_resumable(spark, docs, polys, root, "sf0.001", **SPINE_KW)) == want
+    assert sorted(_python_nodes(built["located"][0])) == ["ArrowEvalPython", "MapInArrow"]
 
-    got_a = sorted(
-        tuple(r) for r in spine_resumable(spark, docs, polys_a, root, **kw).collect()
-    )
-    got_b = sorted(
-        tuple(r) for r in spine_resumable(spark, docs, polys_b, root, **kw).collect()
-    )
-    want_b = sorted(
-        tuple(r) for r in spine(docs, polys_b, zooms=(2,), cell_level=4).collect()
-    )
-    assert got_b == want_b
+
+def test_spine_resumable_enrich_is_one_crossing_without_text(spark, tmp_path, built):
+    """Under the cap the located stage is the spine's one enrich + locate
+    crossing: exactly one Python node, and the checkpoint holds
+    located_points' columns, no html or text."""
+    docs, polys = _spine_inputs(spark)
+    root = str(tmp_path / "spine_ckpt")
+    spine_resumable(spark, docs, polys, root, "sf0.001", **SPINE_KW).collect()
+    assert _python_nodes(built["located"][0]) == ["MapInArrow"]
+    cols = spark.read.parquet(CheckpointManager(root).data_dir("located")).columns
+    assert cols == ["lon", "lat", "n_chars", "polygon_id"]
+
+
+def test_spine_resumable_invalidates_on_polygon_change(spark, tmp_path, built):
+    """The checkpoint is invalidated when the POLYGONS input changes, not
+    only when the docs do: a docs-only fingerprint would silently return
+    tiles built against the old polygon set."""
+    docs, polys_a = _spine_inputs(spark)
+    _, polys_b = _spine_inputs(spark, fixtures.polygons_admin_df)
+    root = str(tmp_path / "spine_ckpt")
+
+    got_a = _rows(spine_resumable(spark, docs, polys_a, root, "sf0.001", **SPINE_KW))
+    got_b = _rows(spine_resumable(spark, docs, polys_b, root, "sf0.001", **SPINE_KW))
+    assert len(built["located"]) == 2  # the polygon change recomputed the stage
+    assert got_b == _rows(spine(docs, polys_b, **SPINE_KW))
     assert got_a != got_b  # the two polygon sets genuinely differ
 
 
@@ -268,7 +243,7 @@ def test_failed_pointer_commit_unlinks_its_temp(spark, root, monkeypatch):
     mgr = CheckpointManager(root)
     assert mgr.manifest("stage1") is None
     assert mgr.stage(spark, "stage1", build, input_fingerprint="v1").count() == 5
-    assert calls == ["s1", "s1"] and not mgr.results["stage1"].skipped
+    assert calls == ["s1", "s1"]
 
 
 def test_failed_rebuild_keeps_previous_committed_output(spark, root):
@@ -292,41 +267,10 @@ def test_failed_rebuild_keeps_previous_committed_output(spark, root):
     # the committed v1 output is still there and still readable
     assert spark.read.parquet(final_dir).count() == 10
     m = mgr.manifest("stage1")
-    assert m is not None and m["input_fingerprint"] == fingerprint_of(
-        "v1", fingerprint_of()
-    )
+    assert m is not None and m["input_fingerprint"] == "v1"
     # and a successful retry still replaces it
     df = mgr.stage(
         spark, "stage1",
         lambda: spark.range(7).select(F.col("id")), input_fingerprint="v2",
     )
     assert df.count() == 7
-
-
-def test_parent_digest_cross_process_and_missing(spark, root):
-    """Review r5: a parent absent from the in-process results dict must fall
-    back to its ON-DISK manifest digest (cross-process resume computes the
-    same child fingerprint and skips), and a parent with neither must raise —
-    silently folding an empty digest would freeze the child's fingerprint and
-    later serve a STALE child checkpoint after the parent changed."""
-    calls = []
-    _run_pipeline(spark, root, calls)
-    assert calls == ["s1", "s2"]
-
-    # fresh manager, child called WITHOUT staging the parent in-process:
-    # on-disk fallback must yield the same fingerprint -> skip, not rebuild
-    mgr2 = CheckpointManager(root)
-    ran = []
-
-    def s2():
-        ran.append("s2")
-        return spark.range(1).select(F.col("id"))
-
-    mgr2.stage(spark, "stage2", s2, parents=("stage1",))
-    assert ran == []
-    assert mgr2.results["stage2"].skipped
-
-    # a parent that never ran anywhere: loud, not silent
-    mgr3 = CheckpointManager(str(root) + "_empty")
-    with pytest.raises(KeyError, match="run the parent first"):
-        mgr3.stage(spark, "child", s2, parents=("ghost",))

@@ -150,13 +150,17 @@ REMOVED_PARAMS = {
     "operators.lines.merge_line_geometries": {"max_component_segments"},
     "sources.catalog.write_spatial": {"partitions"},
     "operators.knn.knn_join": {"rings"},
+    "sources.pbf.read_pbf": {"blobs_per_task"},
+    "sources.osmxml.read_osm_xml": {"batch_rows"},
 }
 
 
 def test_no_test_only_paths_or_limits():
     """The second paths and limits only tests selected stay deleted: none of
-    the signatures above takes its removed parameters, and the Bloom probe
-    has one form."""
+    the signatures above takes its removed parameters, the Bloom probe
+    has one form, and the checkpoint manager has no stage chain (parent
+    stages, lineage walk, in-process results and run metrics)."""
+    import dataclasses
     import importlib
     import inspect
 
@@ -169,6 +173,15 @@ def test_no_test_only_paths_or_limits():
     bloom = importlib.import_module("imposm2_spark.operators.bloom")
     if hasattr(bloom, "bloom_probe_inrow"):
         offenders.append("operators.bloom.bloom_probe_inrow")
+    ckpt = importlib.import_module("imposm2_spark.plans.checkpoint")
+    mgr = ckpt.CheckpointManager
+    if "parents" in inspect.signature(mgr.stage).parameters:
+        offenders.append("plans.checkpoint.CheckpointManager.stage(parents=)")
+    members = {f.name for f in dataclasses.fields(mgr)} | set(dir(mgr))
+    for name in sorted({"lineage", "metrics", "results"} & members):
+        offenders.append(f"plans.checkpoint.CheckpointManager.{name}")
+    if hasattr(ckpt, "StageResult"):
+        offenders.append("plans.checkpoint.StageResult")
     assert not offenders, "test-only paths or limits found:\n" + "\n".join(offenders)
 
 
