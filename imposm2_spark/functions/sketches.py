@@ -45,23 +45,25 @@ from pyspark.sql import functions as F
 __all__ = [
     "theta_distinct",
     "kll_quantile",
+    "profile_aggs",
     "sketch_profile",
     "THETA_LGK",
     "KLL_K",
 ]
 
-# Frozen defaults shared with the registry oracle. theta lgk=14 retains up to
-# 2^14 = 16384 hashes before sampling starts (exact below that); KLL k=8192
-# holds 8192 values before its first compaction. Both cover sf0.1 (5000 docs)
-# with >3x headroom — verified bit-exact vs DuckDB at sf0.001/0.01/0.1.
+# Frozen sketch sizes shared with the registry oracle, read at call time.
+# theta lgk=14 retains up to 2^14 = 16384 hashes before sampling starts
+# (exact below that); KLL k=8192 holds 8192 values before its first
+# compaction. Both cover sf0.1 (5000 docs) with >3x headroom — verified
+# bit-exact vs DuckDB at sf0.001/0.01/0.1.
 THETA_LGK = 14
 KLL_K = 8192
 
 
-def theta_distinct(col: str, lgk: int = THETA_LGK) -> Column:
+def theta_distinct(col: str) -> Column:
     """Distinct-count estimate via a theta sketch (long). EXACT while the
-    group's distinct count stays below 2^lgk; nulls are ignored, matching
-    COUNT(DISTINCT col). Takes a column NAME: PySpark 4.1 exposes
+    group's distinct count stays below 2^THETA_LGK; nulls are ignored,
+    matching COUNT(DISTINCT col). Takes a column NAME: PySpark 4.1 exposes
     theta_sketch_agg only through SQL expr, so a computed column must be
     projected and aliased first."""
     if not isinstance(col, str):
@@ -69,19 +71,45 @@ def theta_distinct(col: str, lgk: int = THETA_LGK) -> Column:
             "theta_distinct requires a column NAME (PySpark 4.1 exposes "
             "theta_sketch_agg only through SQL expr)"
         )
-    return F.expr(f"theta_sketch_estimate(theta_sketch_agg(`{col}`, {int(lgk)}))")
+    return F.expr(f"theta_sketch_estimate(theta_sketch_agg(`{col}`, {int(THETA_LGK)}))")
 
 
-def kll_quantile(col: str, q: float, k: int = KLL_K) -> Column:
+def kll_quantile(col: str, q: float) -> Column:
     """Inclusive-rank quantile of a double column via a KLL sketch. EXACT
     (the max(1, ceil(q*n))-th order statistic) while the group holds fewer
-    than k non-null values; nulls are ignored."""
+    than KLL_K non-null values; nulls are ignored."""
     if not 0.0 <= q <= 1.0:
         raise ValueError(f"quantile must be in [0, 1], got {q!r}")
     return F.expr(
         f"kll_sketch_get_quantile_double("
-        f"kll_sketch_agg_double(CAST(`{col}` AS DOUBLE), {int(k)}), {float(q)})"
+        f"kll_sketch_agg_double(CAST(`{col}` AS DOUBLE), {int(KLL_K)}), {float(q)})"
     )
+
+
+def profile_aggs(
+    docs: DataFrame,
+    group_col: str,
+    distinct_cols: tuple[str, ...],
+    quantile_col: str,
+    quantiles: tuple[float, ...],
+) -> list[Column]:
+    """The per-group aggregates of both profiles (this module's
+    sketch_profile and streaming.profile.stream_profile): `n_docs`, one
+    `distinct_<col>` theta estimate per entry of `distinct_cols` and one
+    `p<q*100>_<quantile_col>` KLL quantile per entry of `quantiles`.
+    Raises ValueError on a column missing from `docs` or a quantile
+    outside [0, 1]."""
+    for c in (group_col, quantile_col, *distinct_cols):
+        if c not in docs.columns:
+            raise ValueError(f"profile: column {c!r} missing from input")
+    return [
+        F.count(F.lit(1)).alias("n_docs"),
+        *(theta_distinct(c).alias(f"distinct_{c}") for c in distinct_cols),
+        *(
+            kll_quantile(quantile_col, q).alias(f"p{int(round(q * 100))}_{quantile_col}")
+            for q in quantiles
+        ),
+    ]
 
 
 def sketch_profile(
@@ -90,48 +118,28 @@ def sketch_profile(
     distinct_cols: tuple[str, ...] = ("lang", "text"),
     quantile_col: str = "n_chars",
     quantiles: tuple[float, ...] = (0.5, 0.9),
-    theta_lgk: int = THETA_LGK,
-    kll_k: int = KLL_K,
 ) -> DataFrame:
     """One-pass sketch profile: per-`group_col` rows plus an 'ALL' total row.
 
     Output columns: `group_key` (the group value; literal 'ALL' on the
-    rollup total row — a genuinely NULL group value stays NULL), `n_docs`,
-    one `distinct_<col>` long per entry of `distinct_cols`, and one
-    `p<q*100>_<quantile_col>` double per entry of `quantiles`.
+    rollup total row — a genuinely NULL group value stays NULL), then the
+    `profile_aggs` columns: `n_docs`, one `distinct_<col>` long per entry of
+    `distinct_cols`, and one `p<q*100>_<quantile_col>` double per entry of
+    `quantiles`.
 
     Scale shape: Expand(2x) + one map-side-combined hash-agg + ONE exchange
     of (group, sketch) rows — sketch bytes bounded by k regardless of group
     size, so the shuffle is ~n_groups * k, never the corpus. Hot groups
     cannot straggle: partial sketches combine associatively on the map side.
     """
-    for c in (group_col, quantile_col, *distinct_cols):
-        if c not in docs.columns:
-            raise ValueError(f"sketch_profile: column {c!r} missing from input")
+    aggs = profile_aggs(docs, group_col, distinct_cols, quantile_col, quantiles)
     if "group_key" in (set(docs.columns) - {group_col}):
         raise ValueError("sketch_profile: column name 'group_key' is reserved")
-    aggs: list[Column] = [F.count(F.lit(1)).alias("n_docs")]
-    for c in distinct_cols:
-        aggs.append(
-            F.expr(
-                f"theta_sketch_estimate(theta_sketch_agg(`{c}`, {int(theta_lgk)}))"
-            ).alias(f"distinct_{c}")
-        )
-    for q in quantiles:
-        if not 0.0 <= q <= 1.0:
-            raise ValueError(f"quantile must be in [0, 1], got {q!r}")
-        aggs.append(kll_quantile(quantile_col, q, kll_k).alias(
-            f"p{int(round(q * 100))}_{quantile_col}"
-        ))
     # grouping() reads the Expand's internal grouping-id column, so it is
     # only resolvable INSIDE the rollup's agg list — evaluating it in a later
     # select raises UNSUPPORTED_GROUPING_EXPRESSION.
-    aggs.append(F.grouping(group_col).alias("__gflag"))
-    rolled = docs.rollup(group_col).agg(*aggs)
+    rolled = docs.rollup(group_col).agg(*aggs, F.grouping(group_col).alias("__gflag"))
     group = F.when(F.col("__gflag") == 1, F.lit("ALL")).otherwise(
         F.col(group_col)
     )
-    out_cols = [group.alias("group_key"), "n_docs"]
-    out_cols += [f"distinct_{c}" for c in distinct_cols]
-    out_cols += [f"p{int(round(q * 100))}_{quantile_col}" for q in quantiles]
-    return rolled.select(*out_cols)
+    return rolled.select(group.alias("group_key"), *rolled.columns[1:-1])

@@ -17,6 +17,9 @@ import numpy as np
 
 Ring = np.ndarray  # (N, 2) float64, closed (first == last) or open; both accepted
 
+# On-segment tolerance of point_on_ring_boundary; read at call time.
+BOUNDARY_EPS = 1e-12
+
 
 def ring_signed_area(ring: Ring) -> float:
     """Shoelace signed area (CCW positive). Accepts open or closed rings."""
@@ -96,8 +99,9 @@ def points_in_rings(px: np.ndarray, py: np.ndarray, rings: list[Ring]) -> np.nda
     return (total % 2) == 1
 
 
-def point_on_ring_boundary(px: float, py: float, ring: Ring, eps: float = 1e-12) -> bool:
-    """True if the point lies on any segment of the ring (within eps)."""
+def point_on_ring_boundary(px: float, py: float, ring: Ring) -> bool:
+    """True if the point lies on any segment of the ring (within BOUNDARY_EPS)."""
+    eps = BOUNDARY_EPS
     r = ensure_closed(np.asarray(ring, dtype=np.float64))
     a, b = r[:-1], r[1:]
     d = b - a

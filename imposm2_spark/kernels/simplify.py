@@ -14,6 +14,10 @@ from __future__ import annotations
 
 import numpy as np
 
+# Fewest points (closure included) a simplified ring keeps before it counts
+# as collapsed; read at call time.
+MIN_RING_POINTS = 4
+
 
 def dp_mask(points: np.ndarray, tolerance: float) -> np.ndarray:
     """Boolean keep-mask for Douglas-Peucker at `tolerance` (same units as coords)."""
@@ -53,9 +57,9 @@ def simplify_line(points: np.ndarray, tolerance: float) -> np.ndarray:
     return pts[dp_mask(pts, tolerance)]
 
 
-def simplify_ring(ring: np.ndarray, tolerance: float, min_points: int = 4) -> np.ndarray | None:
+def simplify_ring(ring: np.ndarray, tolerance: float) -> np.ndarray | None:
     """Simplify a closed ring (first == last). Returns None if the ring collapses
-    below `min_points` (incl. closure) — caller drops it and counts the metric,
+    below MIN_RING_POINTS (incl. closure) — caller drops it and counts the metric,
     matching the generalized-table WHERE-clause intent (tiny features vanish)."""
     r = np.asarray(ring, dtype=np.float64)
     closed = len(r) > 1 and np.array_equal(r[0], r[-1])
@@ -66,6 +70,6 @@ def simplify_ring(ring: np.ndarray, tolerance: float, min_points: int = 4) -> np
         return None
     body = r if closed else np.vstack([r, r[:1]])
     out = body[dp_mask(body, tolerance)]
-    if len(out) < min_points:
+    if len(out) < MIN_RING_POINTS:
         return None
     return out

@@ -365,13 +365,15 @@ def cosine_topk_lsh(
 # ---------------------------------------------------------------------------
 N_LISTS = 16
 N_PROBE = 4
+# Lloyd iterations of train_centroids (a fixed count keeps it deterministic);
+# read at call time.
+TRAIN_ITERS = 5
 
 
 def train_centroids(
     corpus: DataFrame,
     n_lists: int = N_LISTS,
     train_cap: int = 4096,
-    iters: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> np.ndarray:
@@ -382,7 +384,7 @@ def train_centroids(
     `train_cap` rows by id (one limit-capped collect — bounded driver memory,
     no toLocalIterator), init is the first n_lists sampled vectors, argmax
     ties break to the lowest centroid index, and Lloyd runs a FIXED iteration
-    count — same corpus in, same centroids out, no runtime randomness."""
+    count (TRAIN_ITERS) — same corpus in, same centroids out, no runtime randomness."""
     rows = (
         corpus.select(id_col, vec_col).orderBy(id_col).limit(train_cap).collect()
     )
@@ -407,7 +409,7 @@ def train_centroids(
     norms = np.linalg.norm(X, axis=1, keepdims=True)
     Xn = X / np.where(norms == 0, 1.0, norms)
     C = Xn[:n_lists].copy()
-    for _ in range(iters):
+    for _ in range(TRAIN_ITERS):
         sims = Xn @ C.T
         assign = np.argmax(sims, axis=1)  # first-max: lowest index wins ties
         for j in range(n_lists):

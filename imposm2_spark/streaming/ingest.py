@@ -30,12 +30,12 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from ..functions.spatial import cell_encode_col
+from ..functions.spatial import cell_encode_col, tile_x, tile_y
 from ..plans.pipeline import _enrich, located_points
 
 DOCUMENTS_WEB_SCHEMA = T.StructType(
@@ -49,22 +49,21 @@ DOCUMENTS_WEB_SCHEMA = T.StructType(
 )
 
 
-def read_document_stream(
-    spark: SparkSession, landing_dir: str,
-    max_files_per_trigger: int | None = 8,
-) -> DataFrame:
-    """File-source stream over the landing directory (schema fixed, §1.2:
-    never infer schemas in engine paths).
+# Landing files per micro-batch (batch size only, not rows); read at call
+# time. Suits a minutely landing backlog; a large backfill pays one
+# checkpoint commit and one planning pass per this many files.
+MAX_FILES_PER_TRIGGER = 8
 
-    `max_files_per_trigger` bounds each micro-batch; the default suits a
-    minutely landing backlog. A large BACKFILL (10^5 landing files) wants
-    a much wider batch — or None to let availableNow size batches itself —
-    rather than paying checkpoint-commit + planning overhead per 8 files
-    (review r5: this was hard-coded)."""
-    reader = spark.readStream.schema(DOCUMENTS_WEB_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(landing_dir)
+
+def read_document_stream(spark: SparkSession, landing_dir: str) -> DataFrame:
+    """File-source stream over the landing directory (schema fixed, §1.2:
+    never infer schemas in engine paths), MAX_FILES_PER_TRIGGER files per
+    micro-batch."""
+    return (
+        spark.readStream.schema(DOCUMENTS_WEB_SCHEMA)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
+        .parquet(landing_dir)
+    )
 
 
 def enrich(docs: DataFrame, cell_level: int = 12) -> DataFrame:
@@ -84,16 +83,13 @@ def stream_ingest(
     output_dir: str,
     checkpoint_dir: str,
     cell_level: int = 12,
-    max_files_per_trigger: int | None = 8,
 ) -> StreamingQuery:
     """Start the incremental ingest; returns the StreamingQuery handle.
 
-    The query processes the current backlog (availableNow) then finishes.
-    `max_files_per_trigger` reaches the source reader (review r5: it was
-    unplumbed, pinning every query to 8 files/micro-batch); pass None on a
-    large backfill to let the trigger size batches itself.
+    The query processes the current backlog (availableNow, in micro-batches
+    of MAX_FILES_PER_TRIGGER landing files) then finishes.
     """
-    src = read_document_stream(spark, landing_dir, max_files_per_trigger)
+    src = read_document_stream(spark, landing_dir)
     return (
         enrich(src, cell_level)
         .writeStream.format("parquet")
@@ -115,7 +111,6 @@ def stream_spine(
     window: str = "1 hour",
     watermark: str = "2 hours",
     cell_level: int = 12,
-    max_files_per_trigger: int | None = 8,
 ) -> StreamingQuery:
     """The full M1 spine as one Structured Streaming job: extract + geotag +
     locate against the STATIC polygon side -> watermarked windowed tile
@@ -142,7 +137,7 @@ def stream_spine(
     every window's current value even when the watermark hasn't closed it yet
     — append mode would hold back all windows within `watermark` of max event
     time until a future run."""
-    src = read_document_stream(spark, landing_dir, max_files_per_trigger)
+    src = read_document_stream(spark, landing_dir)
     return _spine_query(
         src, checkpoint_dir, polygons, sink, zoom, window, watermark, cell_level
     )
@@ -154,12 +149,10 @@ def stream_curated_spine(
     checkpoint_dir: str,
     polygons: DataFrame,
     sink: Callable[[DataFrame, int], None],
-    dedup_state_ttl_ms: int = 24 * 3_600_000,
     zoom: int = 8,
     window: str = "1 hour",
     watermark: str = "2 hours",
     cell_level: int = 12,
-    max_files_per_trigger: int | None = 8,
 ) -> StreamingQuery:
     """The full streaming CURATION story: stream_spine with cross-micro-batch
     first-seen dedup chained in front — duplicate documents (same text,
@@ -184,8 +177,7 @@ def stream_curated_spine(
     from .stateful import enable_drain_termination, stream_dedup_first_seen
 
     enable_drain_termination(spark)
-    src = read_document_stream(spark, landing_dir, max_files_per_trigger)
-    deduped = stream_dedup_first_seen(src, state_ttl_ms=dedup_state_ttl_ms)
+    deduped = stream_dedup_first_seen(read_document_stream(spark, landing_dir))
     return _spine_query(
         deduped, checkpoint_dir, polygons, sink, zoom, window, watermark, cell_level
     )
@@ -201,28 +193,39 @@ def _spine_query(
     watermark: str,
     cell_level: int,
 ) -> StreamingQuery:
-    """Shared spine tail: the batch spine's located_points (extract + geotag
-    + locate in ONE Arrow crossing, then explode, under the broadcast cap;
-    enrich then pip_join's shuffle path over it) -> watermarked windowed
-    tile stats -> update-mode foreachBatch."""
-    from ..functions.spatial import tile_x, tile_y
-
+    """Shared spine query: the batch spine's located_points (extract +
+    geotag + locate in ONE Arrow crossing, then explode, under the broadcast
+    cap; enrich then pip_join's shuffle path over it) -> the windowed tile
+    tail."""
     joined = located_points(
         docs.withWatermark("warc_ts", watermark), polygons, cell_level, ("warc_ts",)
     )
-    counts = (
-        joined.groupBy(
-            F.window("warc_ts", window).alias("w"),
-            tile_x(F.col("lon"), zoom).alias("x"),
-            tile_y(F.col("lat"), zoom).alias("y"),
-        )
-        .agg(F.count("*").alias("n_rows"), F.sum("n_chars").alias("sum_chars"))
-        .select(
-            F.col("w.start").alias("window_start"), "x", "y", "n_rows", "sum_chars"
-        )
+    return _windowed_tiles(
+        joined, checkpoint_dir, sink, zoom, window,
+        F.count("*").alias("n_rows"), F.sum("n_chars").alias("sum_chars"),
     )
+
+
+def _windowed_tiles(
+    points: DataFrame,
+    checkpoint_dir: str,
+    sink: Callable[[DataFrame, int], None],
+    zoom: int,
+    window: str,
+    *aggs: Column,
+) -> StreamingQuery:
+    """The one windowed tile tail: group watermarked points by (event-time
+    window, tile x, tile y), aggregate `aggs`, and drain the backlog
+    (availableNow) into an update-mode foreachBatch `sink`. Rows are
+    (window_start, x, y, *aggs)."""
+    counts = points.groupBy(
+        F.window("warc_ts", window).alias("w"),
+        tile_x(F.col("lon"), zoom).alias("x"),
+        tile_y(F.col("lat"), zoom).alias("y"),
+    ).agg(*aggs)
     return (
-        counts.writeStream.outputMode("update")
+        counts.select(F.col("w.start").alias("window_start"), *counts.columns[1:])
+        .writeStream.outputMode("update")
         .option("checkpointLocation", checkpoint_dir)
         .foreachBatch(sink)
         .trigger(availableNow=True)
@@ -238,7 +241,6 @@ def stream_tile_counts(
     zoom: int = 8,
     window: str = "1 hour",
     watermark: str = "2 hours",
-    max_files_per_trigger: int | None = 8,
 ) -> StreamingQuery:
     """Watermarked event-time tile counts, delivered via foreachBatch.
 
@@ -249,23 +251,8 @@ def stream_tile_counts(
     growing counts across micro-batches; `sink` must upsert by
     (window_start, x, y), never blind-append.
     """
-    from ..functions.spatial import tile_x, tile_y
-
-    src = read_document_stream(spark, landing_dir, max_files_per_trigger)
+    src = read_document_stream(spark, landing_dir)
     enriched = _enrich(src, ("warc_ts",), text_col=None).withWatermark("warc_ts", watermark)
-    counts = (
-        enriched.groupBy(
-            F.window("warc_ts", window).alias("w"),
-            tile_x(F.col("lon"), zoom).alias("x"),
-            tile_y(F.col("lat"), zoom).alias("y"),
-        )
-        .agg(F.count("*").alias("n_docs"))
-        .select(F.col("w.start").alias("window_start"), "x", "y", "n_docs")
-    )
-    return (
-        counts.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-        .start()
+    return _windowed_tiles(
+        enriched, checkpoint_dir, sink, zoom, window, F.count("*").alias("n_docs")
     )

@@ -12,29 +12,32 @@ state. No custom stateful operator is needed; the profile is a plain
 also means it survives query restarts via the streaming checkpoint
 (pytest-gated: batch/stream parity AND resume-with-more-data).
 
-Two deliberate differences from the batch profile:
+The per-group aggregates come from the batch operator's own list
+(`sketches.profile_aggs`), so the streamed rows and the batch profile's
+per-group rows are computed by the same expressions. Two deliberate
+differences from the batch profile:
 
   * no 'ALL' rollup row — streaming supports one aggregation per query and
-    no Expand-based grouping sets. Instead `with_sketches=True` appends the
-    raw mergeable sketch binaries (`sketch_<col>` HLL per distinct column,
-    `sketch_<quantile_col>_kll`) to every group row, so a downstream
-    consumer reconstructs corpus totals by UNIONING the latest per-group
-    sketches (`hll_union_agg` / `kll_sketch_merge_double`) — the mergeable-
-    sketch contract, without rescanning anything (pytest: the reconstructed
-    ALL distinct equals the batch operator's ALL row).
+    no Expand-based grouping sets. Instead every group row carries the raw
+    mergeable sketch binaries (`sketch_<col>` HLL per distinct column,
+    `sketch_<quantile_col>_kll`), so a downstream consumer reconstructs
+    corpus totals by UNIONING the latest per-group sketches
+    (`hll_union_agg` / `kll_sketch_merge_double`) — the mergeable-sketch
+    contract, without rescanning anything (pytest: the reconstructed ALL
+    distinct equals the batch operator's ALL row).
   * HLL instead of theta for the attached distinct sketches: Spark exposes
     a union AGGREGATE only for HLL (`hll_union_agg`), which is what the
     downstream rollup needs. The per-group ESTIMATE columns still come from
-    theta (exact below 2^lgk, same as batch) so the streamed estimates and
-    the batch profile agree cell-for-cell in the exact regime.
+    theta (exact below 2^THETA_LGK, same as batch) so the streamed estimates
+    and the batch profile agree cell-for-cell in the exact regime.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.sketches import KLL_K, THETA_LGK, kll_quantile
+from ..functions import sketches
 
 __all__ = ["stream_profile"]
 
@@ -45,45 +48,24 @@ def stream_profile(
     distinct_cols: tuple[str, ...] = ("lang", "text"),
     quantile_col: str = "n_chars",
     quantiles: tuple[float, ...] = (0.5, 0.9),
-    theta_lgk: int = THETA_LGK,
-    kll_k: int = KLL_K,
-    with_sketches: bool = False,
 ) -> DataFrame:
     """Continuous per-group sketch profile of a streaming documents frame.
 
-    Returns an aggregated streaming DataFrame (one row per group, columns
-    matching the batch `sketch_profile` minus the 'ALL' row; plus the raw
-    mergeable sketch binaries when `with_sketches`). Attach a writeStream
-    with outputMode 'complete' (small group cardinality) or 'update'
-    (emit only changed groups). Works identically on a BATCH frame — the
-    parity tests exploit that.
+    Returns an aggregated streaming DataFrame: one row per group, with the
+    batch `sketch_profile`'s columns (minus its 'ALL' row) followed by the
+    raw mergeable sketch binaries. Attach a writeStream with outputMode
+    'complete' (small group cardinality) or 'update' (emit only changed
+    groups). Works identically on a BATCH frame — the parity tests exploit
+    that.
     """
-    for c in (group_col, quantile_col, *distinct_cols):
-        if c not in docs.columns:
-            raise ValueError(f"stream_profile: column {c!r} missing from input")
-    aggs: list[Column] = [F.count(F.lit(1)).alias("n_docs")]
-    for c in distinct_cols:
-        aggs.append(
-            F.expr(
-                f"theta_sketch_estimate(theta_sketch_agg(`{c}`, {int(theta_lgk)}))"
-            ).alias(f"distinct_{c}")
-        )
-    for q in quantiles:
-        if not 0.0 <= q <= 1.0:
-            raise ValueError(f"quantile must be in [0, 1], got {q!r}")
-        aggs.append(
-            kll_quantile(quantile_col, q, kll_k).alias(
-                f"p{int(round(q * 100))}_{quantile_col}"
-            )
-        )
-    if with_sketches:
-        for c in distinct_cols:
-            aggs.append(
-                F.expr(f"hll_sketch_agg(`{c}`, {int(theta_lgk)})").alias(f"sketch_{c}")
-            )
-        aggs.append(
-            F.expr(
-                f"kll_sketch_agg_double(CAST(`{quantile_col}` AS DOUBLE), {int(kll_k)})"
-            ).alias(f"sketch_{quantile_col}_kll")
-        )
+    aggs = sketches.profile_aggs(docs, group_col, distinct_cols, quantile_col, quantiles)
+    aggs += [
+        F.expr(f"hll_sketch_agg(`{c}`, {int(sketches.THETA_LGK)})").alias(f"sketch_{c}")
+        for c in distinct_cols
+    ]
+    aggs.append(
+        F.expr(
+            f"kll_sketch_agg_double(CAST(`{quantile_col}` AS DOUBLE), {int(sketches.KLL_K)})"
+        ).alias(f"sketch_{quantile_col}_kll")
+    )
     return docs.groupBy(F.col(group_col).alias("group_key")).agg(*aggs)

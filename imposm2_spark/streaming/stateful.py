@@ -1,20 +1,23 @@
-"""Custom stateful streaming operator: cross-microbatch exact dedup.
+"""Custom stateful streaming operator: cross-microbatch first-seen dedup.
 
 Graft addition (SURVEY.md §2.9 + training-data ops): in a continuous ingest,
 duplicate documents arrive across microbatches, so a stateless per-batch
-dropDuplicates misses repeats that span batches. This operator keeps
+dropDuplicates misses repeats that span batches. This module keeps
 first-seen state per content hash via applyInPandasWithState — the idiomatic
 Spark construct for custom stateful streaming logic (the engine's only
 stateful-API surface; everything else is stateless or watermark-managed).
+It holds ONE state machine, `first_seen_state_fn`: `stream_dedup_first_seen`
+runs it, and `stream_dedup_exact` is a projection over that.
 
 Semantics: emit a document iff its md5(text) was never seen before (within
-the state retention window); state per hash = first-seen url + count, with a
-processing-time timeout so state is bounded at unbounded input (hashes idle
-longer than `state_ttl` are evicted and may re-emit — documented trade-off,
-identical to production dedup-cache behavior).
+the state retention window); state per hash = the count of copies seen, with
+a processing-time timeout so state is bounded at unbounded input (hashes idle
+longer than STATE_TTL_MS are evicted and may re-emit — documented trade-off,
+identical to production dedup-cache behavior). STATE_TTL_MS is read when a
+query is built.
 
 Scale notes: state is hash-partitioned across executors by the groupBy key;
-per-key state is ~100 bytes; the timeout bounds total state to (arrival rate
+per-key state is one long; the timeout bounds total state to (arrival rate
 x ttl). For exact-forever dedup at 10^12 docs, the batch MinHash/exact passes
 (operators.dedup) remain the right tool; this operator is the low-latency
 stream-side filter in front of them.
@@ -33,13 +36,18 @@ should leave the default: paced no-data batches are what evict idle state.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+# Processing-time retention of a hash's first-seen state; read at call time.
+STATE_TTL_MS = 24 * 3_600_000
+
+_COUNT_STATE = T.StructType([T.StructField("n_seen", T.LongType())])
+
 
 def enable_drain_termination(spark) -> None:
     """Make availableNow queries over stateful-timeout operators terminate.
@@ -49,182 +57,102 @@ def enable_drain_termination(spark) -> None:
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
 
 
-STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("first_url", T.StringType()),
-        T.StructField("n_seen", T.LongType()),
-    ]
-)
-
-OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("text_hash", T.StringType()),
-        T.StructField("url", T.StringType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("n_prior_copies", T.LongType()),
-    ]
-)
-
-
-def make_dedup_fn(state_ttl_ms: int):
-    """Bind the state TTL (applyInPandasWithState passes no user args)."""
-
-    def fn(key, pdfs, state: GroupState):
-        (text_hash,) = key
-        if state.hasTimedOut:
-            state.remove()
-            return iter(())
-        first_url, n_seen = state.get if state.exists else (None, 0)
-        # keeper = min url across ALL chunks: a group bigger than the Arrow
-        # batch arrives as multiple pandas chunks, and a first-chunk-only
-        # pick would make the emitted keeper depend on nondeterministic
-        # chunking (same fix as stream_dedup_first_seen)
-        new_hash = n_seen == 0
-        keeper = None  # (url, text)
-        for pdf in pdfs:
-            if new_hash and len(pdf):
-                nn = pdf["url"].dropna()
-                if len(nn):
-                    i = nn.idxmin()
-                    cand = (pdf.at[i, "url"], pdf.at[i, "text"])
-                    # a null-url keeper (from an earlier all-null chunk)
-                    # always loses to a non-null candidate; comparing
-                    # str < None would raise and kill the micro-batch
-                    if keeper is None or keeper[0] is None or cand[0] < keeper[0]:
-                        keeper = cand
-                elif keeper is None:
-                    keeper = (None, pdf["text"].iloc[0])
-            n_seen += len(pdf)
-        out = []
-        if new_hash and keeper is not None:
-            first_url = keeper[0]
-            out.append((text_hash, keeper[0], keeper[1], 0))
-        state.update((first_url, n_seen))
-        state.setTimeoutDuration(state_ttl_ms)
-        if not out:
-            return iter(())
-        return iter(
-            [pd.DataFrame(out, columns=[f.name for f in OUTPUT_SCHEMA.fields])]
-        )
-
-    return fn
+def _tie_text(v) -> str:
+    """A column value as keeper tie-break text, the same in every pandas
+    chunk: NULL is '', arrays, structs and maps compare by their elements,
+    and an integral float (a long column arrives as float64 in a chunk that
+    holds a NULL) prints as the integer."""
+    if isinstance(v, np.ndarray):
+        v = v.tolist()
+    if isinstance(v, (list, tuple)):
+        return "[" + ",".join(map(_tie_text, v)) + "]"
+    if isinstance(v, dict):
+        return "{" + ",".join(f"{_tie_text(k)}:{_tie_text(x)}" for k, x in v.items()) + "}"
+    if pd.isna(v):
+        return ""
+    if isinstance(v, float) and v.is_integer():
+        return str(int(v))
+    return str(v)
 
 
-_COUNT_STATE = T.StructType([T.StructField("n_seen", T.LongType())])
+def first_seen_state_fn(cols: list[str], order_col: str):
+    """The first-seen state function for applyInPandasWithState.
 
-
-def stream_dedup_first_seen(
-    docs: DataFrame,
-    state_ttl_ms: int = 24 * 3_600_000,
-    text_col: str = "text",
-    order_col: str = "url",
-) -> DataFrame:
-    """Schema-preserving first-seen suppression, keyed on md5(`text_col`).
-
-    Unlike stream_dedup_exact (fixed 4-column output), this carries EVERY
-    input column through, so it composes in front of the streaming spine:
-    the first document per distinct text (deterministic keeper: lowest
-    `order_col` within the first micro-batch that contains the hash) is
-    emitted once; later copies — including cross-micro-batch and
-    cross-restart repeats, via the state store — are dropped. State per hash
-    is one long; `state_ttl_ms` processing-time timeout bounds total state
-    at unbounded input (an evicted hash may re-emit — the dedup-cache
-    trade-off documented in the module header)."""
-    cols = list(docs.columns)
-    out_schema = docs.schema
+    For a hash never seen before it emits one keeper row (`cols` only): the
+    lowest `order_col`, NULLs last, then the smallest stringified remaining
+    columns. The keeper is the minimum over ALL pandas chunks of the group
+    (a group bigger than the Arrow batch arrives as several), so it never
+    depends on chunk order. Later copies emit nothing. State is the count
+    of copies seen, with STATE_TTL_MS (read now) as its timeout."""
+    ttl_ms = STATE_TTL_MS
+    rest = [c for c in cols if c != order_col]
 
     def fn(key, pdfs, state: GroupState):
         if state.hasTimedOut:
             state.remove()
             return iter(())
         (n_seen,) = state.get if state.exists else (0,)
-        # A group bigger than the Arrow batch size arrives as MULTIPLE pandas
-        # chunks (exactly the heavy-duplication case this operator serves), so
-        # the keeper min must be tracked across ALL chunks — first-chunk-only
-        # would make the emitted keeper depend on nondeterministic chunking.
-        # Per-chunk min is an O(n) mask scan, not a sort, and null order_col
-        # values neither crash the comparison nor win over real values (an
-        # all-null group still emits its first row rather than vanishing).
         new_hash = n_seen == 0
-        keeper = None
-        keeper_key = None  # None = keeper has a null order_col
-        keeper_sig = None
-
-        def row_sig(frame):
-            # deterministic tie-break for EQUAL order_col values (e.g. a
-            # recrawl of the same url with different warc_ts/html): compare
-            # the stringified remaining columns, so the winner never depends
-            # on chunk arrival order
-            return tuple(
-                "" if pd.isna(v) else str(v) for v in frame.iloc[0][cols]
-            )
-
+        keeper, keeper_rank = None, None
         for pdf in pdfs:
-            if new_hash and len(pdf):
-                nn = pdf[order_col].dropna()
-                if len(nn):
-                    k = nn.min()
-                    ties = pdf.loc[nn[nn == k].index][cols]
-                    cand = min(
-                        (ties.iloc[[j]] for j in range(len(ties))),
-                        key=row_sig,
-                    )
-                else:
-                    k = None
-                    cand = pdf.iloc[[0]][cols]
-                better = (
-                    keeper is None
-                    or (keeper_key is None and k is not None)
-                    or (
-                        k is not None
-                        and keeper_key is not None
-                        and (
-                            k < keeper_key
-                            or (k == keeper_key and row_sig(cand) < keeper_sig)
-                        )
-                    )
-                )
-                if better:
-                    keeper, keeper_key, keeper_sig = cand, k, row_sig(cand)
             n_seen += len(pdf)
+            if not new_hash or not len(pdf):
+                continue
+            order = pdf[order_col]
+            present = order.dropna()
+            k = present.min() if len(present) else None
+            rows = np.flatnonzero(order == k) if k is not None else range(len(pdf))
+            body = pdf[rest]
+            for i in rows:
+                rank = (k is None, k, tuple(map(_tie_text, body.iloc[i])))
+                if keeper_rank is None or rank < keeper_rank:
+                    keeper, keeper_rank = pdf.iloc[[i]][cols], rank
         state.update((n_seen,))
-        state.setTimeoutDuration(state_ttl_ms)
+        state.setTimeoutDuration(ttl_ms)
         return iter(()) if keeper is None else iter([keeper])
 
+    return fn
+
+
+def stream_dedup_first_seen(
+    docs: DataFrame,
+    text_col: str = "text",
+    order_col: str = "url",
+) -> DataFrame:
+    """Schema-preserving first-seen suppression, keyed on md5(`text_col`).
+
+    Carries EVERY input column through, so it composes in front of the
+    streaming spine: the first document per distinct text (the keeper
+    `first_seen_state_fn` picks within the first micro-batch that contains
+    the hash) is emitted once; later copies — including cross-micro-batch
+    and cross-restart repeats, via the state store — are dropped."""
+    cols = list(docs.columns)
     keyed = docs.withColumn("_text_hash", F.md5(text_col)).groupBy("_text_hash")
     return keyed.applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
+        first_seen_state_fn(cols, order_col),
+        outputStructType=docs.schema,
         stateStructType=_COUNT_STATE,
         outputMode="append",
         timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
     )
 
 
-def stream_dedup_exact(
-    docs: DataFrame, state_ttl_ms: int = 24 * 3_600_000
-) -> DataFrame:
+def stream_dedup_exact(docs: DataFrame) -> DataFrame:
     """Stateful streaming dedup: keeps the first document per md5(text).
 
     Input: a STREAMING DataFrame with (url, text) columns. Output stream:
     (text_hash, url, text, n_prior_copies) — exactly one row per distinct
-    text within the state retention window.
+    text within the state retention window, the keeper of
+    `stream_dedup_first_seen` over (url, text).
 
-    `n_prior_copies` is ALWAYS 0 by construction (review r5): append mode
-    emits a hash exactly once, at first sight, when zero copies precede it
-    by definition — and later copies are suppressed, never re-emitted with
-    an updated count. The column is kept for schema stability; a duplicate
-    CENSUS needs update-mode semantics (a different operator), not this
-    suppressor. The state's n_seen field still counts copies for TTL-window
-    observability via the state store, it just never reaches this output.
+    `n_prior_copies` is ALWAYS 0 by construction: append mode emits a hash
+    exactly once, at first sight, when zero copies precede it — later copies
+    are suppressed, never re-emitted with an updated count. The column is
+    kept for schema stability; a duplicate CENSUS needs update-mode
+    semantics (a different operator), not this suppressor.
     """
-    keyed = docs.select(F.md5("text").alias("text_hash"), "url", "text").groupBy(
-        "text_hash"
-    )
-    return keyed.applyInPandasWithState(
-        make_dedup_fn(state_ttl_ms),
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+    kept = stream_dedup_first_seen(docs.select("url", "text"))
+    return kept.select(
+        F.md5("text").alias("text_hash"), "url", "text",
+        F.lit(0).cast("long").alias("n_prior_copies"),
     )

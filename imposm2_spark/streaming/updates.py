@@ -38,6 +38,9 @@ from ..operators.merge import apply_diff
 from ..sources.catalog import Deploy
 
 TOMBSTONE_OP = "delete"
+# The OSC change vocabulary a diff record's op must come from; read at call
+# time.
+OSC_OPS = ("create", "modify", TOMBSTONE_OP)
 
 
 def read_current(spark: SparkSession, deploy: Deploy, table: str) -> DataFrame:
@@ -58,7 +61,6 @@ def stream_updates(
     table: str,
     key: str,
     checkpoint_dir: str,
-    allowed_ops: tuple[str, ...] = ("create", "modify", TOMBSTONE_OP),
 ) -> StreamingQuery:
     """Drain the diff stream's backlog (availableNow) into versioned
     publishes of `table`, then stop; a scheduler re-runs it for new diffs.
@@ -77,14 +79,12 @@ def stream_updates(
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         base = deploy.read(spark, table)
-        # allowed_ops: a malformed change set (op outside the OSC
-        # vocabulary, or NULL) fails the micro-batch loudly BEFORE any
-        # version is staged — the stream stops with the ValueError in
-        # StreamingQueryException.cause and CURRENT still points at the
-        # last good version (r5 hardening; pytest-gated)
+        # a malformed change set (op outside OSC_OPS, or NULL) fails the
+        # micro-batch loudly BEFORE any version is staged — the stream stops
+        # with the ValueError in StreamingQueryException.cause and CURRENT
+        # still points at the last good version (pytest-gated)
         nxt = apply_diff(
-            base, batch_df, key=key, keep_tombstones=True,
-            allowed_ops=allowed_ops,
+            base, batch_df, key=key, keep_tombstones=True, allowed_ops=OSC_OPS,
         )
         # stage writes the new version dir; publish flips CURRENT atomically
         staged = deploy.stage(table, nxt, lon=None, lat=None)

@@ -132,8 +132,25 @@ REMOVED_PARAMS = {
     "operators.asof.asof_join": {"bucket_us"},
     "operators.interval.interval_join": {"long_span_buckets"},
     "operators.graph.pagerank": {"tol_n", "damping_num", "damping_den", "scale"},
-    "streaming.ingest.stream_ingest": {"transform", "available_now"},
-    "streaming.updates.stream_updates": {"available_now"},
+    "streaming.ingest.stream_ingest": {
+        "transform", "available_now", "max_files_per_trigger",
+    },
+    "streaming.ingest.read_document_stream": {"max_files_per_trigger"},
+    "streaming.ingest.stream_spine": {"max_files_per_trigger"},
+    "streaming.ingest.stream_curated_spine": {
+        "dedup_state_ttl_ms", "max_files_per_trigger",
+    },
+    "streaming.ingest.stream_tile_counts": {"max_files_per_trigger"},
+    "streaming.stateful.stream_dedup_first_seen": {"state_ttl_ms"},
+    "streaming.stateful.stream_dedup_exact": {"state_ttl_ms"},
+    "streaming.updates.stream_updates": {"available_now", "allowed_ops"},
+    "streaming.profile.stream_profile": {"theta_lgk", "kll_k", "with_sketches"},
+    "functions.sketches.sketch_profile": {"theta_lgk", "kll_k"},
+    "functions.sketches.theta_distinct": {"lgk"},
+    "functions.sketches.kll_quantile": {"k"},
+    "operators.ann.train_centroids": {"iters"},
+    "kernels.simplify.simplify_ring": {"min_points"},
+    "kernels.geom.point_on_ring_boundary": {"eps"},
     "plans.pipeline.spine": {"salt_factor"},
     "plans.pipeline.located_points": {"salt_factor"},
     "operators.pip.pip_join": {"max_broadcast_polygons"},
@@ -183,6 +200,21 @@ def test_no_test_only_paths_or_limits():
     if hasattr(ckpt, "StageResult"):
         offenders.append("plans.checkpoint.StageResult")
     assert not offenders, "test-only paths or limits found:\n" + "\n".join(offenders)
+
+
+def test_one_stream_dedup_state_machine():
+    """The package calls applyInPandasWithState exactly once: every
+    first-seen dedup runs the one state machine
+    (streaming.stateful.first_seen_state_fn)."""
+    calls = [
+        f"{py.relative_to(PKG).as_posix()}:{node.lineno}"
+        for py in PKG.rglob("*.py")
+        for node in ast.walk(ast.parse(py.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "applyInPandasWithState"
+    ]
+    assert len(calls) == 1, calls
 
 
 def test_no_module_cache_holders():

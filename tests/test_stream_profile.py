@@ -27,10 +27,10 @@ def _write_halves(spark, src_dir):
     return b
 
 
-def _start(spark, src_dir, ckpt, name, with_sketches=False):
+def _start(spark, src_dir, ckpt, name):
     schema = _docs(spark).schema
     stream = spark.readStream.schema(schema).parquet(f"{src_dir}/*")
-    prof = stream_profile(stream, with_sketches=with_sketches)
+    prof = stream_profile(stream)
     return (
         prof.writeStream.outputMode("complete")
         .format("memory")
@@ -86,7 +86,7 @@ def test_stream_profile_sketches_reconstruct_corpus_total(spark, tmp_path):
     second_half = _write_halves(spark, src)
     second_half.write.parquet(f"{src}/b1")
 
-    q = _start(spark, src, ckpt, name, with_sketches=True)
+    q = _start(spark, src, ckpt, name)
     q.awaitTermination(120)
 
     # Union the emitted per-group sketches into corpus totals WITHOUT

@@ -557,28 +557,31 @@ def test_synth_geo_meta_never_scientific_notation(spark):
     assert abs(row["lat"] - 0.0001) < 1e-9  # planted value, not the fallback
 
 
+class _FakeState:
+    """The GroupState surface the first-seen state function touches."""
+
+    hasTimedOut = False
+    exists = False
+
+    def update(self, v):
+        self.exists, self.get = True, v
+
+    def setTimeoutDuration(self, ms):
+        pass
+
+    def remove(self):
+        self.exists = False
+
+
 def test_exact_dedup_null_url_chunk_then_nonnull():
     """ADVICE r4 (medium): when an earlier pandas chunk of a new group has
-    only null urls, keeper became (None, text); a non-null url in a later
-    chunk then hit `str < None` and the TypeError killed the micro-batch.
-    A null-url keeper must always lose to a non-null candidate. Unit-level
-    drive of make_dedup_fn so chunk order is deterministic."""
+    only null urls, a non-null url in a later chunk must still win — a
+    null-url keeper always loses to a non-null candidate (it once raised
+    `str < None` and killed the micro-batch). Unit-level drive of the one
+    state function so chunk order is deterministic."""
     import pandas as pd
 
-    from imposm2_spark.streaming.stateful import make_dedup_fn
-
-    class FakeState:
-        hasTimedOut = False
-        exists = False
-
-        def update(self, v):
-            self.exists, self.get = True, v
-
-        def setTimeoutDuration(self, ms):
-            pass
-
-        def remove(self):
-            self.exists = False
+    from imposm2_spark.streaming.stateful import first_seen_state_fn
 
     chunks = iter(
         [
@@ -586,9 +589,70 @@ def test_exact_dedup_null_url_chunk_then_nonnull():
             pd.DataFrame({"url": ["z-url", "a-url"], "text": ["t", "t"]}),
         ]
     )
-    st = FakeState()
-    out = list(make_dedup_fn(3_600_000)(("h",), chunks, st))
+    st = _FakeState()
+    out = list(first_seen_state_fn(["url", "text"], "url")(("h",), chunks, st))
     assert len(out) == 1
     row = out[0].iloc[0]
     assert row["url"] == "a-url"  # non-null beats the null keeper
-    assert st.get == ("a-url", 4)
+    assert st.get == (4,)
+
+
+def test_first_seen_all_null_keeper_ignores_chunk_order():
+    """A group whose order_col is all NULL keeps the row with the smallest
+    stringified remaining columns, whatever order its chunks arrive in."""
+    import pandas as pd
+
+    from imposm2_spark.streaming.stateful import first_seen_state_fn
+
+    chunks = [
+        pd.DataFrame({"url": [None, None], "text": ["t", "t"], "lang": ["fr", "de"]}),
+        pd.DataFrame({"url": [None], "text": ["t"], "lang": ["en"]}),
+    ]
+    fn = first_seen_state_fn(["url", "text", "lang"], "url")
+    for order in (chunks, chunks[::-1]):
+        st = _FakeState()
+        (out,) = fn(("h",), iter(order), st)
+        assert out.to_dict("records") == [{"url": None, "text": "t", "lang": "de"}]
+        assert st.get == (3,)
+
+
+def test_first_seen_keeper_with_array_and_map_columns(spark, tmp_path):
+    """Rows tied on url are told apart by their array and map columns,
+    arrays of 2+ elements included (numpy refuses their truth value, so a
+    per-value pd.isna fails the micro-batch); one row per Arrow chunk, so
+    the keeper is also independent of chunk order."""
+    from imposm2_spark.streaming.stateful import stream_dedup_first_seen
+
+    schema = "url string, text string, tags array<string>, attrs map<string,string>"
+    rows = [
+        ("u1", "same text", ["b", "d"], {"k": "2"}),
+        ("u1", "same text", ["a", "c"], {"k": "1"}),
+        ("u2", "same text", ["a", "a"], {"k": "0"}),
+        ("u0", "other text", ["x", "y"], {"k": "9", "j": "1"}),
+        ("u0", "other text", ["x", "y"], {"k": "1", "j": "1"}),
+    ]
+    landing = str(tmp_path / "landing")
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(landing + "/b0")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    orig = spark.conf.get(key)
+    out = []
+    try:
+        spark.conf.set(key, "1")
+        src = spark.readStream.schema(schema).parquet(landing + "/*")
+        q = (
+            stream_dedup_first_seen(src)
+            .writeStream.outputMode("append")
+            .option("checkpointLocation", str(tmp_path / "ck"))
+            .foreachBatch(lambda df, e: out.extend(df.collect()))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+    finally:
+        spark.conf.set(key, orig)
+    got = {r.text: (r.url, r.tags, r.attrs) for r in out}
+    assert len(out) == 2
+    assert got == {
+        "same text": ("u1", ["a", "c"], {"k": "1"}),
+        "other text": ("u0", ["x", "y"], {"k": "1", "j": "1"}),
+    }
